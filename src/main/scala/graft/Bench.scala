@@ -1,45 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // UI events carry a plan description generated PER ACTION even with
-      // the UI disabled; the default "formatted" mode runs ExplainUtils'
-      // operator-ID walk, which is super-linear on deep staged/cached plan
-      // trees (a measured multi-minute single-thread stall per streaming
-      // batch at full-stack depth). "simple" keeps the event linear.
-      .config("spark.sql.ui.explainMode", "simple")
-      // Relational.events' NTZ->TIMESTAMP cast is session-tz-dependent;
-      // pin UTC so a micros-fixture bench derives the same ts_ns as
-      // Verify/tests on any host (Verify/VerifyOne/SparkSpec do the same)
-      .config("spark.sql.session.timeZone", "UTC")
-      // InferFiltersFromGenerate substitutes the full generator expression
-      // into an inferred size()>0 filter; for our explode-of-computed-array
-      // plans (shingles, bands) that re-runs the tokenizer per lambda
-      // iteration — 10-20x on the dedup queries. Our generated arrays are
-      // never null/empty, so the inferred filter only costs.
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      // collect_list/collect_set aggregations (ObjectHashAggregate) fall
-      // back to sort-based aggregation after 128 distinct keys by
-      // default; the external sort then hammers the single local-mode
-      // MemoryManager lock (measured futex storms, 4-10x slowdowns).
-      // Single-node with a large heap: keep the object hash map.
-      // On a real cluster, size this to executor memory instead.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "10000000")
-      // only matters if events.parquet is INT64-nanos (the reader
-      // adapts to TIMESTAMP micros too — Relational.events); harmless
-      // otherwise, session-level by the set-at-build-time rule
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // Optional subset for local profiling: SPARK_GRAFT_ONLY=q_a,q_b
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
+    val only = GraftSession.only
     val selected = SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) }
     // Untimed warmup: JVM/codegen/parquet-reader init otherwise lands on
     // whichever query happens to run first (~4 s of pure warmup).

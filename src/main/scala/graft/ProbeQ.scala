@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
@@ -7,26 +6,14 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
   * query, split bench time into fn() construction (eager work: store
   * saves, localCheckpoints, collects) vs the final count() action, and
   * record Spark job/stage/task counts per phase. Bench's session
-  * config, SPARK_GRAFT_ONLY-style name list as args, min-of-REPS per
-  * phase printed per rep so warmup is visible.
+  * ([[GraftSession]]), SPARK_GRAFT_ONLY-style name list as args,
+  * min-of-REPS per phase printed per rep so warmup is visible.
   * Usage: runMain graft.ProbeQ q_a q_b ... */
 object ProbeQ {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_PROBE_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ui.explainMode", "simple")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "10000000")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val jobs = new AtomicInteger(0)
     val stages = new AtomicInteger(0)
     val tasks = new AtomicLong(0L)

@@ -1,44 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // UI events carry a plan description generated PER ACTION even with
-      // the UI disabled; the default "formatted" mode runs ExplainUtils'
-      // operator-ID walk, which is super-linear on deep staged/cached plan
-      // trees (a measured multi-minute single-thread stall per streaming
-      // batch at full-stack depth). "simple" keeps the event linear.
-      .config("spark.sql.ui.explainMode", "simple")
-      // see Bench.scala: inferred generate filters re-run the tokenizer
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      // collect_list/collect_set aggregations (ObjectHashAggregate) fall
-      // back to sort-based aggregation after 128 distinct keys by
-      // default; the external sort then hammers the single local-mode
-      // MemoryManager lock (measured futex storms, 4-10x slowdowns).
-      // Single-node with a large heap: keep the object hash map.
-      // On a real cluster, size this to executor memory instead.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "10000000")
-      // events.parquet stores TIMESTAMP(NANOS); session-level (set at
-      // build time, not mutated mid-query — see ADVICE round 1)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
-    // dev-loop subset (mirrors Bench): SPARK_GRAFT_ONLY=q_a,q_b runs and
-    // dumps only those rows; the driver never sets it, so the gate
-    // always sees the full map
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    // dev-loop subset (mirrors Bench): SPARK_GRAFT_ONLY=q_a,q_b
+    val only = GraftSession.only
     val queries = only.fold(SparkEntry.queries)(o => SparkEntry.queries.filter(kv => o(kv._1)))
     queries.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

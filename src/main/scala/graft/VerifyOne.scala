@@ -1,34 +1,18 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dev tool: [[Verify]] for a SUBSET of queries — dump each named
   * query's result parquet plus its oracle SQL, for a local DuckDB
-  * compare while iterating (the driver's full Verify runs all ~70;
+  * compare while iterating (the full Verify runs all ~270;
   * a new operator needs a seconds-long loop, not minutes).
   * Usage: runMain graft.VerifyOne <outDir> <query> [query ...]
-  * (sfDir via SPARK_GRAFT_SF_DIR, default sf0.01). */
+  * (sfDir via SPARK_GRAFT_SF_DIR, default sf0.01; Verify's session). */
 object VerifyOne {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val names = args.drop(1).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // UI events carry a plan description generated PER ACTION even with
-      // the UI disabled; the default "formatted" mode runs ExplainUtils'
-      // operator-ID walk, which is super-linear on deep staged/cached plan
-      // trees (a measured multi-minute single-thread stall per streaming
-      // batch at full-stack depth). "simple" keeps the event linear.
-      .config("spark.sql.ui.explainMode", "simple")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
       SparkEntry.queries(name)(spark, sfDir).coalesce(1)

@@ -83,7 +83,9 @@ final class NearestScorer(
     if (n != cv.numElements()) return null // DotProduct mismatch contract
     if (cosineMode) {
       val normProd = aux * cAux
-      if (!(normProd > 0)) null else round6(dotSeq(vec, cv, n) / normProd)
+      // Spark's `n * cn > 0` is true for NaN (NaN sorts greatest), so a
+      // NaN norm product scores NaN, which wins max_by, not NULL
+      if (normProd > 0 || normProd.isNaN) round6(dotSeq(vec, cv, n) / normProd) else null
     } else round6(aux - 2.0 * dotSeq(vec, cv, n) + cAux)
   }
 

@@ -190,7 +190,13 @@ object Curation {
     * is the same column algebra), the table must COVER the gated docs
     * (score-everything producers do; absent docs would silently drop),
     * and the caller asserts the same-weights/same-buckets contract by
-    * choosing the field. */
+    * choosing the field. Caller checklist for `precomputedLogits`:
+    *   - same weights and buckets as the gate;
+    *   - `groupCol` present when `groupBiases` is set;
+    *   - EVERY doc that can reach the gate is scored: a gated doc
+    *     missing from the table is dropped with no error, so a chain
+    *     whose earlier stages do not subset the scored frame loses rows.
+    */
   final case class ClassifierGate(
       weights: DataFrame, buckets: Int = 1024, bias: Double = 0.0,
       groupBiases: Option[DataFrame] = None, groupCol: String = "source",
@@ -651,8 +657,10 @@ object Curation {
     * DuckDB twin of q_manifest_diff has always shared them — one
     * survivor CTE feeding two mixture projections; this makes the
     * engine's plan match its oracle's). Each DISTINCT eval suite
-    * (reference identity) shingles once; variants passing the same
-    * DataFrame instance share its contaminated-id table, and
+    * shingles once. Suites are shared by DataFrame INSTANCE (`eq`), not
+    * by content: callers must pass the same reference to share one
+    * contaminated-id table (two structurally identical frames each
+    * build their own — same rows, twice the work), and
     * independent suites' id-sized materializations overlap on the Par
     * pool (guide §2.6). Results are row-identical to N separate
     * [[curateWithFunnel]] calls: the shared stages see identical

@@ -832,7 +832,7 @@ object Dedup {
     // mat default is Persist, not the repo-wide LocalCheckpoint: the
     // occ table here is a mid-plan signature scan consumed twice in
     // the SAME action, where the lazy cache wins measurably
-    // (ProbePara, sf0.1: 0.29 s warm / 0.58 s cold vs 0.36 / 2.2 for
+    // (measured at sf0.1: 0.29 s warm / 0.58 s cold vs 0.36 / 2.2 for
     // localCheckpoint — the eager block write is pure overhead when
     // no later action reuses the table). This was the r13 bench
     // regression on q_para_dedup (0.22 → 0.52 s).

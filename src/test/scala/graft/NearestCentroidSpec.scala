@@ -16,7 +16,10 @@ class NearestCentroidSpec extends SparkSpec {
   test("cosine mode ≡ join + max_by(struct(ccos, -cell)) on 200 random vectors") {
     val rnd = new scala.util.Random(7)
     val d = 16
-    val vecs = (1L to 200L).map(i => (i, Seq.fill(d)(rnd.nextDouble() * 4 - 2)))
+    // plus one NaN-containing vector: Spark's `n * cn > 0` holds for a
+    // NaN norm product, so its candidates score NaN, not NULL
+    val vecs = ((1L to 200L).map(i => (i, Seq.fill(d)(rnd.nextDouble() * 4 - 2))) :+
+        (201L, Seq.fill(d)(0.5).updated(3, Double.NaN)))
       .toDF("vec_id", "v")
       .select(col("vec_id"), col("v"),
         sqrt(graft.functions.VectorFunctions.dotp(col("v"), col("v"))).as("n"))
@@ -34,13 +37,17 @@ class NearestCentroidSpec extends SparkSpec {
       .agg(max_by(struct(col("cell_id"), col("ccos")),
         struct(col("ccos"), (-col("cell_id")).as("nc"))).as("best"))
       .select(col("vec_id"), col("best.cell_id"), col("best.ccos"))
-      .as[(Long, Long, Option[Double])].collect().toSet
+      .as[(Long, Long, Option[Double])].collect()
     val cs = cents.agg(collect_list(struct(col("cell_id"), col("cv"), col("cn"))).as("cs"))
     val native = vecs.join(broadcast(cs))
       .select(col("vec_id"), NearestCentroid.cosine(col("v"), col("n"), col("cs")).as("b"))
       .select(col("vec_id"), col("b.cell_id"), col("b.score"))
-      .as[(Long, Long, Option[Double])].collect().toSet
-    assert(native === agg)
+      .as[(Long, Long, Option[Double])].collect()
+    // compare score bits: tuple == treats NaN != NaN
+    def bits(rows: Array[(Long, Long, Option[Double])]) =
+      rows.map { case (v, c, s) => (v, c, s.map(java.lang.Double.doubleToLongBits)) }.toSet
+    assert(agg.exists(_._3.exists(_.isNaN))) // the NaN row reaches the NaN path
+    assert(bits(native) === bits(agg))
   }
 
   test("L2 mode ≡ join + min_by(struct(d2, cell)) on 200 random sub-vectors") {

@@ -5,28 +5,17 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for the whole test JVM (sbt forks a single
   * test JVM; Spark startup is ~5 s, so suites must not each build one).
-  * Config mirrors Bench/Verify: nanos-as-long for the events table and
-  * the InferFiltersFromGenerate exclusion (see Bench.scala).
+  * Config is Bench/Verify's ([[GraftSession]]) at 4 cores, plus a
+  * temp warehouse dir.
   *
   * `SparkSpec.spark` is a stable identifier, so suites can
   * `import SparkSpec.spark.implicits._` at the top of the file.
   */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      // see Bench.scala: "formatted" UI plan descriptions walk deep
-      // staged plan trees super-linearly, per action
-      .config("spark.sql.ui.explainMode", "simple")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val s = GraftSession.builder(4)
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "10000000")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
