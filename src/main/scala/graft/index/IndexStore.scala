@@ -1,7 +1,14 @@
 package graft.index
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StringType, StructType}
 
 import graft.core.TextNorm
 
@@ -75,7 +82,7 @@ object IndexStore {
 
   private def writeLayoutMarker(
       spark: SparkSession, dsPath: String, layout: Layout): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$dsPath/$LayoutMarker")
+    val p = new Path(s"$dsPath/$LayoutMarker")
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     val out = fs.create(p, true)
     try out.write(layout.markerName.getBytes("UTF-8")) finally out.close()
@@ -86,7 +93,7 @@ object IndexStore {
     * bodies fail loudly — a corrupt marker must not silently demote
     * validation. */
   def storedLayout(spark: SparkSession, dsPath: String): Option[Layout] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dsPath/$LayoutMarker")
+    val p = new Path(s"$dsPath/$LayoutMarker")
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(p)) None
     else {
@@ -144,19 +151,96 @@ object IndexStore {
   def load(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path).select("word", "doc_id", "cnt")
 
-  /** Served point lookup: prefix predicate prunes partitions, word
-    * predicate pushes into the parquet row-group scan; postings sorted
-    * cnt desc / doc_id asc (the reference UI's result table,
-    * `main/app.py:73-77`, with deterministic ties). `layout` must match
-    * the one the store was saved with. */
+  /** A partition directory of `root`, escaped as Spark's writer names it. */
+  private def partitionDir(root: Path, partCol: String, value: String): Path =
+    new Path(root, ExternalCatalogUtils.getPartitionPathString(partCol, value))
+
+  /** The served faces' postings read: only the partition directories
+    * of `keys`' prefixes, never the store root ([[partitionScan]]). */
+  private def prefixScan(spark: SparkSession, path: String,
+      layout: Layout, keys: Seq[String]): DataFrame =
+    partitionScan(spark, path, PrefixCol, keys.map(layout.prefixOf))
+
+  /** Read only the `partCol = values` directories of a partitioned
+    * store. `spark.read.parquet(root)` costs two Spark jobs before the
+    * scan: listing every partition directory (a job of its own past
+    * `parallelPartitionDiscovery.threshold`, 32 — always under
+    * [[HashPrefix]]'s 256) and schema inference. Here the driver keeps
+    * the directories that exist, takes the schema from one data file's
+    * footer ([[footerSchema]]) plus the string partition column, and
+    * reads with `basePath`, so the partition filter still plans as
+    * PartitionFilters. When no directory exists the result is an empty
+    * local relation of the store's schema, which runs no job. */
+  private def partitionScan(spark: SparkSession, path: String,
+      partCol: String, values: Seq[String]): DataFrame = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    val vs = values.distinct
+    val dirs = vs.map(partitionDir(root, partCol, _)).filter(fs.exists)
+    def anyDirs = if (!fs.exists(root)) Iterator.empty
+      else fs.listStatus(root).iterator.map(_.getPath).filter(_.getName.startsWith(s"$partCol="))
+    val schema = footerSchema(fs, conf, dirs.iterator ++ anyDirs)
+      .getOrElse(spark.read.parquet(path).drop(partCol).schema)
+      .add(partCol, StringType)
+    val scan =
+      if (dirs.isEmpty) spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+      else spark.read.schema(schema).option("basePath", path)
+        .parquet(dirs.map(_.toString): _*)
+    scan.filter(col(partCol).isin(vs: _*))
+  }
+
+  /** A flat stored artifact (`doc_lengths`, `stats`, a plain doc
+    * store) read with its footer's schema: no inference job. */
+  private def storedTable(spark: SparkSession, path: String): DataFrame = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    (if (fs.exists(root)) footerSchema(fs, conf, Iterator(root)) else None) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+  }
+
+  /** The row schema Spark's writer records in a parquet footer, read
+    * on the driver from the first data file in `dirs` and made nullable
+    * as a file scan reads it; None when there is no Spark-written file. */
+  private def footerSchema(fs: FileSystem, conf: Configuration,
+      dirs: Iterator[Path]): Option[StructType] =
+    dirs.flatMap(fs.listStatus(_).iterator)
+      .find(f => f.isFile && !f.getPath.getName.startsWith("_") &&
+        !f.getPath.getName.startsWith("."))
+      .flatMap { f =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f.getPath, conf))
+        try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
+          .get(ParquetReadSupport.SPARK_METADATA_KEY))
+        finally reader.close()
+      }
+      .map(json => GraftSqlBridge.asNullable(DataType.fromJson(json).asInstanceOf[StructType]))
+
+  /** Served point lookup: postings sorted cnt desc / doc_id asc (the
+    * reference UI's result table, `main/app.py:73-77`, with
+    * deterministic ties). `layout` must match the one the store was
+    * saved with.
+    *
+    * Cost: one Spark job with one task. [[prefixScan]] reads only the
+    * key's prefix directory with the footer's schema, so there is no
+    * root listing and no inference job; the word predicate pushes into
+    * the parquet scan, and because [[save]] writes every file sorted by
+    * word, the task reads only the row groups that can hold the key.
+    * The few matching postings are then sorted locally in that one
+    * task (`coalesce(1)` + `sortWithinPartitions`) instead of a global
+    * `orderBy`'s sampling job and shuffle. A key whose prefix directory
+    * is absent returns an empty frame and runs no job. */
   def lookup(spark: SparkSession, path: String, word: String,
       layout: Layout = FirstChar): DataFrame = {
     checkLayout(spark, path, layout)
     val key = TextNorm.normalizeKey(word)
-    spark.read.parquet(path)
-      .filter(col(PrefixCol) === layout.prefixOf(key) && col("word") === key)
+    prefixScan(spark, path, layout, Seq(key))
+      .filter(col("word") === key)
       .select(col("doc_id"), col("cnt"))
-      .orderBy(col("cnt").desc, col("doc_id").asc)
+      .coalesce(1)
+      .sortWithinPartitions(col("cnt").desc, col("doc_id").asc)
   }
 
   /** Persist a [[InvertedIndex.buildPositional]] index under the same
@@ -184,9 +268,8 @@ object IndexStore {
     checkLayout(spark, path, layout)
     val keys = TextNorm.queryTerms(phrase).distinct
     require(keys.nonEmpty, s"phrase '$phrase' has no indexable terms")
-    val pruned = spark.read.parquet(path)
-      .filter(col(PrefixCol).isin(keys.map(layout.prefixOf): _*) &&
-        col("word").isin(keys: _*))
+    val pruned = prefixScan(spark, path, layout, keys)
+      .filter(col("word").isin(keys: _*))
       .select("word", "doc_id", "positions", "cnt")
     graft.index.InvertedIndex.phraseSearch(pruned, phrase)
   }
@@ -208,8 +291,8 @@ object IndexStore {
     * cost is k-documents-sized, never corpus-sized.
     *
     * Any (doc_id, text, …) frame works — extra columns ride along.
-    * [[searchPage]] detects the layout by the partition column and
-    * falls back to an id-pushdown scan over a plain store. */
+    * [[searchPage]] detects the layout by its `doc_bkt=` directories
+    * and falls back to an id-pushdown scan over a plain store. */
   def saveDocStore(docs: DataFrame, path: String): Unit =
     docs
       .withColumn(DocBktCol, substring(md5(col("doc_id").cast("string")), 1, 2))
@@ -284,7 +367,7 @@ object IndexStore {
       changedWords: Option[DataFrame] = None): Unit = {
     val spark = posIndex.sparkSession
     val nDocsF = spark.range(1).select(lit(nDocs.toDouble).as("n_docs"))
-    val postingsPath = new org.apache.hadoop.fs.Path(s"$path/postings")
+    val postingsPath = new Path(s"$path/postings")
     val fs = postingsPath.getFileSystem(spark.sessionState.newHadoopConf())
     changedWords match {
       case Some(words) if fs.exists(postingsPath) =>
@@ -304,8 +387,7 @@ object IndexStore {
           val surviving = fresh.select(PrefixCol).distinct()
             .collect().map(_.getString(0)).toSet
           prefixes.filterNot(surviving).foreach { p =>
-            fs.delete(new org.apache.hadoop.fs.Path(
-              s"$path/postings/$PrefixCol=$p"), true)
+            fs.delete(partitionDir(postingsPath, PrefixCol, p), true)
           }
         }
         refreshSearchPageDerived(spark, nDocsF, path)
@@ -383,13 +465,12 @@ object IndexStore {
     checkLayout(spark, s"$path/postings", layout)
     val terms = TextNorm.queryTerms(query).distinct
     require(terms.nonEmpty, s"query '$query' has no indexable terms")
-    val pruned = spark.read.parquet(s"$path/postings")
-      .filter(col(PrefixCol).isin(terms.map(layout.prefixOf): _*) &&
-        col("word").isin(terms: _*))
+    val pruned = prefixScan(spark, s"$path/postings", layout, terms)
+      .filter(col("word").isin(terms: _*))
     val rankedF = graft.index.InvertedIndex.bm25TopKFromStore(
       pruned.select("word", "doc_id", "cnt"),
-      spark.read.parquet(s"$path/doc_lengths"),
-      spark.read.parquet(s"$path/stats"),
+      storedTable(spark, s"$path/doc_lengths"),
+      storedTable(spark, s"$path/stats"),
       query, k, k1, b)
     val rankedRows = rankedF.collect()
     val ranked = spark.createDataFrame(
@@ -400,12 +481,14 @@ object IndexStore {
       rankedRows.map(_.get(rankedF.schema.fieldIndex("doc_id"))).toSeq
     val pageHits = pruned.select("word", "doc_id", "positions", "cnt")
       .filter(col("doc_id").isin(ids: _*))
-    val docsRead = spark.read.parquet(docsPath)
+    val docsRoot = new Path(docsPath)
+    val docsFs = docsRoot.getFileSystem(spark.sessionState.newHadoopConf())
+    val bucketed = docsFs.exists(docsRoot) &&
+      docsFs.listStatus(docsRoot).exists(_.getPath.getName.startsWith(s"$DocBktCol="))
     val pageDocs =
-      (if (docsRead.columns.contains(DocBktCol))
-        docsRead.filter(col(DocBktCol)
-          .isin(ids.map(i => HashPrefix.prefixOf(i.toString)).distinct: _*))
-      else docsRead)
+      (if (bucketed)
+        partitionScan(spark, docsPath, DocBktCol, ids.map(i => HashPrefix.prefixOf(i.toString)))
+      else storedTable(spark, docsPath))
         .filter(col("doc_id").isin(ids: _*))
     // Lazy: the hits input here is a PRUNED store read (≤ k docs ×
     // per-term postings) — cheap to re-reference, and the final plan
@@ -438,12 +521,11 @@ object IndexStore {
     val terms = TextNorm.queryTerms(query).distinct
     require(terms.nonEmpty, s"query '$query' has no indexable terms")
     graft.index.InvertedIndex.bm25TopKFromStore(
-      spark.read.parquet(s"$path/postings")
-        .filter(col(PrefixCol).isin(terms.map(layout.prefixOf): _*) &&
-          col("word").isin(terms: _*))
+      prefixScan(spark, s"$path/postings", layout, terms)
+        .filter(col("word").isin(terms: _*))
         .select("word", "doc_id", "cnt"),
-      spark.read.parquet(s"$path/doc_lengths"),
-      spark.read.parquet(s"$path/stats"),
+      storedTable(spark, s"$path/doc_lengths"),
+      storedTable(spark, s"$path/stats"),
       query, k, k1, b)
   }
 
@@ -464,8 +546,7 @@ object IndexStore {
     require(terms.nonEmpty, "booleanSearch needs at least one term")
     val keys = terms.map(TextNorm.normalizeKey).distinct
     graft.index.InvertedIndex.booleanSearch(
-      spark.read.parquet(s"$path/postings")
-        .filter(col(PrefixCol).isin(keys.map(layout.prefixOf): _*))
+      prefixScan(spark, s"$path/postings", layout, keys)
         .select("word", "doc_id", "cnt"),
       terms, requireAll)
   }
@@ -496,13 +577,12 @@ object IndexStore {
     checkLayout(spark, s"$path/postings", layout)
     val terms = TextNorm.queryTerms(queryText).distinct
     require(terms.nonEmpty, s"query '$queryText' has no indexable terms")
-    val pruned = spark.read.parquet(s"$path/postings")
-      .filter(col(PrefixCol).isin(terms.map(layout.prefixOf): _*) &&
-        col("word").isin(terms: _*))
+    val pruned = prefixScan(spark, s"$path/postings", layout, terms)
+      .filter(col("word").isin(terms: _*))
     val lex = graft.index.InvertedIndex.bm25TopKFromStore(
         pruned.select("word", "doc_id", "cnt"),
-        spark.read.parquet(s"$path/doc_lengths"),
-        spark.read.parquet(s"$path/stats"),
+        storedTable(spark, s"$path/doc_lengths"),
+        storedTable(spark, s"$path/stats"),
         queryText, poolK)
       .select(col("doc_id"), col("rank").as("bm25_rank"))
     val sem = graft.ops.Similarity.bruteForceTopK(queryVec, embeddings, poolK)

@@ -36,4 +36,8 @@ object GraftSqlBridge {
 
   def analyzedPlan(df: DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.queryExecution.analyzed
+
+  /** `schema` with every field nullable at every depth: the type a file
+    * scan gives the columns it reads. */
+  def asNullable(schema: types.StructType): types.StructType = schema.asNullable
 }

@@ -10,11 +10,7 @@ import SparkSpec.spark.implicits._
 
 class SourcesAndStoreSpec extends SparkSpec {
 
-  private def tmp(name: String): String = {
-    val d = Files.createTempDirectory(s"graft-$name-")
-    d.toFile.deleteOnExit()
-    d.toString
-  }
+  private def tmp(name: String): String = tempDir(s"graft-$name-").toString
 
   test("readDocuments: one row per file, doc_id = basename, whole text") {
     val dir = tmp("corpus")
@@ -104,6 +100,90 @@ class SourcesAndStoreSpec extends SparkSpec {
     assert(plan.contains("word_pfx"), s"no partition filter in:\n$plan")
     assert(plan.contains("PushedFilters: [IsNotNull(word), EqualTo(word,banana)]"),
       s"word filter not pushed in:\n$plan")
+  }
+
+  /** (result, jobs, tasks) of `body`: the max-job-id delta, read after
+    * draining the listener bus so no finished job is missed. */
+  private def jobsAndTasks[T](body: => T): (T, Int, Int) = {
+    val sc = spark.sparkContext
+    def maxJobId: Int = {
+      org.apache.spark.ListenerBusDrain(sc)
+      sc.statusTracker.getJobIdsForGroup(null).foldLeft(-1)(math.max)
+    }
+    val before = maxJobId
+    val r = body
+    val after = maxJobId
+    val tasks = (before + 1 to after).flatMap(sc.statusTracker.getJobInfo(_))
+      .flatMap(_.stageIds).flatMap(sc.statusTracker.getStageInfo(_)).map(_.numTasks).sum
+    (r, after - before, tasks)
+  }
+
+  test("lookup is one Spark job with one task, on a 256-dir HashPrefix store and a 36-dir FirstChar store") {
+    def hashPfx(w: String): String = {
+      val d = java.security.MessageDigest.getInstance("MD5").digest(w.getBytes("UTF-8"))
+      f"${d(0) & 0xff}%02x"
+    }
+    // the first words whose md5 prefixes cover all 256 directories
+    val seen = scala.collection.mutable.Set.empty[String]
+    val hashWords = Iterator.from(0).map(i => s"w$i")
+      .filter(w => seen.add(hashPfx(w))).take(256).toVector
+    // 36 first characters, like the benchmark's store: over Spark's
+    // parallel-listing threshold (32)
+    val charWords = (('a' to 'z') ++ ('0' to '9')).map(c => s"${c}ord")
+    Seq((IndexStore.HashPrefix, hashWords, 256), (IndexStore.FirstChar, charWords, 36))
+      .foreach { case (layout, words, nDirs) =>
+        // each word in two docs, with differing counts
+        val docs = words.zipWithIndex.flatMap { case (w, i) =>
+          Seq((i.toLong % 7, Seq.fill(1 + i % 3)(w).mkString(" ")), ((i + 3L) % 7, w)) }
+        val idx = InvertedIndex.build(docs.toDF("doc_id", "text"))
+        val path = tmp(s"store1job-$layout") + "/index"
+        IndexStore.save(idx, path, layout)
+        assert(new java.io.File(path).list().count(_.startsWith("word_pfx=")) === nDirs)
+        Seq(words.head, words(words.size / 2), words.last).foreach { w =>
+          val want = idx.filter($"word" === w).orderBy($"cnt".desc, $"doc_id")
+            .select("doc_id", "cnt").as[(Long, Long)].collect().toSeq
+          val df = IndexStore.lookup(spark, path, w, layout)
+          val (got, jobs, tasks) = jobsAndTasks(df.as[(Long, Long)].collect().toSeq)
+          assert(got === want && got.nonEmpty, s"$layout lookup '$w'")
+          assert(jobs === 1, s"$layout lookup '$w' ran $jobs jobs")
+          assert(tasks === 1, s"$layout lookup '$w' ran $tasks tasks")
+        }
+        // building the lookup itself runs nothing: no listing, no inference
+        assert(jobsAndTasks(IndexStore.lookup(spark, path, words.head, layout))._2 === 0)
+      }
+  }
+
+  test("lookup of a key whose prefix directory is absent: empty frame typed like the store, no job") {
+    val idx = InvertedIndex.build(Seq((1L, "apple banana"), (2L, "banana")).toDF("doc_id", "text"))
+    val path = tmp("storeabsent") + "/index"
+    IndexStore.save(idx, path)
+    assert(!new java.io.File(s"$path/word_pfx=z").exists(), "fixture: no 'z' directory")
+    val typed = IndexStore.load(spark, path).select("doc_id", "cnt").schema
+    val (rows, jobs, _) = jobsAndTasks {
+      val df = IndexStore.lookup(spark, path, "Zebra")
+      assert(df.schema === typed)
+      df.collect()
+    }
+    assert(rows.isEmpty)
+    assert(jobs === 0, s"an absent prefix ran $jobs jobs")
+    // present prefix, absent word: also empty, same type
+    val miss = IndexStore.lookup(spark, path, "apricot")
+    assert(miss.schema === typed && miss.collect().isEmpty)
+  }
+
+  test("a store with string doc_ids round-trips through lookup") {
+    val idx = InvertedIndex.build(Seq(("b.txt", "apple banana apple"),
+      ("a.txt", "banana cherry"), ("c.txt", "apple")).toDF("doc_id", "text"))
+    Seq(IndexStore.FirstChar, IndexStore.HashPrefix).foreach { layout =>
+      val path = tmp(s"storestr-$layout") + "/index"
+      IndexStore.save(idx, path, layout)
+      val df = IndexStore.lookup(spark, path, "Apple", layout)
+      assert(df.schema === IndexStore.load(spark, path).select("doc_id", "cnt").schema)
+      assert(df.schema("doc_id").dataType === org.apache.spark.sql.types.StringType)
+      assert(df.as[(String, Long)].collect().toSeq === Seq(("b.txt", 2L), ("c.txt", 1L)))
+      assert(IndexStore.lookup(spark, path, "banana", layout).as[(String, Long)]
+        .collect().toSeq === Seq(("a.txt", 1L), ("b.txt", 1L)))
+    }
   }
 
   test("HashPrefix layout round-trips, prunes to one md5 directory, pushes the word filter") {
