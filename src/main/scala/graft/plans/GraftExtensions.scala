@@ -1,13 +1,20 @@
 package graft.plans
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{ArrayType, Decimal, DoubleType, FloatType, IntegerType,
+  LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.functions.DotProduct
+import graft.core.Materialize
+import graft.functions.{DotProduct, JlProject, NfcNormalize, PhraseMatch, TopKByScore}
+import graft.index.{IndexStore, InvertedIndex}
+import graft.ops.{Crawl, Curation, Dedup, Html, Relational, Robots, Sampling, Similarity,
+  TextAnalysis}
 
 /** SparkSessionExtensions wiring: exposes the native expressions to the
   * SQL surface (`SELECT graft_dot(a, b)`) in addition to the Column API
@@ -15,2424 +22,1242 @@ import graft.functions.DotProduct
   *
   * Use either
   * `--conf spark.sql.extensions=graft.plans.GraftExtensions` at session
-  * build time, or [[GraftExtensions.install]] on a live session.
+  * build time, or [[GraftExtensions.install]] on a live session. Both
+  * register every function of [[GraftExtensions]]' one table.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftExtensions.dotFunction)
-    ext.injectFunction(GraftExtensions.nfcFunction)
-    ext.injectFunction(GraftExtensions.topKFunction)
-    ext.injectFunction(GraftExtensions.jlProjectFunction)
-    ext.injectFunction(GraftExtensions.phraseMatchFunction)
-    ext.injectTableFunction(GraftExtensions.asofTableFunction)
-    ext.injectTableFunction(GraftExtensions.minhashPairsTableFunction)
-    ext.injectTableFunction(GraftExtensions.decontaminateTableFunction)
-    ext.injectTableFunction(GraftExtensions.annSearchTableFunction)
-    ext.injectTableFunction(GraftExtensions.semanticDupsTableFunction)
-    ext.injectTableFunction(GraftExtensions.boilerplateTableFunction)
-    ext.injectTableFunction(GraftExtensions.semanticDecontaminateTableFunction)
-    ext.injectTableFunction(GraftExtensions.tokenDriftTableFunction)
-    ext.injectTableFunction(GraftExtensions.classifierScoreTableFunction)
-    ext.injectTableFunction(GraftExtensions.curateTableFunction)
-    ext.injectTableFunction(GraftExtensions.dsirTableFunction)
-    ext.injectTableFunction(GraftExtensions.bm25TableFunction)
-    ext.injectTableFunction(GraftExtensions.hybridTableFunction)
-    ext.injectTableFunction(GraftExtensions.dupSpansTableFunction)
-    ext.injectTableFunction(GraftExtensions.dupStripTableFunction)
-    ext.injectTableFunction(GraftExtensions.phraseTableFunction)
-    ext.injectTableFunction(GraftExtensions.marginMineTableFunction)
-    ext.injectTableFunction(GraftExtensions.noveltyTableFunction)
-    ext.injectTableFunction(GraftExtensions.hammingPairsTableFunction)
-    ext.injectTableFunction(GraftExtensions.scriptTableFunction)
-    ext.injectTableFunction(GraftExtensions.langRouteTableFunction)
-    ext.injectTableFunction(GraftExtensions.blocklistTableFunction)
-    ext.injectTableFunction(GraftExtensions.codeDetectTableFunction)
-    ext.injectTableFunction(GraftExtensions.sentencesTableFunction)
-    ext.injectTableFunction(GraftExtensions.passagesTableFunction)
-    ext.injectTableFunction(GraftExtensions.fingerprintPairsTableFunction)
-    ext.injectTableFunction(GraftExtensions.piiTableFunction)
-    ext.injectTableFunction(GraftExtensions.mojibakeTableFunction)
-    ext.injectTableFunction(GraftExtensions.dupSpectrumTableFunction)
-    ext.injectTableFunction(GraftExtensions.splitSafeTableFunction)
-    ext.injectTableFunction(GraftExtensions.splitAuditTableFunction)
-    ext.injectTableFunction(GraftExtensions.sourceOverlapTableFunction)
-    ext.injectTableFunction(GraftExtensions.profileTableFunction)
-    ext.injectTableFunction(GraftExtensions.contextPlanTableFunction)
-    ext.injectTableFunction(GraftExtensions.packSequencesTableFunction)
-    ext.injectTableFunction(GraftExtensions.chunkTokensTableFunction)
-    ext.injectTableFunction(GraftExtensions.calibrationTableFunction)
-    ext.injectTableFunction(GraftExtensions.snippetsTableFunction)
-    ext.injectTableFunction(GraftExtensions.searchPageTableFunction)
-    ext.injectTableFunction(GraftExtensions.thresholdSweepTableFunction)
-    ext.injectTableFunction(GraftExtensions.operatingPointTableFunction)
-    ext.injectTableFunction(GraftExtensions.manifestDiffTableFunction)
-    ext.injectTableFunction(GraftExtensions.embOutliersTableFunction)
-    ext.injectTableFunction(GraftExtensions.containmentTableFunction)
-    ext.injectTableFunction(GraftExtensions.histogramTableFunction)
-    ext.injectTableFunction(GraftExtensions.readabilityTableFunction)
-    ext.injectTableFunction(GraftExtensions.corpusHealthTableFunction)
-    ext.injectTableFunction(GraftExtensions.paraDedupTableFunction)
-    ext.injectTableFunction(GraftExtensions.sentenceSpansTableFunction)
-    ext.injectTableFunction(GraftExtensions.c4StatsTableFunction)
-    ext.injectTableFunction(GraftExtensions.c4CleanTableFunction)
-    ext.injectTableFunction(GraftExtensions.htmlTextTableFunction)
-    ext.injectTableFunction(GraftExtensions.htmlSignalsTableFunction)
-    ext.injectTableFunction(GraftExtensions.htmlLinesTableFunction)
-    ext.injectTableFunction(GraftExtensions.htmlMainTableFunction)
-    ext.injectTableFunction(GraftExtensions.spanEvalTableFunction)
-    ext.injectTableFunction(GraftExtensions.lm3ScoreTableFunction)
-    ext.injectTableFunction(GraftExtensions.lmnScoreTableFunction)
-    ext.injectTableFunction(GraftExtensions.knScoreTableFunction)
-    ext.injectTableFunction(GraftExtensions.shardManifestTableFunction)
-    ext.injectTableFunction(GraftExtensions.unimaxTableFunction)
-    ext.injectTableFunction(GraftExtensions.spanPlanTableFunction)
-    ext.injectTableFunction(GraftExtensions.urlCanonTableFunction)
-    ext.injectTableFunction(GraftExtensions.urlDedupTableFunction)
-    ext.injectTableFunction(GraftExtensions.linkEdgesTableFunction)
-    ext.injectTableFunction(GraftExtensions.rankPriorTableFunction)
-    ext.injectTableFunction(GraftExtensions.corpusDiffTableFunction)
-    ext.injectTableFunction(GraftExtensions.urlSignalsTableFunction)
-    ext.injectTableFunction(GraftExtensions.frontierTableFunction)
-    ext.injectTableFunction(GraftExtensions.anchorTextsTableFunction)
-    ext.injectTableFunction(GraftExtensions.anchorIndexTableFunction)
-    ext.injectTableFunction(GraftExtensions.robotsRulesTableFunction)
-    ext.injectTableFunction(GraftExtensions.robotsFilterTableFunction)
-    ext.injectTableFunction(GraftExtensions.hostSummaryTableFunction)
-    ext.injectTableFunction(GraftExtensions.sitemapUrlsTableFunction)
-    ext.injectTableFunction(GraftExtensions.crawlDelaysTableFunction)
-    ext.injectTableFunction(GraftExtensions.politeFrontierTableFunction)
-    ext.injectTableFunction(GraftExtensions.recrawlPolicyTableFunction)
-    ext.injectTableFunction(GraftExtensions.robotsSitemapsTableFunction)
-    ext.injectTableFunction(GraftExtensions.urlTemplatesTableFunction)
-    ext.injectTableFunction(GraftExtensions.crawlBudgetTableFunction)
-    ext.injectTableFunction(GraftExtensions.averagePrecisionTableFunction)
-    ext.injectTableFunction(GraftExtensions.operatingPointCertifiedTableFunction)
-    ext.injectTableFunction(GraftExtensions.manifestDiffExplainedTableFunction)
-    ext.injectTableFunction(GraftExtensions.classifierDriftTableFunction)
-    ext.injectTableFunction(GraftExtensions.searchPageServedTableFunction)
-    ext.injectTableFunction(GraftExtensions.hybridServedTableFunction)
-    ext.injectTableFunction(GraftExtensions.hybridServedAnnTableFunction)
+    GraftExtensions.scalarFunctions.foreach(f => ext.injectFunction(f.spec))
+    GraftExtensions.tableFunctions.foreach(f => ext.injectTableFunction(f.spec))
     ext.injectPlannerStrategy(_ => AsOfJoin.AsOfStrategy)
   }
 }
 
 object GraftExtensions {
-  private val dotFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_dot"),
-    new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2, "graft_dot(a, b) takes exactly two arguments")
-      DotProduct(children.head, children(1))
-    })
 
-  private val nfcFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_nfc"),
-    new ExpressionInfo(classOf[graft.functions.NfcNormalize].getName, "graft_nfc"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "graft_nfc(text) takes exactly one argument")
-      graft.functions.NfcNormalize(children.head)
-    })
-
-  /** SQL surface for the JL sign projection:
-    * `SELECT graft_jl_project(CAST(embedding AS ARRAY<DOUBLE>), 64, 16)`.
-    * Dims must be foldable integer literals (they size the driver-built
-    * sign matrix at plan time). */
-  private val jlProjectFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_jl_project"),
-    new ExpressionInfo(classOf[graft.functions.JlProject].getName, "graft_jl_project"),
-    (children: Seq[Expression]) => {
-      require(children.size == 3,
-        "graft_jl_project(vec, in_dim, out_dim) takes exactly three arguments")
-      def dim(e: Expression, name: String): Int = e match {
-        case Literal(v: Int, _: org.apache.spark.sql.types.IntegerType) => v
-        case other => throw new IllegalArgumentException(
-          s"graft_jl_project: $name must be an integer literal, got ${other.sql}")
+  /** One SQL function. `sig` is its SQL signature, e.g.
+    * `graft_frontier(pages_table, ranks_table[, per_host_cap])`: the
+    * name, then the argument names in order. Each `[…]` group is
+    * all-or-nothing and may nest; optional groups trail the required
+    * arguments. `owner`'s class name goes into the `ExpressionInfo`. */
+  private final class Fn[R](val sig: String, owner: Class[_], body: Args => R) {
+    val name: String = sig.takeWhile(_ != '(')
+    /** The argument names, and every argument count the signature allows
+      * (the names before each `[`, plus all of them). */
+    val (params, arities): (Vector[String], Set[Int]) = {
+      val inner = sig.slice(sig.indexOf('(') + 1, sig.lastIndexOf(')'))
+      val tokens = inner.split("(?=\\[)|[\\],]").map(_.trim).filter(_.nonEmpty)
+      val (names, counts) = tokens.foldLeft((Vector.empty[String], Set.empty[Int])) {
+        case ((ns, cs), "[") => (ns, cs + ns.size)
+        case ((ns, cs), n) => (ns :+ n, cs)
       }
-      val (in, out) = (dim(children(1), "in_dim"), dim(children(2), "out_dim"))
+      (names, counts + names.size)
+    }
+
+    def spec: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => R) =
+      (FunctionIdentifier(name), new ExpressionInfo(owner.getName, name),
+        children => body(new Args(this, children)))
+  }
+
+  private def scalar(sig: String, owner: Class[_])(body: Args => Expression): Fn[Expression] =
+    new Fn(sig, owner, body)
+
+  private def tvf(sig: String, owner: Class[_])(body: Args => DataFrame): Fn[LogicalPlan] =
+    new Fn(sig, owner, body.andThen(GraftSqlBridge.analyzedPlan))
+
+  private val CountWords =
+    Vector("zero", "one", "two", "three", "four", "five", "six", "seven", "eight", "nine")
+
+  /** The arguments of one call, read by position. The TVF argument rules
+    * live here: every graft TVF argument is a literal (names resolve
+    * against the active catalog when the builder runs; arbitrary
+    * subqueries belong in the Column API), and a wrong argument count or
+    * a wrong literal throws `IllegalArgumentException` naming the
+    * function. */
+  private final class Args(fn: Fn[_], children: Seq[Expression]) {
+    require(fn.arities(children.size),
+      s"${fn.sig} takes ${fn.arities.toSeq.sorted.map(CountWords).mkString(" or ")} " +
+        s"argument${if (fn.arities == Set(1)) "" else "s"}, got ${children.size}")
+
+    def size: Int = children.size
+    def spark: SparkSession = SparkSession.active
+    def expr(i: Int): Expression = children(i)
+
+    def bad(i: Int, what: String): Nothing = throw new IllegalArgumentException(
+      s"${fn.name}: ${fn.params(i)} must be $what, got ${children(i).sql}")
+
+    def str(i: Int): String = children(i) match {
+      case Literal(s: UTF8String, StringType) => s.toString
+      case _ => bad(i, "a string literal")
+    }
+    def int(i: Int): Int = children(i) match {
+      case Literal(v: Int, _: IntegerType) => v
+      case _ => bad(i, "an integer literal")
+    }
+    /** Numeric literal: SQL writes `0.95`, `CAST(0.9 AS DOUBLE)` or a
+      * plain `1` — the parser types those DECIMAL / DOUBLE / INT, and
+      * all deserve the same treatment for a threshold/bias knob. */
+    def num(i: Int): Double = children(i) match {
+      case Literal(v: Double, _: DoubleType) => v
+      case Literal(v: Float, _: FloatType) => v.toDouble
+      case Literal(d: Decimal, _) => d.toDouble
+      case Literal(v: Int, _: IntegerType) => v.toDouble
+      case Literal(v: Long, _: LongType) => v.toDouble
+      case _ => bad(i, "a numeric literal")
+    }
+    def table(i: Int): DataFrame = spark.table(str(i))
+    /** A comma-separated list literal, entries trimmed, empties dropped. */
+    def csv(i: Int): Seq[String] = str(i).split(",").map(_.trim).filter(_.nonEmpty).toSeq
+
+    def strOr(i: Int, default: String): String = if (i < size) str(i) else default
+    def intOr(i: Int, default: Int): Int = if (i < size) int(i) else default
+    def numOr(i: Int, default: Double): Double = if (i < size) num(i) else default
+  }
+
+  /** The lexical layout of a path-literal served face's store: resolved
+    * from the store's `_GRAFT_LAYOUT` marker, HashPrefix when it has
+    * none. */
+  private def servedLayout(spark: SparkSession, store: String): IndexStore.Layout =
+    IndexStore.storedLayout(spark, s"$store/postings").getOrElse(IndexStore.HashPrefix)
+
+  private val scalarFunctions: Seq[Fn[Expression]] = Seq(
+    scalar("graft_dot(a, b)", classOf[DotProduct])(a => DotProduct(a.expr(0), a.expr(1))),
+
+    scalar("graft_nfc(text)", classOf[NfcNormalize])(a => NfcNormalize(a.expr(0))),
+
+    /** SQL surface for the JL sign projection:
+      * `SELECT graft_jl_project(CAST(embedding AS ARRAY<DOUBLE>), 64, 16)`.
+      * Dims must be foldable integer literals (they size the driver-built
+      * sign matrix at plan time). */
+    scalar("graft_jl_project(vec, in_dim, out_dim)", classOf[JlProject]) { a =>
+      val (in, out) = (a.int(1), a.int(2))
       if (in < 1 || out < 1) throw new IllegalArgumentException(
         s"graft_jl_project: dims must be >= 1, got ($in, $out)")
-      graft.functions.JlProject(children.head, in, out)
-    })
+      JlProject(a.expr(0), in, out)
+    },
 
-  /** SQL surface for the Aho–Corasick phrase matcher:
-    * `SELECT graft_phrase_match(text, array(' a b ', ' c d '))` →
-    * `[total_hits, distinct_phrases]`. The pattern array must be
-    * foldable (it builds the driver-side automaton at plan time). */
-  private val phraseMatchFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_phrase_match"),
-    new ExpressionInfo(classOf[graft.functions.PhraseMatch].getName, "graft_phrase_match"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2,
-        "graft_phrase_match(text, phrases) takes exactly two arguments")
-      val pats = children(1) match {
-        case e if e.foldable && e.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType] =>
-          val ad = e.eval().asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+    /** SQL surface for the Aho–Corasick phrase matcher:
+      * `SELECT graft_phrase_match(text, array(' a b ', ' c d '))` →
+      * `[total_hits, distinct_phrases]`. The pattern array must be
+      * foldable (it builds the driver-side automaton at plan time). */
+    scalar("graft_phrase_match(text, phrases)", classOf[PhraseMatch]) { a =>
+      val pats = a.expr(1) match {
+        case e if e.foldable && e.dataType.isInstanceOf[ArrayType] =>
+          val ad = e.eval().asInstanceOf[ArrayData]
           (0 until ad.numElements()).map(i => ad.getUTF8String(i).toString)
-        case other => throw new IllegalArgumentException(
-          s"graft_phrase_match: phrases must be a foldable string array, got ${other.sql}")
+        case _ => a.bad(1, "a foldable string array")
       }
-      graft.functions.PhraseMatch(children.head, pats)
-    })
+      PhraseMatch(a.expr(0), pats)
+    },
 
-  /** SQL surface for the bounded-heap top-k aggregate:
-    * `SELECT g, graft_top_k(score, id, 3) FROM t GROUP BY g`. The
-    * analyzer wraps a registered AggregateFunction in an
-    * AggregateExpression itself; `k` must be a foldable integer
-    * literal (it sizes the heap at plan time). */
-  private val topKFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_top_k"),
-    new ExpressionInfo(classOf[graft.functions.TopKByScore].getName, "graft_top_k"),
-    (children: Seq[Expression]) => {
-      require(children.size == 3,
-        "graft_top_k(score, id, k) takes exactly three arguments")
-      val k = children(2) match {
-        case Literal(v: Int, _: org.apache.spark.sql.types.IntegerType) => v
-        case Literal(v: Long, _: org.apache.spark.sql.types.LongType) =>
+    /** SQL surface for the bounded-heap top-k aggregate:
+      * `SELECT g, graft_top_k(score, id, 3) FROM t GROUP BY g`. The
+      * analyzer wraps a registered AggregateFunction in an
+      * AggregateExpression itself; `k` must be a foldable integer
+      * literal (it sizes the heap at plan time). */
+    scalar("graft_top_k(score, id, k)", classOf[TopKByScore]) { a =>
+      val k = a.expr(2) match {
+        case Literal(v: Long, _: LongType) =>
           // a bigint literal outside Int range must fail loudly, not
           // truncate (k = 2^32+1 would silently become 1)
           if (v < 1 || v > Int.MaxValue) throw new IllegalArgumentException(
             s"graft_top_k: k=$v is outside [1, ${Int.MaxValue}]")
           v.toInt
-        case other => throw new IllegalArgumentException(
-          s"graft_top_k: k must be an integer literal, got ${other.sql}")
+        case _ => a.int(2)
       }
       if (k < 1) throw new IllegalArgumentException(s"graft_top_k: k=$k must be >= 1")
-      graft.functions.TopKByScore(children(0), children(1), k)
+      TopKByScore(a.expr(0), a.expr(1), k)
     })
 
-  /** SQL surface for the native as-of operator — a table-valued
-    * function (FROM-clause callable), since the operator is a whole
-    * relation, not a scalar:
-    *
-    * {{{
-    * SELECT * FROM graft_asof(
-    *   'purchases', 'clicks',       -- table/view names
-    *   'user_id', 'c_user',         -- key columns (CSV for multi-key)
-    *   'ts_ns', 'c_ts',             -- time columns
-    *   'click_id')                  -- right tie-break column
-    * }}}
-    *
-    * All seven arguments are string LITERALS (names are resolved
-    * against the active session's catalog at plan time — the standard
-    * TVF argument style; arbitrary subqueries belong in the Column
-    * API). Key lists are comma-separated, matched positionally.
-    */
-  private val asofTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_asof"),
-    new ExpressionInfo(AsOfJoin.getClass.getName, "graft_asof"),
-    (children: Seq[Expression]) => {
-      require(children.size == 7,
-        "graft_asof(left_table, right_table, left_keys, right_keys, " +
-          "left_time, right_time, right_tie_break) takes exactly seven arguments")
-      val names = Seq("left_table", "right_table", "left_keys", "right_keys",
-        "left_time", "right_time", "right_tie_break")
-      val args = children.zip(names).map {
-        case (Literal(s: UTF8String, StringType), _) => s.toString
-        case (other, what) => throw new IllegalArgumentException(
-          s"graft_asof: $what must be a string literal, got ${other.sql}")
-      }
-      val spark = SparkSession.active
-      def csv(s: String): Seq[String] = s.split(",").map(_.trim).toSeq
-      AsOfJoin.buildPlan(
-        spark.table(args(0)), spark.table(args(1)),
-        csv(args(2)), csv(args(3)), args(4), args(5), args(6))
-    })
+  private val tableFunctions: Seq[Fn[LogicalPlan]] = Seq(
+    /** SQL surface for the native as-of operator — a table-valued
+      * function (FROM-clause callable), since the operator is a whole
+      * relation, not a scalar:
+      *
+      * {{{
+      * SELECT * FROM graft_asof(
+      *   'purchases', 'clicks',       -- table/view names
+      *   'user_id', 'c_user',         -- key columns (CSV for multi-key)
+      *   'ts_ns', 'c_ts',             -- time columns
+      *   'click_id')                  -- right tie-break column
+      * }}}
+      *
+      * All seven arguments are string LITERALS (names are resolved
+      * against the active session's catalog at plan time — the standard
+      * TVF argument style; arbitrary subqueries belong in the Column
+      * API). Key lists are comma-separated, matched positionally.
+      */
+    tvf("graft_asof(left_table, right_table, left_keys, right_keys, " +
+        "left_time, right_time, right_tie_break)", AsOfJoin.getClass) { a =>
+      def keys(i: Int): Seq[String] = a.str(i).split(",").map(_.trim).toSeq
+      GraftSqlBridge.ofRows(a.spark, AsOfJoin.buildPlan(a.table(0), a.table(1),
+        keys(2), keys(3), a.str(4), a.str(5), a.str(6)))
+    },
 
-  /** Shared TVF-argument extractors: all graft TVF arguments are
-    * literals (names resolve against the active catalog at plan time;
-    * arbitrary subqueries belong in the Column API). */
-  private def stringArg(fn: String)(e: Expression, what: String): String = e match {
-    case Literal(s: UTF8String, StringType) => s.toString
-    case other => throw new IllegalArgumentException(
-      s"$fn: $what must be a string literal, got ${other.sql}")
-  }
-  private def intArg(fn: String)(e: Expression, what: String): Int = e match {
-    case Literal(v: Int, _: org.apache.spark.sql.types.IntegerType) => v
-    case other => throw new IllegalArgumentException(
-      s"$fn: $what must be an integer literal, got ${other.sql}")
-  }
-  /** Numeric-literal argument: SQL writes `0.95`, `CAST(0.9 AS DOUBLE)`
-    * or a plain `1` — the parser types those DECIMAL / DOUBLE / INT, and
-    * all deserve the same treatment for a threshold/bias knob. */
-  private def numArg(fn: String)(e: Expression, what: String): Double = e match {
-    case Literal(v: Double, _: org.apache.spark.sql.types.DoubleType) => v
-    case Literal(v: Float, _: org.apache.spark.sql.types.FloatType) => v.toDouble
-    case Literal(d: org.apache.spark.sql.types.Decimal, _) => d.toDouble
-    case Literal(v: Int, _: org.apache.spark.sql.types.IntegerType) => v.toDouble
-    case Literal(v: Long, _: org.apache.spark.sql.types.LongType) => v.toDouble
-    case other => throw new IllegalArgumentException(
-      s"$fn: $what must be a numeric literal, got ${other.sql}")
-  }
+    /** SQL surface for the MinHash near-dup candidate generator — a
+      * whole-relation operator, so a table-valued function:
+      *
+      * {{{
+      * SELECT * FROM graft_minhash_pairs('docs')           -- w=3, k=8, bands=2
+      * SELECT * FROM graft_minhash_pairs('docs', 3, 8, 2)  -- explicit knobs
+      * }}}
+      *
+      * The named table/view must carry (doc_id, text); emits (doc_a,
+      * doc_b). Resolution builds [[graft.ops.Dedup.minhashCandidatePairs]]'
+      * plan with the LAZY [[graft.core.Materialize.Persist]] strategy:
+      * analysis (including `EXPLAIN`) runs no job; the first execution
+      * materializes the band-bucket table into the session cache, where
+      * the cache manager dedups by canonicalized plan — re-issuing the
+      * same call reuses the entry instead of accumulating one per call.
+      * Distinct (table, knobs) combinations do each keep an entry until
+      * `spark.catalog.clearCache()` (the release path for a long
+      * session). */
+    tvf("graft_minhash_pairs(table[, w, k, bands])", Dedup.getClass) { a =>
+      Dedup.minhashCandidatePairs(a.table(0), a.intOr(1, 3), a.intOr(2, 8), a.intOr(3, 2),
+        mat = Materialize.Persist)
+    },
 
-  /** SQL surface for the MinHash near-dup candidate generator — a
-    * whole-relation operator, so a table-valued function:
-    *
-    * {{{
-    * SELECT * FROM graft_minhash_pairs('docs')           -- w=3, k=8, bands=2
-    * SELECT * FROM graft_minhash_pairs('docs', 3, 8, 2)  -- explicit knobs
-    * }}}
-    *
-    * The named table/view must carry (doc_id, text); emits (doc_a,
-    * doc_b). Resolution builds [[graft.ops.Dedup.minhashCandidatePairs]]'
-    * plan with the LAZY [[graft.core.Materialize.Persist]] strategy:
-    * analysis (including `EXPLAIN`) runs no job; the first execution
-    * materializes the band-bucket table into the session cache, where
-    * the cache manager dedups by canonicalized plan — re-issuing the
-    * same call reuses the entry instead of accumulating one per call.
-    * Distinct (table, knobs) combinations do each keep an entry until
-    * `spark.catalog.clearCache()` (the release path for a long
-    * session). */
-  private val minhashPairsTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_minhash_pairs"),
-    new ExpressionInfo(graft.ops.Dedup.getClass.getName, "graft_minhash_pairs"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1 || children.size == 4,
-        "graft_minhash_pairs(table) or graft_minhash_pairs(table, w, k, bands)")
-      val str = stringArg("graft_minhash_pairs") _
-      val int = intArg("graft_minhash_pairs") _
-      val docs = SparkSession.active.table(str(children.head, "table"))
-      val (w, k, bands) =
-        if (children.size == 4)
-          (int(children(1), "w"), int(children(2), "k"), int(children(3), "bands"))
-        else (3, 8, 2)
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Dedup.minhashCandidatePairs(docs, w, k, bands,
-          mat = graft.core.Materialize.Persist))
-    })
+    /** SQL surface for benchmark decontamination:
+      *
+      * {{{
+      * SELECT * FROM graft_decontaminate('train_docs', 'eval_docs')     -- w=3
+      * SELECT * FROM graft_decontaminate('train_docs', 'eval_docs', 3)
+      * }}}
+      *
+      * Emits the surviving training rows (every column of the train
+      * table) — training docs sharing no w-token shingle with the eval
+      * corpus, [[graft.ops.Dedup.decontaminate]]. */
+    tvf("graft_decontaminate(train_table, eval_table[, w])", Dedup.getClass) { a =>
+      Dedup.decontaminate(a.table(0), a.table(1), a.intOr(2, 3))
+    },
 
-  /** SQL surface for benchmark decontamination:
-    *
-    * {{{
-    * SELECT * FROM graft_decontaminate('train_docs', 'eval_docs')     -- w=3
-    * SELECT * FROM graft_decontaminate('train_docs', 'eval_docs', 3)
-    * }}}
-    *
-    * Emits the surviving training rows (every column of the train
-    * table) — training docs sharing no w-token shingle with the eval
-    * corpus, [[graft.ops.Dedup.decontaminate]]. */
-  private val decontaminateTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_decontaminate"),
-    new ExpressionInfo(graft.ops.Dedup.getClass.getName, "graft_decontaminate"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2 || children.size == 3,
-        "graft_decontaminate(train_table, eval_table[, w])")
-      val str = stringArg("graft_decontaminate") _
-      val spark = SparkSession.active
-      val w = if (children.size == 3) intArg("graft_decontaminate")(children(2), "w") else 3
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Dedup.decontaminate(
-          spark.table(str(children.head, "train_table")),
-          spark.table(str(children(1), "eval_table")), w))
-    })
+    /** SQL surface for the n-gram novelty score
+      * ([[graft.ops.Dedup.noveltyScore]] — the memorization/overlap audit
+      * the binary decontaminate rule grows into):
+      *
+      * {{{
+      * SELECT * FROM graft_novelty('docs', 'ref_shingles')     -- w=3
+      * SELECT * FROM graft_novelty('docs', 'ref_shingles', 3)
+      * }}}
+      *
+      * `docs` carries (doc_id, text); `ref_shingles` is any stored
+      * shingle table (a [[graft.ops.Dedup.evalShingles]] output —
+      * `w` must equal the width it was built with, same contract as
+      * [[graft.ops.Dedup.contaminatedIdsAgainst]]). Emits
+      * (doc_id, n_shingles, n_seen, novelty) for every doc. Fully lazy —
+      * the operator materializes nothing, so analysis and EXPLAIN run no
+      * job and there is no cache entry to release. */
+    tvf("graft_novelty(docs_table, ref_shingles_table[, w])", Dedup.getClass) { a =>
+      Dedup.noveltyScore(a.table(0), a.table(1), a.intOr(2, 3))
+    },
 
-  /** SQL surface for the n-gram novelty score
-    * ([[graft.ops.Dedup.noveltyScore]] — the memorization/overlap audit
-    * the binary decontaminate rule grows into):
-    *
-    * {{{
-    * SELECT * FROM graft_novelty('docs', 'ref_shingles')     -- w=3
-    * SELECT * FROM graft_novelty('docs', 'ref_shingles', 3)
-    * }}}
-    *
-    * `docs` carries (doc_id, text); `ref_shingles` is any stored
-    * shingle table (a [[graft.ops.Dedup.evalShingles]] output —
-    * `w` must equal the width it was built with, same contract as
-    * [[graft.ops.Dedup.contaminatedIdsAgainst]]). Emits
-    * (doc_id, n_shingles, n_seen, novelty) for every doc. Fully lazy —
-    * the operator materializes nothing, so analysis and EXPLAIN run no
-    * job and there is no cache entry to release. */
-  private val noveltyTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_novelty"),
-    new ExpressionInfo(graft.ops.Dedup.getClass.getName, "graft_novelty"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2 || children.size == 3,
-        "graft_novelty(docs_table, ref_shingles_table[, w])")
-      val str = stringArg("graft_novelty") _
-      val spark = SparkSession.active
-      val w = if (children.size == 3) intArg("graft_novelty")(children(2), "w") else 3
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Dedup.noveltyScore(
-          spark.table(str(children.head, "docs_table")),
-          spark.table(str(children(1), "ref_shingles_table")), w))
-    })
+    /** SQL surface for the generic Hamming-near pairing engine
+      * ([[graft.ops.Dedup.hammingPairs]] — the segment-blocked machinery
+      * behind text SimHash and image perceptual-hash dedup):
+      *
+      * {{{
+      * SELECT * FROM graft_hamming_pairs('sigs')        -- bits=64, max_hamming=3
+      * SELECT * FROM graft_hamming_pairs('sigs', 64, 3)
+      * }}}
+      *
+      * The named table carries `(doc_id, sig)` with the signature as a
+      * BIGINT — a stored [[graft.ops.Dedup.simhash]] output, a
+      * [[graft.ops.Multimodal.imagePhash]] table projected as
+      * `SELECT doc_id, dhash AS sig`, or any other bigint fingerprint.
+      * Emits (doc_a, doc_b, hamming). `bits` must be divisible by
+      * max_hamming+1 (the pigeonhole segment count). Lazy Persist
+      * materialization for the signature table (the self-join reads it
+      * twice): EXPLAIN runs no job; the first execution populates the
+      * session cache. */
+    tvf("graft_hamming_pairs(sigs_table[, bits, max_hamming])", Dedup.getClass) { a =>
+      Dedup.hammingPairs(a.table(0), a.intOr(1, 64), a.intOr(2, 3), mat = Materialize.Persist)
+    },
 
-  /** SQL surface for the generic Hamming-near pairing engine
-    * ([[graft.ops.Dedup.hammingPairs]] — the segment-blocked machinery
-    * behind text SimHash and image perceptual-hash dedup):
-    *
-    * {{{
-    * SELECT * FROM graft_hamming_pairs('sigs')        -- bits=64, max_hamming=3
-    * SELECT * FROM graft_hamming_pairs('sigs', 64, 3)
-    * }}}
-    *
-    * The named table carries `(doc_id, sig)` with the signature as a
-    * BIGINT — a stored [[graft.ops.Dedup.simhash]] output, a
-    * [[graft.ops.Multimodal.imagePhash]] table projected as
-    * `SELECT doc_id, dhash AS sig`, or any other bigint fingerprint.
-    * Emits (doc_a, doc_b, hamming). `bits` must be divisible by
-    * max_hamming+1 (the pigeonhole segment count). Lazy Persist
-    * materialization for the signature table (the self-join reads it
-    * twice): EXPLAIN runs no job; the first execution populates the
-    * session cache. */
-  private val hammingPairsTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_hamming_pairs"),
-    new ExpressionInfo(graft.ops.Dedup.getClass.getName, "graft_hamming_pairs"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1 || children.size == 3,
-        "graft_hamming_pairs(sigs_table[, bits, max_hamming])")
-      val str = stringArg("graft_hamming_pairs") _
-      val int = intArg("graft_hamming_pairs") _
-      val spark = SparkSession.active
-      val (bits, maxHamming) =
-        if (children.size == 3) (int(children(1), "bits"), int(children(2), "max_hamming"))
-        else (64, 3)
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Dedup.hammingPairs(
-          spark.table(str(children.head, "sigs_table")), bits, maxHamming,
-          mat = graft.core.Materialize.Persist))
-    })
+    /** SQL surface for Unicode writing-system detection
+      * ([[graft.ops.TextAnalysis.scriptSignals]]):
+      *
+      * {{{
+      * SELECT * FROM graft_script('docs')
+      * }}}
+      *
+      * The named table carries (doc_id, text); emits per-doc script-block
+      * counts/fractions + dominant_script. Fully lazy — no cache entry. */
+    tvf("graft_script(docs_table)", TextAnalysis.getClass)(a =>
+      TextAnalysis.scriptSignals(a.table(0))),
 
-  /** SQL surface for Unicode writing-system detection
-    * ([[graft.ops.TextAnalysis.scriptSignals]]):
-    *
-    * {{{
-    * SELECT * FROM graft_script('docs')
-    * }}}
-    *
-    * The named table carries (doc_id, text); emits per-doc script-block
-    * counts/fractions + dominant_script. Fully lazy — no cache entry. */
-  private val scriptTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_script"),
-    new ExpressionInfo(graft.ops.TextAnalysis.getClass.getName, "graft_script"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "graft_script(docs_table)")
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.TextAnalysis.scriptSignals(SparkSession.active.table(
-          stringArg("graft_script")(children.head, "docs_table"))))
-    })
+    /** SQL surface for script-first language routing
+      * ([[graft.ops.TextAnalysis.languageRoute]]):
+      *
+      * {{{
+      * SELECT * FROM graft_lang_route('docs')
+      * }}}
+      *
+      * Emits (doc_id, dominant_script, pred_lang, route) — the dispatch
+      * key of a multilingual pipeline. Fully lazy — no cache entry. */
+    tvf("graft_lang_route(docs_table)", TextAnalysis.getClass)(a =>
+      TextAnalysis.languageRoute(a.table(0))),
 
-  /** SQL surface for script-first language routing
-    * ([[graft.ops.TextAnalysis.languageRoute]]):
-    *
-    * {{{
-    * SELECT * FROM graft_lang_route('docs')
-    * }}}
-    *
-    * Emits (doc_id, dominant_script, pred_lang, route) — the dispatch
-    * key of a multilingual pipeline. Fully lazy — no cache entry. */
-  private val langRouteTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_lang_route"),
-    new ExpressionInfo(graft.ops.TextAnalysis.getClass.getName, "graft_lang_route"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "graft_lang_route(docs_table)")
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.TextAnalysis.languageRoute(SparkSession.active.table(
-          stringArg("graft_lang_route")(children.head, "docs_table"))))
-    })
+    /** SQL face of the C4-style blocklist gate:
+      * {{{
+      * SELECT * FROM graft_blocklist('docs')            -- default list
+      * SELECT * FROM graft_blocklist('docs', 'terms')   -- (term) table
+      * }}}
+      * One-arg uses [[graft.ops.Blocklist.default]]; two-arg routes
+      * through the broadcast-table face. Fully lazy — no cache entry. */
+    tvf("graft_blocklist(docs_table[, terms_table])", TextAnalysis.getClass) { a =>
+      if (a.size == 1) TextAnalysis.blocklistSignals(a.table(0))
+      else TextAnalysis.blocklistSignalsFrom(a.table(0), a.table(1))
+    },
 
-  /** SQL face of the C4-style blocklist gate:
-    * {{{
-    * SELECT * FROM graft_blocklist('docs')            -- default list
-    * SELECT * FROM graft_blocklist('docs', 'terms')   -- (term) table
-    * }}}
-    * One-arg uses [[graft.ops.Blocklist.default]]; two-arg routes
-    * through the broadcast-table face. Fully lazy — no cache entry. */
-  private val blocklistTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_blocklist"),
-    new ExpressionInfo(graft.ops.TextAnalysis.getClass.getName, "graft_blocklist"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1 || children.size == 2,
-        "graft_blocklist(docs_table[, terms_table])")
-      val d = SparkSession.active.table(
-        stringArg("graft_blocklist")(children.head, "docs_table"))
-      val out =
-        if (children.size == 1) graft.ops.TextAnalysis.blocklistSignals(d)
-        else graft.ops.TextAnalysis.blocklistSignalsFrom(d, SparkSession.active.table(
-          stringArg("graft_blocklist")(children(1), "terms_table")))
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(out)
-    })
+    /** SQL face of the PII signal pass:
+      * `SELECT * FROM graft_pii('docs')` — per-doc IPv4/SSN/phone counts
+      * plus the ordered-redaction hash. Fully lazy. */
+    tvf("graft_pii(docs_table)", TextAnalysis.getClass)(a =>
+      TextAnalysis.piiSignals(a.table(0))),
 
-  /** SQL face of the PII signal pass:
-    * `SELECT * FROM graft_pii('docs')` — per-doc IPv4/SSN/phone counts
-    * plus the ordered-redaction hash. Fully lazy. */
-  private val piiTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_pii"),
-    new ExpressionInfo(graft.ops.TextAnalysis.getClass.getName, "graft_pii"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "graft_pii(docs_table)")
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.TextAnalysis.piiSignals(SparkSession.active.table(
-          stringArg("graft_pii")(children.head, "docs_table"))))
-    })
+    /** SQL face of encoding-damage detection:
+      * `SELECT * FROM graft_mojibake('docs')` — the four mojibake
+      * signature counts + the composite flag. Fully lazy. */
+    tvf("graft_mojibake(docs_table)", TextAnalysis.getClass)(a =>
+      TextAnalysis.mojibakeSignals(a.table(0))),
 
-  /** SQL face of encoding-damage detection:
-    * `SELECT * FROM graft_mojibake('docs')` — the four mojibake
-    * signature counts + the composite flag. Fully lazy. */
-  private val mojibakeTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_mojibake"),
-    new ExpressionInfo(graft.ops.TextAnalysis.getClass.getName, "graft_mojibake"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "graft_mojibake(docs_table)")
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.TextAnalysis.mojibakeSignals(SparkSession.active.table(
-          stringArg("graft_mojibake")(children.head, "docs_table"))))
-    })
+    /** SQL face of code-vs-prose routing:
+      * `SELECT * FROM graft_code_detect('docs')` — symbol density,
+      * keyword hits, indentation evidence + the composite flag. Fully
+      * lazy. */
+    tvf("graft_code_detect(docs_table)", TextAnalysis.getClass)(a =>
+      TextAnalysis.codeSignals(a.table(0))),
 
-  /** SQL face of code-vs-prose routing:
-    * `SELECT * FROM graft_code_detect('docs')` — symbol density,
-    * keyword hits, indentation evidence + the composite flag. Fully
-    * lazy. */
-  private val codeDetectTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_code_detect"),
-    new ExpressionInfo(graft.ops.TextAnalysis.getClass.getName, "graft_code_detect"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "graft_code_detect(docs_table)")
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.TextAnalysis.codeSignals(SparkSession.active.table(
-          stringArg("graft_code_detect")(children.head, "docs_table"))))
-    })
+    /** SQL face of sentence segmentation:
+      * `SELECT * FROM graft_sentences('docs')`. Fully lazy. */
+    tvf("graft_sentences(docs_table)", TextAnalysis.getClass)(a =>
+      TextAnalysis.sentenceSignals(a.table(0))),
 
-  /** SQL face of sentence segmentation:
-    * `SELECT * FROM graft_sentences('docs')`. Fully lazy. */
-  private val sentencesTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_sentences"),
-    new ExpressionInfo(graft.ops.TextAnalysis.getClass.getName, "graft_sentences"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "graft_sentences(docs_table)")
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.TextAnalysis.sentenceSignals(SparkSession.active.table(
-          stringArg("graft_sentences")(children.head, "docs_table"))))
-    })
+    /** SQL face of RAG passage chunking:
+      * `SELECT * FROM graft_passages('docs')` — default window 64,
+      * stride 32. Fully lazy. */
+    tvf("graft_passages(docs_table)", TextAnalysis.getClass)(a =>
+      TextAnalysis.passages(a.table(0))),
 
-  /** SQL face of RAG passage chunking:
-    * `SELECT * FROM graft_passages('docs')` — default window 64,
-    * stride 32. Fully lazy. */
-  private val passagesTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_passages"),
-    new ExpressionInfo(graft.ops.TextAnalysis.getClass.getName, "graft_passages"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "graft_passages(docs_table)")
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.TextAnalysis.passages(SparkSession.active.table(
-          stringArg("graft_passages")(children.head, "docs_table"))))
-    })
-
-  /** SQL face of winnowing-fingerprint pairing:
-    * `SELECT * FROM graft_fingerprint_pairs('docs')` — default
-    * (w=4, k=3, minShared=2, maxDf=64). Fully lazy. */
-  private val fingerprintPairsTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_fingerprint_pairs"),
-    new ExpressionInfo(graft.ops.Dedup.getClass.getName, "graft_fingerprint_pairs"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "graft_fingerprint_pairs(docs_table)")
+    /** SQL face of winnowing-fingerprint pairing:
+      * `SELECT * FROM graft_fingerprint_pairs('docs')` — default
+      * (w=4, k=3, minShared=2, maxDf=64). Fully lazy. */
+    tvf("graft_fingerprint_pairs(docs_table)", Dedup.getClass)(a =>
       // Persist, not localCheckpoint: a TVF body must stay lazy (the
       // graft_minhash_pairs convention — EXPLAIN runs no job)
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Dedup.fingerprintPairs(
-          SparkSession.active.table(
-            stringArg("graft_fingerprint_pairs")(children.head, "docs_table")),
-          mat = graft.core.Materialize.Persist))
-    })
+      Dedup.fingerprintPairs(a.table(0), mat = Materialize.Persist)),
 
-  /** SQL face of the duplicate-group-size histogram:
-    * `SELECT * FROM graft_dup_spectrum('docs')`. Fully lazy. */
-  private val dupSpectrumTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_dup_spectrum"),
-    new ExpressionInfo(graft.ops.Dedup.getClass.getName, "graft_dup_spectrum"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "graft_dup_spectrum(docs_table)")
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Dedup.duplicationSpectrum(SparkSession.active.table(
-          stringArg("graft_dup_spectrum")(children.head, "docs_table"))))
-    })
+    /** SQL face of the duplicate-group-size histogram:
+      * `SELECT * FROM graft_dup_spectrum('docs')`. Fully lazy. */
+    tvf("graft_dup_spectrum(docs_table)", Dedup.getClass)(a =>
+      Dedup.duplicationSpectrum(a.table(0))),
 
-  /** SQL surface for the leakage-safe split
-    * ([[graft.ops.Sampling.leakageSafeSplit]]):
-    *
-    * {{{
-    * SELECT * FROM graft_split_safe('docs', 'clusters')         -- 80/10
-    * SELECT * FROM graft_split_safe('docs', 'clusters', 90, 5)
-    * }}}
-    *
-    * `docs` carries doc_id (any other columns pass through);
-    * `clusters` is a stored `(doc_id, cluster_id)` table
-    * ([[graft.ops.Dedup.clusters]] output). Emits docs + split_key +
-    * split. Fully lazy — no cache entry. */
-  private val splitSafeTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_split_safe"),
-    new ExpressionInfo(graft.ops.Sampling.getClass.getName, "graft_split_safe"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2 || children.size == 4,
-        "graft_split_safe(docs_table, clusters_table[, train_pct, val_pct])")
-      val str = stringArg("graft_split_safe") _
-      val int = intArg("graft_split_safe") _
-      val spark = SparkSession.active
-      val (tr, va) =
-        if (children.size == 4) (int(children(2), "train_pct"), int(children(3), "val_pct"))
-        else (80, 10)
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Sampling.leakageSafeSplit(
-          spark.table(str(children.head, "docs_table")),
-          spark.table(str(children(1), "clusters_table")),
-          trainPct = tr, valPct = va))
-    })
+    /** SQL surface for the leakage-safe split
+      * ([[graft.ops.Sampling.leakageSafeSplit]]):
+      *
+      * {{{
+      * SELECT * FROM graft_split_safe('docs', 'clusters')         -- 80/10
+      * SELECT * FROM graft_split_safe('docs', 'clusters', 90, 5)
+      * }}}
+      *
+      * `docs` carries doc_id (any other columns pass through);
+      * `clusters` is a stored `(doc_id, cluster_id)` table
+      * ([[graft.ops.Dedup.clusters]] output). Emits docs + split_key +
+      * split. Fully lazy — no cache entry. */
+    tvf("graft_split_safe(docs_table, clusters_table[, train_pct, val_pct])",
+        Sampling.getClass) { a =>
+      Sampling.leakageSafeSplit(a.table(0), a.table(1),
+        trainPct = a.intOr(2, 80), valPct = a.intOr(3, 10))
+    },
 
-  /** SQL surface for the split-leakage audit
-    * ([[graft.ops.Sampling.splitLeakageAudit]]):
-    *
-    * {{{
-    * SELECT * FROM graft_split_audit('split_docs', 'clusters')
-    * }}}
-    *
-    * `split_docs` carries (doc_id, split) — any split assignment;
-    * `clusters` is the stored cluster table. Emits ONE row
-    * (n_clusters, n_straddling, n_docs_in_straddling); a leakage-safe
-    * assignment audits to zero straddling. Fully lazy. */
-  private val splitAuditTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_split_audit"),
-    new ExpressionInfo(graft.ops.Sampling.getClass.getName, "graft_split_audit"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2, "graft_split_audit(split_docs_table, clusters_table)")
-      val str = stringArg("graft_split_audit") _
-      val spark = SparkSession.active
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Sampling.splitLeakageAudit(
-          spark.table(str(children.head, "split_docs_table")),
-          spark.table(str(children(1), "clusters_table"))))
-    })
+    /** SQL surface for the split-leakage audit
+      * ([[graft.ops.Sampling.splitLeakageAudit]]):
+      *
+      * {{{
+      * SELECT * FROM graft_split_audit('split_docs', 'clusters')
+      * }}}
+      *
+      * `split_docs` carries (doc_id, split) — any split assignment;
+      * `clusters` is the stored cluster table. Emits ONE row
+      * (n_clusters, n_straddling, n_docs_in_straddling); a leakage-safe
+      * assignment audits to zero straddling. Fully lazy. */
+    tvf("graft_split_audit(split_docs_table, clusters_table)", Sampling.getClass)(a =>
+      Sampling.splitLeakageAudit(a.table(0), a.table(1))),
 
-  /** SQL surface for the corpus-level inter-source overlap report
-    * ([[graft.ops.Dedup.sourceOverlap]]):
-    *
-    * {{{
-    * SELECT * FROM graft_source_overlap('docs')        -- w=3, k=16
-    * SELECT * FROM graft_source_overlap('docs', 3, 64) -- tighter estimator
-    * }}}
-    *
-    * Emits (source_a, source_b, n_shingles_a, n_shingles_b,
-    * est_jaccard). Persist strategy so the TVF stays lazy (EXPLAIN
-    * runs no job) while the signature table still computes once. */
-  private val sourceOverlapTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_source_overlap"),
-    new ExpressionInfo(graft.ops.Dedup.getClass.getName, "graft_source_overlap"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1 || children.size == 3,
-        "graft_source_overlap(docs_table) or graft_source_overlap(docs_table, w, k)")
-      val str = stringArg("graft_source_overlap") _
-      val int = intArg("graft_source_overlap") _
-      val docs = SparkSession.active.table(str(children.head, "docs_table"))
-      val (w, k) =
-        if (children.size == 3) (int(children(1), "w"), int(children(2), "k"))
-        else (3, 16)
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Dedup.sourceOverlap(docs, w, k,
-          mat = graft.core.Materialize.Persist))
-    })
+    /** SQL surface for the corpus-level inter-source overlap report
+      * ([[graft.ops.Dedup.sourceOverlap]]):
+      *
+      * {{{
+      * SELECT * FROM graft_source_overlap('docs')        -- w=3, k=16
+      * SELECT * FROM graft_source_overlap('docs', 3, 64) -- tighter estimator
+      * }}}
+      *
+      * Emits (source_a, source_b, n_shingles_a, n_shingles_b,
+      * est_jaccard). Persist strategy so the TVF stays lazy (EXPLAIN
+      * runs no job) while the signature table still computes once. */
+    tvf("graft_source_overlap(docs_table[, w, k])", Dedup.getClass) { a =>
+      Dedup.sourceOverlap(a.table(0), a.intOr(1, 3), a.intOr(2, 16), mat = Materialize.Persist)
+    },
 
-  /** SQL surface for the generic column profiler
-    * ([[graft.ops.Relational.profile]]):
-    *
-    * {{{
-    * SELECT * FROM graft_profile('any_table')
-    * }}}
-    *
-    * One row per column: (col_name, dtype, n_rows, n_nulls,
-    * n_distinct, min_num, max_num, min_str, max_str). Fully lazy. */
-  private val profileTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_profile"),
-    new ExpressionInfo(graft.ops.Relational.getClass.getName, "graft_profile"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "graft_profile(table)")
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Relational.profile(SparkSession.active.table(
-          stringArg("graft_profile")(children.head, "table"))))
-    })
+    /** SQL surface for the generic column profiler
+      * ([[graft.ops.Relational.profile]]):
+      *
+      * {{{
+      * SELECT * FROM graft_profile('any_table')
+      * }}}
+      *
+      * One row per column: (col_name, dtype, n_rows, n_nulls,
+      * n_distinct, min_num, max_num, min_str, max_str). Fully lazy. */
+    tvf("graft_profile(table)", Relational.getClass)(a => Relational.profile(a.table(0))),
 
-  /** SQL surface for the fixed-context packing plan
-    * ([[graft.ops.Sampling.contextPlan]]):
-    *
-    * {{{
-    * SELECT * FROM graft_context_plan('docs', 2048)      -- buckets=32
-    * SELECT * FROM graft_context_plan('docs', 2048, 64)
-    * }}}
-    *
-    * Emits (doc_id, n_tokens, pack_bucket, start_ctx, end_ctx,
-    * n_contexts, head_offset). Fully lazy. */
-  private val contextPlanTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_context_plan"),
-    new ExpressionInfo(graft.ops.Sampling.getClass.getName, "graft_context_plan"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2 || children.size == 3,
-        "graft_context_plan(docs_table, ctx_len[, buckets])")
-      val int = intArg("graft_context_plan") _
-      val docs = SparkSession.active.table(
-        stringArg("graft_context_plan")(children.head, "docs_table"))
-      val buckets = if (children.size == 3) int(children(2), "buckets") else 32
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Sampling.contextPlan(docs,
-          int(children(1), "ctx_len").toLong, buckets))
-    })
+    /** SQL surface for the fixed-context packing plan
+      * ([[graft.ops.Sampling.contextPlan]]):
+      *
+      * {{{
+      * SELECT * FROM graft_context_plan('docs', 2048)      -- buckets=32
+      * SELECT * FROM graft_context_plan('docs', 2048, 64)
+      * }}}
+      *
+      * Emits (doc_id, n_tokens, pack_bucket, start_ctx, end_ctx,
+      * n_contexts, head_offset). Fully lazy. */
+    tvf("graft_context_plan(docs_table, ctx_len[, buckets])", Sampling.getClass)(a =>
+      Sampling.contextPlan(a.table(0), a.int(1).toLong, a.intOr(2, 32))),
 
-  /** SQL surface for the per-label embedding outlier screen
-    * ([[graft.ops.Similarity.embeddingOutliers]]):
-    *
-    * {{{
-    * SELECT * FROM graft_emb_outliers('emb')        -- k_mad=3.0
-    * SELECT * FROM graft_emb_outliers('emb', 4.5)
-    * }}}
-    *
-    * `emb` carries (vec_id, embedding, label); emits (vec_id, label,
-    * cos_dist, med, mad, is_outlier). Persist strategy so the TVF
-    * stays lazy while the distance table still computes once. */
-  private val embOutliersTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_emb_outliers"),
-    new ExpressionInfo(graft.ops.Similarity.getClass.getName, "graft_emb_outliers"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1 || children.size == 2,
-        "graft_emb_outliers(emb_table[, k_mad])")
-      val emb = SparkSession.active.table(
-        stringArg("graft_emb_outliers")(children.head, "emb_table"))
-      val kMad =
-        if (children.size == 2) numArg("graft_emb_outliers")(children(1), "k_mad")
-        else 3.0
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Similarity.embeddingOutliers(emb, kMad,
-          mat = graft.core.Materialize.Persist))
-    })
+    /** SQL surface for the per-label embedding outlier screen
+      * ([[graft.ops.Similarity.embeddingOutliers]]):
+      *
+      * {{{
+      * SELECT * FROM graft_emb_outliers('emb')        -- k_mad=3.0
+      * SELECT * FROM graft_emb_outliers('emb', 4.5)
+      * }}}
+      *
+      * `emb` carries (vec_id, embedding, label); emits (vec_id, label,
+      * cos_dist, med, mad, is_outlier). Persist strategy so the TVF
+      * stays lazy while the distance table still computes once. */
+    tvf("graft_emb_outliers(emb_table[, k_mad])", Similarity.getClass)(a =>
+      Similarity.embeddingOutliers(a.table(0), a.numOr(1, 3.0), mat = Materialize.Persist)),
 
-  /** SQL surface for asymmetric shingle containment
-    * ([[graft.ops.Dedup.containmentPairs]]):
-    *
-    * {{{
-    * SELECT * FROM graft_containment('docs')             -- w=3, maxDf=50, min=0.5
-    * SELECT * FROM graft_containment('docs', 3, 50, 0.8)
-    * }}}
-    *
-    * Emits (doc_a, doc_b, n_inter, containment_a, containment_b).
-    * Fully lazy. */
-  private val containmentTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_containment"),
-    new ExpressionInfo(graft.ops.Dedup.getClass.getName, "graft_containment"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1 || children.size == 4,
-        "graft_containment(docs_table[, w, max_df, min_containment])")
-      val docs = SparkSession.active.table(
-        stringArg("graft_containment")(children.head, "docs_table"))
-      val int = intArg("graft_containment") _
-      val (w, maxDf, minC) =
-        if (children.size == 4)
-          (int(children(1), "w"), int(children(2), "max_df"),
-            numArg("graft_containment")(children(3), "min_containment"))
-        else (3, 50, 0.5)
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Dedup.containmentPairs(docs, w, maxDf, minC))
-    })
+    /** SQL surface for asymmetric shingle containment
+      * ([[graft.ops.Dedup.containmentPairs]]):
+      *
+      * {{{
+      * SELECT * FROM graft_containment('docs')             -- w=3, maxDf=50, min=0.5
+      * SELECT * FROM graft_containment('docs', 3, 50, 0.8)
+      * }}}
+      *
+      * Emits (doc_a, doc_b, n_inter, containment_a, containment_b).
+      * Fully lazy. */
+    tvf("graft_containment(docs_table[, w, max_df, min_containment])", Dedup.getClass)(a =>
+      Dedup.containmentPairs(a.table(0), a.intOr(1, 3), a.intOr(2, 50), a.numOr(3, 0.5))),
 
-  /** SQL surface for the fixed-width histogram
-    * ([[graft.ops.Relational.histogram]]):
-    *
-    * {{{
-    * SELECT * FROM graft_histogram('events', 'value', 0, 500, 20)
-    * }}}
-    *
-    * Emits sparse (bucket, lo_edge, hi_edge, n) with −1/bins
-    * under/overflow rows. Fully lazy. */
-  private val histogramTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_histogram"),
-    new ExpressionInfo(graft.ops.Relational.getClass.getName, "graft_histogram"),
-    (children: Seq[Expression]) => {
-      require(children.size == 5,
-        "graft_histogram(table, value_col, lo, hi, bins)")
-      val str = stringArg("graft_histogram") _
-      val num = numArg("graft_histogram") _
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Relational.histogram(
-          SparkSession.active.table(str(children.head, "table")),
-          str(children(1), "value_col"),
-          num(children(2), "lo"), num(children(3), "hi"),
-          intArg("graft_histogram")(children(4), "bins")))
-    })
+    /** SQL surface for the fixed-width histogram
+      * ([[graft.ops.Relational.histogram]]):
+      *
+      * {{{
+      * SELECT * FROM graft_histogram('events', 'value', 0, 500, 20)
+      * }}}
+      *
+      * Emits sparse (bucket, lo_edge, hi_edge, n) with −1/bins
+      * under/overflow rows. Fully lazy. */
+    tvf("graft_histogram(table, value_col, lo, hi, bins)", Relational.getClass)(a =>
+      Relational.histogram(a.table(0), a.str(1), a.num(2), a.num(3), a.int(4))),
 
-  /** SQL surface for Flesch/Flesch-Kincaid readability
-    * ([[graft.ops.TextAnalysis.readability]]):
-    * `SELECT * FROM graft_readability('docs')`. Fully lazy. */
-  private val readabilityTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_readability"),
-    new ExpressionInfo(graft.ops.TextAnalysis.getClass.getName, "graft_readability"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "graft_readability(docs_table)")
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.TextAnalysis.readability(SparkSession.active.table(
-          stringArg("graft_readability")(children.head, "docs_table"))))
-    })
+    /** SQL surface for Flesch/Flesch-Kincaid readability
+      * ([[graft.ops.TextAnalysis.readability]]):
+      * `SELECT * FROM graft_readability('docs')`. Fully lazy. */
+    tvf("graft_readability(docs_table)", TextAnalysis.getClass)(a =>
+      TextAnalysis.readability(a.table(0))),
 
-  /** SQL surface for the per-source health report
-    * ([[graft.ops.TextAnalysis.corpusHealth]]):
-    * `SELECT * FROM graft_corpus_health('docs')`. Fully lazy. */
-  private val corpusHealthTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_corpus_health"),
-    new ExpressionInfo(graft.ops.TextAnalysis.getClass.getName, "graft_corpus_health"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "graft_corpus_health(docs_table)")
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.TextAnalysis.corpusHealth(SparkSession.active.table(
-          stringArg("graft_corpus_health")(children.head, "docs_table"))))
-    })
+    /** SQL surface for the per-source health report
+      * ([[graft.ops.TextAnalysis.corpusHealth]]):
+      * `SELECT * FROM graft_corpus_health('docs')`. Fully lazy. */
+    tvf("graft_corpus_health(docs_table)", TextAnalysis.getClass)(a =>
+      TextAnalysis.corpusHealth(a.table(0))),
 
-  /** SQL surface for the IVF+PQ serving call — ANN search over the
-    * four STORED artifact tables the training jobs emit
-    * ([[graft.ops.Similarity.ivfpqSearch]]; train-once / search-many,
-    * so the TVF never touches raw corpus embeddings):
-    *
-    * {{{
-    * SELECT * FROM graft_ann_search(                 -- k=10, nprobe=4, m=4
-    *   'queries', 'coarse_centroids', 'assignments', 'codebooks', 'codes')
-    * SELECT * FROM graft_ann_search(
-    *   'queries', 'coarse_centroids', 'assignments', 'codebooks', 'codes',
-    *   10, 8, 4)                                     -- explicit k, nprobe, m
-    * }}}
-    *
-    * Table shapes: queries (vec_id, embedding); the other four are the
-    * outputs of [[graft.ops.Similarity.kmeansModel]] /
-    * [[graft.ops.Similarity.pqModel]] (coarse_centroids: cell_id/pos/
-    * centroid_v; assignments: vec_id/cell_id; codebooks: subspace/
-    * cell_id/pos/centroid_v; codes: vec_id/subspace/code). Emits
-    * (query_id, neighbor_id, adc, rank). A mis-specified `m` raises
-    * through the ADC guard instead of returning partial sums. */
-  private val annSearchTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_ann_search"),
-    new ExpressionInfo(graft.ops.Similarity.getClass.getName, "graft_ann_search"),
-    (children: Seq[Expression]) => {
-      require(children.size == 5 || children.size == 8,
-        "graft_ann_search(queries, coarse_centroids, assignments, codebooks, " +
-          "codes[, k, nprobe, m])")
-      val str = stringArg("graft_ann_search") _
-      val int = intArg("graft_ann_search") _
-      val spark = SparkSession.active
-      val names = Seq("queries_table", "coarse_centroids_table",
-        "assignments_table", "codebooks_table", "codes_table")
-      val t = children.take(5).zip(names).map { case (e, w) => spark.table(str(e, w)) }
-      val (k, nprobe, m) =
-        if (children.size == 8)
-          (int(children(5), "k"), int(children(6), "nprobe"), int(children(7), "m"))
-        else (10, 4, 4)
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Similarity.ivfpqSearch(t(0), t(1), t(2), t(3), t(4), k, nprobe, m))
-    })
+    /** SQL surface for the IVF+PQ serving call — ANN search over the
+      * four STORED artifact tables the training jobs emit
+      * ([[graft.ops.Similarity.ivfpqSearch]]; train-once / search-many,
+      * so the TVF never touches raw corpus embeddings):
+      *
+      * {{{
+      * SELECT * FROM graft_ann_search(                 -- k=10, nprobe=4, m=4
+      *   'queries', 'coarse_centroids', 'assignments', 'codebooks', 'codes')
+      * SELECT * FROM graft_ann_search(
+      *   'queries', 'coarse_centroids', 'assignments', 'codebooks', 'codes',
+      *   10, 8, 4)                                     -- explicit k, nprobe, m
+      * }}}
+      *
+      * Table shapes: queries (vec_id, embedding); the other four are the
+      * outputs of [[graft.ops.Similarity.kmeansModel]] /
+      * [[graft.ops.Similarity.pqModel]] (coarse_centroids: cell_id/pos/
+      * centroid_v; assignments: vec_id/cell_id; codebooks: subspace/
+      * cell_id/pos/centroid_v; codes: vec_id/subspace/code). Emits
+      * (query_id, neighbor_id, adc, rank). A mis-specified `m` raises
+      * through the ADC guard instead of returning partial sums. */
+    tvf("graft_ann_search(queries_table, coarse_centroids_table, assignments_table, " +
+        "codebooks_table, codes_table[, k, nprobe, m])", Similarity.getClass) { a =>
+      Similarity.ivfpqSearch(a.table(0), a.table(1), a.table(2), a.table(3), a.table(4),
+        a.intOr(5, 10), a.intOr(6, 4), a.intOr(7, 4))
+    },
 
-  /** SQL surface for SemDeDup-style semantic duplicate pairs
-    * ([[graft.ops.Similarity.semanticDupPairs]]):
-    *
-    * {{{
-    * SELECT * FROM graft_semantic_dups('embeddings')         -- threshold=0.95
-    * SELECT * FROM graft_semantic_dups('embeddings', 0.35)   -- explicit
-    * }}}
-    *
-    * The named table must carry (vec_id, embedding); emits (cell_id,
-    * doc_a, doc_b, cos). Threshold accepts DECIMAL (`0.35`) or DOUBLE
-    * (`0.35E0`) literals. Like `graft_minhash_pairs`, the blocked
-    * corpus materializes via the LAZY Persist strategy: analysis and
-    * EXPLAIN run no job; the session cache dedups repeated calls by
-    * canonicalized plan. */
-  private val semanticDupsTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_semantic_dups"),
-    new ExpressionInfo(graft.ops.Similarity.getClass.getName, "graft_semantic_dups"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1 || children.size == 2,
-        "graft_semantic_dups(table) or graft_semantic_dups(table, threshold)")
-      val str = stringArg("graft_semantic_dups") _
-      val corpus = SparkSession.active.table(str(children.head, "table"))
-      val threshold =
-        if (children.size == 2) numArg("graft_semantic_dups")(children(1), "threshold")
-        else 0.95
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Similarity.semanticDupPairs(corpus, threshold,
-          mat = graft.core.Materialize.Persist))
-    })
+    /** SQL surface for SemDeDup-style semantic duplicate pairs
+      * ([[graft.ops.Similarity.semanticDupPairs]]):
+      *
+      * {{{
+      * SELECT * FROM graft_semantic_dups('embeddings')         -- threshold=0.95
+      * SELECT * FROM graft_semantic_dups('embeddings', 0.35)   -- explicit
+      * }}}
+      *
+      * The named table must carry (vec_id, embedding); emits (cell_id,
+      * doc_a, doc_b, cos). Threshold accepts DECIMAL (`0.35`) or DOUBLE
+      * (`0.35E0`) literals. Like `graft_minhash_pairs`, the blocked
+      * corpus materializes via the LAZY Persist strategy: analysis and
+      * EXPLAIN run no job; the session cache dedups repeated calls by
+      * canonicalized plan. */
+    tvf("graft_semantic_dups(table[, threshold])", Similarity.getClass)(a =>
+      Similarity.semanticDupPairs(a.table(0), a.numOr(1, 0.95), mat = Materialize.Persist)),
 
-  /** SQL surface for sub-document boilerplate removal
-    * ([[graft.ops.Dedup.boilerplateChunks]]):
-    *
-    * {{{
-    * SELECT * FROM graft_boilerplate('docs')        -- w=3, minDocs=5
-    * SELECT * FROM graft_boilerplate('docs', 3, 5)  -- explicit knobs
-    * }}}
-    *
-    * The named table must carry (doc_id, text); emits (doc_id,
-    * n_chunks, n_kept, kept_hash). Fully lazy — the operator
-    * materializes nothing (chunks re-derive from the scan), so
-    * analysis and EXPLAIN run no job and there is no cache entry to
-    * release. */
-  private val boilerplateTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_boilerplate"),
-    new ExpressionInfo(graft.ops.Dedup.getClass.getName, "graft_boilerplate"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1 || children.size == 3,
-        "graft_boilerplate(table) or graft_boilerplate(table, w, min_docs)")
-      val str = stringArg("graft_boilerplate") _
-      val int = intArg("graft_boilerplate") _
-      val docs = SparkSession.active.table(str(children.head, "table"))
-      val (w, minDocs) =
-        if (children.size == 3) (int(children(1), "w"), int(children(2), "min_docs"))
-        else (3, 5)
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Dedup.boilerplateChunks(docs, w, minDocs))
-    })
+    /** SQL surface for sub-document boilerplate removal
+      * ([[graft.ops.Dedup.boilerplateChunks]]):
+      *
+      * {{{
+      * SELECT * FROM graft_boilerplate('docs')        -- w=3, minDocs=5
+      * SELECT * FROM graft_boilerplate('docs', 3, 5)  -- explicit knobs
+      * }}}
+      *
+      * The named table must carry (doc_id, text); emits (doc_id,
+      * n_chunks, n_kept, kept_hash). Fully lazy — the operator
+      * materializes nothing (chunks re-derive from the scan), so
+      * analysis and EXPLAIN run no job and there is no cache entry to
+      * release. */
+    tvf("graft_boilerplate(table[, w, min_docs])", Dedup.getClass)(a =>
+      Dedup.boilerplateChunks(a.table(0), a.intOr(1, 3), a.intOr(2, 5))),
 
-  /** SQL surface for embedding-space decontamination
-    * ([[graft.ops.Similarity.semanticContaminatedIds]]):
-    *
-    * {{{
-    * SELECT * FROM graft_semantic_decontaminate('train_emb', 'eval_emb')        -- 0.95
-    * SELECT * FROM graft_semantic_decontaminate('train_emb', 'eval_emb', 0.35)
-    * }}}
-    *
-    * Both tables carry (vec_id, embedding); emits (vec_id, n_hits,
-    * max_cos) — the contaminated TRAINING vectors with their eval-hit
-    * evidence. Threshold accepts any numeric literal. The
-    * k-means blocking model materializes via the LAZY Persist strategy
-    * (the `graft_semantic_dups` contract: EXPLAIN runs no job, the
-    * session cache dedups repeated calls). */
-  private val semanticDecontaminateTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_semantic_decontaminate"),
-    new ExpressionInfo(graft.ops.Similarity.getClass.getName, "graft_semantic_decontaminate"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2 || children.size == 3,
-        "graft_semantic_decontaminate(train_table, eval_table[, threshold])")
-      val str = stringArg("graft_semantic_decontaminate") _
-      val spark = SparkSession.active
-      val threshold =
-        if (children.size == 3)
-          numArg("graft_semantic_decontaminate")(children(2), "threshold")
-        else 0.95
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Similarity.semanticContaminatedIds(
-          spark.table(str(children.head, "train_table")),
-          spark.table(str(children(1), "eval_table")), threshold,
-          mat = graft.core.Materialize.Persist))
-    })
+    /** SQL surface for embedding-space decontamination
+      * ([[graft.ops.Similarity.semanticContaminatedIds]]):
+      *
+      * {{{
+      * SELECT * FROM graft_semantic_decontaminate('train_emb', 'eval_emb')        -- 0.95
+      * SELECT * FROM graft_semantic_decontaminate('train_emb', 'eval_emb', 0.35)
+      * }}}
+      *
+      * Both tables carry (vec_id, embedding); emits (vec_id, n_hits,
+      * max_cos) — the contaminated TRAINING vectors with their eval-hit
+      * evidence. Threshold accepts any numeric literal. The
+      * k-means blocking model materializes via the LAZY Persist strategy
+      * (the `graft_semantic_dups` contract: EXPLAIN runs no job, the
+      * session cache dedups repeated calls). */
+    tvf("graft_semantic_decontaminate(train_table, eval_table[, threshold])",
+        Similarity.getClass) { a =>
+      Similarity.semanticContaminatedIds(a.table(0), a.table(1), a.numOr(2, 0.95),
+        mat = Materialize.Persist)
+    },
 
-  /** SQL surface for the corpus drift monitor
-    * ([[graft.ops.TextAnalysis.tokenDrift]]):
-    *
-    * {{{
-    * SELECT * FROM graft_token_drift('today', 'baseline')        -- 1024 buckets
-    * SELECT * FROM graft_token_drift('today', 'baseline', 4096)
-    * }}}
-    *
-    * Both named tables carry a `text` column; emits ONE row
-    * `(n_tokens_a, n_tokens_b, kl_ab, kl_ba, js)`. Fully lazy — the
-    * operator materializes nothing, so analysis and EXPLAIN run no job
-    * and there is no cache entry to release. */
-  private val tokenDriftTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_token_drift"),
-    new ExpressionInfo(graft.ops.TextAnalysis.getClass.getName, "graft_token_drift"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2 || children.size == 3,
-        "graft_token_drift(table_a, table_b[, buckets])")
-      val str = stringArg("graft_token_drift") _
-      val spark = SparkSession.active
-      val buckets =
-        if (children.size == 3) intArg("graft_token_drift")(children(2), "buckets") else 1024
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.TextAnalysis.tokenDrift(
-          spark.table(str(children.head, "table_a")),
-          spark.table(str(children(1), "table_b")), buckets))
-    })
+    /** SQL surface for the corpus drift monitor
+      * ([[graft.ops.TextAnalysis.tokenDrift]]):
+      *
+      * {{{
+      * SELECT * FROM graft_token_drift('today', 'baseline')        -- 1024 buckets
+      * SELECT * FROM graft_token_drift('today', 'baseline', 4096)
+      * }}}
+      *
+      * Both named tables carry a `text` column; emits ONE row
+      * `(n_tokens_a, n_tokens_b, kl_ab, kl_ba, js)`. Fully lazy — the
+      * operator materializes nothing, so analysis and EXPLAIN run no job
+      * and there is no cache entry to release. */
+    tvf("graft_token_drift(table_a, table_b[, buckets])", TextAnalysis.getClass)(a =>
+      TextAnalysis.tokenDrift(a.table(0), a.table(1), a.intOr(2, 1024))),
 
-  /** SQL surface for the model-based quality classifier's serving call
-    * ([[graft.ops.Curation.classifierScore]]):
-    *
-    * {{{
-    * SELECT * FROM graft_classifier_score('docs', 'weights')             -- 1024, bias 0
-    * SELECT * FROM graft_classifier_score('docs', 'weights', 1024, 0.5)
-    * }}}
-    *
-    * `docs` carries (doc_id, text); `weights` is any `(b, w)` table
-    * hashed with the library's bucket recipe (e.g. a stored
-    * `classifierWeights` output) — `buckets` MUST equal its domain
-    * size. Bias accepts any numeric literal. Fully lazy. */
-  private val classifierScoreTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_classifier_score"),
-    new ExpressionInfo(graft.ops.Curation.getClass.getName, "graft_classifier_score"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2 || children.size == 4,
-        "graft_classifier_score(docs_table, weights_table[, buckets, bias])")
-      val str = stringArg("graft_classifier_score") _
-      val spark = SparkSession.active
-      val (buckets, bias) =
-        if (children.size == 4) (
-          intArg("graft_classifier_score")(children(2), "buckets"),
-          numArg("graft_classifier_score")(children(3), "bias"))
-        else (1024, 0.0)
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Curation.classifierScore(
-          spark.table(str(children.head, "docs_table")),
-          spark.table(str(children(1), "weights_table")), buckets, bias))
-    })
+    /** SQL surface for the model-based quality classifier's serving call
+      * ([[graft.ops.Curation.classifierScore]]):
+      *
+      * {{{
+      * SELECT * FROM graft_classifier_score('docs', 'weights')             -- 1024, bias 0
+      * SELECT * FROM graft_classifier_score('docs', 'weights', 1024, 0.5)
+      * }}}
+      *
+      * `docs` carries (doc_id, text); `weights` is any `(b, w)` table
+      * hashed with the library's bucket recipe (e.g. a stored
+      * `classifierWeights` output) — `buckets` MUST equal its domain
+      * size. Bias accepts any numeric literal. Fully lazy. */
+    tvf("graft_classifier_score(docs_table, weights_table[, buckets, bias])",
+        Curation.getClass) { a =>
+      Curation.classifierScore(a.table(0), a.table(1), a.intOr(2, 1024), a.numOr(3, 0.0))
+    },
 
-  /** SQL surface for the flagship curation composition
-    * ([[graft.ops.Curation.curate]] — quality → language → near-dedup
-    * → decontaminate → mixture → split, the chain a production corpus
-    * run is):
-    *
-    * {{{
-    * SELECT * FROM graft_curate('docs', 'eval')               -- en, min_tokens=10
-    * SELECT * FROM graft_curate('docs', 'eval', 10, 'en,de')  -- explicit knobs
-    * }}}
-    *
-    * `docs` must carry (doc_id, text, source). The second argument is
-    * either an eval CORPUS (doc_id, text) — shingled in-plan — or a
-    * STORED shingle table ([[graft.ops.Dedup.evalShingles]] output,
-    * recognized by its `(shingle)` schema): a standing benchmark suite
-    * shingles once and every curate call after serves the artifact,
-    * never re-reading the eval text. Emits the kept manifest (doc_id,
-    * source, pred_lang, split).
-    * Mixture rates and split percentages stay at the API defaults — a
-    * per-source rates MAP is not a SQL literal; use the Column API for
-    * those. Derived dedup tables use the Persist strategy (release via
-    * `spark.catalog.clearCache()`). NOTE: unlike the scan-shaped TVFs
-    * (graft_novelty etc.), planning this one is not job-free — the
-    * near-dedup stage's cluster propagation is an iterative fixpoint
-    * ([[graft.ops.Dedup.clusters]]), so resolving the table function
-    * (including under EXPLAIN) runs that bounded, survivor-sized loop;
-    * the cached tables make the subsequent execution cheap. */
-  private val curateTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_curate"),
-    new ExpressionInfo(graft.ops.Curation.getClass.getName, "graft_curate"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2 || children.size == 4,
-        "graft_curate(docs_table, eval_table[, min_tokens, keep_langs_csv])")
-      val str = stringArg("graft_curate") _
-      val spark = SparkSession.active
-      val (minTokens, langs) =
-        if (children.size == 4) (
-          intArg("graft_curate")(children(2), "min_tokens"),
-          str(children(3), "keep_langs_csv")
-            .split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-        else (10, Seq("en"))
+    /** SQL surface for the flagship curation composition
+      * ([[graft.ops.Curation.curate]] — quality → language → near-dedup
+      * → decontaminate → mixture → split, the chain a production corpus
+      * run is):
+      *
+      * {{{
+      * SELECT * FROM graft_curate('docs', 'eval')               -- en, min_tokens=10
+      * SELECT * FROM graft_curate('docs', 'eval', 10, 'en,de')  -- explicit knobs
+      * }}}
+      *
+      * `docs` must carry (doc_id, text, source). The second argument is
+      * either an eval CORPUS (doc_id, text) — shingled in-plan — or a
+      * STORED shingle table ([[graft.ops.Dedup.evalShingles]] output,
+      * recognized by its `(shingle)` schema): a standing benchmark suite
+      * shingles once and every curate call after serves the artifact,
+      * never re-reading the eval text. Emits the kept manifest (doc_id,
+      * source, pred_lang, split).
+      * Mixture rates and split percentages stay at the API defaults — a
+      * per-source rates MAP is not a SQL literal; use the Column API for
+      * those. Derived dedup tables use the Persist strategy (release via
+      * `spark.catalog.clearCache()`). NOTE: unlike the scan-shaped TVFs
+      * (graft_novelty etc.), planning this one is not job-free — the
+      * near-dedup stage's cluster propagation is an iterative fixpoint
+      * ([[graft.ops.Dedup.clusters]]), so resolving the table function
+      * (including under EXPLAIN) runs that bounded, survivor-sized loop;
+      * the cached tables make the subsequent execution cheap. */
+    tvf("graft_curate(docs_table, eval_table[, min_tokens, keep_langs_csv])",
+        Curation.getClass) { a =>
       // schema sniff is plan-time metadata only — no job
-      val evalT = spark.table(str(children(1), "eval_table"))
+      val evalT = a.table(1)
       val stored = evalT.columns.contains("shingle") && !evalT.columns.contains("text")
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Curation.curate(
-          spark.table(str(children.head, "docs_table")),
-          evalT,
-          keepLangs = langs, minTokens = minTokens,
-          mat = graft.core.Materialize.Persist,
-          evalShingles = if (stored) Some(evalT) else None))
-    })
+      Curation.curate(a.table(0), evalT,
+        keepLangs = if (a.size == 4) a.csv(3) else Seq("en"), minTokens = a.intOr(2, 10),
+        mat = Materialize.Persist,
+        evalShingles = if (stored) Some(evalT) else None)
+    },
 
-  /** SQL surface for DSIR importance resampling
-    * ([[graft.ops.Curation.importanceWeights]] /
-    * [[graft.ops.Curation.importanceTopK]]):
-    *
-    * {{{
-    * SELECT * FROM graft_dsir('raw', 'target')            -- per-doc weights, 1024 buckets
-    * SELECT * FROM graft_dsir('raw', 'target', 4096)      -- explicit buckets
-    * SELECT * FROM graft_dsir('raw', 'target', 1024, 100) -- top-k selection
-    * }}}
-    *
-    * Both named tables carry (doc_id, text). Two/three args emit the
-    * weight table (doc_id, n_feats, log_weight); four args emit the
-    * k most target-like raw docs (doc_id, log_weight, rank). Lazy
-    * Persist materialization for the hashed-bigram model tables. */
-  private val dsirTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_dsir"),
-    new ExpressionInfo(graft.ops.Curation.getClass.getName, "graft_dsir"),
-    (children: Seq[Expression]) => {
-      require(children.size >= 2 && children.size <= 4,
-        "graft_dsir(raw_table, target_table[, buckets[, k]])")
-      val str = stringArg("graft_dsir") _
-      val int = intArg("graft_dsir") _
-      val spark = SparkSession.active
-      val raw = spark.table(str(children.head, "raw_table"))
-      val target = spark.table(str(children(1), "target_table"))
-      val buckets = if (children.size >= 3) int(children(2), "buckets") else 1024
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        if (children.size == 4)
-          graft.ops.Curation.importanceTopK(raw, target, int(children(3), "k"),
-            buckets, mat = graft.core.Materialize.Persist)
-        else
-          graft.ops.Curation.importanceWeights(raw, target, buckets,
-            mat = graft.core.Materialize.Persist))
-    })
+    /** SQL surface for DSIR importance resampling
+      * ([[graft.ops.Curation.importanceWeights]] /
+      * [[graft.ops.Curation.importanceTopK]]):
+      *
+      * {{{
+      * SELECT * FROM graft_dsir('raw', 'target')            -- per-doc weights, 1024 buckets
+      * SELECT * FROM graft_dsir('raw', 'target', 4096)      -- explicit buckets
+      * SELECT * FROM graft_dsir('raw', 'target', 1024, 100) -- top-k selection
+      * }}}
+      *
+      * Both named tables carry (doc_id, text). Two/three args emit the
+      * weight table (doc_id, n_feats, log_weight); four args emit the
+      * k most target-like raw docs (doc_id, log_weight, rank). Lazy
+      * Persist materialization for the hashed-bigram model tables. */
+    tvf("graft_dsir(raw_table, target_table[, buckets[, k]])", Curation.getClass) { a =>
+      if (a.size == 4)
+        Curation.importanceTopK(a.table(0), a.table(1), a.int(3), a.int(2),
+          mat = Materialize.Persist)
+      else
+        Curation.importanceWeights(a.table(0), a.table(1), a.intOr(2, 1024),
+          mat = Materialize.Persist)
+    },
 
-  /** SQL surface for BM25 ranked retrieval
-    * ([[graft.index.InvertedIndex.bm25TopKFromDocs]]):
-    *
-    * {{{
-    * SELECT * FROM graft_bm25('docs', 'spark shuffle join')      -- top 20
-    * SELECT * FROM graft_bm25('docs', 'spark shuffle join', 5)   -- top k
-    * }}}
-    *
-    * The named table carries (doc_id, text); emits (doc_id, score,
-    * rank) for the k best BM25 matches. The index, doc lengths, and
-    * the corpus size N are all derived inside the plan (N is a
-    * broadcast one-row aggregate), so the function is fully lazy —
-    * EXPLAIN runs no job. */
-  private val bm25TableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_bm25"),
-    new ExpressionInfo(graft.index.InvertedIndex.getClass.getName, "graft_bm25"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2 || children.size == 3,
-        "graft_bm25(docs_table, query[, k])")
-      val str = stringArg("graft_bm25") _
-      val docs = SparkSession.active.table(str(children.head, "docs_table"))
-      val query = str(children(1), "query")
-      val k = if (children.size == 3) intArg("graft_bm25")(children(2), "k") else 20
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.index.InvertedIndex.bm25TopKFromDocs(docs, query, k))
-    })
+    /** SQL surface for BM25 ranked retrieval
+      * ([[graft.index.InvertedIndex.bm25TopKFromDocs]]):
+      *
+      * {{{
+      * SELECT * FROM graft_bm25('docs', 'spark shuffle join')      -- top 20
+      * SELECT * FROM graft_bm25('docs', 'spark shuffle join', 5)   -- top k
+      * }}}
+      *
+      * The named table carries (doc_id, text); emits (doc_id, score,
+      * rank) for the k best BM25 matches. The index, doc lengths, and
+      * the corpus size N are all derived inside the plan (N is a
+      * broadcast one-row aggregate), so the function is fully lazy —
+      * EXPLAIN runs no job. */
+    tvf("graft_bm25(docs_table, query[, k])", InvertedIndex.getClass)(a =>
+      InvertedIndex.bm25TopKFromDocs(a.table(0), a.str(1), a.intOr(2, 20))),
 
-  /** SQL surface for hybrid lexical+semantic retrieval
-    * ([[graft.index.InvertedIndex.hybridTopK]] — BM25 ⊕ exact cosine,
-    * reciprocal-rank fused):
-    *
-    * {{{
-    * SELECT * FROM graft_hybrid('docs', 'emb', 'spark join', 0)        -- k=20, poolK=50
-    * SELECT * FROM graft_hybrid('docs', 'emb', 'spark join', 0, 5, 30) -- explicit knobs
-    * }}}
-    *
-    * `docs` carries (doc_id, text), `emb` carries (vec_id, embedding)
-    * with vec_id ≡ doc_id; the fourth argument names the query VECTOR
-    * by vec_id (a one-row filter on `emb` — the TVF surface stays
-    * literal-only). Emits (doc_id, bm25_rank, cos_rank, rrf_score,
-    * rank). Fully lazy — EXPLAIN runs no job. */
-  private val hybridTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_hybrid"),
-    new ExpressionInfo(graft.index.InvertedIndex.getClass.getName, "graft_hybrid"),
-    (children: Seq[Expression]) => {
-      require(children.size == 4 || children.size == 6,
-        "graft_hybrid(docs_table, emb_table, query, query_vec_id[, k, pool_k])")
-      val str = stringArg("graft_hybrid") _
-      val int = intArg("graft_hybrid") _
-      val spark = SparkSession.active
-      val docs = spark.table(str(children.head, "docs_table"))
-      val embT = spark.table(str(children(1), "emb_table"))
-      val query = str(children(2), "query")
-      val qid = int(children(3), "query_vec_id")
-      val (k, poolK) =
-        if (children.size == 6) (int(children(4), "k"), int(children(5), "pool_k"))
-        else (20, 50)
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.index.InvertedIndex.hybridTopK(docs, embT, query,
-          embT.filter(org.apache.spark.sql.functions.col("vec_id") === qid),
-          k, poolK))
-    })
+    /** SQL surface for hybrid lexical+semantic retrieval
+      * ([[graft.index.InvertedIndex.hybridTopK]] — BM25 ⊕ exact cosine,
+      * reciprocal-rank fused):
+      *
+      * {{{
+      * SELECT * FROM graft_hybrid('docs', 'emb', 'spark join', 0)        -- k=20, poolK=50
+      * SELECT * FROM graft_hybrid('docs', 'emb', 'spark join', 0, 5, 30) -- explicit knobs
+      * }}}
+      *
+      * `docs` carries (doc_id, text), `emb` carries (vec_id, embedding)
+      * with vec_id ≡ doc_id; the fourth argument names the query VECTOR
+      * by vec_id (a one-row filter on `emb` — the TVF surface stays
+      * literal-only). Emits (doc_id, bm25_rank, cos_rank, rrf_score,
+      * rank). Fully lazy — EXPLAIN runs no job. */
+    tvf("graft_hybrid(docs_table, emb_table, query, query_vec_id[, k, pool_k])",
+        InvertedIndex.getClass) { a =>
+      val emb = a.table(1)
+      InvertedIndex.hybridTopK(a.table(0), emb, a.str(2), emb.filter(col("vec_id") === a.int(3)),
+        a.intOr(4, 20), a.intOr(5, 50))
+    },
 
-  /** SQL surface for margin-based pair mining
-    * ([[graft.ops.Similarity.marginMine]]):
-    *
-    * {{{
-    * SELECT * FROM graft_margin_mine('x_emb', 'y_emb')            -- k=4, threshold=1.0
-    * SELECT * FROM graft_margin_mine('x_emb', 'y_emb', 4, 1.05)   -- explicit knobs
-    * }}}
-    *
-    * Both named tables carry (vec_id, embedding) with disjoint id
-    * spaces; emits (src_id, tgt_id, margin) — each source's best
-    * target by ratio margin. Exact brute-force neighborhoods (the
-    * baseline shape; the Column API's `marginMineFrom` takes ANN
-    * tables at scale). Fully lazy — EXPLAIN runs no job. */
-  private val marginMineTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_margin_mine"),
-    new ExpressionInfo(graft.ops.Similarity.getClass.getName, "graft_margin_mine"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2 || children.size == 4,
-        "graft_margin_mine(x_table, y_table) or graft_margin_mine(x_table, y_table, k, threshold)")
-      val str = stringArg("graft_margin_mine") _
-      val spark = SparkSession.active
-      val x = spark.table(str(children.head, "x_table"))
-      val y = spark.table(str(children(1), "y_table"))
-      val (k, threshold) =
-        if (children.size == 4)
-          (intArg("graft_margin_mine")(children(2), "k"),
-            numArg("graft_margin_mine")(children(3), "threshold"))
-        else (4, 1.0)
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Similarity.marginMine(x, y, k, threshold))
-    })
+    /** SQL surface for margin-based pair mining
+      * ([[graft.ops.Similarity.marginMine]]):
+      *
+      * {{{
+      * SELECT * FROM graft_margin_mine('x_emb', 'y_emb')            -- k=4, threshold=1.0
+      * SELECT * FROM graft_margin_mine('x_emb', 'y_emb', 4, 1.05)   -- explicit knobs
+      * }}}
+      *
+      * Both named tables carry (vec_id, embedding) with disjoint id
+      * spaces; emits (src_id, tgt_id, margin) — each source's best
+      * target by ratio margin. Exact brute-force neighborhoods (the
+      * baseline shape; the Column API's `marginMineFrom` takes ANN
+      * tables at scale). Fully lazy — EXPLAIN runs no job. */
+    tvf("graft_margin_mine(x_table, y_table[, k, threshold])", Similarity.getClass)(a =>
+      Similarity.marginMine(a.table(0), a.table(1), a.intOr(2, 4), a.numOr(3, 1.0))),
 
-  /** SQL surface for exact phrase search
-    * ([[graft.index.InvertedIndex.phraseSearch]]):
-    *
-    * {{{
-    * SELECT * FROM graft_phrase('docs', 'data slow')
-    * }}}
-    *
-    * The named table carries (doc_id, text); emits (doc_id, n_matches,
-    * first_pos) for documents containing the phrase's terms at
-    * consecutive token positions. The positional index is built inside
-    * the plan — fully lazy, EXPLAIN runs no job. */
-  private val phraseTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_phrase"),
-    new ExpressionInfo(graft.index.InvertedIndex.getClass.getName, "graft_phrase"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2, "graft_phrase(docs_table, phrase)")
-      val str = stringArg("graft_phrase") _
-      val docs = SparkSession.active.table(str(children.head, "docs_table"))
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.index.InvertedIndex.phraseSearch(
-          graft.index.InvertedIndex.buildPositional(docs),
-          str(children(1), "phrase")))
-    })
+    /** SQL surface for exact phrase search
+      * ([[graft.index.InvertedIndex.phraseSearch]]):
+      *
+      * {{{
+      * SELECT * FROM graft_phrase('docs', 'data slow')
+      * }}}
+      *
+      * The named table carries (doc_id, text); emits (doc_id, n_matches,
+      * first_pos) for documents containing the phrase's terms at
+      * consecutive token positions. The positional index is built inside
+      * the plan — fully lazy, EXPLAIN runs no job. */
+    tvf("graft_phrase(docs_table, phrase)", InvertedIndex.getClass)(a =>
+      InvertedIndex.phraseSearch(InvertedIndex.buildPositional(a.table(0)), a.str(1))),
 
-  /** SQL surface for substring-level dedup
-    * ([[graft.ops.Dedup.duplicateSpans]]):
-    *
-    * {{{
-    * SELECT * FROM graft_dup_spans('docs')             -- k=24, mod_p=8, gap=64
-    * SELECT * FROM graft_dup_spans('docs', 16, 4, 32)  -- explicit knobs
-    * }}}
-    *
-    * The named table carries (doc_id, text); emits (doc_id,
-    * span_start, span_end) — the char ranges of every non-canonical
-    * copy of a corpus-wide repeated region. The anchor-site table
-    * materializes via the LAZY Persist strategy (the
-    * `graft_semantic_dups` contract: EXPLAIN runs no job, the session
-    * cache dedups repeated calls). */
-  private val dupSpansTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_dup_spans"),
-    new ExpressionInfo(graft.ops.Dedup.getClass.getName, "graft_dup_spans"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1 || children.size == 4,
-        "graft_dup_spans(docs_table) or graft_dup_spans(docs_table, k, mod_p, gap)")
-      val str = stringArg("graft_dup_spans") _
-      val int = intArg("graft_dup_spans") _
-      val docs = SparkSession.active.table(str(children.head, "docs_table"))
-      val (k, modP, gap) =
-        if (children.size == 4)
-          (int(children(1), "k"), int(children(2), "mod_p"), int(children(3), "gap"))
-        else (24, 8, 64)
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Dedup.duplicateSpans(docs, k, modP, gap,
-          mat = graft.core.Materialize.Persist))
-    })
+    /** SQL surface for substring-level dedup
+      * ([[graft.ops.Dedup.duplicateSpans]]):
+      *
+      * {{{
+      * SELECT * FROM graft_dup_spans('docs')             -- k=24, mod_p=8, gap=64
+      * SELECT * FROM graft_dup_spans('docs', 16, 4, 32)  -- explicit knobs
+      * }}}
+      *
+      * The named table carries (doc_id, text); emits (doc_id,
+      * span_start, span_end) — the char ranges of every non-canonical
+      * copy of a corpus-wide repeated region. The anchor-site table
+      * materializes via the LAZY Persist strategy (the
+      * `graft_semantic_dups` contract: EXPLAIN runs no job, the session
+      * cache dedups repeated calls). */
+    tvf("graft_dup_spans(docs_table[, k, mod_p, gap])", Dedup.getClass) { a =>
+      Dedup.duplicateSpans(a.table(0), a.intOr(1, 24), a.intOr(2, 8), a.intOr(3, 64),
+        mat = Materialize.Persist)
+    },
 
-  /** SQL surface for substring-level strip
-    * ([[graft.ops.Dedup.stripDuplicateSpans]]):
-    *
-    * {{{
-    * SELECT * FROM graft_dup_strip('docs')             -- k=24, mod_p=8, gap=64
-    * SELECT * FROM graft_dup_strip('docs', 16, 4, 32)  -- explicit knobs
-    * }}}
-    *
-    * The named table carries (doc_id, text); emits the doc-shaped
-    * (doc_id, text, n_spans) with every duplicated span cut out (one
-    * canonical copy survives corpus-wide) — the rewrite face of
-    * `graft_dup_spans`, same lazy Persist materialization. */
-  private val dupStripTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_dup_strip"),
-    new ExpressionInfo(graft.ops.Dedup.getClass.getName, "graft_dup_strip"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1 || children.size == 4,
-        "graft_dup_strip(docs_table) or graft_dup_strip(docs_table, k, mod_p, gap)")
-      val str = stringArg("graft_dup_strip") _
-      val int = intArg("graft_dup_strip") _
-      val docs = SparkSession.active.table(str(children.head, "docs_table"))
-      val (k, modP, gap) =
-        if (children.size == 4)
-          (int(children(1), "k"), int(children(2), "mod_p"), int(children(3), "gap"))
-        else (24, 8, 64)
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Dedup.stripDuplicateSpans(docs, k, modP, gap,
-          mat = graft.core.Materialize.Persist))
-    })
+    /** SQL surface for substring-level strip
+      * ([[graft.ops.Dedup.stripDuplicateSpans]]):
+      *
+      * {{{
+      * SELECT * FROM graft_dup_strip('docs')             -- k=24, mod_p=8, gap=64
+      * SELECT * FROM graft_dup_strip('docs', 16, 4, 32)  -- explicit knobs
+      * }}}
+      *
+      * The named table carries (doc_id, text); emits the doc-shaped
+      * (doc_id, text, n_spans) with every duplicated span cut out (one
+      * canonical copy survives corpus-wide) — the rewrite face of
+      * `graft_dup_spans`, same lazy Persist materialization. */
+    tvf("graft_dup_strip(docs_table[, k, mod_p, gap])", Dedup.getClass) { a =>
+      Dedup.stripDuplicateSpans(a.table(0), a.intOr(1, 24), a.intOr(2, 8), a.intOr(3, 64),
+        mat = Materialize.Persist)
+    },
 
-  /** SQL surface for natural-boundary sub-document dedup
-    * ([[graft.ops.Dedup.paragraphDedup]]):
-    *
-    * {{{
-    * SELECT * FROM graft_para_dedup('docs')          -- blank-line units
-    * SELECT * FROM graft_para_dedup('docs', '\n+')   -- line groups (C4 rule)
-    * }}}
-    *
-    * Emits (doc_id, n_paras, n_kept, kept_hash) — first occurrence of
-    * each normalized paragraph wins corpus-wide. */
-  private val paraDedupTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_para_dedup"),
-    new ExpressionInfo(graft.ops.Dedup.getClass.getName, "graft_para_dedup"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1 || children.size == 2,
-        "graft_para_dedup(docs_table[, boundary_regex])")
-      val str = stringArg("graft_para_dedup") _
-      val docs = SparkSession.active.table(str(children.head, "docs_table"))
-      val boundary =
-        if (children.size == 2) str(children(1), "boundary_regex") else "\\n[ \\t]*\\n"
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Dedup.paragraphDedup(docs, boundary,
-          mat = graft.core.Materialize.Persist))
-    })
+    /** SQL surface for natural-boundary sub-document dedup
+      * ([[graft.ops.Dedup.paragraphDedup]]):
+      *
+      * {{{
+      * SELECT * FROM graft_para_dedup('docs')          -- blank-line units
+      * SELECT * FROM graft_para_dedup('docs', '\n+')   -- line groups (C4 rule)
+      * }}}
+      *
+      * Emits (doc_id, n_paras, n_kept, kept_hash) — first occurrence of
+      * each normalized paragraph wins corpus-wide. */
+    tvf("graft_para_dedup(docs_table[, boundary_regex])", Dedup.getClass)(a =>
+      Dedup.paragraphDedup(a.table(0), a.strOr(1, "\\n[ \\t]*\\n"), mat = Materialize.Persist)),
 
-  /** SQL surface for C4's three-sentence-span rule
-    * ([[graft.ops.Dedup.sentenceSpanDedup]]):
-    *
-    * {{{
-    * SELECT * FROM graft_sentence_spans('docs')      -- span=3 (C4)
-    * SELECT * FROM graft_sentence_spans('docs', 2)   -- span dial
-    * }}}
-    *
-    * Emits (doc_id, n_sentences, n_kept, kept_hash). Fully lazy. */
-  private val sentenceSpansTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_sentence_spans"),
-    new ExpressionInfo(graft.ops.Dedup.getClass.getName, "graft_sentence_spans"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1 || children.size == 2,
-        "graft_sentence_spans(docs_table[, span])")
-      val str = stringArg("graft_sentence_spans") _
-      val docs = SparkSession.active.table(str(children.head, "docs_table"))
-      val span =
-        if (children.size == 2) intArg("graft_sentence_spans")(children(1), "span") else 3
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Dedup.sentenceSpanDedup(docs, span,
-          mat = graft.core.Materialize.Persist))
-    })
+    /** SQL surface for C4's three-sentence-span rule
+      * ([[graft.ops.Dedup.sentenceSpanDedup]]):
+      *
+      * {{{
+      * SELECT * FROM graft_sentence_spans('docs')      -- span=3 (C4)
+      * SELECT * FROM graft_sentence_spans('docs', 2)   -- span dial
+      * }}}
+      *
+      * Emits (doc_id, n_sentences, n_kept, kept_hash). Fully lazy. */
+    tvf("graft_sentence_spans(docs_table[, span])", Dedup.getClass)(a =>
+      Dedup.sentenceSpanDedup(a.table(0), a.intOr(1, 3), mat = Materialize.Persist)),
 
-  /** SQL surface for C4's line-level cleaning rules
-    * ([[graft.ops.TextAnalysis.c4LineStats]] /
-    * [[graft.ops.TextAnalysis.c4Clean]]) at the paper defaults:
-    *
-    * {{{
-    * SELECT * FROM graft_c4_stats('docs')        -- per-page line stats + keep
-    * SELECT * FROM graft_c4_stats('docs', 5)     -- min words/line dial
-    * SELECT * FROM graft_c4_clean('docs')        -- surviving pages, rewritten
-    * }}}
-    *
-    * Row-local (no shuffle at any size) — both faces stay fully lazy. */
-  private val c4StatsTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_c4_stats"),
-    new ExpressionInfo(graft.ops.TextAnalysis.getClass.getName, "graft_c4_stats"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1 || children.size == 2,
-        "graft_c4_stats(docs_table[, min_words_per_line])")
-      val docs = SparkSession.active.table(
-        stringArg("graft_c4_stats")(children.head, "docs_table"))
-      val minWords =
-        if (children.size == 2)
-          intArg("graft_c4_stats")(children(1), "min_words_per_line")
-        else 3
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.TextAnalysis.c4LineStats(docs, minWords))
-    })
+    /** SQL surface for C4's line-level cleaning rules
+      * ([[graft.ops.TextAnalysis.c4LineStats]] /
+      * [[graft.ops.TextAnalysis.c4Clean]]) at the paper defaults:
+      *
+      * {{{
+      * SELECT * FROM graft_c4_stats('docs')        -- per-page line stats + keep
+      * SELECT * FROM graft_c4_stats('docs', 5)     -- min words/line dial
+      * SELECT * FROM graft_c4_clean('docs')        -- surviving pages, rewritten
+      * }}}
+      *
+      * Row-local (no shuffle at any size) — both faces stay fully lazy. */
+    tvf("graft_c4_stats(docs_table[, min_words_per_line])", TextAnalysis.getClass)(a =>
+      TextAnalysis.c4LineStats(a.table(0), a.intOr(1, 3))),
 
-  private val c4CleanTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_c4_clean"),
-    new ExpressionInfo(graft.ops.TextAnalysis.getClass.getName, "graft_c4_clean"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1 || children.size == 2,
-        "graft_c4_clean(docs_table[, min_words_per_line])")
-      val docs = SparkSession.active.table(
-        stringArg("graft_c4_clean")(children.head, "docs_table"))
-      val minWords =
-        if (children.size == 2)
-          intArg("graft_c4_clean")(children(1), "min_words_per_line")
-        else 3
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.TextAnalysis.c4Clean(docs, minWords))
-    })
+    tvf("graft_c4_clean(docs_table[, min_words_per_line])", TextAnalysis.getClass)(a =>
+      TextAnalysis.c4Clean(a.table(0), a.intOr(1, 3))),
 
-  /** SQL surface for the HTML extraction pair ([[graft.ops.Html]]):
-    *
-    * {{{
-    * SELECT * FROM graft_html_text('pages')      -- markup stripped
-    * SELECT * FROM graft_html_signals('pages')   -- link density & friends
-    * }}}
-    *
-    * Row-local; both faces fully lazy. */
-  private val htmlTextTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_html_text"),
-    new ExpressionInfo(graft.ops.Html.getClass.getName, "graft_html_text"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "graft_html_text(docs_table)")
-      val docs = SparkSession.active.table(
-        stringArg("graft_html_text")(children.head, "docs_table"))
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Html.htmlToText(docs))
-    })
+    /** SQL surface for the HTML extraction pair ([[graft.ops.Html]]):
+      *
+      * {{{
+      * SELECT * FROM graft_html_text('pages')      -- markup stripped
+      * SELECT * FROM graft_html_signals('pages')   -- link density & friends
+      * }}}
+      *
+      * Row-local; both faces fully lazy. */
+    tvf("graft_html_text(docs_table)", Html.getClass)(a => Html.htmlToText(a.table(0))),
 
-  private val htmlSignalsTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_html_signals"),
-    new ExpressionInfo(graft.ops.Html.getClass.getName, "graft_html_signals"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "graft_html_signals(docs_table)")
-      val docs = SparkSession.active.table(
-        stringArg("graft_html_signals")(children.head, "docs_table"))
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Html.htmlSignals(docs))
-    })
+    tvf("graft_html_signals(docs_table)", Html.getClass)(a => Html.htmlSignals(a.table(0))),
 
-  /** SQL surface for the visual-line boilerplate pair
-    * ([[graft.ops.Html.htmlLines]] / [[graft.ops.Html.htmlMainText]]):
-    *
-    * {{{
-    * SELECT * FROM graft_html_lines('pages')   -- per-line class report
-    * SELECT * FROM graft_html_main('pages')    -- content lines only
-    * }}} */
-  private val htmlLinesTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_html_lines"),
-    new ExpressionInfo(graft.ops.Html.getClass.getName, "graft_html_lines"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "graft_html_lines(docs_table)")
-      val docs = SparkSession.active.table(
-        stringArg("graft_html_lines")(children.head, "docs_table"))
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Html.htmlLines(docs))
-    })
+    /** SQL surface for the visual-line boilerplate pair
+      * ([[graft.ops.Html.htmlLines]] / [[graft.ops.Html.htmlMainText]]):
+      *
+      * {{{
+      * SELECT * FROM graft_html_lines('pages')   -- per-line class report
+      * SELECT * FROM graft_html_main('pages')    -- content lines only
+      * }}} */
+    tvf("graft_html_lines(docs_table)", Html.getClass)(a => Html.htmlLines(a.table(0))),
 
-  private val htmlMainTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_html_main"),
-    new ExpressionInfo(graft.ops.Html.getClass.getName, "graft_html_main"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "graft_html_main(docs_table)")
-      val docs = SparkSession.active.table(
-        stringArg("graft_html_main")(children.head, "docs_table"))
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Html.htmlMainText(docs))
-    })
+    tvf("graft_html_main(docs_table)", Html.getClass)(a => Html.htmlMainText(a.table(0))),
 
-  /** SQL surface for the span-dedup approximation measurement
-    * ([[graft.ops.Dedup.spanEval]]):
-    *
-    * {{{
-    * SELECT * FROM graft_span_eval('docs')                 -- defaults
-    * SELECT * FROM graft_span_eval('docs', 24, 8, 64, 4)   -- k, mod_p, gap, sample_mod
-    * }}}
-    *
-    * One confusion row: char-level recall/precision of the production
-    * anchor-gram chain vs exact repeated-substring ground truth on an
-    * md5-bucket document sample. */
-  private val spanEvalTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_span_eval"),
-    new ExpressionInfo(graft.ops.Dedup.getClass.getName, "graft_span_eval"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1 || children.size == 5,
-        "graft_span_eval(docs_table[, k, mod_p, gap, sample_mod])")
-      val str = stringArg("graft_span_eval") _
-      val int = intArg("graft_span_eval") _
-      val docs = SparkSession.active.table(str(children.head, "docs_table"))
-      val (k, modP, gap, sampleMod) =
-        if (children.size == 5)
-          (int(children(1), "k"), int(children(2), "mod_p"),
-            int(children(3), "gap"), int(children(4), "sample_mod"))
-        else (24, 8, 64, 4)
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Dedup.spanEval(docs, k, modP, gap, sampleMod,
-          mat = graft.core.Materialize.Persist))
-    })
+    /** SQL surface for the span-dedup approximation measurement
+      * ([[graft.ops.Dedup.spanEval]]):
+      *
+      * {{{
+      * SELECT * FROM graft_span_eval('docs')                 -- defaults
+      * SELECT * FROM graft_span_eval('docs', 24, 8, 64, 4)   -- k, mod_p, gap, sample_mod
+      * }}}
+      *
+      * One confusion row: char-level recall/precision of the production
+      * anchor-gram chain vs exact repeated-substring ground truth on an
+      * md5-bucket document sample. */
+    tvf("graft_span_eval(docs_table[, k, mod_p, gap, sample_mod])", Dedup.getClass) { a =>
+      Dedup.spanEval(a.table(0), a.intOr(1, 24), a.intOr(2, 8), a.intOr(3, 64), a.intOr(4, 4),
+        mat = Materialize.Persist)
+    },
 
-  /** SQL surface for the span-dedup sampling-rate dial
-    * ([[graft.ops.Dedup.spanPlan]]):
-    *
-    * {{{
-    * SELECT * FROM graft_span_plan('docs')           -- k=24, sample_mod=4
-    * SELECT * FROM graft_span_plan('docs', 24, 4)
-    * }}}
-    *
-    * Per candidate modP: estimated char recall from the sample's exact
-    * span-length distribution (upper bound on graft_span_eval's
-    * measurement at the same parameters). */
-  private val spanPlanTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_span_plan"),
-    new ExpressionInfo(graft.ops.Dedup.getClass.getName, "graft_span_plan"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1 || children.size == 3,
-        "graft_span_plan(docs_table[, k, sample_mod])")
-      val str = stringArg("graft_span_plan") _
-      val int = intArg("graft_span_plan") _
-      val docs = SparkSession.active.table(str(children.head, "docs_table"))
-      val (k, sampleMod) =
-        if (children.size == 3) (int(children(1), "k"), int(children(2), "sample_mod"))
-        else (24, 4)
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Dedup.spanPlan(docs, k, sampleMod,
-          mat = graft.core.Materialize.Persist))
-    })
+    /** SQL surface for the span-dedup sampling-rate dial
+      * ([[graft.ops.Dedup.spanPlan]]):
+      *
+      * {{{
+      * SELECT * FROM graft_span_plan('docs')           -- k=24, sample_mod=4
+      * SELECT * FROM graft_span_plan('docs', 24, 4)
+      * }}}
+      *
+      * Per candidate modP: estimated char recall from the sample's exact
+      * span-length distribution (upper bound on graft_span_eval's
+      * measurement at the same parameters). */
+    tvf("graft_span_plan(docs_table[, k, sample_mod])", Dedup.getClass)(a =>
+      Dedup.spanPlan(a.table(0), a.intOr(1, 24), a.intOr(2, 4), mat = Materialize.Persist)),
 
-  /** SQL surface for the crawl-graph family ([[graft.ops.Crawl]]):
-    *
-    * {{{
-    * SELECT * FROM graft_url_canon('pages')           -- + canon_url/host/domain
-    * SELECT * FROM graft_url_dedup('pages')           -- (doc_id, url_key, keep)
-    * SELECT * FROM graft_link_edges('pages')          -- host graph (src, dst, n_links)
-    * SELECT * FROM graft_rank_prior('docs', 'ranks')  -- stored-rank join, 0.0 unranked
-    * SELECT * FROM graft_corpus_diff('old', 'new')    -- added/removed/changed/unchanged
-    * }}}
-    *
-    * All five stay fully lazy. [[graft.ops.Crawl.domainRank]] itself is
-    * Scala-API-only (an iterative materialize/release loop cannot be a
-    * lazy TVF body — the [[graft.ops.Dedup.clusters]] stance); its
-    * output is the stored table `graft_rank_prior` consumes. */
-  private val urlCanonTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_url_canon"),
-    new ExpressionInfo(graft.ops.Crawl.getClass.getName, "graft_url_canon"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "graft_url_canon(pages_table)")
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Crawl.urlCanon(SparkSession.active.table(
-          stringArg("graft_url_canon")(children.head, "pages_table"))))
-    })
+    /** SQL surface for the crawl-graph family ([[graft.ops.Crawl]]):
+      *
+      * {{{
+      * SELECT * FROM graft_url_canon('pages')           -- + canon_url/host/domain
+      * SELECT * FROM graft_url_dedup('pages')           -- (doc_id, url_key, keep)
+      * SELECT * FROM graft_link_edges('pages')          -- host graph (src, dst, n_links)
+      * SELECT * FROM graft_rank_prior('docs', 'ranks')  -- stored-rank join, 0.0 unranked
+      * SELECT * FROM graft_corpus_diff('old', 'new')    -- added/removed/changed/unchanged
+      * }}}
+      *
+      * All five stay fully lazy. [[graft.ops.Crawl.domainRank]] itself is
+      * Scala-API-only (an iterative materialize/release loop cannot be a
+      * lazy TVF body — the [[graft.ops.Dedup.clusters]] stance); its
+      * output is the stored table `graft_rank_prior` consumes. */
+    tvf("graft_url_canon(pages_table)", Crawl.getClass)(a => Crawl.urlCanon(a.table(0))),
 
-  private val urlDedupTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_url_dedup"),
-    new ExpressionInfo(graft.ops.Crawl.getClass.getName, "graft_url_dedup"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "graft_url_dedup(pages_table)")
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Crawl.urlDuplicates(SparkSession.active.table(
-          stringArg("graft_url_dedup")(children.head, "pages_table"))))
-    })
+    tvf("graft_url_dedup(pages_table)", Crawl.getClass)(a => Crawl.urlDuplicates(a.table(0))),
 
-  private val linkEdgesTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_link_edges"),
-    new ExpressionInfo(graft.ops.Crawl.getClass.getName, "graft_link_edges"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "graft_link_edges(pages_table)")
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Crawl.linkHostEdges(SparkSession.active.table(
-          stringArg("graft_link_edges")(children.head, "pages_table"))))
-    })
+    tvf("graft_link_edges(pages_table)", Crawl.getClass)(a => Crawl.linkHostEdges(a.table(0))),
 
-  private val rankPriorTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_rank_prior"),
-    new ExpressionInfo(graft.ops.Crawl.getClass.getName, "graft_rank_prior"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2, "graft_rank_prior(docs_table, ranks_table)")
-      val str = stringArg("graft_rank_prior") _
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Crawl.rankPrior(
-          SparkSession.active.table(str(children.head, "docs_table")),
-          SparkSession.active.table(str(children(1), "ranks_table"))))
-    })
+    tvf("graft_rank_prior(docs_table, ranks_table)", Crawl.getClass)(a =>
+      Crawl.rankPrior(a.table(0), a.table(1))),
 
-  private val urlSignalsTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_url_signals"),
-    new ExpressionInfo(graft.ops.Crawl.getClass.getName, "graft_url_signals"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "graft_url_signals(pages_table)")
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Crawl.urlSignals(SparkSession.active.table(
-          stringArg("graft_url_signals")(children.head, "pages_table"))))
-    })
+    tvf("graft_url_signals(pages_table)", Crawl.getClass)(a => Crawl.urlSignals(a.table(0))),
 
-  /** `SELECT * FROM graft_frontier('pages', 'ranks'[, per_host_cap])`
-    * — unseen link targets, ref-counted, rank-joined, host-capped.
-    * `ranks` is a stored [[graft.ops.Crawl.domainRank]] output. */
-  private val frontierTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_frontier"),
-    new ExpressionInfo(graft.ops.Crawl.getClass.getName, "graft_frontier"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2 || children.size == 3,
-        "graft_frontier(pages_table, ranks_table[, per_host_cap])")
-      val str = stringArg("graft_frontier") _
-      val cap =
-        if (children.size == 3) intArg("graft_frontier")(children(2), "per_host_cap")
-        else 10
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Crawl.crawlFrontier(
-          SparkSession.active.table(str(children.head, "pages_table")),
-          SparkSession.active.table(str(children(1), "ranks_table")),
-          perHostCap = cap))
-    })
+    /** `SELECT * FROM graft_frontier('pages', 'ranks'[, per_host_cap])`
+      * — unseen link targets, ref-counted, rank-joined, host-capped.
+      * `ranks` is a stored [[graft.ops.Crawl.domainRank]] output. */
+    tvf("graft_frontier(pages_table, ranks_table[, per_host_cap])", Crawl.getClass)(a =>
+      Crawl.crawlFrontier(a.table(0), a.table(1), perHostCap = a.intOr(2, 10))),
 
-  private val anchorTextsTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_anchor_texts"),
-    new ExpressionInfo(graft.ops.Crawl.getClass.getName, "graft_anchor_texts"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "graft_anchor_texts(pages_table)")
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Crawl.anchorTexts(SparkSession.active.table(
-          stringArg("graft_anchor_texts")(children.head, "pages_table"))))
-    })
+    tvf("graft_anchor_texts(pages_table)", Crawl.getClass)(a => Crawl.anchorTexts(a.table(0))),
 
-  private val anchorIndexTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_anchor_index"),
-    new ExpressionInfo(graft.ops.Crawl.getClass.getName, "graft_anchor_index"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "graft_anchor_index(pages_table)")
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Crawl.anchorIndex(SparkSession.active.table(
-          stringArg("graft_anchor_index")(children.head, "pages_table"))))
-    })
+    tvf("graft_anchor_index(pages_table)", Crawl.getClass)(a => Crawl.anchorIndex(a.table(0))),
 
-  private val sitemapUrlsTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_sitemap_urls"),
-    new ExpressionInfo(graft.ops.Crawl.getClass.getName, "graft_sitemap_urls"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "graft_sitemap_urls(sitemaps_table)")
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Crawl.sitemapUrls(SparkSession.active.table(
-          stringArg("graft_sitemap_urls")(children.head, "sitemaps_table"))))
-    })
+    tvf("graft_sitemap_urls(sitemaps_table)", Crawl.getClass)(a =>
+      Crawl.sitemapUrls(a.table(0))),
 
-  /** `SELECT * FROM graft_polite_frontier('pages', 'ranks', 'rules',
-    * 'delays'[, per_host_cap[, default_delay]])` — the crawl loop's
-    * one-call output from stored rank/rules/delay artifacts;
-    * `default_delay` (seconds) schedules `fetch_offset` for hosts
-    * that declare no `Crawl-delay`. Fully lazy. */
-  private val politeFrontierTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_polite_frontier"),
-    new ExpressionInfo(graft.ops.Crawl.getClass.getName, "graft_polite_frontier"),
-    (children: Seq[Expression]) => {
-      require(children.size >= 4 && children.size <= 6,
-        "graft_polite_frontier(pages_table, ranks_table, rules_table, delays_table[, per_host_cap[, default_delay]])")
-      val str = stringArg("graft_polite_frontier") _
-      val cap =
-        if (children.size >= 5) intArg("graft_polite_frontier")(children(4), "per_host_cap")
-        else 10
-      val dflt =
-        if (children.size == 6) numArg("graft_polite_frontier")(children(5), "default_delay")
-        else 1.0
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Crawl.politeFrontier(
-          SparkSession.active.table(str(children.head, "pages_table")),
-          SparkSession.active.table(str(children(1), "ranks_table")),
-          SparkSession.active.table(str(children(2), "rules_table")),
-          SparkSession.active.table(str(children(3), "delays_table")),
-          perHostCap = cap,
-          defaultDelay = dflt))
-    })
+    /** `SELECT * FROM graft_polite_frontier('pages', 'ranks', 'rules',
+      * 'delays'[, per_host_cap[, default_delay]])` — the crawl loop's
+      * one-call output from stored rank/rules/delay artifacts;
+      * `default_delay` (seconds) schedules `fetch_offset` for hosts
+      * that declare no `Crawl-delay`. Fully lazy. */
+    tvf("graft_polite_frontier(pages_table, ranks_table, rules_table, delays_table" +
+        "[, per_host_cap[, default_delay]])", Crawl.getClass) { a =>
+      Crawl.politeFrontier(a.table(0), a.table(1), a.table(2), a.table(3),
+        perHostCap = a.intOr(4, 10), defaultDelay = a.numOr(5, 1.0))
+    },
 
-  /** SQL surface for adaptive recrawl scheduling
-    * ([[graft.ops.Crawl.recrawlPolicy]]):
-    *
-    * {{{
-    * SELECT * FROM graft_recrawl_policy('fetch_log')                 -- 1d base, 30d cap
-    * SELECT * FROM graft_recrawl_policy('fetch_log', 3600, 604800)   -- 1h base, 7d cap
-    * }}}
-    *
-    * The named table/view must carry (url, fetch_ts, content_hash);
-    * emits one policy row per URL — filter `next_fetch_at <= now`
-    * for the due list. */
-  private val recrawlPolicyTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_recrawl_policy"),
-    new ExpressionInfo(graft.ops.Crawl.getClass.getName, "graft_recrawl_policy"),
-    (children: Seq[Expression]) => {
-      require(children.size >= 1 && children.size <= 3,
-        "graft_recrawl_policy(fetch_log_table[, base_interval_sec[, max_interval_sec]])")
-      val base =
-        if (children.size >= 2)
-          numArg("graft_recrawl_policy")(children(1), "base_interval_sec").toLong
-        else 86400L
-      val maxI =
-        if (children.size == 3)
-          numArg("graft_recrawl_policy")(children(2), "max_interval_sec").toLong
-        else 30L * 86400L
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Crawl.recrawlPolicy(
-          SparkSession.active.table(
-            stringArg("graft_recrawl_policy")(children.head, "fetch_log_table")),
-          baseInterval = base, maxInterval = maxI))
-    })
+    /** SQL surface for adaptive recrawl scheduling
+      * ([[graft.ops.Crawl.recrawlPolicy]]):
+      *
+      * {{{
+      * SELECT * FROM graft_recrawl_policy('fetch_log')                 -- 1d base, 30d cap
+      * SELECT * FROM graft_recrawl_policy('fetch_log', 3600, 604800)   -- 1h base, 7d cap
+      * }}}
+      *
+      * The named table/view must carry (url, fetch_ts, content_hash);
+      * emits one policy row per URL — filter `next_fetch_at <= now`
+      * for the due list. */
+    tvf("graft_recrawl_policy(fetch_log_table[, base_interval_sec[, max_interval_sec]])",
+        Crawl.getClass) { a =>
+      Crawl.recrawlPolicy(a.table(0), baseInterval = a.numOr(1, 86400).toLong,
+        maxInterval = a.numOr(2, 30 * 86400).toLong)
+    },
 
-  /** SQL surface for crawl-trap template mining
-    * ([[graft.ops.Crawl.urlTemplates]]):
-    * `SELECT * FROM graft_url_templates('pages')` → per-(host,
-    * template) page/URL counts and host share; filter high `n_urls`
-    * for the trap list. Persist (lazy) materialization — the TVF
-    * stance. */
-  private val urlTemplatesTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_url_templates"),
-    new ExpressionInfo(graft.ops.Crawl.getClass.getName, "graft_url_templates"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "graft_url_templates(pages_table)")
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Crawl.urlTemplates(
-          SparkSession.active.table(
-            stringArg("graft_url_templates")(children.head, "pages_table")),
-          mat = graft.core.Materialize.Persist))
-    })
+    /** SQL surface for crawl-trap template mining
+      * ([[graft.ops.Crawl.urlTemplates]]):
+      * `SELECT * FROM graft_url_templates('pages')` → per-(host,
+      * template) page/URL counts and host share; filter high `n_urls`
+      * for the trap list. Persist (lazy) materialization — the TVF
+      * stance. */
+    tvf("graft_url_templates(pages_table)", Crawl.getClass)(a =>
+      Crawl.urlTemplates(a.table(0), mat = Materialize.Persist)),
 
-  /** SQL surface for rank-proportional fetch budgets
-    * ([[graft.ops.Crawl.crawlBudget]]):
-    * `SELECT * FROM graft_crawl_budget('ranks', 100000)` or the
-    * 4-arg form with min/max per-host clamps. */
-  private val crawlBudgetTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_crawl_budget"),
-    new ExpressionInfo(graft.ops.Crawl.getClass.getName, "graft_crawl_budget"),
-    (children: Seq[Expression]) => {
-      require(children.size >= 2 && children.size <= 4,
-        "graft_crawl_budget(ranks_table, total[, min_per_host[, max_per_host]])")
-      val num = numArg("graft_crawl_budget") _
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Crawl.crawlBudget(
-          SparkSession.active.table(
-            stringArg("graft_crawl_budget")(children.head, "ranks_table")),
-          total = num(children(1), "total").toLong,
-          minPerHost =
-            if (children.size >= 3) num(children(2), "min_per_host").toLong else 1L,
-          maxPerHost =
-            if (children.size == 4) num(children(3), "max_per_host").toLong
-            else Long.MaxValue))
-    })
+    /** SQL surface for rank-proportional fetch budgets
+      * ([[graft.ops.Crawl.crawlBudget]]):
+      * `SELECT * FROM graft_crawl_budget('ranks', 100000)` or the
+      * 4-arg form with min/max per-host clamps. */
+    tvf("graft_crawl_budget(ranks_table, total[, min_per_host[, max_per_host]])",
+        Crawl.getClass) { a =>
+      Crawl.crawlBudget(a.table(0), total = a.num(1).toLong,
+        minPerHost = a.numOr(2, 1).toLong,
+        maxPerHost = if (a.size == 4) a.num(3).toLong else Long.MaxValue)
+    },
 
-  /** SQL surface for robots `Sitemap:` discovery
-    * ([[graft.ops.Robots.sitemapDirectives]]):
-    * `SELECT * FROM graft_robots_sitemaps('robots_bodies')` over a
-    * `(host, robots_txt)` table → one row per declared sitemap. */
-  private val robotsSitemapsTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_robots_sitemaps"),
-    new ExpressionInfo(graft.ops.Robots.getClass.getName, "graft_robots_sitemaps"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "graft_robots_sitemaps(robots_table)")
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Robots.sitemapDirectives(SparkSession.active.table(
-          stringArg("graft_robots_sitemaps")(children.head, "robots_table"))))
-    })
+    /** SQL surface for robots `Sitemap:` discovery
+      * ([[graft.ops.Robots.sitemapDirectives]]):
+      * `SELECT * FROM graft_robots_sitemaps('robots_bodies')` over a
+      * `(host, robots_txt)` table → one row per declared sitemap. */
+    tvf("graft_robots_sitemaps(robots_table)", Robots.getClass)(a =>
+      Robots.sitemapDirectives(a.table(0))),
 
-  private val crawlDelaysTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_crawl_delays"),
-    new ExpressionInfo(graft.ops.Robots.getClass.getName, "graft_crawl_delays"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "graft_crawl_delays(robots_table)")
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Robots.crawlDelays(SparkSession.active.table(
-          stringArg("graft_crawl_delays")(children.head, "robots_table"))))
-    })
+    tvf("graft_crawl_delays(robots_table)", Robots.getClass)(a =>
+      Robots.crawlDelays(a.table(0))),
 
-  private val hostSummaryTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_host_summary"),
-    new ExpressionInfo(graft.ops.Crawl.getClass.getName, "graft_host_summary"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "graft_host_summary(pages_table)")
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Crawl.hostSummary(SparkSession.active.table(
-          stringArg("graft_host_summary")(children.head, "pages_table"))))
-    })
+    tvf("graft_host_summary(pages_table)", Crawl.getClass)(a => Crawl.hostSummary(a.table(0))),
 
-  private val robotsRulesTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_robots_rules"),
-    new ExpressionInfo(graft.ops.Robots.getClass.getName, "graft_robots_rules"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "graft_robots_rules(robots_table)")
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Robots.robotsRules(SparkSession.active.table(
-          stringArg("graft_robots_rules")(children.head, "robots_table"))))
-    })
+    tvf("graft_robots_rules(robots_table)", Robots.getClass)(a =>
+      Robots.robotsRules(a.table(0))),
 
-  /** `SELECT * FROM graft_robots_filter('urls', 'rules')` — RFC 9309
-    * longest-match decision per URL row; `rules` is a stored
-    * [[graft.ops.Robots.robotsRules]] output. */
-  private val robotsFilterTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_robots_filter"),
-    new ExpressionInfo(graft.ops.Robots.getClass.getName, "graft_robots_filter"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2, "graft_robots_filter(urls_table, rules_table)")
-      val str = stringArg("graft_robots_filter") _
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Robots.robotsFilter(
-          SparkSession.active.table(str(children.head, "urls_table")),
-          SparkSession.active.table(str(children(1), "rules_table"))))
-    })
+    /** `SELECT * FROM graft_robots_filter('urls', 'rules')` — RFC 9309
+      * longest-match decision per URL row; `rules` is a stored
+      * [[graft.ops.Robots.robotsRules]] output. */
+    tvf("graft_robots_filter(urls_table, rules_table)", Robots.getClass)(a =>
+      Robots.robotsFilter(a.table(0), a.table(1))),
 
-  private val corpusDiffTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_corpus_diff"),
-    new ExpressionInfo(graft.ops.Crawl.getClass.getName, "graft_corpus_diff"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2, "graft_corpus_diff(old_table, new_table)")
-      val str = stringArg("graft_corpus_diff") _
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Crawl.corpusDiff(
-          SparkSession.active.table(str(children.head, "old_table")),
-          SparkSession.active.table(str(children(1), "new_table"))))
-    })
+    tvf("graft_corpus_diff(old_table, new_table)", Crawl.getClass)(a =>
+      Crawl.corpusDiff(a.table(0), a.table(1))),
 
-  /** SQL surface for trigram stupid-backoff LM scoring
-    * ([[graft.ops.TextAnalysis.lm3ScoreAgainst]]):
-    *
-    * {{{
-    * SELECT * FROM graft_lm3_score('docs', 'reference_docs')
-    * }}}
-    *
-    * Trains the trigram model on the reference table, scores every doc
-    * in the first: (doc_id, n_trigrams, n_bo, n_oov, avg_logprob). */
-  private val lm3ScoreTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_lm3_score"),
-    new ExpressionInfo(graft.ops.TextAnalysis.getClass.getName, "graft_lm3_score"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2, "graft_lm3_score(docs_table, reference_table)")
-      val str = stringArg("graft_lm3_score") _
-      val docs = SparkSession.active.table(str(children.head, "docs_table"))
-      val ref = SparkSession.active.table(str(children(1), "reference_table"))
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.TextAnalysis.lm3ScoreAgainst(docs, ref))
-    })
+    /** SQL surface for trigram stupid-backoff LM scoring
+      * ([[graft.ops.TextAnalysis.lm3ScoreAgainst]]):
+      *
+      * {{{
+      * SELECT * FROM graft_lm3_score('docs', 'reference_docs')
+      * }}}
+      *
+      * Trains the trigram model on the reference table, scores every doc
+      * in the first: (doc_id, n_trigrams, n_bo, n_oov, avg_logprob). */
+    tvf("graft_lm3_score(docs_table, reference_table)", TextAnalysis.getClass)(a =>
+      TextAnalysis.lm3ScoreAgainst(a.table(0), a.table(1))),
 
-  /** SQL surface for n-gram stupid-backoff LM scoring at a chosen
-    * order ([[graft.ops.TextAnalysis.lmnModel]] +
-    * [[graft.ops.TextAnalysis.lmnScoreWith]]):
-    *
-    * {{{
-    * SELECT * FROM graft_lmn_score('docs', 'reference_docs', 5)
-    * }}}
-    *
-    * Trains an order-n model on the reference table, scores every doc
-    * in the first: (doc_id, n_ngrams, n_bo, n_oov, avg_logprob). */
-  private val lmnScoreTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_lmn_score"),
-    new ExpressionInfo(graft.ops.TextAnalysis.getClass.getName, "graft_lmn_score"),
-    (children: Seq[Expression]) => {
-      require(children.size == 3, "graft_lmn_score(docs_table, reference_table, order)")
-      val str = stringArg("graft_lmn_score") _
-      val docs = SparkSession.active.table(str(children.head, "docs_table"))
-      val ref = SparkSession.active.table(str(children(1), "reference_table"))
-      val order = intArg("graft_lmn_score")(children(2), "order")
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.TextAnalysis.lmnScoreWith(docs,
-          graft.ops.TextAnalysis.lmnModel(ref, order)))
-    })
+    /** SQL surface for n-gram stupid-backoff LM scoring at a chosen
+      * order ([[graft.ops.TextAnalysis.lmnModel]] +
+      * [[graft.ops.TextAnalysis.lmnScoreWith]]):
+      *
+      * {{{
+      * SELECT * FROM graft_lmn_score('docs', 'reference_docs', 5)
+      * }}}
+      *
+      * Trains an order-n model on the reference table, scores every doc
+      * in the first: (doc_id, n_ngrams, n_bo, n_oov, avg_logprob). */
+    tvf("graft_lmn_score(docs_table, reference_table, order)", TextAnalysis.getClass)(a =>
+      TextAnalysis.lmnScoreWith(a.table(0), TextAnalysis.lmnModel(a.table(1), a.int(2)))),
 
-  /** SQL surface for interpolated Kneser-Ney scoring
-    * ([[graft.ops.TextAnalysis.knScoreWith]] over a model trained
-    * in-plan — the ARPA-backoff KenLM fidelity rung):
-    *
-    * {{{
-    * SELECT * FROM graft_kn_score('docs', 'ref')      -- order 3, D=0.75
-    * SELECT * FROM graft_kn_score('docs', 'ref', 5)   -- the KenLM order
-    * }}}
-    *
-    * Emits (doc_id, n_ngrams, n_bo, n_oov, avg_logprob). */
-  private val knScoreTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_kn_score"),
-    new ExpressionInfo(graft.ops.TextAnalysis.getClass.getName, "graft_kn_score"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2 || children.size == 3,
-        "graft_kn_score(docs_table, reference_table[, order])")
-      val str = stringArg("graft_kn_score") _
-      val docs = SparkSession.active.table(str(children.head, "docs_table"))
-      val ref = SparkSession.active.table(str(children(1), "reference_table"))
-      val order =
-        if (children.size == 3) intArg("graft_kn_score")(children(2), "order") else 3
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.TextAnalysis.knScoreWith(docs,
-          graft.ops.TextAnalysis.knModel(ref, order)))
-    })
+    /** SQL surface for interpolated Kneser-Ney scoring
+      * ([[graft.ops.TextAnalysis.knScoreWith]] over a model trained
+      * in-plan — the ARPA-backoff KenLM fidelity rung):
+      *
+      * {{{
+      * SELECT * FROM graft_kn_score('docs', 'ref')      -- order 3, D=0.75
+      * SELECT * FROM graft_kn_score('docs', 'ref', 5)   -- the KenLM order
+      * }}}
+      *
+      * Emits (doc_id, n_ngrams, n_bo, n_oov, avg_logprob). */
+    tvf("graft_kn_score(docs_table, reference_table[, order])", TextAnalysis.getClass)(a =>
+      TextAnalysis.knScoreWith(a.table(0), TextAnalysis.knModel(a.table(1), a.intOr(2, 3)))),
 
-  /** SQL surface for the shard-layout manifest
-    * ([[graft.ops.Sampling.shardManifest]]):
-    *
-    * {{{
-    * SELECT * FROM graft_shard_manifest('docs', 512)      -- buckets=32
-    * SELECT * FROM graft_shard_manifest('docs', 512, 8)
-    * }}}
-    *
-    * Per shard of the packShards layout: doc/token counts and the
-    * doc_id-ordered content checksum writeShards certifies on disk. */
-  private val shardManifestTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_shard_manifest"),
-    new ExpressionInfo(graft.ops.Sampling.getClass.getName, "graft_shard_manifest"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2 || children.size == 3,
-        "graft_shard_manifest(docs_table, token_budget[, buckets])")
-      val str = stringArg("graft_shard_manifest") _
-      val int = intArg("graft_shard_manifest") _
-      val docs = SparkSession.active.table(str(children.head, "docs_table"))
-      val budget = int(children(1), "token_budget")
-      val buckets = if (children.size == 3) int(children(2), "buckets") else 32
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Sampling.shardManifest(docs, budget.toLong, buckets))
-    })
+    /** SQL surface for the shard-layout manifest
+      * ([[graft.ops.Sampling.shardManifest]]):
+      *
+      * {{{
+      * SELECT * FROM graft_shard_manifest('docs', 512)      -- buckets=32
+      * SELECT * FROM graft_shard_manifest('docs', 512, 8)
+      * }}}
+      *
+      * Per shard of the packShards layout: doc/token counts and the
+      * doc_id-ordered content checksum writeShards certifies on disk. */
+    tvf("graft_shard_manifest(docs_table, token_budget[, buckets])", Sampling.getClass)(a =>
+      Sampling.shardManifest(a.table(0), a.int(1).toLong, a.intOr(2, 32))),
 
-  /** SQL surface for training-sequence packing
-    * ([[graft.ops.Sampling.packSequences]]):
-    *
-    * {{{
-    * SELECT * FROM graft_pack_sequences('docs', 2048, 64)      -- buckets=32
-    * SELECT * FROM graft_pack_sequences('docs', 2048, 64, 8)
-    * }}}
-    *
-    * Whole-context chunking + length-bucketed sequence fill; the
-    * assignment a training loader materializes. */
-  private val packSequencesTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_pack_sequences"),
-    new ExpressionInfo(graft.ops.Sampling.getClass.getName, "graft_pack_sequences"),
-    (children: Seq[Expression]) => {
-      require(children.size == 3 || children.size == 4,
-        "graft_pack_sequences(docs_table, context, bin_width[, buckets])")
-      val str = stringArg("graft_pack_sequences") _
-      val int = intArg("graft_pack_sequences") _
-      val docs = SparkSession.active.table(str(children.head, "docs_table"))
-      val buckets = if (children.size == 4) int(children(3), "buckets") else 32
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Sampling.packSequences(docs,
-          int(children(1), "context"), int(children(2), "bin_width"), buckets))
-    })
+    /** SQL surface for training-sequence packing
+      * ([[graft.ops.Sampling.packSequences]]):
+      *
+      * {{{
+      * SELECT * FROM graft_pack_sequences('docs', 2048, 64)      -- buckets=32
+      * SELECT * FROM graft_pack_sequences('docs', 2048, 64, 8)
+      * }}}
+      *
+      * Whole-context chunking + length-bucketed sequence fill; the
+      * assignment a training loader materializes. */
+    tvf("graft_pack_sequences(docs_table, context, bin_width[, buckets])",
+        Sampling.getClass)(a =>
+      Sampling.packSequences(a.table(0), a.int(1), a.int(2), a.intOr(3, 32))),
 
-  /** SQL surface for sliding token-window chunking
-    * ([[graft.ops.TextAnalysis.chunkByTokens]]):
-    *
-    * {{{
-    * SELECT * FROM graft_chunk_tokens('docs', 256, 192)
-    * }}}
-    *
-    * Fixed windows every `stride` tokens — the retrieval/embedding
-    * splitter. */
-  private val chunkTokensTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_chunk_tokens"),
-    new ExpressionInfo(graft.ops.TextAnalysis.getClass.getName, "graft_chunk_tokens"),
-    (children: Seq[Expression]) => {
-      require(children.size == 3,
-        "graft_chunk_tokens(docs_table, chunk_size, stride)")
-      val str = stringArg("graft_chunk_tokens") _
-      val int = intArg("graft_chunk_tokens") _
-      val docs = SparkSession.active.table(str(children.head, "docs_table"))
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.TextAnalysis.chunkByTokens(docs,
-          int(children(1), "chunk_size"), int(children(2), "stride")))
-    })
+    /** SQL surface for sliding token-window chunking
+      * ([[graft.ops.TextAnalysis.chunkByTokens]]):
+      *
+      * {{{
+      * SELECT * FROM graft_chunk_tokens('docs', 256, 192)
+      * }}}
+      *
+      * Fixed windows every `stride` tokens — the retrieval/embedding
+      * splitter. */
+    tvf("graft_chunk_tokens(docs_table, chunk_size, stride)", TextAnalysis.getClass)(a =>
+      TextAnalysis.chunkByTokens(a.table(0), a.int(1), a.int(2))),
 
-  /** SQL surface for classifier reliability
-    * ([[graft.ops.Curation.calibrationReport]]):
-    *
-    * {{{
-    * SELECT * FROM graft_calibration('scored')   -- needs logit + actual cols
-    * }}}
-    */
-  private val calibrationTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_calibration"),
-    new ExpressionInfo(graft.ops.Curation.getClass.getName, "graft_calibration"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "graft_calibration(scored_table)")
-      val scored = SparkSession.active.table(
-        stringArg("graft_calibration")(children.head, "scored_table"))
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Curation.calibrationReport(scored))
-    })
+    /** SQL surface for classifier reliability
+      * ([[graft.ops.Curation.calibrationReport]]):
+      *
+      * {{{
+      * SELECT * FROM graft_calibration('scored')   -- needs logit + actual cols
+      * }}}
+      */
+    tvf("graft_calibration(scored_table)", Curation.getClass)(a =>
+      Curation.calibrationReport(a.table(0))),
 
-  /** SQL surface for the operating-point sweep —
-    *
-    * {{{
-    * SELECT * FROM graft_threshold_sweep('scored', '-2,-1,0,1,2')
-    * }}}
-    *
-    * The named table needs `logit` + `actual` columns (the
-    * [[graft.ops.Curation.thresholdSweep]] contract); thresholds are a
-    * CSV literal, the policy list. */
-  private val thresholdSweepTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_threshold_sweep"),
-    new ExpressionInfo(graft.ops.Curation.getClass.getName, "graft_threshold_sweep"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2,
-        "graft_threshold_sweep(scored_table, thresholds_csv)")
-      val str = stringArg("graft_threshold_sweep") _
-      val scored = SparkSession.active.table(str(children(0), "scored_table"))
-      val ths = str(children(1), "thresholds_csv")
-        .split(",").map(_.trim).filter(_.nonEmpty).map(_.toDouble).toSeq
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Curation.thresholdSweep(scored, ths))
-    })
+    /** SQL surface for the operating-point sweep —
+      *
+      * {{{
+      * SELECT * FROM graft_threshold_sweep('scored', '-2,-1,0,1,2')
+      * }}}
+      *
+      * The named table needs `logit` + `actual` columns (the
+      * [[graft.ops.Curation.thresholdSweep]] contract); thresholds are a
+      * CSV literal, the policy list. */
+    tvf("graft_threshold_sweep(scored_table, thresholds_csv)", Curation.getClass)(a =>
+      Curation.thresholdSweep(a.table(0), a.csv(1).map(_.toDouble))),
 
-  /** SQL surface for operating-point SELECTION —
-    *
-    * {{{
-    * SELECT * FROM graft_operating_point('scored', '-2,-1,0,1,2')       -- max-F1
-    * SELECT * FROM graft_operating_point('scored', '-2,-1,0,1,2', 0.9)  -- precision floor
-    * }}}
-    *
-    * Sweeps the scored table at the CSV thresholds, then picks the
-    * winner under the objective (third arg = the precision floor;
-    * absent = max-F1). Empty when nothing qualifies — the
-    * [[graft.ops.Curation.operatingPoint]] contract. */
-  private val operatingPointTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_operating_point"),
-    new ExpressionInfo(graft.ops.Curation.getClass.getName, "graft_operating_point"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2 || children.size == 3,
-        "graft_operating_point(scored_table, thresholds_csv[, min_precision])")
-      val str = stringArg("graft_operating_point") _
-      val scored = SparkSession.active.table(str(children(0), "scored_table"))
-      val ths = str(children(1), "thresholds_csv")
-        .split(",").map(_.trim).filter(_.nonEmpty).map(_.toDouble).toSeq
-      val objective =
-        if (children.size == 2) graft.ops.Curation.OpObjective.MaxF1
-        else graft.ops.Curation.OpObjective.PrecisionFloor(
-          numArg("graft_operating_point")(children(2), "min_precision"))
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Curation.operatingPoint(
-          graft.ops.Curation.thresholdSweep(scored, ths), objective))
-    })
+    /** SQL surface for operating-point SELECTION —
+      *
+      * {{{
+      * SELECT * FROM graft_operating_point('scored', '-2,-1,0,1,2')       -- max-F1
+      * SELECT * FROM graft_operating_point('scored', '-2,-1,0,1,2', 0.9)  -- precision floor
+      * }}}
+      *
+      * Sweeps the scored table at the CSV thresholds, then picks the
+      * winner under the objective (third arg = the precision floor;
+      * absent = max-F1). Empty when nothing qualifies — the
+      * [[graft.ops.Curation.operatingPoint]] contract. */
+    tvf("graft_operating_point(scored_table, thresholds_csv[, min_precision])",
+        Curation.getClass) { a =>
+      Curation.operatingPoint(Curation.thresholdSweep(a.table(0), a.csv(1).map(_.toDouble)),
+        if (a.size == 2) Curation.OpObjective.MaxF1
+        else Curation.OpObjective.PrecisionFloor(a.num(2)))
+    },
 
-  /** SQL surface for snippet extraction —
-    *
-    * {{{
-    * SELECT * FROM graft_snippets('docs', 'cat dog')      -- window 10
-    * SELECT * FROM graft_snippets('docs', 'cat dog', 8)   -- explicit window
-    * }}}
-    *
-    * The named table needs `(doc_id, text)`; the positional index is
-    * built in-plan (store [[graft.index.InvertedIndex.buildPositional]]
-    * and use the Column API to serve from an artifact instead). */
-  private val snippetsTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_snippets"),
-    new ExpressionInfo(graft.index.InvertedIndex.getClass.getName, "graft_snippets"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2 || children.size == 3,
-        "graft_snippets(docs_table, query[, window])")
-      val str = stringArg("graft_snippets") _
-      val docs = SparkSession.active.table(str(children(0), "docs_table"))
-      val window =
-        if (children.size == 3) intArg("graft_snippets")(children(2), "window") else 10
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        // lazy Persist (the graft_minhash_pairs convention): EXPLAIN
-        // runs no job; first execution populates the session cache
-        graft.index.InvertedIndex.snippets(
-          graft.index.InvertedIndex.buildPositional(docs), docs,
-          str(children(1), "query"), window,
-          mat = graft.core.Materialize.Persist))
-    })
+    /** SQL surface for snippet extraction —
+      *
+      * {{{
+      * SELECT * FROM graft_snippets('docs', 'cat dog')      -- window 10
+      * SELECT * FROM graft_snippets('docs', 'cat dog', 8)   -- explicit window
+      * }}}
+      *
+      * The named table needs `(doc_id, text)`; the positional index is
+      * built in-plan (store [[graft.index.InvertedIndex.buildPositional]]
+      * and use the Column API to serve from an artifact instead). */
+    tvf("graft_snippets(docs_table, query[, window])", InvertedIndex.getClass) { a =>
+      val docs = a.table(0)
+      // lazy Persist (the graft_minhash_pairs convention): EXPLAIN
+      // runs no job; first execution populates the session cache
+      InvertedIndex.snippets(InvertedIndex.buildPositional(docs), docs, a.str(1),
+        a.intOr(2, 10), mat = Materialize.Persist)
+    },
 
-  /** SQL surface for the one-call result page —
-    *
-    * {{{
-    * SELECT * FROM graft_search_page('docs', 'cat dog', 20)     -- window 10
-    * SELECT * FROM graft_search_page('docs', 'cat dog', 20, 8)  -- explicit window
-    * }}}
-    */
-  private val searchPageTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_search_page"),
-    new ExpressionInfo(graft.index.InvertedIndex.getClass.getName, "graft_search_page"),
-    (children: Seq[Expression]) => {
-      require(children.size == 3 || children.size == 4,
-        "graft_search_page(docs_table, query, k[, window])")
-      val str = stringArg("graft_search_page") _
-      val docs = SparkSession.active.table(str(children(0), "docs_table"))
-      val window =
-        if (children.size == 4) intArg("graft_search_page")(children(3), "window") else 10
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        // lazy Persist (the graft_minhash_pairs convention): EXPLAIN
-        // runs no job; first execution populates the session cache
-        graft.index.InvertedIndex.searchPage(docs, str(children(1), "query"),
-          intArg("graft_search_page")(children(2), "k"), window,
-          mat = graft.core.Materialize.Persist))
-    })
+    /** SQL surface for the one-call result page —
+      *
+      * {{{
+      * SELECT * FROM graft_search_page('docs', 'cat dog', 20)     -- window 10
+      * SELECT * FROM graft_search_page('docs', 'cat dog', 20, 8)  -- explicit window
+      * }}}
+      */
+    tvf("graft_search_page(docs_table, query, k[, window])", InvertedIndex.getClass)(a =>
+      // lazy Persist (the graft_minhash_pairs convention): EXPLAIN
+      // runs no job; first execution populates the session cache
+      InvertedIndex.searchPage(a.table(0), a.str(1), a.int(2), a.intOr(3, 10),
+        mat = Materialize.Persist)),
 
-  /** SQL surface for manifest diffing —
-    *
-    * {{{
-    * SELECT * FROM graft_manifest_diff('manifest_v1', 'manifest_v2')
-    * }}}
-    *
-    * Both tables need `(doc_id, split)`; emits the
-    * added/removed/moved/unchanged detail rows. */
-  private val manifestDiffTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_manifest_diff"),
-    new ExpressionInfo(graft.ops.Curation.getClass.getName, "graft_manifest_diff"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2, "graft_manifest_diff(table_a, table_b)")
-      val str = stringArg("graft_manifest_diff") _
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Curation.manifestDiff(
-          SparkSession.active.table(str(children(0), "table_a")),
-          SparkSession.active.table(str(children(1), "table_b"))))
-    })
+    /** SQL surface for manifest diffing —
+      *
+      * {{{
+      * SELECT * FROM graft_manifest_diff('manifest_v1', 'manifest_v2')
+      * }}}
+      *
+      * Both tables need `(doc_id, split)`; emits the
+      * added/removed/moved/unchanged detail rows. */
+    tvf("graft_manifest_diff(table_a, table_b)", Curation.getClass)(a =>
+      Curation.manifestDiff(a.table(0), a.table(1))),
 
-  /** SQL surface for UniMax budget allocation
-    * ([[graft.ops.Sampling.unimaxPlan]]):
-    *
-    * {{{
-    * SELECT * FROM graft_unimax('docs', 'source', 40000)       -- maxEpochs=4
-    * SELECT * FROM graft_unimax('docs', 'source', 40000, 2)
-    * }}}
-    *
-    * Weights-free waterfilling: per source, available/capacity/alloc
-    * tokens, epochs, and the capped bit. (Integer maxEpochs at the
-    * SQL surface; call the Scala API for fractional caps.) */
-  private val unimaxTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_unimax"),
-    new ExpressionInfo(graft.ops.Sampling.getClass.getName, "graft_unimax"),
-    (children: Seq[Expression]) => {
-      require(children.size == 3 || children.size == 4,
-        "graft_unimax(docs_table, source_col, token_budget[, max_epochs])")
-      val str = stringArg("graft_unimax") _
-      val int = intArg("graft_unimax") _
-      val docs = SparkSession.active.table(str(children.head, "docs_table"))
-      val srcCol = str(children(1), "source_col")
-      val budget = int(children(2), "token_budget")
-      val maxEpochs = if (children.size == 4) int(children(3), "max_epochs").toDouble else 4.0
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Sampling.unimaxPlan(docs, srcCol, budget.toLong, maxEpochs))
-    })
+    /** SQL surface for UniMax budget allocation
+      * ([[graft.ops.Sampling.unimaxPlan]]):
+      *
+      * {{{
+      * SELECT * FROM graft_unimax('docs', 'source', 40000)       -- maxEpochs=4
+      * SELECT * FROM graft_unimax('docs', 'source', 40000, 2)
+      * }}}
+      *
+      * Weights-free waterfilling: per source, available/capacity/alloc
+      * tokens, epochs, and the capped bit. (Integer maxEpochs at the
+      * SQL surface; call the Scala API for fractional caps.) */
+    tvf("graft_unimax(docs_table, source_col, token_budget[, max_epochs])",
+        Sampling.getClass)(a =>
+      Sampling.unimaxPlan(a.table(0), a.str(1), a.int(2).toLong, a.intOr(3, 4).toDouble)),
 
-  /** SQL surface for average precision —
-    *
-    * {{{
-    * SELECT * FROM graft_average_precision('scored', '-2,-1,0,1,2')          -- global
-    * SELECT * FROM graft_average_precision('scored', '-2,-1,0,1,2', 'lang')  -- per group
-    * }}}
-    *
-    * Sweeps the scored table (`logit` + `actual`; plus the group
-    * column in the 3-arg form) at the CSV thresholds, then walks the
-    * step AP — [[graft.ops.Curation.averagePrecision]] /
-    * [[graft.ops.Curation.averagePrecisionBy]]. */
-  private val averagePrecisionTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_average_precision"),
-    new ExpressionInfo(graft.ops.Curation.getClass.getName, "graft_average_precision"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2 || children.size == 3,
-        "graft_average_precision(scored_table, thresholds_csv[, group_col])")
-      val str = stringArg("graft_average_precision") _
-      val scored = SparkSession.active.table(str(children(0), "scored_table"))
-      val ths = str(children(1), "thresholds_csv")
-        .split(",").map(_.trim).filter(_.nonEmpty).map(_.toDouble).toSeq
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        if (children.size == 2)
-          graft.ops.Curation.averagePrecision(
-            graft.ops.Curation.thresholdSweep(scored, ths))
-        else {
-          val g = str(children(2), "group_col")
-          graft.ops.Curation.averagePrecisionBy(
-            graft.ops.Curation.thresholdSweepBy(scored, ths, g), g)
-        })
-    })
+    /** SQL surface for average precision —
+      *
+      * {{{
+      * SELECT * FROM graft_average_precision('scored', '-2,-1,0,1,2')          -- global
+      * SELECT * FROM graft_average_precision('scored', '-2,-1,0,1,2', 'lang')  -- per group
+      * }}}
+      *
+      * Sweeps the scored table (`logit` + `actual`; plus the group
+      * column in the 3-arg form) at the CSV thresholds, then walks the
+      * step AP — [[graft.ops.Curation.averagePrecision]] /
+      * [[graft.ops.Curation.averagePrecisionBy]]. */
+    tvf("graft_average_precision(scored_table, thresholds_csv[, group_col])",
+        Curation.getClass) { a =>
+      val ths = a.csv(1).map(_.toDouble)
+      if (a.size == 2) Curation.averagePrecision(Curation.thresholdSweep(a.table(0), ths))
+      else Curation.averagePrecisionBy(
+        Curation.thresholdSweepBy(a.table(0), ths, a.str(2)), a.str(2))
+    },
 
-  /** SQL surface for HOLDOUT-disciplined operating-point selection —
-    *
-    * {{{
-    * SELECT * FROM graft_operating_point_certified('scored', '-2,-1,0,1,2')       -- max-F1
-    * SELECT * FROM graft_operating_point_certified('scored', '-2,-1,0,1,2', 0.9)  -- precision floor
-    * }}}
-    *
-    * The named table needs `logit`, `actual` AND `split` (stamp with
-    * [[graft.ops.Sampling.splitCol]]); selects on `val`, certifies on
-    * `test` — [[graft.ops.Curation.operatingPointCertified]]. */
-  private val operatingPointCertifiedTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_operating_point_certified"),
-    new ExpressionInfo(graft.ops.Curation.getClass.getName,
-      "graft_operating_point_certified"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2 || children.size == 3,
-        "graft_operating_point_certified(scored_table, thresholds_csv[, min_precision])")
-      val str = stringArg("graft_operating_point_certified") _
-      val scored = SparkSession.active.table(str(children(0), "scored_table"))
-      val ths = str(children(1), "thresholds_csv")
-        .split(",").map(_.trim).filter(_.nonEmpty).map(_.toDouble).toSeq
-      val objective =
-        if (children.size == 2) graft.ops.Curation.OpObjective.MaxF1
-        else graft.ops.Curation.OpObjective.PrecisionFloor(
-          numArg("graft_operating_point_certified")(children(2), "min_precision"))
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Curation.operatingPointCertified(scored, ths, objective))
-    })
+    /** SQL surface for HOLDOUT-disciplined operating-point selection —
+      *
+      * {{{
+      * SELECT * FROM graft_operating_point_certified('scored', '-2,-1,0,1,2')       -- max-F1
+      * SELECT * FROM graft_operating_point_certified('scored', '-2,-1,0,1,2', 0.9)  -- precision floor
+      * }}}
+      *
+      * The named table needs `logit`, `actual` AND `split` (stamp with
+      * [[graft.ops.Sampling.splitCol]]); selects on `val`, certifies on
+      * `test` — [[graft.ops.Curation.operatingPointCertified]]. */
+    tvf("graft_operating_point_certified(scored_table, thresholds_csv[, min_precision])",
+        Curation.getClass) { a =>
+      Curation.operatingPointCertified(a.table(0), a.csv(1).map(_.toDouble),
+        if (a.size == 2) Curation.OpObjective.MaxF1
+        else Curation.OpObjective.PrecisionFloor(a.num(2)))
+    },
 
-  /** SQL surface for the stage-attributed manifest diff —
-    *
-    * {{{
-    * SELECT * FROM graft_manifest_diff_explained('ma', 'mb', 'drops_a', 'drops_b')
-    * }}}
-    *
-    * Manifests need `(doc_id, split)`; drop tables `(doc_id,
-    * stage_idx, stage)` — [[graft.ops.Curation.dropAttribution]] /
-    * `curateWithFunnel(attribution = true)` outputs. */
-  private val manifestDiffExplainedTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_manifest_diff_explained"),
-    new ExpressionInfo(graft.ops.Curation.getClass.getName,
-      "graft_manifest_diff_explained"),
-    (children: Seq[Expression]) => {
-      require(children.size == 4,
-        "graft_manifest_diff_explained(table_a, table_b, drops_a, drops_b)")
-      val str = stringArg("graft_manifest_diff_explained") _
-      def t(i: Int, n: String) = SparkSession.active.table(str(children(i), n))
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Curation.manifestDiffExplained(
-          t(0, "table_a"), t(1, "table_b"), t(2, "drops_a"), t(3, "drops_b")))
-    })
+    /** SQL surface for the stage-attributed manifest diff —
+      *
+      * {{{
+      * SELECT * FROM graft_manifest_diff_explained('ma', 'mb', 'drops_a', 'drops_b')
+      * }}}
+      *
+      * Manifests need `(doc_id, split)`; drop tables `(doc_id,
+      * stage_idx, stage)` — [[graft.ops.Curation.dropAttribution]] /
+      * `curateWithFunnel(attribution = true)` outputs. */
+    tvf("graft_manifest_diff_explained(table_a, table_b, drops_a, drops_b)",
+        Curation.getClass)(a =>
+      Curation.manifestDiffExplained(a.table(0), a.table(1), a.table(2), a.table(3))),
 
-  /** SQL surface for classifier drift measurement —
-    *
-    * {{{
-    * SELECT * FROM graft_classifier_drift('gate_in', 'gate_out')           -- key 'source'
-    * SELECT * FROM graft_classifier_drift('gate_in', 'gate_out', 'lang')   -- explicit key
-    * }}}
-    *
-    * Emits `classifier:<key>` / `drop_rate` refresh-signal rows —
-    * [[graft.ops.Curation.classifierDriftSignals]]. */
-  private val classifierDriftTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_classifier_drift"),
-    new ExpressionInfo(graft.ops.Curation.getClass.getName, "graft_classifier_drift"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2 || children.size == 3,
-        "graft_classifier_drift(before_table, after_table[, key_col])")
-      val str = stringArg("graft_classifier_drift") _
-      val key = if (children.size == 3) str(children(2), "key_col") else "source"
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        graft.ops.Curation.classifierDriftSignals(
-          SparkSession.active.table(str(children(0), "before_table")),
-          SparkSession.active.table(str(children(1), "after_table")), key))
-    })
+    /** SQL surface for classifier drift measurement —
+      *
+      * {{{
+      * SELECT * FROM graft_classifier_drift('gate_in', 'gate_out')           -- key 'source'
+      * SELECT * FROM graft_classifier_drift('gate_in', 'gate_out', 'lang')   -- explicit key
+      * }}}
+      *
+      * Emits `classifier:<key>` / `drop_rate` refresh-signal rows —
+      * [[graft.ops.Curation.classifierDriftSignals]]. */
+    tvf("graft_classifier_drift(before_table, after_table[, key_col])", Curation.getClass)(a =>
+      Curation.classifierDriftSignals(a.table(0), a.table(1), a.strOr(2, "source"))),
 
-  /** SQL surface for the STORED-artifact result page —
-    *
-    * {{{
-    * SELECT * FROM graft_search_page_served('/store', '/docs', 'cat dog', 20)
-    * SELECT * FROM graft_search_page_served('/store', '/docs', 'cat dog', 20, 8)
-    * }}}
-    *
-    * Unlike the other TVFs the first two arguments are PATHS (the
-    * [[graft.index.IndexStore.saveSearchPageStore]] root and the
-    * doc-store parquet), not table names — the point of the served
-    * face is answering from artifacts no session has registered.
-    * Layout resolves from the store's `_GRAFT_LAYOUT` marker (a
-    * hardcoded layout silently served an EMPTY page against a
-    * differently-laid store — the r18 advisory); marker-less stores
-    * fall back to HashPrefix, the serving default at scale. */
-  private val searchPageServedTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_search_page_served"),
-    new ExpressionInfo(graft.index.IndexStore.getClass.getName,
-      "graft_search_page_served"),
-    (children: Seq[Expression]) => {
-      require(children.size == 4 || children.size == 5,
-        "graft_search_page_served(store_path, docs_path, query, k[, window])")
-      val str = stringArg("graft_search_page_served") _
-      val window = if (children.size == 5)
-        intArg("graft_search_page_served")(children(4), "window") else 10
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        {
-          val spark = SparkSession.active
-          val store = str(children(0), "store_path")
-          graft.index.IndexStore.searchPage(spark,
-            store, str(children(1), "docs_path"),
-            str(children(2), "query"),
-            intArg("graft_search_page_served")(children(3), "k"), window,
-            layout = graft.index.IndexStore
-              .storedLayout(spark, s"$store/postings")
-              .getOrElse(graft.index.IndexStore.HashPrefix))
-        })
-    })
+    /** SQL surface for the STORED-artifact result page —
+      *
+      * {{{
+      * SELECT * FROM graft_search_page_served('/store', '/docs', 'cat dog', 20)
+      * SELECT * FROM graft_search_page_served('/store', '/docs', 'cat dog', 20, 8)
+      * }}}
+      *
+      * Unlike the other TVFs the first two arguments are PATHS (the
+      * [[graft.index.IndexStore.saveSearchPageStore]] root and the
+      * doc-store parquet), not table names — the point of the served
+      * face is answering from artifacts no session has registered.
+      * Layout resolves from the store's `_GRAFT_LAYOUT` marker (a
+      * hardcoded layout silently served an EMPTY page against a
+      * differently-laid store — the r18 advisory); marker-less stores
+      * fall back to HashPrefix, the serving default at scale. */
+    tvf("graft_search_page_served(store_path, docs_path, query, k[, window])",
+        IndexStore.getClass) { a =>
+      IndexStore.searchPage(a.spark, a.str(0), a.str(1), a.str(2), a.int(3), a.intOr(4, 10),
+        layout = servedLayout(a.spark, a.str(0)))
+    },
 
-  /** SQL surface for the STORED-lexical-arm hybrid query —
-    *
-    * {{{
-    * SELECT * FROM graft_hybrid_served('/store', 'emb', 'cat dog', 0)
-    * SELECT * FROM graft_hybrid_served('/store', 'emb', 'cat dog', 0, 20, 50)
-    * }}}
-    *
-    * First argument is the [[graft.index.IndexStore.saveSearchPageStore]]
-    * PATH — layout resolved from the store's marker, HashPrefix when
-    * marker-less; the embedding arm stays a registered table.
-    * [[graft.index.IndexStore.hybridTopK]]. */
-  private val hybridServedTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_hybrid_served"),
-    new ExpressionInfo(graft.index.IndexStore.getClass.getName, "graft_hybrid_served"),
-    (children: Seq[Expression]) => {
-      require(children.size == 4 || children.size == 6,
-        "graft_hybrid_served(store_path, emb_table, query, query_vec_id[, k, pool_k])")
-      val str = stringArg("graft_hybrid_served") _
-      val int = intArg("graft_hybrid_served") _
-      val spark = SparkSession.active
-      val embT = spark.table(str(children(1), "emb_table"))
-      val qid = int(children(3), "query_vec_id")
-      val (k, poolK) =
-        if (children.size == 6) (int(children(4), "k"), int(children(5), "pool_k"))
-        else (20, 50)
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        {
-          val store = str(children.head, "store_path")
-          graft.index.IndexStore.hybridTopK(spark, store,
-            embT, str(children(2), "query"),
-            embT.filter(org.apache.spark.sql.functions.col("vec_id") === qid),
-            k, poolK,
-            layout = graft.index.IndexStore
-              .storedLayout(spark, s"$store/postings")
-              .getOrElse(graft.index.IndexStore.HashPrefix))
-        })
-    })
+    /** SQL surface for the STORED-lexical-arm hybrid query —
+      *
+      * {{{
+      * SELECT * FROM graft_hybrid_served('/store', 'emb', 'cat dog', 0)
+      * SELECT * FROM graft_hybrid_served('/store', 'emb', 'cat dog', 0, 20, 50)
+      * }}}
+      *
+      * First argument is the [[graft.index.IndexStore.saveSearchPageStore]]
+      * PATH — layout resolved from the store's marker, HashPrefix when
+      * marker-less; the embedding arm stays a registered table.
+      * [[graft.index.IndexStore.hybridTopK]]. */
+    tvf("graft_hybrid_served(store_path, emb_table, query, query_vec_id[, k, pool_k])",
+        IndexStore.getClass) { a =>
+      val emb = a.table(1)
+      IndexStore.hybridTopK(a.spark, a.str(0), emb, a.str(2),
+        emb.filter(col("vec_id") === a.int(3)), a.intOr(4, 20), a.intOr(5, 50),
+        layout = servedLayout(a.spark, a.str(0)))
+    },
 
-  /** SQL surface for the FULLY-served hybrid query — BOTH arms from
-    * stored, pruned artifacts ([[graft.index.IndexStore.hybridTopKAnn]]):
-    *
-    * {{{
-    * SELECT * FROM graft_hybrid_served_ann('/store', '/ann', 'emb', 'cat dog', 0)
-    * SELECT * FROM graft_hybrid_served_ann('/store', '/ann', 'emb', 'cat dog', 0, 20, 50, 8, 4)
-    * }}}
-    *
-    * The first two arguments are the search-page-store and
-    * [[graft.ops.Similarity.saveAnnStore]] PATHS; the embedding table
-    * supplies only the query vector (by id) — the corpus side answers
-    * from the cell-partitioned store. Lexical layout resolves from the
-    * store marker. Optional tail: k, pool_k, nprobe, m. */
-  private val hybridServedAnnTableFunction
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
-    FunctionIdentifier("graft_hybrid_served_ann"),
-    new ExpressionInfo(graft.index.IndexStore.getClass.getName,
-      "graft_hybrid_served_ann"),
-    (children: Seq[Expression]) => {
-      require(children.size == 5 || children.size == 9,
-        "graft_hybrid_served_ann(store_path, ann_path, emb_table, query, " +
-          "query_vec_id[, k, pool_k, nprobe, m])")
-      val str = stringArg("graft_hybrid_served_ann") _
-      val int = intArg("graft_hybrid_served_ann") _
-      val spark = SparkSession.active
-      val embT = spark.table(str(children(2), "emb_table"))
-      val qid = int(children(4), "query_vec_id")
-      val (k, poolK, nprobe, m) =
-        if (children.size == 9)
-          (int(children(5), "k"), int(children(6), "pool_k"),
-            int(children(7), "nprobe"), int(children(8), "m"))
-        else (20, 50, 4, 4)
-      org.apache.spark.sql.GraftSqlBridge.analyzedPlan(
-        {
-          val store = str(children.head, "store_path")
-          graft.index.IndexStore.hybridTopKAnn(spark, store,
-            str(children(1), "ann_path"), str(children(3), "query"),
-            embT.filter(org.apache.spark.sql.functions.col("vec_id") === qid),
-            k, poolK, nprobe = nprobe, m = m,
-            layout = graft.index.IndexStore
-              .storedLayout(spark, s"$store/postings")
-              .getOrElse(graft.index.IndexStore.HashPrefix))
-        })
+    /** SQL surface for the FULLY-served hybrid query — BOTH arms from
+      * stored, pruned artifacts ([[graft.index.IndexStore.hybridTopKAnn]]):
+      *
+      * {{{
+      * SELECT * FROM graft_hybrid_served_ann('/store', '/ann', 'emb', 'cat dog', 0)
+      * SELECT * FROM graft_hybrid_served_ann('/store', '/ann', 'emb', 'cat dog', 0, 20, 50, 8, 4)
+      * }}}
+      *
+      * The first two arguments are the search-page-store and
+      * [[graft.ops.Similarity.saveAnnStore]] PATHS; the embedding table
+      * supplies only the query vector (by id) — the corpus side answers
+      * from the cell-partitioned store. Lexical layout resolves from the
+      * store marker. Optional tail: k, pool_k, nprobe, m. */
+    tvf("graft_hybrid_served_ann(store_path, ann_path, emb_table, query, query_vec_id" +
+        "[, k, pool_k, nprobe, m])", IndexStore.getClass) { a =>
+      IndexStore.hybridTopKAnn(a.spark, a.str(0), a.str(1), a.str(3),
+        a.table(2).filter(col("vec_id") === a.int(4)), a.intOr(5, 20), a.intOr(6, 50),
+        nprobe = a.intOr(7, 4), m = a.intOr(8, 4), layout = servedLayout(a.spark, a.str(0)))
     })
 
   /** Register the SQL functions + planner strategies on an
     * already-built session (idempotent). Strategies go through the
     * PUBLIC `spark.experimental.extraStrategies` hook. */
   def install(spark: SparkSession): Unit = {
-    val (id, info, builder) = dotFunction
-    org.apache.spark.sql.GraftSqlBridge.registerFunction(spark, id, info, builder)
-    val (kid, kinfo, kbuilder) = topKFunction
-    org.apache.spark.sql.GraftSqlBridge.registerFunction(spark, kid, kinfo, kbuilder)
-    val (nid, ninfo, nbuilder) = nfcFunction
-    org.apache.spark.sql.GraftSqlBridge.registerFunction(spark, nid, ninfo, nbuilder)
-    val (jid, jinfo, jbuilder) = jlProjectFunction
-    org.apache.spark.sql.GraftSqlBridge.registerFunction(spark, jid, jinfo, jbuilder)
-    val (pid, pinfo, pbuilder) = phraseMatchFunction
-    org.apache.spark.sql.GraftSqlBridge.registerFunction(spark, pid, pinfo, pbuilder)
-    Seq(asofTableFunction, minhashPairsTableFunction, decontaminateTableFunction,
-        annSearchTableFunction, semanticDupsTableFunction,
-        boilerplateTableFunction, semanticDecontaminateTableFunction,
-        tokenDriftTableFunction, classifierScoreTableFunction,
-        curateTableFunction, dsirTableFunction,
-        bm25TableFunction, hybridTableFunction,
-        dupSpansTableFunction, dupStripTableFunction,
-        phraseTableFunction, marginMineTableFunction, noveltyTableFunction,
-        hammingPairsTableFunction, scriptTableFunction,
-        langRouteTableFunction,
-        splitSafeTableFunction, splitAuditTableFunction,
-        blocklistTableFunction, piiTableFunction,
-        mojibakeTableFunction, dupSpectrumTableFunction,
-        codeDetectTableFunction, sentencesTableFunction,
-        passagesTableFunction, fingerprintPairsTableFunction,
-        sourceOverlapTableFunction, profileTableFunction,
-        contextPlanTableFunction, embOutliersTableFunction,
-        containmentTableFunction, histogramTableFunction,
-        readabilityTableFunction, corpusHealthTableFunction,
-        paraDedupTableFunction, sentenceSpansTableFunction,
-        c4StatsTableFunction, c4CleanTableFunction,
-        htmlTextTableFunction, htmlSignalsTableFunction,
-        htmlLinesTableFunction, htmlMainTableFunction,
-        spanEvalTableFunction,
-        lm3ScoreTableFunction, lmnScoreTableFunction, knScoreTableFunction,
-        shardManifestTableFunction,
-        unimaxTableFunction, spanPlanTableFunction,
-        urlCanonTableFunction, urlDedupTableFunction,
-        linkEdgesTableFunction, rankPriorTableFunction,
-        corpusDiffTableFunction, urlSignalsTableFunction,
-        frontierTableFunction, anchorTextsTableFunction,
-        anchorIndexTableFunction, robotsRulesTableFunction,
-        robotsFilterTableFunction, hostSummaryTableFunction,
-        sitemapUrlsTableFunction, crawlDelaysTableFunction,
-        politeFrontierTableFunction, recrawlPolicyTableFunction,
-        robotsSitemapsTableFunction, urlTemplatesTableFunction,
-        crawlBudgetTableFunction,
-        packSequencesTableFunction, chunkTokensTableFunction,
-        calibrationTableFunction, thresholdSweepTableFunction,
-        operatingPointTableFunction, manifestDiffTableFunction,
-        snippetsTableFunction, searchPageTableFunction,
-        averagePrecisionTableFunction, operatingPointCertifiedTableFunction,
-        manifestDiffExplainedTableFunction, classifierDriftTableFunction,
-        searchPageServedTableFunction, hybridServedTableFunction,
-        hybridServedAnnTableFunction)
-      .foreach { case (tid, tinfo, tbuilder) =>
-        org.apache.spark.sql.GraftSqlBridge.registerTableFunction(spark, tid, tinfo, tbuilder)
-      }
+    scalarFunctions.map(_.spec).foreach { case (id, info, builder) =>
+      GraftSqlBridge.registerFunction(spark, id, info, builder)
+    }
+    tableFunctions.map(_.spec).foreach { case (id, info, builder) =>
+      GraftSqlBridge.registerTableFunction(spark, id, info, builder)
+    }
     if (!spark.experimental.extraStrategies.contains(AsOfJoin.AsOfStrategy)) {
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ AsOfJoin.AsOfStrategy

@@ -7,8 +7,7 @@ import SparkSpec.spark.implicits._
 class BatchJobSpec extends SparkSpec {
 
   private def corpusDir(): String = {
-    val d = Files.createTempDirectory("graft-batch-")
-    d.toFile.deleteOnExit()
+    val d = tempDir("graft-batch-")
     Files.write(Paths.get(d.toString, "a.txt"), "cat dog cat".getBytes)
     Files.write(Paths.get(d.toString, "b.txt"), "dog bird".getBytes)
     Files.write(Paths.get(d.toString, "c.txt"), "cat".getBytes)

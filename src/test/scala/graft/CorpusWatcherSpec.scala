@@ -10,11 +10,7 @@ import SparkSpec.spark.implicits._
 
 class CorpusWatcherSpec extends SparkSpec {
 
-  private def tmp(name: String): String = {
-    val d = Files.createTempDirectory(s"graft-$name-")
-    d.toFile.deleteOnExit()
-    d.toString
-  }
+  private def tmp(name: String): String = tempDir(s"graft-$name-").toString
 
   private def writeDoc(dir: String, name: String, text: String): Unit =
     Files.write(Paths.get(dir, name), text.getBytes("UTF-8"))
@@ -743,9 +739,9 @@ class CorpusWatcherSpec extends SparkSpec {
     // the decision ACTED ON: retrainIfDue consumes the STREAM's
     // refreshDir — the drift loop crosses the stream/batch boundary
     // with no hand-assembled signals
-    val live = java.nio.file.Files.createTempDirectory("graft-uklive-").toString + "/wp.json"
+    val live = tempDir("graft-uklive-").toString + "/wp.json"
     graft.ops.TokenizerIO.exportWordPiece(spark, vocab, live)
-    val vroot = java.nio.file.Files.createTempDirectory("graft-ukv-").toString + "/tok"
+    val vroot = tempDir("graft-ukv-").toString + "/tok"
     val retrainCorpus = Seq((1L, "zzzzqqq unknowable gibberish tokens zzzzqqq unknowable"))
       .toDF("doc_id", "text")
     val out = graft.streaming.TokenizerRefresher.retrainIfDue(spark, refresh,
@@ -767,7 +763,7 @@ class CorpusWatcherSpec extends SparkSpec {
       (2L, "alpha gamma delta beta gamma")).toDF("doc_id", "text")
     val negV0 = Seq((3L, "zig zag zonk quux zig"),
       (4L, "zag zonk quux zig zag")).toDF("doc_id", "text")
-    val vroot = java.nio.file.Files.createTempDirectory("graft-cdv-").toString + "/cls"
+    val vroot = tempDir("graft-cdv-").toString + "/cls"
     // cold-start layout: the offline trainer writes under the root
     graft.ops.Curation.classifierWeights(posV0, negV0)
       .coalesce(1).write.parquet(s"$vroot/weights")
@@ -846,7 +842,7 @@ class CorpusWatcherSpec extends SparkSpec {
       (2L, "alpha gamma delta beta gamma")).toDF("doc_id", "text")
     val neg = Seq((3L, "zig zag zonk quux zig"),
       (4L, "zag zonk quux zig zag")).toDF("doc_id", "text")
-    val vroot = java.nio.file.Files.createTempDirectory("graft-lgv-").toString + "/cls"
+    val vroot = tempDir("graft-lgv-").toString + "/cls"
     // cold-start layout: the offline trainer wrote under the root —
     // alpha-ish text is wanted, zig-ish is rejected
     graft.ops.Curation.classifierWeights(pos, neg)
@@ -897,7 +893,7 @@ class CorpusWatcherSpec extends SparkSpec {
       (13L, "alpha beta gamma delta", false, "gA"),
       (14L, "zig zag quux", true, "gB"), (15L, "alpha beta gamma", false, "gB"))
       .toDF("doc_id", "text", "actual", "grp")
-    val vroot = java.nio.file.Files.createTempDirectory("graft-cdgr-").toString + "/cls"
+    val vroot = tempDir("graft-cdgr-").toString + "/cls"
     val out = ClassifierRefresher.retrainIfDue(spark, rd, "classifier:all",
       pos, neg, vroot, labeled = Some(labeled), groupCol = Some("grp"))
     assert(out === Some(s"$vroot/v3"))
@@ -923,7 +919,7 @@ class CorpusWatcherSpec extends SparkSpec {
 
   test("ArtifactVersions retention: prune keeps the newest N plus the SERVING version; cold-start artifacts are never versions") {
     import graft.streaming.ArtifactVersions
-    val root = java.nio.file.Files.createTempDirectory("graft-avp-").toString + "/art"
+    val root = tempDir("graft-avp-").toString + "/art"
     def mk(name: String): Unit = {
       val d = new java.io.File(s"$root/$name"); d.mkdirs()
       java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$root/$name/part"), name)

@@ -304,6 +304,11 @@ class CrawlSpec extends SparkSpec {
       (1L, 0, Some("https://example.com/a?a=1&b=2"), false),
       (1L, 1, None, false),
       (2L, 0, Some("https://example.com/s1.xml"), true)))
+    // the SQL face serves the same rows
+    graft.plans.GraftExtensions.install(spark)
+    sm.createOrReplaceTempView("crawl_sitemaps")
+    assert(spark.sql("SELECT * FROM graft_sitemap_urls('crawl_sitemaps')").collect().toSet ===
+      Crawl.sitemapUrls(sm).collect().toSet)
   }
 
   test("hostSummary: per-host page/canonical/distinct/dup accounting; NULL host buckets non-canonical pages") {

@@ -41,7 +41,7 @@ class CurationSpec extends SparkSpec {
       (i, s"the quick number$i alpha$i beta$i gamma$i delta$i epsilon$i zeta$i eta$i theta$i and", "src0")) ++
       Seq((101L, "short text", "src0"), (102L, contamText, "src0")))
       .toDF("doc_id", "text", "source")
-    val out = java.nio.file.Files.createTempDirectory("graft-cts-").toString
+    val out = tempDir("graft-cts-").toString
     val written = Curation.curateToShards(big, evalDocs, out, tokenBudget = 30, buckets = 4)
       .select("split", "n_docs").as[(String, Long)].collect()
     val manifest = Curation.curate(big, evalDocs)
@@ -72,8 +72,8 @@ class CurationSpec extends SparkSpec {
       (i, s"the quick number$i alpha$i beta$i gamma$i delta$i epsilon$i zeta$i eta$i theta$i and", "src0")) ++
       Seq((101L, "short text", "src0"), (102L, contamText, "src0")))
       .toDF("doc_id", "text", "source")
-    val outPlain = java.nio.file.Files.createTempDirectory("graft-ctsp-").toString
-    val outBucketed = java.nio.file.Files.createTempDirectory("graft-ctsb-").toString
+    val outPlain = tempDir("graft-ctsp-").toString
+    val outBucketed = tempDir("graft-ctsb-").toString
     val plain = Curation.curateToShards(big, evalDocs, outPlain, tokenBudget = 30, buckets = 4)
       .as[(Int, Int, Long, Long, String, String)].collect().toSet
     val bucketed = Curation.curateToShards(big, evalDocs, outBucketed,

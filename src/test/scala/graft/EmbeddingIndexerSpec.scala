@@ -11,11 +11,7 @@ import SparkSpec.spark.implicits._
 
 class EmbeddingIndexerSpec extends SparkSpec {
 
-  private def tmp(name: String): String = {
-    val d = Files.createTempDirectory(s"graft-$name-")
-    d.toFile.deleteOnExit()
-    d.toString
-  }
+  private def tmp(name: String): String = tempDir(s"graft-$name-").toString
 
   private def vecs(rows: (Long, Seq[Float])*): DataFrame =
     rows.toDF("vec_id", "embedding")

@@ -87,8 +87,7 @@ class InvertedIndexSpec extends SparkSpec {
   }
 
   test("single-file export matches Python json.dumps(indent=4) byte-for-byte") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-singlejson-")
-    dir.toFile.deleteOnExit()
+    val dir = tempDir("graft-singlejson-")
     val path = s"$dir/final_results.json"
     val idx = InvertedIndex.build(corpus(1L -> "cat dog cat", 2L -> "dog"))
     InvertedIndex.exportSingleFileJson(idx, path)
@@ -109,8 +108,7 @@ class InvertedIndexSpec extends SparkSpec {
   }
 
   test("single-file export of an empty index is the empty object") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-singlejson-")
-    dir.toFile.deleteOnExit()
+    val dir = tempDir("graft-singlejson-")
     val path = s"$dir/empty.json"
     InvertedIndex.exportSingleFileJson(
       InvertedIndex.build(corpus(1L -> "  ...  ")), path)
@@ -119,8 +117,7 @@ class InvertedIndexSpec extends SparkSpec {
   }
 
   test("single-file export round-trips through importSingleFileJson (sf0.001)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-singlejson-")
-    dir.toFile.deleteOnExit()
+    val dir = tempDir("graft-singlejson-")
     val path = s"$dir/full.json"
     val idx = InvertedIndex.build(
       spark.read.parquet("/root/testdata/sf0.001/documents.parquet"))

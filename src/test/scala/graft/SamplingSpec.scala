@@ -96,7 +96,7 @@ class SamplingSpec extends SparkSpec {
   test("writeShards: round-trip read-back equals input; manifest certifies the written files") {
     import org.apache.spark.sql.functions.col
     val d = (1L to 40L).map(i => (i, ("tok " * (i % 7 + 1).toInt).trim)).toDF("doc_id", "text")
-    val out = java.nio.file.Files.createTempDirectory("graft-shards-").toString
+    val out = tempDir("graft-shards-").toString
     val returned = Sampling.writeShards(d, out, tokenBudget = 10, buckets = 4)
     // the returned manifest certifies the DISK artifact and equals the
     // pure plan-side manifest of the input
@@ -140,7 +140,7 @@ class SamplingSpec extends SparkSpec {
     val victim = new java.io.File(s"$out/shards").listFiles()
       .filter(_.getName.startsWith("pack_bucket=")).head
       .listFiles().filter(_.getName.startsWith("shard_in_bucket=")).head
-    val extraDir = java.nio.file.Files.createTempDirectory("graft-extra-").toString
+    val extraDir = tempDir("graft-extra-").toString
     Seq((999L, "sneaky injected row", 3)).toDF("doc_id", "text", "n_tokens")
       .coalesce(1).write.mode("overwrite").parquet(extraDir)
     val part = new java.io.File(extraDir).listFiles()
@@ -207,7 +207,7 @@ class SamplingSpec extends SparkSpec {
   test("writeShardsBucketed: manifest equals writeShards'; doc_id join to bucketed signals plans ZERO exchanges") {
     import org.apache.spark.sql.functions.{col, length}
     val d = (1L to 40L).map(i => (i, ("tok " * (i % 7 + 1).toInt).trim)).toDF("doc_id", "text")
-    val out = java.nio.file.Files.createTempDirectory("graft-bshards-").toString
+    val out = tempDir("graft-bshards-").toString
     val returned = Sampling.writeShardsBucketed(
       d, out, "ws_bucketed_t", tokenBudget = 10, buckets = 4, docBuckets = 8)
     // layout changes, manifest values don't: identical to the plain
@@ -244,7 +244,7 @@ class SamplingSpec extends SparkSpec {
   test("writeShardsShuffled: rows land in seeded training order; manifest certifies disk") {
     import org.apache.spark.sql.functions.col
     val d = (1L to 60L).map(i => (i, ("tok " * (i % 5 + 1).toInt).trim)).toDF("doc_id", "text")
-    val out = java.nio.file.Files.createTempDirectory("graft-shuf-").toString
+    val out = tempDir("graft-shuf-").toString
     val returned = Sampling.writeShardsShuffled(d, out, shards = 4, seed = 9L)
     val planned = Sampling.shuffledManifest(d, shards = 4, seed = 9L)
       .as[(Int, Long, Long, String)].collect().toSet

@@ -205,7 +205,7 @@ class TextAnalysisSpec extends SparkSpec {
       2L -> "the cat ran on the road")
     // stored-model round-trip: write the three tables, read back, serve
     val m0 = TextAnalysis.lmModel(ref)
-    val dir = java.nio.file.Files.createTempDirectory("graft-lm-").toString
+    val dir = tempDir("graft-lm-").toString
     m0.pairs.write.parquet(s"$dir/pairs")
     m0.backoff.write.parquet(s"$dir/backoff")
     m0.oov.write.parquet(s"$dir/oov")
@@ -256,7 +256,7 @@ class TextAnalysisSpec extends SparkSpec {
     //   uni c3(the) = 4
     val m0 = TextAnalysis.lm3Model(ref)
     // stored-model round-trip: write the four tables, read back, serve
-    val dir = java.nio.file.Files.createTempDirectory("graft-lm3-").toString
+    val dir = tempDir("graft-lm3-").toString
     m0.tri.write.parquet(s"$dir/tri"); m0.bi.write.parquet(s"$dir/bi")
     m0.uni.write.parquet(s"$dir/uni"); m0.oov.write.parquet(s"$dir/oov")
     val m = TextAnalysis.Lm3Model(
@@ -432,7 +432,7 @@ class TextAnalysisSpec extends SparkSpec {
       .as[(Long, Long, Long, Long, Option[Double])].head()
     assert(s5._2 === 1L && s5._3 === 0L && s5._5.isDefined)
     // stored-model round-trip: all 2(N−1)+2 tables through parquet
-    val dir = java.nio.file.Files.createTempDirectory("graft-kn-").toString
+    val dir = tempDir("graft-kn-").toString
     m3.tiers.zipWithIndex.foreach { case (t, i) => t.write.parquet(s"$dir/t$i") }
     m3.bows.zipWithIndex.foreach { case (b, i) => b.write.parquet(s"$dir/b$i") }
     m3.uni.write.parquet(s"$dir/uni"); m3.unk.write.parquet(s"$dir/unk")
@@ -1013,7 +1013,7 @@ class TextAnalysisSpec extends SparkSpec {
       1L -> "a b c d e f g h",
       2L -> "a b c d x y z w")
     val m0 = TextAnalysis.lmnModel(ref, 5)
-    val dir = java.nio.file.Files.createTempDirectory("graft-lmn-").toString
+    val dir = tempDir("graft-lmn-").toString
     m0.tiers.zipWithIndex.foreach { case (t, i) => t.write.parquet(s"$dir/tier$i") }
     m0.uni.write.parquet(s"$dir/uni"); m0.oov.write.parquet(s"$dir/oov")
     val m = TextAnalysis.LmnModel(5,

@@ -9,11 +9,7 @@ import SparkSpec.spark.implicits._
   * equivalence, and the loud family-mismatch contract. */
 class TokenizerIOSpec extends SparkSpec {
 
-  private def tmp(name: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(s"graft-$name-")
-    d.toFile.deleteOnExit()
-    s"$d/tok.json"
-  }
+  private def tmp(name: String): String = s"${tempDir(s"graft-$name-")}/tok.json"
 
   private def readBack(path: String): String =
     new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)), "UTF-8")
@@ -187,8 +183,8 @@ class TokenizerIOSpec extends SparkSpec {
     TokenizerIO.exportWordPiece(spark,
       WordPiece.collectVocab(WordPiece.vocab(docs, WordPiece.trainMerges(docs, 3))), live)
     val liveBytes = readBack(live)
-    val rd = java.nio.file.Files.createTempDirectory("graft-trrd-").toString + "/refresh"
-    val vroot = java.nio.file.Files.createTempDirectory("graft-trv-").toString + "/tok"
+    val rd = tempDir("graft-trrd-").toString + "/refresh"
+    val vroot = tempDir("graft-trv-").toString + "/tok"
     def decision(batch: Long, due: Boolean): Unit =
       Seq(("tokenizer:web", "unk_rate", 0.4, 0.1, due))
         .toDF("artifact", "metric", "value", "threshold", "due")
@@ -218,7 +214,7 @@ class TokenizerIOSpec extends SparkSpec {
     val liveBpe = tmp("trbpe")
     TokenizerIO.exportBpe(spark,
       Bpe.trainMerges(docs, 3).map(m => (m.lhs, m.rhs)), liveBpe)
-    val vroot2 = java.nio.file.Files.createTempDirectory("graft-trv2-").toString + "/tok"
+    val vroot2 = tempDir("graft-trv2-").toString + "/tok"
     val out2 = TokenizerRefresher.retrainIfDue(spark, rd, "tokenizer:web",
       liveBpe, docs, vroot2, merges = Some(4))
     assert(out2.isDefined && TokenizerIO.familyOf(spark, out2.get) === "bpe")
@@ -244,11 +240,11 @@ class TokenizerIOSpec extends SparkSpec {
     val liveMerges = Bpe.trainMerges(docs, 7).map(m => (m.lhs, m.rhs))
     val live = tmp("trbudget")
     TokenizerIO.exportBpe(spark, liveMerges, live)
-    val rd = java.nio.file.Files.createTempDirectory("graft-trbrd-").toString + "/refresh"
+    val rd = tempDir("graft-trbrd-").toString + "/refresh"
     Seq(("tokenizer:web", "unk_rate", 0.4, 0.1, true))
       .toDF("artifact", "metric", "value", "threshold", "due")
       .write.mode("overwrite").parquet(s"$rd/batch_id=1")
-    val vroot = java.nio.file.Files.createTempDirectory("graft-trbv-").toString + "/tok"
+    val vroot = tempDir("graft-trbv-").toString + "/tok"
     // budgets left at their defaults: the merge budget is sniffed from
     // the live artifact (its merge count), so retraining on the same
     // corpus reproduces an inventory of the SAME size — never the old
@@ -266,7 +262,7 @@ class TokenizerIOSpec extends SparkSpec {
     TokenizerIO.exportWordPiece(spark,
       WordPiece.collectVocab(WordPiece.vocab(docs, WordPiece.trainMerges(docs, 3))),
       liveWp)
-    val vrootWp = java.nio.file.Files.createTempDirectory("graft-trbvw-").toString + "/tok"
+    val vrootWp = tempDir("graft-trbvw-").toString + "/tok"
     val outWp = TokenizerRefresher.retrainIfDue(spark, rd, "tokenizer:web",
       liveWp, docs, vrootWp)
     assert(outWp.isDefined)

@@ -85,8 +85,7 @@ class TopKByScoreSpec extends SparkSpec {
   }
 
   test("topKAggregated ranks a filename-keyed BatchJob index like the window path") {
-    val d = Files.createTempDirectory("graft-topk-batch-")
-    d.toFile.deleteOnExit()
+    val d = tempDir("graft-topk-batch-")
     Files.write(Paths.get(d.toString, "a.txt"), "cat dog cat cat".getBytes)
     Files.write(Paths.get(d.toString, "b.txt"), "dog cat".getBytes)
     Files.write(Paths.get(d.toString, "c.txt"), "cat bird bird".getBytes)

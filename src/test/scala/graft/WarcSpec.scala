@@ -45,8 +45,7 @@ class WarcSpec extends SparkSpec {
         "bare body with no http envelope")
 
   private def writeWarc(): String = {
-    val dir = Files.createTempDirectory("graft-warc-")
-    dir.toFile.deleteOnExit()
+    val dir = tempDir("graft-warc-")
     Files.write(Paths.get(dir.toString, "shard-00000.warc"),
       warcFile.getBytes("UTF-8"))
     dir.toString
@@ -102,8 +101,7 @@ class WarcSpec extends SparkSpec {
   }
 
   test("readConversions: WET-style conversion records yield extracted text directly") {
-    val dir = Files.createTempDirectory("graft-wet-")
-    dir.toFile.deleteOnExit()
+    val dir = tempDir("graft-wet-")
     val wet =
       record(Seq(
         "WARC-Type" -> "warcinfo",
@@ -122,8 +120,7 @@ class WarcSpec extends SparkSpec {
   }
 
   test("redirects: 3xx responses map to resolved canonical targets; relative Locations resolve") {
-    val dir = Files.createTempDirectory("graft-warcr-")
-    dir.toFile.deleteOnExit()
+    val dir = tempDir("graft-warcr-")
     val w =
       record(Seq(
         "WARC-Type" -> "response",
@@ -154,8 +151,7 @@ class WarcSpec extends SparkSpec {
   }
 
   test("trailing newlines: a body ending in a bare LF keeps it; only the CRLF-CRLF terminator strips") {
-    val dir = Files.createTempDirectory("graft-warct-")
-    dir.toFile.deleteOnExit()
+    val dir = tempDir("graft-warct-")
     val w = record(Seq(
       "WARC-Type" -> "conversion",
       "WARC-Record-ID" -> "<urn:uuid:t-1>",
@@ -186,8 +182,7 @@ class WarcSpec extends SparkSpec {
 
   test("readRecordsGz: member-per-record gz parses record-identically to the plain reader") {
     val plainDir = writeWarc()
-    val gzDir = Files.createTempDirectory("graft-warcgz-")
-    gzDir.toFile.deleteOnExit()
+    val gzDir = tempDir("graft-warcgz-")
     // one gzip member per record — exactly how Common Crawl shards are laid out
     val members = warcFile.split("(?=WARC/1\\.0)").filter(_.nonEmpty)
     assert(members.length === 4)
@@ -206,8 +201,7 @@ class WarcSpec extends SparkSpec {
   }
 
   test("readRecordsGz: a corrupt member quarantines; its neighbors survive intact") {
-    val dir = Files.createTempDirectory("graft-warcgzx-")
-    dir.toFile.deleteOnExit()
+    val dir = tempDir("graft-warcgzx-")
     val r1 = record(Seq(
       "WARC-Type" -> "response",
       "WARC-Record-ID" -> "<urn:uuid:g-1>",
@@ -253,8 +247,7 @@ class WarcSpec extends SparkSpec {
   }
 
   test("a marker collision inside a payload drops only the orphaned fragment") {
-    val dir = Files.createTempDirectory("graft-warcx-")
-    dir.toFile.deleteOnExit()
+    val dir = tempDir("graft-warcx-")
     val poisoned =
       record(Seq(
         "WARC-Type" -> "response",
