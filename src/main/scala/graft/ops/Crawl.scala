@@ -31,8 +31,8 @@ import graft.functions.PlanSeal.seal
   * bare-`ref` tracking-list removal shipped in one upgrade) changes
   * the key of every URL the changed rule touches, so PERSISTED
   * key-keyed state written under the old rules — the streaming URL
-  * gate's `urlHistoryDir`, `frontierDir` work lists, `recrawlDir`
-  * fetch logs, stored dedup/redirect tables — no longer matches: a
+  * gate's key history, frontier work lists, recrawl fetch logs,
+  * stored dedup/redirect tables — no longer matches: a
   * previously seen URL whose key changed will be re-admitted and
   * re-queued once. Operators upgrading across a canonicalization
   * change must REBUILD those directories from raw inputs (or accept

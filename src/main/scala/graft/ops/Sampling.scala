@@ -31,6 +31,23 @@ object Sampling {
   def trainValTest(df: DataFrame, idCol: String, trainPct: Int = 80, valPct: Int = 10): DataFrame =
     df.withColumn("split", splitCol(idCol, trainPct, valPct))
 
+  /** The streaming mixture stage of
+    * [[graft.streaming.CorpusWatcher.startJsonl]] (`mixtureGate`),
+    * fixed ([[MixtureGate]]) or adaptive ([[AdaptiveMixtureGate]]):
+    * each batch's post-dedup survivors are downsampled per source
+    * before indexing. Stage order mirrors the batch chain (dedup first,
+    * mixture after), and the band append happens BEFORE the mixture
+    * filter: the dedup candidate set must be the post-gate corpus —
+    * exactly what [[Curation.curate]] deduplicates against — so a later
+    * near-duplicate of a mixture-dropped doc is still dropped (rates
+    * are per-source admission policy, not evidence the text is gone).
+    * The predicate is [[mixture]]'s md5-bucket arithmetic, so batch and
+    * stream admit the same rows. (Train/val/test split stamping has no
+    * streaming face: [[splitCol]] is derivable from `doc_id` alone at
+    * any later read, so persisting it per batch would add state for
+    * nothing.) */
+  sealed trait MixturePolicy
+
   /** [[mixture]]'s parameters packaged for per-batch streaming use
     * ([[graft.streaming.CorpusWatcher.startJsonl]]): the keep-rate per
     * source, and the rate for sources the map does not name (which
@@ -38,7 +55,7 @@ object Sampling {
     * source matches no map entry). The predicate is stateless and
     * content-independent, so the stream needs no mixture state. */
   final case class MixtureGate(
-      rates: Map[String, Double], defaultRate: Double = 1.0) {
+      rates: Map[String, Double], defaultRate: Double = 1.0) extends MixturePolicy {
     (rates.values.toSeq :+ defaultRate).foreach(r =>
       require(r >= 0.0 && r <= 1.0, s"rate $r outside [0,1]"))
   }
@@ -162,7 +179,7 @@ object Sampling {
       temperature: Double = 2.0,
       defaultRate: Double = 1.0,
       unimaxBudget: Option[Long] = None,
-      unimaxMaxEpochs: Double = 4.0) {
+      unimaxMaxEpochs: Double = 4.0) extends MixturePolicy {
     require(temperature >= 1.0, s"temperature=$temperature must be >= 1")
     require(defaultRate >= 0.0 && defaultRate <= 1.0, s"defaultRate $defaultRate outside [0,1]")
     unimaxBudget.foreach(b => require(b > 0, s"unimaxBudget=$b must be positive"))

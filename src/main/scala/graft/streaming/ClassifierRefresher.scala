@@ -17,8 +17,8 @@ import graft.ops.Curation
   * The loop: [[graft.ops.Curation.classifierDriftSignals]] measures
   * each batch's per-source drop rate under the serving gate →
   * [[graft.ops.TextAnalysis.refreshDue]] records the decision
-  * (`classifier:<source>` rows in the stream's `refreshDir`, the
-  * [[CorpusWatcher.startJsonl]] `classifierDrift` opt-in) → HERE the
+  * (`classifier:<source>` rows in the stream's refresh dir, the
+  * [[CorpusWatcher.Refresh]] `classifierDrift` opt-in) → HERE the
   * due decision retrains [[graft.ops.Curation.classifierWeights]] over
   * CURRENT labeled corpora, RE-SWEEPS the operating point against the
   * new weights (a retrained scorer's logit scale moves — carrying the
@@ -130,7 +130,7 @@ object ClassifierRefresher {
 
   /** The SERVING GATE resolved from the version pointer — what a
     * streaming deployment passes as [[CorpusWatcher.startJsonl]]'s
-    * `classifierGate`: weights from `servingDir/weights`, bias from
+    * `classifierGate` (as the constant provider `_ => gate`): weights from `servingDir/weights`, bias from
     * the stored `servingDir/operating_point` when one exists (and is
     * non-empty), else `defaultBias`. Resolve once per stream/session
     * bootstrap — a metadata read plus a KB-sized parquet load — then
@@ -172,9 +172,9 @@ object ClassifierRefresher {
   }
 
   /** [[servingGate]] as a LIVE provider — what a streaming deployment
-    * passes as [[CorpusWatcher.startJsonl]]'s `classifierGateProvider`
-    * so the drift loop closes WITHOUT a stream restart: a frozen
-    * `classifierGate` serves the bootstrap-time weights for the
+    * passes as [[CorpusWatcher.startJsonl]]'s `classifierGate` so the
+    * drift loop closes WITHOUT a stream restart: a frozen gate (a
+    * constant provider) serves the bootstrap-time weights for the
     * stream's lifetime, so [[retrainIfDue]]'s repoint only took effect
     * at the next restart — the loop's last seam (r18 verdict #3).
     * Each call re-reads the version POINTER (one metadata read, the

@@ -1,9 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
-
-import scala.jdk.CollectionConverters._
-
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -32,10 +29,16 @@ import graft.index.InvertedIndex
   * depth, invisible in CPU load. `simple` keeps it linear.
   *
   * Index persistence is a versioned-snapshot swap: each batch writes a
-  * full merged snapshot to `snap-<epoch>` and then atomically updates
-  * the `LATEST` pointer file — readers never observe a half-written
-  * index. On a real deployment this `foreachBatch` body is one Delta
-  * Lake `MERGE`; plain parquet keeps this container dependency-free.
+  * full merged snapshot to `snap-<id>`, then writes the one-line
+  * `LATEST` pointer aside and renames it over the old one, then
+  * deletes superseded snapshots (never the one `LATEST` names) —
+  * readers never observe a half-written index. The swap is
+  * [[ArtifactVersions]]' publish code (the `.current_version` pointer
+  * of the versioned artifact roots), so every step goes through the
+  * Hadoop FileSystem of the index dir's own scheme and the watcher
+  * works on any Hadoop filesystem. On a real deployment this
+  * `foreachBatch` body is one Delta Lake `MERGE`; plain parquet keeps
+  * the library dependency-free.
   * The merge itself is [[InvertedIndex.upsertDocs]] (re-uploading a
   * document replaces its postings — the corrected semantics; pass
   * `parityAdd = true` for the reference's additive double-counting).
@@ -43,30 +46,31 @@ import graft.index.InvertedIndex
 object CorpusWatcher {
 
   private val Latest = "LATEST"
+  private val Snapshot = "^snap-(\\d+)$".r
+  // the sum-safe compaction's hidden fold dir and intent record
+  private val StatsTmp = ".compact_tmp"
+  private val StatsMarker = ".compact_marker"
 
   /** Read the current index snapshot (empty index if none yet; the
     * empty frame's schema follows the watcher's index shape — flat or
     * positional — so batch 0's upsert unions cleanly either way). */
   def currentIndex(
-      spark: SparkSession, indexDir: String, positional: Boolean = false): DataFrame = {
-    val ptr = Paths.get(indexDir, Latest)
-    if (Files.exists(ptr)) {
-      val snap = new String(Files.readAllBytes(ptr), "UTF-8").trim
-      spark.read.parquet(s"$indexDir/$snap")
-    } else {
-      import org.apache.spark.sql.types._
-      val base = Seq(
-        StructField("word", StringType),
-        StructField("doc_id", StringType))
-      val tail =
-        if (positional) Seq(
-          StructField("positions", ArrayType(IntegerType)),
-          StructField("cnt", LongType))
-        else Seq(StructField("cnt", LongType))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], StructType(base ++ tail))
+      spark: SparkSession, indexDir: String, positional: Boolean = false): DataFrame =
+    ArtifactVersions.readFile(spark, indexDir, Latest) match {
+      case Some(snap) => spark.read.parquet(s"$indexDir/$snap")
+      case None =>
+        import org.apache.spark.sql.types._
+        val base = Seq(
+          StructField("word", StringType),
+          StructField("doc_id", StringType))
+        val tail =
+          if (positional) Seq(
+            StructField("positions", ArrayType(IntegerType)),
+            StructField("cnt", LongType))
+          else Seq(StructField("cnt", LongType))
+        spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], StructType(base ++ tail))
     }
-  }
 
   /** Start watching `watchDir` for `*.txt` documents (doc identity =
     * base filename, as in the reference `mapper/main.py:63`); each
@@ -126,13 +130,157 @@ object CorpusWatcher {
           // artifact, and a mid-write crash keeps the previous one
           val tmpJson = s"$p.tmp"
           InvertedIndex.exportSingleFileJson(session.read.parquet(s"$indexDir/$snap"), tmpJson)
-          Files.move(Paths.get(tmpJson), Paths.get(p),
-            StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+          ArtifactVersions.replace(session, tmpJson, p)
         }
         ()
       }
     (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
   }
+
+  /** The first stage after parse — which re-crawled URLs a batch drops
+    * before any content work: the identity gate ([[UrlIdentityGate]],
+    * drop every re-crawl) or the change-aware one ([[RecrawlGate]],
+    * drop only unchanged re-crawls). Only the identity gate can carry a
+    * [[Frontier]]: its URL-key history IS the frontier's seen set. */
+  sealed trait UrlGate
+
+  /** URL-identity gate: the FIRST stage after parse —
+    * [[graft.ops.Crawl.canonicalizeUrl]] keys each row's `url` field
+    * (absent/NULL/non-canonical URLs always pass), rows whose key the
+    * accumulated history under `dir` holds are dropped before any
+    * content work, the within-batch minimum doc_id wins each canonical
+    * group, and the admitted keys append as this batch's `batch_id=N`
+    * partition. A re-crawled URL costs one 16-byte key — never an
+    * extraction, quality score, or signature. History holds md5 keys
+    * only — never URLs — and shares the semi-join compaction. */
+  final case class UrlIdentityGate(dir: String, frontier: Option[Frontier] = None)
+    extends UrlGate
+
+  /** Change-aware URL gate: the RECRAWL mode of the same first stage —
+    * a re-fetched URL is dropped only when its content hash matches a
+    * version already ADMITTED for that URL (`(url_key, content_hash)`
+    * pair membership), so changed pages flow through to re-extraction
+    * and (with URL-stable doc ids) replace their stale index rows,
+    * while unchanged re-fetches cost one 32-byte pair probe. Within a
+    * batch one VERSION per url_key is admitted (max `content_hash`,
+    * then min `doc_id` — the identity gate's single-winner discipline
+    * one level up: URL-stable doc ids mean two same-batch versions
+    * share a doc_id, and admitting both would merge both versions'
+    * postings into one document).
+    *
+    * The gate's PROBE SET and the fetch LOG are separate stores with
+    * different growth laws: `dir` itself is the raw append-only fetch
+    * log — EVERY observed pair, every batch, provenance partitions
+    * (`batch_id` = fetch time in batch units) that [[recrawlDue]]
+    * derives backoff schedules from; it is exempt from compaction
+    * because folding partitions would erase fetch provenance. The
+    * gate's anti-join instead probes the sibling `<dir>.gate` dir
+    * ([[recrawlGateDir]]) holding the DISTINCT admitted pairs only —
+    * key-sized rows whose consumer is a semi-join, so it compacts
+    * under [[compactHistory]] like the URL and band histories, and
+    * per-batch gate cost stays FLAT as total fetches grow (the raw log
+    * is never scanned by the gate; only [[recrawlDue]] — an
+    * operator-invoked report, not a per-batch stage — reads it). A
+    * pre-split log (no gate dir) migrates automatically: the first
+    * batch folds the log's distinct pairs into the gate's initial
+    * compacted generation. */
+  final case class RecrawlGate(dir: String) extends UrlGate
+
+  /** Streaming frontier under `dir`: the crawl loop's OUTPUT leg — each
+    * batch extracts its admitted pages' outlinks
+    * ([[graft.ops.Crawl.extractLinks]], row-local), drops targets the
+    * URL-key history already holds (every page ever admitted, this
+    * batch included) or an earlier frontier partition already queued,
+    * and appends the remainder as a `batch_id=N` work list
+    * `(url_key, link_url, link_host, n_refs, src, src_doc_id)` —
+    * `src`/`src_doc_id` are the row's PROVENANCE: which discovery kind
+    * named it (`link` | `sitemap`; sitemap outranks when both did) and
+    * the smallest naming doc's id, so fetched URLs attribute to the
+    * link page or sitemap chain that produced them. Where the batch
+    * face ([[graft.ops.Crawl.crawlFrontier]]) re-derives the seen set
+    * from ALL pages on every call, the stream pays one row-local
+    * extraction plus two 16-byte-key anti-joins per batch — flat as
+    * history grows. A fetch worker consumes a partition, feeds
+    * responses back into `watchDir`, and the fetched keys land in the
+    * history, closing the daily-crawl loop end to end. Pass a stored
+    * [[graft.ops.Robots.robotsRules]] table as `rules` to enforce
+    * politeness at QUEUE time — disallowed targets never enter the
+    * work list (broadcast rule table, row-local fold). Pass stored
+    * [[graft.ops.Robots.crawlDelays]] / [[graft.ops.Crawl.crawlBudget]]
+    * tables as `delays` / `budgets` and each partition becomes a fetch
+    * SCHEDULE: per-host rank (`pos`, bounded heap capped at
+    * `perHostCap` — never a window), `fetch_offset = (pos−1)·delay`
+    * seconds into the host's wave (`defaultDelay` for undeclared
+    * hosts), and a per-host budget slice — the batch
+    * [[graft.ops.Crawl.politeFrontier]] faces at the stream boundary,
+    * so a fetch worker consumes WHEN and HOW MANY, not just WHAT. With
+    * `sitemapDiscovery` the stage also SEEDS from sitemaps: an arriving
+    * body matching the sitemap grammar queues its unseen locs — content
+    * entries as fetch work, index entries as the child sitemaps to
+    * fetch, whose bodies arrive later and queue THEIR locs in turn —
+    * the [[graft.ops.Crawl.sitemapTree]] fixpoint realized
+    * incrementally, with every loc riding the same history/queued
+    * anti-joins, robots filter, cap and schedule as link candidates. */
+  final case class Frontier(
+      dir: String,
+      rules: Option[DataFrame] = None,
+      delays: Option[DataFrame] = None,
+      budgets: Option[DataFrame] = None,
+      perHostCap: Int = 100,
+      defaultDelay: Double = 1.0,
+      sitemapDiscovery: Boolean = false)
+
+  /** Distribution drift under `dir`: the streaming face of
+    * [[graft.ops.TextAnalysis.tokenDrift]] — each batch appends one row
+    * (`batch KL/JS vs the accumulated index`, 1024 hash buckets) to
+    * `dir/batch_id=N`, answering "is today's feed the same distribution
+    * as the corpus so far?" numerically, per batch. Both sides are what
+    * the INDEX sees: the batch side is the post-filter post-mixture
+    * survivors, the history side is the pre-merge snapshot's word
+    * counts read DIRECTLY from the index — the accumulated corpus is
+    * never re-tokenized, so the per-batch cost is one scan of the batch
+    * text plus one scan of the index's count column, and the drift row
+    * is computed BEFORE the swap (it describes the feed vs the
+    * published history, and the old snapshot is guaranteed alive then
+    * regardless of `retainSnapshots`). Batch 0 reports drift against
+    * the empty index's uniform smoothing — high by construction; alert
+    * on deltas, not absolutes. `refresh` acts on the row. */
+  final case class Drift(dir: String, refresh: Option[Refresh] = None)
+
+  /** Drift ACTED ON: each batch's [[Drift]] row against the declared
+    * per-artifact `thresholds` → the refresh-due decisions, recorded
+    * under `dir/batch_id=N` ([[refreshDecisions]]).
+    *
+    * Tokenizer refresh signals (`unkVocab`): the deployed WordPiece
+    * vocabulary measures each batch's ADMITTED feed per source
+    * ([[graft.ops.WordPiece.unkSignals]] — one tokenize scan, native
+    * greedy encode), and the resulting `tokenizer:<source>` rows join
+    * the `index` rows in the SAME refresh-decision partition — so a
+    * streaming deployment's tokenizer-retrain trigger is recorded by
+    * the stream itself, and [[TokenizerRefresher.retrainIfDue]] acts on
+    * it with no hand-assembled signal plumbing. Declare per-source
+    * thresholds as `(tokenizer:<source>, unk_rate, t)` rows in
+    * `thresholds`.
+    *
+    * Classifier drift signals (`classifierDrift`, needs the watcher's
+    * `classifierGate`): the serving gate measures its OWN behavior per
+    * batch — each source's drop rate
+    * ([[graft.ops.Curation.classifierDriftSignals]], computed from the
+    * already-staged gate input/survivor frames, no new scan) — and the
+    * resulting `classifier:<source>` rows join the same
+    * refresh-decision partition. This closes the FOURTH artifact
+    * family's loop: a frozen weight table whose feed moved shows up as
+    * a climbing drop rate, the recorded decision triggers
+    * [[ClassifierRefresher.retrainIfDue]] (retrain + re-sweep + version
+    * + repoint), and the next stream bootstrap resolves the new weights
+    * through [[ClassifierRefresher.servingGate]]. Declare per-source
+    * thresholds as `(classifier:<source>, drop_rate, t)` rows in
+    * `thresholds`. */
+  final case class Refresh(
+      dir: String,
+      thresholds: DataFrame,
+      unkVocab: Option[Seq[String]] = None,
+      classifierDrift: Boolean = false)
 
   /** Watch a directory of JSONL corpus files (the interchange format
     * large text corpora ship in) and keep the inverted index up to
@@ -201,29 +349,25 @@ object CorpusWatcher {
     *
     * Classifier gate (`classifierGate`): the streaming face of
     * [[graft.ops.Curation.classifierScore]] — each batch's gated rows
-    * are scored against the FROZEN weight table and docs with
-    * `logit < bias` are discarded (policy-dropped, like the quality
-    * gate — not quarantined). Training never happens on the stream:
-    * the gate serves a stored model, the train/serve split
+    * are scored against a weight table and docs with `logit < bias`
+    * are discarded (policy-dropped, like the quality gate — not
+    * quarantined). Training never happens on the stream: the gate
+    * serves a stored model, the train/serve split
     * [[graft.ops.Curation.classifierWeights]] establishes. Runs after
     * the quality gate (cheap predicates first) and before any dedup
     * state, so bands and the index only accumulate docs the model kept.
     * Per-batch cost: one tokenize scan of the batch + a broadcast join
-    * against the model-sized weight table.
-    *
-    * Live classifier gate (`classifierGateProvider`): the frozen
-    * `classifierGate` is resolved once at stream construction, so a
-    * [[ClassifierRefresher.retrainIfDue]] repoint only took effect at
-    * the next restart — the drift loop's last seam. A provider is
-    * instead re-invoked at EVERY batch, so passing
+    * against the model-sized weight table. The gate is a provider
+    * re-invoked at EVERY batch: `_ => gate` serves a frozen gate for
+    * the stream's lifetime, while
     * [[ClassifierRefresher.servingGateProvider]] makes the running
-    * stream pick up a mid-stream retrain at its next batch: the
-    * provider re-reads the version pointer (a metadata read) and
-    * reloads weights only when it moved. Gate semantics, ordering, and
-    * replay idempotence are unchanged — which gate version scored a
-    * batch is decided by the pointer at that batch's (re-)execution,
-    * exactly like the band/index history the batch joins against.
-    * Mutually exclusive with `classifierGate`.
+    * stream pick up a mid-stream [[ClassifierRefresher.retrainIfDue]]
+    * repoint at its next batch — the provider re-reads the version
+    * pointer (a metadata read) and reloads weights only when it moved.
+    * Gate semantics, ordering, and replay idempotence are the same
+    * either way — which gate version scored a batch is decided by the
+    * pointer at that batch's (re-)execution, exactly like the
+    * band/index history the batch joins against.
     *
     * Decontamination (`decontamShingles` + `decontamW`): the streaming
     * face of [[graft.ops.Dedup.decontaminate]] — docs sharing a
@@ -242,29 +386,9 @@ object CorpusWatcher {
     * one shingle pass over the batch + one semi-join against the
     * precomputed eval shingles.
     *
-    * Mixture sampling (`mixtureGate`): the streaming face of
-    * [[graft.ops.Sampling.mixture]] — each batch's post-dedup
-    * survivors are downsampled per source to the gate's rates before
-    * indexing. The feed's optional `source` field carries the domain;
-    * rows without one fall to `defaultRate` (a null source matches no
-    * rate entry). Stage order mirrors the batch chain (dedup first,
-    * mixture after), and the band append happens BEFORE the mixture
-    * filter: the dedup candidate set must be the post-gate corpus —
-    * exactly what [[graft.ops.Curation.curate]] deduplicates against —
-    * so a later near-duplicate of a mixture-dropped doc is still
-    * dropped (rates are per-source admission policy, not evidence the
-    * text is gone). The predicate is content-independent md5-bucket
-    * arithmetic: no mixture state, no extra shuffle, exact batch/
-    * stream parity. (Train/val/test split stamping has no streaming
-    * face for the same reason turned around: [[graft.ops.Sampling
-    * .splitCol]] is derivable from `doc_id` alone at any later read,
-    * so persisting it per batch would add state for nothing.)
-    * The ADAPTIVE variant (`adaptiveMixtureGate`, exclusive with the
-    * fixed-rate gate) computes temperature rates per batch from the
-    * accumulated per-source token table it maintains under its
-    * `statsDir` — see [[graft.ops.Sampling.AdaptiveMixtureGate]] for
-    * the replay-idempotence argument (stats are pre-admission and
-    * content-pure, so a replay overwrites identical rows).
+    * Mixture sampling (`mixtureGate`): each batch's post-dedup
+    * survivors are downsampled per source, at fixed or adaptive rates
+    * — see [[graft.ops.Sampling.MixturePolicy]].
     *
     * Substring-level strip (`spanHistoryDir`): the streaming face of
     * [[graft.ops.Dedup.stripDuplicateSpansAgainst]] — regions the
@@ -306,84 +430,11 @@ object CorpusWatcher {
     * re-split identically next batch. All three strip histories hold
     * keys only — never text — and share the semi-join compaction.
     *
-    * URL-identity gate (`urlHistoryDir`): the FIRST stage after parse
-    * — [[graft.ops.Crawl.canonicalizeUrl]] keys each row's `url`
-    * field (absent/NULL/non-canonical URLs always pass), rows whose
-    * key the accumulated history holds are dropped before any
-    * content work, the within-batch minimum doc_id wins each
-    * canonical group, and the admitted keys append as this batch's
-    * `batch_id=N` partition. A re-crawled URL costs one 16-byte key
-    * — never an extraction, quality score, or signature. History
-    * holds md5 keys only — never URLs — and shares the semi-join
-    * compaction.
-    *
-    * Streaming frontier (`frontierDir`, requires `urlHistoryDir`):
-    * the crawl loop's OUTPUT leg — each batch extracts its admitted
-    * pages' outlinks ([[graft.ops.Crawl.extractLinks]], row-local),
-    * drops targets the URL-key history already holds (every page ever
-    * admitted, this batch included) or an earlier frontier partition
-    * already queued, and appends the remainder as a `batch_id=N` work
-    * list `(url_key, link_url, link_host, n_refs, src, src_doc_id)` —
-    * `src`/`src_doc_id` are the row's PROVENANCE: which discovery kind
-    * named it (`link` | `sitemap`; sitemap outranks when both did) and
-    * the smallest naming doc's id, so fetched URLs attribute to the
-    * link page or sitemap chain that produced them. Where the batch
-    * face ([[graft.ops.Crawl.crawlFrontier]]) re-derives the seen set
-    * from ALL pages on every call, the stream pays one row-local
-    * extraction plus two 16-byte-key anti-joins per batch — flat as
-    * history grows. A fetch worker consumes a partition, feeds
-    * responses back into `watchDir`, and the fetched keys land in the
-    * history, closing the daily-crawl loop end to end. Pass a stored
-    * [[graft.ops.Robots.robotsRules]] table as `frontierRules` to
-    * enforce politeness at QUEUE time — disallowed targets never
-    * enter the work list (broadcast rule table, row-local fold).
-    * Pass stored [[graft.ops.Robots.crawlDelays]] /
-    * [[graft.ops.Crawl.crawlBudget]] tables as `frontierDelays` /
-    * `frontierBudgets` and each partition becomes a fetch SCHEDULE:
-    * per-host rank (`pos`, bounded heap capped at
-    * `frontierPerHostCap` — never a window), `fetch_offset =
-    * (pos−1)·delay` seconds into the host's wave
-    * (`frontierDefaultDelay` for undeclared hosts), and a per-host
-    * budget slice — the batch [[graft.ops.Crawl.politeFrontier]]
-    * faces at the stream boundary, so a fetch worker consumes WHEN
-    * and HOW MANY, not just WHAT. With `sitemapDiscovery` the stage
-    * also SEEDS from sitemaps: an arriving body matching the sitemap
-    * grammar queues its unseen locs — content entries as fetch work,
-    * index entries as the child sitemaps to fetch, whose bodies
-    * arrive later and queue THEIR locs in turn — the
-    * [[graft.ops.Crawl.sitemapTree]] fixpoint realized incrementally,
-    * with every loc riding the same history/queued anti-joins, robots
-    * filter, cap and schedule as link candidates.
-    *
-    * Change-aware URL gate (`recrawlDir`, exclusive with
-    * `urlHistoryDir`): the RECRAWL mode of the same first stage — a
-    * re-fetched URL is dropped only when its content hash matches a
-    * version already ADMITTED for that URL (`(url_key, content_hash)`
-    * pair membership), so changed pages flow through to re-extraction
-    * and (with URL-stable doc ids) replace their stale index rows,
-    * while unchanged re-fetches cost one 32-byte pair probe. Within a
-    * batch one VERSION per url_key is admitted (max `content_hash`,
-    * then min `doc_id` — the identity gate's single-winner discipline
-    * one level up: URL-stable doc ids mean two same-batch versions
-    * share a doc_id, and admitting both would merge both versions'
-    * postings into one document).
-    *
-    * The gate's PROBE SET and the fetch LOG are separate stores with
-    * different growth laws: `recrawlDir` itself is the raw append-only
-    * fetch log — EVERY observed pair, every batch, provenance
-    * partitions (`batch_id` = fetch time in batch units) that
-    * [[recrawlDue]] derives backoff schedules from; it is exempt from
-    * compaction because folding partitions would erase fetch
-    * provenance. The gate's anti-join instead probes the sibling
-    * `<recrawlDir>.gate` dir ([[recrawlGateDir]]) holding the DISTINCT
-    * admitted pairs only — key-sized rows whose consumer is a
-    * semi-join, so it compacts under [[compactHistory]] like the URL
-    * and band histories, and per-batch gate cost stays FLAT as total
-    * fetches grow (the raw log is never scanned by the gate; only
-    * [[recrawlDue]] — an operator-invoked report, not a per-batch
-    * stage — reads it). A pre-split `recrawlDir` (log only, no gate
-    * dir) migrates automatically: the first batch folds the log's
-    * distinct pairs into the gate's initial compacted generation.
+    * URL gate (`urlGate`): the FIRST stage after parse, dropping
+    * re-crawled URLs before any content work — by identity
+    * ([[UrlIdentityGate]], which may also queue the batch's outlinks
+    * as a streaming [[Frontier]]) or by content change
+    * ([[RecrawlGate]]).
     *
     * Positional snapshots (`positional`): the maintained index is
     * [[graft.index.InvertedIndex.buildPositional]]'s `(word, doc_id,
@@ -416,47 +467,10 @@ object CorpusWatcher {
     * once per enabled stage, acceptable for batch-sized increments but
     * not free.
     *
-    * Distribution drift (`driftDir`): the streaming face of
-    * [[graft.ops.TextAnalysis.tokenDrift]] — each batch appends one
-    * row (`batch KL/JS vs the accumulated index`, 1024 hash buckets)
-    * to `driftDir/batch_id=N`, answering "is today's feed the same
-    * distribution as the corpus so far?" numerically, per batch. Both
-    * sides are what the INDEX sees: the batch side is the post-filter
-    * post-mixture survivors, the history side is the pre-merge snapshot's
-    * word counts read DIRECTLY from the index — the accumulated corpus
-    * is never re-tokenized, so the per-batch cost is one scan of the
-    * batch text plus one scan of the index's count column, and the
-    * drift row is computed BEFORE the swap (it describes the feed vs
-    * the published history, and the old snapshot is guaranteed alive
-    * then regardless of `retainSnapshots`). Batch 0 reports drift
-    * against the empty index's uniform smoothing — high by
-    * construction; alert on deltas, not absolutes.
-    *
-    * Tokenizer refresh signals (`unkVocab`, needs `refreshDir`): the
-    * deployed WordPiece vocabulary measures each batch's ADMITTED feed
-    * per source ([[graft.ops.WordPiece.unkSignals]] — one tokenize
-    * scan, native greedy encode), and the resulting
-    * `tokenizer:<source>` rows join the `index` rows in the SAME
-    * refresh-decision partition — so a streaming deployment's
-    * tokenizer-retrain trigger is recorded by the stream itself, and
-    * [[TokenizerRefresher.retrainIfDue]] acts on it with no
-    * hand-assembled signal plumbing. Declare per-source thresholds as
-    * `(tokenizer:<source>, unk_rate, t)` rows in `refreshThresholds`.
-    *
-    * Classifier drift signals (`classifierDrift`, needs
-    * `classifierGate` + `refreshDir`): the serving gate measures its
-    * OWN behavior per batch — each source's drop rate
-    * ([[graft.ops.Curation.classifierDriftSignals]], computed from the
-    * already-staged gate input/survivor frames, no new scan) — and the
-    * resulting `classifier:<source>` rows join the same
-    * refresh-decision partition. This closes the FOURTH artifact
-    * family's loop: a frozen weight table whose feed moved shows up as
-    * a climbing drop rate, the recorded decision triggers
-    * [[ClassifierRefresher.retrainIfDue]] (retrain + re-sweep +
-    * version + repoint), and the next stream bootstrap resolves the
-    * new weights through [[ClassifierRefresher.servingGate]]. Declare
-    * per-source thresholds as `(classifier:<source>, drop_rate, t)`
-    * rows in `refreshThresholds`.
+    * Distribution drift (`drift`): one KL/JS row per batch against the
+    * accumulated index ([[Drift]]), optionally acted on as
+    * refresh-due decisions for the index, tokenizer and classifier
+    * ([[Refresh]]).
     *
     * Doc store (`docStoreDir`): the admitted corpus TEXT, exactly as
     * indexed (post-strip), appended per batch — the one serving
@@ -483,13 +497,10 @@ object CorpusWatcher {
       dedupBandsDir: Option[String] = None,
       dedupWithinBatch: Boolean = false,
       qualityGate: Option[graft.ops.Curation.QualityGate] = None,
-      classifierGate: Option[graft.ops.Curation.ClassifierGate] = None,
-      classifierGateProvider:
-        Option[SparkSession => graft.ops.Curation.ClassifierGate] = None,
+      classifierGate: Option[SparkSession => graft.ops.Curation.ClassifierGate] = None,
       decontamShingles: Option[DataFrame] = None,
       decontamW: Int = 3,
-      mixtureGate: Option[graft.ops.Sampling.MixtureGate] = None,
-      adaptiveMixtureGate: Option[graft.ops.Sampling.AdaptiveMixtureGate] = None,
+      mixtureGate: Option[graft.ops.Sampling.MixturePolicy] = None,
       paraHistoryDir: Option[String] = None,
       paraBoundary: String = "\\n+",
       compactEvery: Option[Int] = None,
@@ -497,58 +508,27 @@ object CorpusWatcher {
       spanHistoryDir: Option[String] = None,
       positional: Boolean = false,
       metricsDir: Option[String] = None,
-      driftDir: Option[String] = None,
+      drift: Option[Drift] = None,
       unicodeTokens: Boolean = false,
       htmlExtract: Boolean = false,
       c4Rules: Boolean = false,
-      urlHistoryDir: Option[String] = None,
-      frontierDir: Option[String] = None,
-      recrawlDir: Option[String] = None,
-      frontierRules: Option[DataFrame] = None,
-      frontierDelays: Option[DataFrame] = None,
-      frontierBudgets: Option[DataFrame] = None,
-      frontierPerHostCap: Int = 100,
-      frontierDefaultDelay: Double = 1.0,
+      urlGate: Option[UrlGate] = None,
       distinctDir: Option[String] = None,
       lengthDir: Option[String] = None,
       honorDirectives: Boolean = false,
-      refreshDir: Option[String] = None,
-      refreshThresholds: Option[DataFrame] = None,
-      sitemapDiscovery: Boolean = false,
-      unkVocab: Option[Seq[String]] = None,
-      classifierDrift: Boolean = false,
       docStoreDir: Option[String] = None): StreamingQuery = {
+    import graft.ops.Sampling.{AdaptiveMixtureGate, MixtureGate}
+    val frontier = urlGate.collect { case UrlIdentityGate(ud, Some(f)) => (ud, f) }
+    val adaptiveGate = mixtureGate.collect { case g: AdaptiveMixtureGate => g }
     require(retainSnapshots >= 1, s"retainSnapshots=$retainSnapshots must be >= 1")
-    require(mixtureGate.isEmpty || adaptiveMixtureGate.isEmpty,
-      "pass either the fixed-rate mixtureGate or the adaptiveMixtureGate, not both")
-    require(frontierDir.isEmpty || urlHistoryDir.isDefined,
-      "frontierDir needs urlHistoryDir: the URL-key history IS the frontier's seen set")
-    require(urlHistoryDir.isEmpty || recrawlDir.isEmpty,
-      "urlHistoryDir and recrawlDir are two modes of the ONE URL gate: " +
-        "identity (drop every re-crawl) or change-aware (drop unchanged re-crawls)")
-    require(frontierRules.isEmpty || frontierDir.isDefined,
-      "frontierRules filters the frontier stage: pass frontierDir with it")
-    require((frontierDelays.isEmpty && frontierBudgets.isEmpty) || frontierDir.isDefined,
-      "frontierDelays/frontierBudgets schedule the frontier stage: pass frontierDir with them")
-    require(frontierPerHostCap >= 1,
-      s"frontierPerHostCap=$frontierPerHostCap must be >= 1")
-    require(frontierDefaultDelay >= 0,
-      s"frontierDefaultDelay=$frontierDefaultDelay must be >= 0")
     compactEvery.foreach(n => require(n >= 1, s"compactEvery=$n must be >= 1"))
-    require(refreshDir.isEmpty || (driftDir.isDefined && refreshThresholds.isDefined),
-      "refreshDir consumes the per-batch drift row: pass driftDir and refreshThresholds with it")
-    require(unkVocab.isEmpty || refreshDir.isDefined,
-      "unkVocab feeds tokenizer refresh decisions: pass refreshDir with it")
-    require(classifierGate.isEmpty || classifierGateProvider.isEmpty,
-      "pass either the frozen classifierGate or the per-batch " +
-        "classifierGateProvider, not both")
-    require(!classifierDrift ||
-        ((classifierGate.isDefined || classifierGateProvider.isDefined) &&
-          refreshDir.isDefined),
+    frontier.foreach { case (_, f) =>
+      require(f.perHostCap >= 1, s"frontier perHostCap=${f.perHostCap} must be >= 1")
+      require(f.defaultDelay >= 0, s"frontier defaultDelay=${f.defaultDelay} must be >= 0")
+    }
+    require(!drift.flatMap(_.refresh).exists(_.classifierDrift) || classifierGate.isDefined,
       "classifierDrift measures the classifier gate's per-source drop rates " +
-        "into refresh decisions: pass classifierGate (or a provider) and refreshDir with it")
-    require(!sitemapDiscovery || frontierDir.isDefined,
-      "sitemapDiscovery seeds the frontier stage: pass frontierDir with it")
+        "into refresh decisions: pass classifierGate with it")
     // the multilingual dial ([[graft.core.TextNorm.tokensUnicode]]):
     // switches every CONTENT-KEYED stage — band signatures (history +
     // within-batch + append), decontamination shingles, paragraph
@@ -637,84 +617,82 @@ object CorpusWatcher {
         // field at all — the column parses NULL) always pass. Within
         // the batch the minimum doc_id (string order — ids are opaque
         // here) wins its canonical-URL group, deterministically.
-        val parsed1 = if (recrawlDir.isDefined) {
-          // Change-aware URL gate (`recrawlDir`): where the identity
-          // gate drops EVERY re-crawl, this one drops a re-crawl only
-          // when it brings nothing new — the gate probes the ADMITTED
-          // `(url_key, content_hash)` pair set (an unchanged re-fetch
-          // dies against its own pair, a changed page passes — new
-          // pair — and a page that later reverts to old content dies
-          // again: that pair was processed). Pair-set membership keeps
-          // the append-only key-history discipline — no per-key
-          // latest-version bookkeeping. The probe set lives in the
-          // compactable sibling gate dir; the raw fetch LOG (every
-          // observation, per-batch provenance for [[recrawlDue]])
-          // stays in `recrawlDir` and is never scanned here — the
-          // split that keeps per-batch gate cost flat as total fetches
-          // grow. If the feed keys doc_id by URL, the index upsert
-          // REPLACES the stale version on change — the freshness loop
-          // closed end to end.
-          val rd = recrawlDir.get
-          val gd = recrawlGateDir(rd)
-          ensureCanonVersion(session, rd)
-          // one-time migration for pre-split dirs: fold the existing
-          // log's distinct pairs into the gate's initial compacted
-          // generation (idempotent: skipped once the gate dir exists;
-          // the replayed batch's own first-attempt log partition is
-          // excluded, the accumulated-read rule)
-          seedRecrawlGate(session, rd, gd, excludeBatchId = batchId)
-          val keyed = staged(parsed0
-            .withColumn("url_key", md5(graft.ops.Crawl.canonicalizeUrl(col("url"))))
-            .withColumn("content_hash", md5(coalesce(col("text"), lit("")))))
-          val freshVsHist =
-            accumulatedPartitions(session, gd, excludeBatchId = batchId) match {
-              case Some(h) =>
-                keyed.join(h.select("url_key", "content_hash"),
-                  Seq("url_key", "content_hash"), "left_anti")
-              case None => keyed
-            }
-          // one VERSION per url_key in-batch (max content_hash — a
-          // URL-stable feed gives same-batch versions the SAME doc_id,
-          // so pair-level winners alone would merge both versions'
-          // postings into one document), then the min-doc_id winner
-          // within the surviving version — the identity gate's
-          // deterministic single-winner discipline
-          val ver = freshVsHist.where(col("url_key").isNotNull)
-            .groupBy("url_key").agg(max(col("content_hash")).as("_rc_ver"))
-          val versioned = freshVsHist
-            .join(ver, Seq("url_key"), "left")
-            .where(col("url_key").isNull || col("content_hash") === col("_rc_ver"))
-          val winners = versioned.where(col("url_key").isNotNull)
-            .groupBy("url_key").agg(min(col("doc_id")).as("_rc_winner"))
-          val kept = staged(versioned
-            .join(winners, Seq("url_key"), "left")
-            .where(col("url_key").isNull || col("doc_id") === col("_rc_winner"))
-            .drop("_rc_ver", "_rc_winner"))
-          // the LOG partition records every pair OBSERVED this batch
-          // (from `keyed`, not `kept`): an unchanged re-fetch must
-          // still appear in the fetch log — it is exactly the
-          // observation the backoff counts
-          keyed.where(col("url_key").isNotNull)
-            .select("url_key", "content_hash").distinct()
-            .write.mode("overwrite").parquet(s"$rd/batch_id=$batchId")
-          // the GATE partition records only the ADMITTED pairs — the
-          // set future anti-joins must hit (a version that lost the
-          // within-batch race was never indexed, so a later re-fetch
-          // of it must pass); distinct key-sized rows, compactable
-          kept.where(col("url_key").isNotNull)
-            .select("url_key", "content_hash").distinct()
-            .write.mode("overwrite").parquet(s"$gd/batch_id=$batchId")
-          kept.drop("url_key", "content_hash", "url")
-        } else urlHistoryDir match {
-          case None => parsed0.drop("url")
-          case Some(ud) =>
+        val parsed1 = urlGate match {
+          case Some(RecrawlGate(rd)) =>
+            // Change-aware URL gate (`RecrawlGate`): where the identity
+            // gate drops EVERY re-crawl, this one drops a re-crawl only
+            // when it brings nothing new — the gate probes the ADMITTED
+            // `(url_key, content_hash)` pair set (an unchanged re-fetch
+            // dies against its own pair, a changed page passes — new
+            // pair — and a page that later reverts to old content dies
+            // again: that pair was processed). Pair-set membership keeps
+            // the append-only key-history discipline — no per-key
+            // latest-version bookkeeping. The probe set lives in the
+            // compactable sibling gate dir; the raw fetch LOG (every
+            // observation, per-batch provenance for [[recrawlDue]])
+            // stays in the log dir `rd` and is never scanned here — the
+            // split that keeps per-batch gate cost flat as total fetches
+            // grow. If the feed keys doc_id by URL, the index upsert
+            // REPLACES the stale version on change — the freshness loop
+            // closed end to end.
+            val gd = recrawlGateDir(rd)
+            ensureCanonVersion(session, rd)
+            // one-time migration for pre-split dirs: fold the existing
+            // log's distinct pairs into the gate's initial compacted
+            // generation (idempotent: skipped once the gate dir exists;
+            // the replayed batch's own first-attempt log partition is
+            // excluded, the accumulated-read rule)
+            seedRecrawlGate(session, rd, gd, excludeBatchId = batchId)
+            val keyed = staged(parsed0
+              .withColumn("url_key", md5(graft.ops.Crawl.canonicalizeUrl(col("url"))))
+              .withColumn("content_hash", md5(coalesce(col("text"), lit("")))))
+            val freshVsHist =
+              accumulatedPartitions(session, gd, excludeBatchId = batchId) match {
+                case Some(h) =>
+                  keyed.join(h.select("url_key", "content_hash"),
+                    Seq("url_key", "content_hash"), "left_anti")
+                case None => keyed
+              }
+            // one VERSION per url_key in-batch (max content_hash — a
+            // URL-stable feed gives same-batch versions the SAME doc_id,
+            // so pair-level winners alone would merge both versions'
+            // postings into one document), then the min-doc_id winner
+            // within the surviving version — the identity gate's
+            // deterministic single-winner discipline
+            val ver = freshVsHist.where(col("url_key").isNotNull)
+              .groupBy("url_key").agg(max(col("content_hash")).as("_rc_ver"))
+            val versioned = freshVsHist
+              .join(ver, Seq("url_key"), "left")
+              .where(col("url_key").isNull || col("content_hash") === col("_rc_ver"))
+            val winners = versioned.where(col("url_key").isNotNull)
+              .groupBy("url_key").agg(min(col("doc_id")).as("_rc_winner"))
+            val kept = staged(versioned
+              .join(winners, Seq("url_key"), "left")
+              .where(col("url_key").isNull || col("doc_id") === col("_rc_winner"))
+              .drop("_rc_ver", "_rc_winner"))
+            // the LOG partition records every pair OBSERVED this batch
+            // (from `keyed`, not `kept`): an unchanged re-fetch must
+            // still appear in the fetch log — it is exactly the
+            // observation the backoff counts
+            keyed.where(col("url_key").isNotNull)
+              .select("url_key", "content_hash").distinct()
+              .write.mode("overwrite").parquet(s"$rd/batch_id=$batchId")
+            // the GATE partition records only the ADMITTED pairs — the
+            // set future anti-joins must hit (a version that lost the
+            // within-batch race was never indexed, so a later re-fetch
+            // of it must pass); distinct key-sized rows, compactable
+            kept.where(col("url_key").isNotNull)
+              .select("url_key", "content_hash").distinct()
+              .write.mode("overwrite").parquet(s"$gd/batch_id=$batchId")
+            kept.drop("url_key", "content_hash", "url")
+          case Some(UrlIdentityGate(ud, f)) =>
             ensureCanonVersion(session, ud)
             // `url` survives the gate when the frontier stage (below)
             // still needs it as the link-resolution origin
             val keyed = staged {
               val k = parsed0.withColumn("url_key",
                 md5(graft.ops.Crawl.canonicalizeUrl(col("url"))))
-              if (frontierDir.isDefined) k else k.drop("url")
+              if (f.isDefined) k else k.drop("url")
             }
             val freshVsHist =
               accumulatedPartitions(session, ud, excludeBatchId = batchId) match {
@@ -733,8 +711,9 @@ object CorpusWatcher {
             kept.where(col("url_key").isNotNull).select("url_key").distinct()
               .write.mode("overwrite").parquet(s"$ud/batch_id=$batchId")
             kept.drop("url_key")
+          case None => parsed0.drop("url")
         }
-        // Streaming frontier (`frontierDir`): the daily-crawl loop's
+        // Streaming frontier ([[Frontier]]): the daily-crawl loop's
         // OUTPUT leg — each batch's outlink targets that are neither
         // in the URL-key history (every page ever admitted, THIS
         // batch's partition included — it was appended just above)
@@ -767,9 +746,10 @@ object CorpusWatcher {
           if (!honorDirectives) None
           else Some(staged(graft.ops.Crawl.pageDirectiveFlags(parsed1)))
         var frontierF: Option[DataFrame] = None
-        val parsed = frontierDir match {
+        val parsed = frontier match {
           case None => parsed1
-          case Some(fd) =>
+          case Some((ud, f)) =>
+            val fd = f.dir
             ensureCanonVersion(session, fd)
             val linkSrc = directiveFlags match {
               case None => parsed1
@@ -788,7 +768,7 @@ object CorpusWatcher {
               .select(md5(col("link_url")).as("url_key"),
                 col("link_url"), col("link_host"),
                 lit("link").as("src"), col("doc_id").as("src_doc_id"))
-            // sitemap DISCOVERY (`sitemapDiscovery`): an arriving
+            // sitemap DISCOVERY (`f.sitemapDiscovery`): an arriving
             // sitemap body queues its unseen locs — content entries
             // as fetch work, index entries as the CHILD SITEMAPS to
             // fetch, whose bodies arrive in a later batch and queue
@@ -801,7 +781,7 @@ object CorpusWatcher {
             // anti-joins, per-host cap, robots filter and scheduling
             // every other candidate pays.
             val cands0 =
-              if (!sitemapDiscovery) linkCands
+              if (!f.sitemapDiscovery) linkCands
               else linkCands.unionByName(
                 graft.ops.Crawl.sitemapUrls(
                   parsed1.where(coalesce(col("text"), lit(""))
@@ -810,18 +790,18 @@ object CorpusWatcher {
                   .select(md5(col("url")).as("url_key"),
                     col("url").as("link_url"), col("host").as("link_host"),
                     lit("sitemap").as("src"), col("doc_id").as("src_doc_id")))
-            // politeness at QUEUE time (`frontierRules`): a stored
+            // politeness at QUEUE time (`f.rules`): a stored
             // robotsRules table filters candidates BEFORE they cost a
             // history probe or a queue slot — a disallowed URL should
             // never be scheduled, not merely skipped at fetch time.
             // Broadcast host-sized rule table, row-local HOF fold
             // (the Robots stance); rows pass 1:1
-            val cands = frontierRules match {
+            val cands = f.rules match {
               case None => cands0
               case Some(r) => graft.ops.Robots.allowedOnly(cands0, r)
             }
             val unseen = accumulatedPartitions(
-              session, urlHistoryDir.get, excludeBatchId = Long.MinValue) match {
+              session, ud, excludeBatchId = Long.MinValue) match {
               case Some(h) => cands.join(h.select("url_key"), Seq("url_key"), "left_anti")
               case None => cands
             }
@@ -843,7 +823,7 @@ object CorpusWatcher {
                 col("n_refs"),
                 when(col("_sm").isNotNull, "sitemap").otherwise("link").as("src"),
                 coalesce(col("_sm"), col("_ln")).as("src_doc_id")))
-            // fetch SCHEDULING (`frontierDelays` / `frontierBudgets`):
+            // fetch SCHEDULING (`f.delays` / `f.budgets`):
             // the work list carries WHEN and HOW MANY, not just WHAT —
             // per-host rank via the bounded heap (never a window, the
             // topPerHost argument), `fetch_offset = (pos−1)·delay`
@@ -854,7 +834,7 @@ object CorpusWatcher {
             // consumer never re-implements politeness. Candidates
             // beyond the cap/budget are NOT queued and NOT remembered:
             // still-linked pages re-candidate next batch.
-            val out = if (frontierDelays.isEmpty && frontierBudgets.isEmpty) grouped
+            val out = if (f.delays.isEmpty && f.budgets.isEmpty) grouped
             else {
               // the bounded-heap cap re-derives rows from (host, url);
               // provenance rejoins from the staged grouped table on
@@ -862,7 +842,7 @@ object CorpusWatcher {
               val capped = grouped
                 .groupBy(col("link_host"))
                 .agg(graft.functions.TopKByScore.topK(
-                  col("n_refs"), col("link_url"), frontierPerHostCap).as("_tk"))
+                  col("n_refs"), col("link_url"), f.perHostCap).as("_tk"))
                 .select(col("link_host"),
                   posexplode(col("_tk")).as(Seq("_p", "_e")))
                 .select(md5(col("_e.id")).as("url_key"),
@@ -870,7 +850,7 @@ object CorpusWatcher {
                   col("_e.score").as("n_refs"), (col("_p") + 1).as("pos"))
                 .join(grouped.select(col("url_key"), col("src"), col("src_doc_id")),
                   Seq("url_key"))
-              val withDelay = frontierDelays match {
+              val withDelay = f.delays match {
                 case Some(d) => capped.join(
                   broadcast(d.select(col("host").as("link_host"), col("crawl_delay"))),
                   Seq("link_host"), "left")
@@ -878,13 +858,13 @@ object CorpusWatcher {
               }
               val withOffset = withDelay.withColumn("fetch_offset",
                 (col("pos") - 1).cast("double") *
-                  coalesce(col("crawl_delay"), lit(frontierDefaultDelay)))
-              val sliced = frontierBudgets match {
+                  coalesce(col("crawl_delay"), lit(f.defaultDelay)))
+              val sliced = f.budgets match {
                 case Some(b) => withOffset
                   .join(broadcast(b.select(col("node").as("link_host"), col("fetch_budget"))),
                     Seq("link_host"), "left")
                   .where(col("pos") <= coalesce(col("fetch_budget"),
-                    lit(frontierPerHostCap.toLong)))
+                    lit(f.perHostCap.toLong)))
                   .drop("fetch_budget")
                 case None => withOffset
               }
@@ -925,7 +905,7 @@ object CorpusWatcher {
             // the adaptive gate's stats publish needs per-doc token
             // counts — ride the gate's tokenize pass instead of
             // paying a second one at stats time
-            keepTokenCount = adaptiveMixtureGate.nonEmpty))
+            keepTokenCount = adaptiveGate.nonEmpty))
         }
         // model gate after the cheap predicate gate: score against the
         // frozen weight table, keep where logit >= the gate's bias —
@@ -934,7 +914,7 @@ object CorpusWatcher {
         // routes through, so stream and chain can never disagree)
         // a provider re-resolves the serving gate THIS batch (the live
         // drift-loop seam); a frozen gate serves as passed
-        val batchGate = classifierGateProvider.map(_(session)).orElse(classifierGate)
+        val batchGate = classifierGate.map(_(session))
         val scored = batchGate match {
           case None => clean
           case Some(g) =>
@@ -972,7 +952,7 @@ object CorpusWatcher {
             dedupedF
           case Some(bd) =>
             val bands0 = staged(graft.ops.Dedup.minhashBands(uncontaminated, tok = tok))
-            val afterHistory = accumulatedBands(session, bd, excludeBatchId = batchId)
+            val afterHistory = accumulatedPartitions(session, bd, excludeBatchId = batchId)
               .map(h => staged(
                 graft.ops.Dedup.dropDuplicatesAgainstBands(uncontaminated, bands0, h)))
               .getOrElse(uncontaminated)
@@ -999,10 +979,10 @@ object CorpusWatcher {
         // candidate set is the post-gate corpus, mixture is admission
         // policy on top) — content-independent, so no state beyond the
         // adaptive gate's accumulated per-source token table
-        val admitted = (mixtureGate, adaptiveMixtureGate) match {
-          case (Some(g), _) =>
+        val admitted = mixtureGate match {
+          case Some(g: MixtureGate) =>
             graft.ops.Sampling.mixture(kept, "source", "doc_id", g.rates, g.defaultRate)
-          case (None, Some(g)) =>
+          case Some(g: AdaptiveMixtureGate) =>
             // 0. finish any interrupted stats compaction BEFORE reading
             //    or writing the table (one marker existence probe — the
             //    guarantee that no read here ever sees the crash state)
@@ -1044,7 +1024,7 @@ object CorpusWatcher {
             keptStats.join(broadcast(rates), Seq("source"), "left")
               .filter(b < floor(coalesce(col("rate"), lit(g.defaultRate)) * 10000))
               .select(keptStats.columns.map(col): _*)
-          case (None, None) => kept
+          case None => kept
         }
         // substring-level strip LAST (rewrite only what is admitted):
         // regions the accumulated anchor history has seen are cut out;
@@ -1133,7 +1113,7 @@ object CorpusWatcher {
             }
         }
         val old = currentIndex(session, indexDir, positional)
-        driftDir.foreach { dd =>
+        drift.foreach { case Drift(dd, refresh) =>
           // history side straight from the index's (word, cnt) — the
           // accumulated corpus is never re-tokenized; written before
           // the swap, while the old snapshot is guaranteed on disk
@@ -1146,7 +1126,7 @@ object CorpusWatcher {
             graft.ops.TextAnalysis.bucketCounts(content, buckets),
             histCounts, buckets, session)
             .coalesce(1).write.mode("overwrite").parquet(s"$dd/batch_id=$batchId")
-          // drift ACTED ON (`refreshDir`): the batch's divergence row
+          // drift ACTED ON (`refresh`): the batch's divergence row
           // against declared per-artifact thresholds → the refresh-due
           // decision, recorded per batch with the same overwrite
           // replay idempotence as the drift row it consumes (read back
@@ -1155,10 +1135,10 @@ object CorpusWatcher {
           // EMPTY history, so its decision says "everything is new",
           // not "the feed drifted" — schedulers should act from
           // batch 1 on ([[refreshDecisions]] exposes batch ids).
-          refreshDir.foreach { rd =>
+          refresh.foreach { r =>
             val idxSignals = graft.ops.TextAnalysis.driftRefreshSignals(
               session.read.parquet(s"$dd/batch_id=$batchId"), "index")
-            // the TOKENIZER leg of the drift loop (`unkVocab`): the
+            // the TOKENIZER leg of the drift loop (`r.unkVocab`): the
             // deployed WordPiece vocab measures this batch's admitted
             // feed per source, and the resulting `tokenizer:<source>`
             // due-rows land in the SAME decision partition — the input
@@ -1167,13 +1147,13 @@ object CorpusWatcher {
             // recorded by the stream itself, not hand-assembled. One
             // extra tokenize scan of the admitted batch (vocab is
             // model-sized; the encode is the native serving expression)
-            val signals = unkVocab match {
+            val signals = r.unkVocab match {
               case None => idxSignals
               case Some(v) => idxSignals.unionByName(
                 graft.ops.TextAnalysis.unkRefreshSignals(
                   graft.ops.WordPiece.unkSignals(admitted, v, tok = tok)))
             }
-            // the CLASSIFIER leg (`classifierDrift`): this batch's
+            // the CLASSIFIER leg (`r.classifierDrift`): this batch's
             // per-source drop rates under the serving gate —
             // `classifier:<source>` rows in the SAME decision
             // partition, the input [[ClassifierRefresher.retrainIfDue]]
@@ -1181,13 +1161,13 @@ object CorpusWatcher {
             // stage ledger entries, so the cost is two source-keyed
             // aggregates over checkpointed blocks, no new scan.
             // Declare thresholds as `(classifier:<source>, drop_rate,
-            // t)` rows in `refreshThresholds`.
+            // t)` rows in `r.thresholds`.
             val signals2 =
-              if (!classifierDrift) signals
+              if (!r.classifierDrift) signals
               else signals.unionByName(
                 graft.ops.Curation.classifierDriftSignals(clean, scored))
-            graft.ops.TextAnalysis.refreshDue(signals2, refreshThresholds.get)
-              .coalesce(1).write.mode("overwrite").parquet(s"$rd/batch_id=$batchId")
+            graft.ops.TextAnalysis.refreshDue(signals2, r.thresholds)
+              .coalesce(1).write.mode("overwrite").parquet(s"${r.dir}/batch_id=$batchId")
           }
         }
         // doc store (`docStoreDir`): the admitted corpus TEXT, exactly
@@ -1210,7 +1190,7 @@ object CorpusWatcher {
           // count only the frames a knob actually changed; pass-through
           // stages reuse the upstream count (no extra action)
           val nIngest = batch.count()
-          val urlGateOn = urlHistoryDir.isDefined || recrawlDir.isDefined
+          val urlGateOn = urlGate.isDefined
           val nParsed = if (urlGateOn) parsed0.count() else parsed.count()
           val nUrl = if (urlGateOn) parsed.count() else nParsed
           // html extraction rewrites text but never drops rows — the
@@ -1226,7 +1206,7 @@ object CorpusWatcher {
           val nWithin = if (dedupWithinBatch) dedupedF.count() else nHist
           val nKept = if (kept eq dedupedF) nWithin else kept.count()
           val nMix =
-            if (mixtureGate.isDefined || adaptiveMixtureGate.isDefined) admitted.count()
+            if (mixtureGate.isDefined) admitted.count()
             else nKept
           // the frontier row counts EMITTED frontier URLs, not
           // surviving docs (the stage queues work, it never drops a
@@ -1291,12 +1271,15 @@ object CorpusWatcher {
         // double-count token mass.
         compactEvery.foreach { n =>
           if (batchId % n == (n - 1).toLong) {
+            val urlDirs = urlGate.toSeq.flatMap {
+              case UrlIdentityGate(ud, f) => ud +: f.map(_.dir).toSeq
+              case RecrawlGate(rd) => Seq(recrawlGateDir(rd)) // gate set only — never the raw fetch log
+            }
             (dedupBandsDir.toSeq ++ spanHistoryDir ++ paraHistoryDir ++
-              sentenceSpanHistoryDir ++ urlHistoryDir ++ frontierDir ++
-              recrawlDir.map(recrawlGateDir) ++ // gate set only — never the raw fetch log
+              sentenceSpanHistoryDir ++ urlDirs ++
               distinctDir) // registers dedup-fold-safe (the reader MAXes)
               .foreach(dir => compactHistory(session, dir))
-            adaptiveMixtureGate.foreach(g => compactStats(session, g.statsDir))
+            adaptiveGate.foreach(g => compactStats(session, g.statsDir))
             // the length buckets are SUM-consumed, so they take the
             // marker-protocol fold with the READER'S aggregate — never
             // compactHistory, whose .distinct() would collapse
@@ -1325,52 +1308,6 @@ object CorpusWatcher {
     (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
   }
 
-  /** Compact an append-only `batch_id=N`-partitioned history table
-    * (dedup bands, anchor sites): rewrite every partition EXCEPT the
-    * newest batch's into one, so the partition/file count stops
-    * growing one-per-batch forever — at daily-crawl cadence the
-    * file listing, not the data, becomes the history's bottleneck.
-    * Returns the number of source partitions compacted (0 = nothing
-    * to do).
-    *
-    * Safety contract, in order of importance:
-    *
-    *  - REPLAY: the newest batch partition is never touched. A
-    *    restarted stream replays at most its last uncommitted batch,
-    *    and [[accumulatedPartitions]] hides that batch's
-    *    first-attempt rows by its `batch_id`; folding them into a
-    *    compacted partition would un-hide them and make the replayed
-    *    batch dedup against itself. Everything older is committed and
-    *    can no longer replay.
-    *  - ID SPACE: compacted partitions get FRESH NEGATIVE ids
-    *    (`batch_id=-1, -2, …`). Streaming batch ids are non-negative,
-    *    so a future batch can neither overwrite a compacted partition
-    *    nor exclude it as its own replay; re-compaction folds older
-    *    compacted partitions in and moves further down.
-    *  - CRASH: write-then-delete. The combined partition lands under
-    *    a fresh id first; only then are the sources deleted
-    *    (individually idempotent). A crash between the two leaves
-    *    DUPLICATE rows, which every INTENDED consumer tolerates — the
-    *    band, anchor, and paragraph histories feed semi-joins, where
-    *    multiplicity is invisible — and which the next compaction run
-    *    clears FOR REAL: the compaction read is `.distinct()`
-    *    (key-only tables, so row dedup is semantics-preserving), so
-    *    crash-window duplicates — and ordinary cross-batch repeats of
-    *    the same key — collapse instead of persisting in every future
-    *    compacted generation. Do NOT auto-compact tables whose
-    *    consumers SUM rows (the adaptive gate's stats dir): the crash
-    *    window double-counts there; use [[compactStats]], whose
-    *    re-aggregation + marker-file contract is sum-safe.
-    *  - CONCURRENT APPEND: a batch landing mid-run gets a fresh
-    *    higher id the listing never saw; it is simply not compacted
-    *    this round.
-    *
-    * Scale shape: one read of the source partitions, one hash-only
-    * `.distinct()` shuffle (rows are band/anchor/paragraph KEYS — the
-    * text never entered the history), one write. Size `numFiles` to
-    * the history's data volume (1 is right until a single partition's
-    * rows stop fitting one task's write).
-    */
   /** The recrawl gate's SERVING face: run
     * [[graft.ops.Crawl.recrawlPolicy]] over the accumulated
     * `recrawlDir` fetch log — partitions are `(url_key, content_hash)`
@@ -1439,7 +1376,7 @@ object CorpusWatcher {
       Seq("g"), qs).select("q", "est")
   }
 
-  /** Refresh decisions from a [[startJsonl]] `refreshDir`:
+  /** Refresh decisions from a [[startJsonl]] [[Refresh]] `dir`:
     * `(batch_id, artifact, metric, value, threshold, due)` — one
     * decision row per declared threshold per batch. Batch-id-keyed
     * and per-batch overwritten (replay idempotent); the latest batch's
@@ -1466,24 +1403,78 @@ object CorpusWatcher {
       .groupBy("doc_id")
       .agg(max_by(col("text"), col("batch_id")).as("text"))
 
+  /** Compact an append-only `batch_id=N`-partitioned history table
+    * (dedup bands, anchor sites): rewrite every partition EXCEPT the
+    * newest batch's into one, so the partition/file count stops
+    * growing one-per-batch forever — at daily-crawl cadence the
+    * file listing, not the data, becomes the history's bottleneck.
+    * Returns the number of source partitions compacted (0 = nothing
+    * to do).
+    *
+    * Safety contract, in order of importance:
+    *
+    *  - REPLAY: the newest batch partition is never touched. A
+    *    restarted stream replays at most its last uncommitted batch,
+    *    and [[accumulatedPartitions]] hides that batch's
+    *    first-attempt rows by its `batch_id`; folding them into a
+    *    compacted partition would un-hide them and make the replayed
+    *    batch dedup against itself. Everything older is committed and
+    *    can no longer replay.
+    *  - ID SPACE: compacted partitions get FRESH NEGATIVE ids
+    *    (`batch_id=-1, -2, …`). Streaming batch ids are non-negative,
+    *    so a future batch can neither overwrite a compacted partition
+    *    nor exclude it as its own replay; re-compaction folds older
+    *    compacted partitions in and moves further down.
+    *  - CRASH: write-then-delete. The combined partition lands under
+    *    a fresh id first; only then are the sources deleted
+    *    (individually idempotent). A crash between the two leaves
+    *    DUPLICATE rows, which every INTENDED consumer tolerates — the
+    *    band, anchor, and paragraph histories feed semi-joins, where
+    *    multiplicity is invisible — and which the next compaction run
+    *    clears FOR REAL: the compaction read is `.distinct()`
+    *    (key-only tables, so row dedup is semantics-preserving), so
+    *    crash-window duplicates — and ordinary cross-batch repeats of
+    *    the same key — collapse instead of persisting in every future
+    *    compacted generation. Do NOT auto-compact tables whose
+    *    consumers SUM rows (the adaptive gate's stats dir): the crash
+    *    window double-counts there; use [[compactStats]], whose
+    *    re-aggregation + marker-file contract is sum-safe.
+    *  - CONCURRENT APPEND: a batch landing mid-run gets a fresh
+    *    higher id the listing never saw; it is simply not compacted
+    *    this round.
+    *
+    * Scale shape: one read of the source partitions, one hash-only
+    * `.distinct()` shuffle (rows are band/anchor/paragraph KEYS — the
+    * text never entered the history), one write. Size `numFiles` to
+    * the history's data volume (1 is right until a single partition's
+    * rows stop fitting one task's write).
+    */
   def compactHistory(session: SparkSession, dir: String, numFiles: Int = 1): Int = {
     require(numFiles >= 1, s"numFiles=$numFiles must be >= 1")
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(session.sessionState.newHadoopConf())
-    if (!fs.exists(root)) return 0
-    val parts = fs.listStatus(root).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch_id="))
-      .map(st => st.getPath.getName.stripPrefix("batch_id=").toLong -> st.getPath)
+    foldPlan(session, dir) match {
+      case None => 0
+      case Some((sources, target)) =>
+        session.read.parquet(sources.map(_.toString): _*)
+          .distinct()
+          .coalesce(numFiles)
+          .write.mode("overwrite").parquet(s"$dir/batch_id=$target")
+        val fs = fsOf(session, dir)
+        sources.foreach(fs.delete(_, true))
+        sources.size
+    }
+  }
+
+  /** What a compaction run folds: every `batch_id=N` partition under
+    * `dir` except the newest non-negative batch's, into a fresh
+    * negative id below every existing one (see [[compactHistory]]'s
+    * REPLAY and ID SPACE rules); None when fewer than two partitions
+    * qualify. */
+  private def foldPlan(session: SparkSession, dir: String): Option[(Seq[Path], Long)] = {
+    val parts = batchPartitions(session, dir)
     val newestBatch = parts.map(_._1).filter(_ >= 0).maxOption
     val sources = parts.filterNot { case (id, _) => newestBatch.contains(id) }
-    if (sources.size < 2) return 0
-    val target = math.min(parts.map(_._1).min, 0L) - 1L
-    session.read.parquet(sources.map(_._2.toString): _*)
-      .distinct()
-      .coalesce(numFiles)
-      .write.mode("overwrite").parquet(s"$dir/batch_id=$target")
-    sources.foreach { case (_, p) => fs.delete(p, true) }
-    sources.size
+    if (sources.size < 2) None
+    else Some((sources.map(_._2), math.min(parts.map(_._1).min, 0L) - 1L))
   }
 
   /** SUM-SAFE compaction for the adaptive gate's per-source stats table
@@ -1530,32 +1521,24 @@ object CorpusWatcher {
     * no reader-visible value. */
   def compactStatsWith(session: SparkSession, dir: String)(
       fold: DataFrame => DataFrame): Int = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(session.sessionState.newHadoopConf())
-    if (!fs.exists(root)) return 0
+    val root = new Path(dir)
+    val fs = fsOf(session, dir)
     recoverStats(session, dir)
-    val parts = fs.listStatus(root).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch_id="))
-      .map(st => st.getPath.getName.stripPrefix("batch_id=").toLong -> st.getPath)
-    val newestBatch = parts.map(_._1).filter(_ >= 0).maxOption
-    val sources = parts.filterNot { case (id, _) => newestBatch.contains(id) }
-    if (sources.size < 2) return 0
-    val target = math.min(parts.map(_._1).min, 0L) - 1L
-    val tmp = new org.apache.hadoop.fs.Path(root, ".compact_tmp")
-    fs.delete(tmp, true)
-    fold(session.read.parquet(sources.map(_._2.toString): _*))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(tmp.toString)
-    val markerTmp = new org.apache.hadoop.fs.Path(root, ".compact_marker.tmp")
-    val marker = new org.apache.hadoop.fs.Path(root, ".compact_marker")
-    val body = (s"batch_id=$target" +: sources.map(_._2.getName)).mkString("\n")
-    val out = fs.create(markerTmp, true)
-    out.write(body.getBytes("UTF-8")); out.close()
-    fs.rename(markerTmp, marker)
-    fs.rename(tmp, new org.apache.hadoop.fs.Path(root, s"batch_id=$target"))
-    sources.foreach { case (_, p) => fs.delete(p, true) }
-    fs.delete(marker, false)
-    sources.size
+    foldPlan(session, dir) match {
+      case None => 0
+      case Some((sources, target)) =>
+        val tmp = new Path(root, StatsTmp)
+        fs.delete(tmp, true)
+        fold(session.read.parquet(sources.map(_.toString): _*))
+          .coalesce(1)
+          .write.mode("overwrite").parquet(tmp.toString)
+        ArtifactVersions.writeFile(session, dir, StatsMarker,
+          (s"batch_id=$target" +: sources.map(_.getName)).mkString("\n"))
+        rename(fs, tmp, new Path(root, s"batch_id=$target"))
+        sources.foreach(fs.delete(_, true))
+        fs.delete(new Path(root, StatsMarker), false)
+        sources.size
+    }
   }
 
   /** Crash recovery for [[compactStats]]: replay the marker's remaining
@@ -1563,49 +1546,46 @@ object CorpusWatcher {
     * (sources all intact) and is deleted. Marker present → the tmp holds
     * (or the target already holds) the sources' exact sums: make the
     * target visible if it isn't, delete the named sources, drop the
-    * marker. Idempotent — every step checks before acting. */
+    * marker. Only a DIRECTORY at the target name is a finished fold: a
+    * stray file there fails the move loudly and keeps every source.
+    * Idempotent — every step checks before acting. */
   def recoverStats(session: SparkSession, dir: String): Unit = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(session.sessionState.newHadoopConf())
-    if (!fs.exists(root)) return
-    val marker = new org.apache.hadoop.fs.Path(root, ".compact_marker")
-    val tmp = new org.apache.hadoop.fs.Path(root, ".compact_tmp")
-    if (!fs.exists(marker)) {
-      fs.delete(tmp, true) // pre-marker crash: visible table intact
-      fs.delete(new org.apache.hadoop.fs.Path(root, ".compact_marker.tmp"), false)
-      return
+    val root = new Path(dir)
+    val fs = fsOf(session, dir)
+    val tmp = new Path(root, StatsTmp)
+    ArtifactVersions.readFile(session, dir, StatsMarker) match {
+      case None =>
+        fs.delete(tmp, true) // pre-marker crash: visible table intact
+        fs.delete(new Path(root, s"$StatsMarker.tmp"), false)
+      case Some(body) =>
+        val lines = body.split("\n").toSeq
+        val target = new Path(root, lines.head)
+        def folded = fs.exists(target) && fs.getFileStatus(target).isDirectory
+        if (!folded && fs.exists(tmp)) rename(fs, tmp, target)
+        if (folded) {
+          lines.tail.foreach(n => fs.delete(new Path(root, n), true))
+          fs.delete(new Path(root, StatsMarker), false)
+        }
+      // marker without tmp or target cannot occur (tmp write precedes the
+      // marker); if it somehow does, leave the marker for inspection
+      // rather than guessing — sources are still intact, sums correct
     }
-    val in = fs.open(marker)
-    val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    val lines = body.split("\n").toSeq
-    val targetDir = new org.apache.hadoop.fs.Path(root, lines.head)
-    if (!fs.exists(targetDir) && fs.exists(tmp)) fs.rename(tmp, targetDir)
-    if (fs.exists(targetDir)) {
-      lines.tail.foreach(n => fs.delete(new org.apache.hadoop.fs.Path(root, n), true))
-      fs.delete(marker, false)
-    }
-    // marker without tmp or target cannot occur (tmp write precedes the
-    // marker); if it somehow does, leave the marker for inspection
-    // rather than guessing — sources are still intact, sums correct
   }
 
-  /** The accumulated dedup band table under `bandsDir`, EXCLUDING the
-    * partition a replayed `excludeBatchId` wrote on its first attempt;
-    * None before any batch has published bands (partition discovery
-    * cannot infer a schema from an empty root). The existence probe
-    * goes through the Hadoop FileSystem API — the band table lives
-    * wherever Spark can write (HDFS/object store on a cluster), so a
-    * java.nio check would silently report "no history" forever on any
-    * non-local path and turn the dedup filter into a no-op. */
-  private def accumulatedBands(
-      session: SparkSession,
-      bandsDir: String,
-      excludeBatchId: Long): Option[DataFrame] =
-    accumulatedPartitions(session, bandsDir, excludeBatchId)
+  /** `FileSystem.rename` reports some failures — a file already at
+    * `dst`, a missing parent — only through its result; fail loudly on
+    * those, before the caller deletes anything the rename was meant to
+    * replace. */
+  private def rename(fs: FileSystem, src: Path, dst: Path): Unit =
+    if (!fs.rename(src, dst))
+      throw new java.io.IOException(s"could not rename $src to $dst")
+
+  private def fsOf(session: SparkSession, dir: String): FileSystem =
+    new Path(dir).getFileSystem(session.sessionState.newHadoopConf())
 
   /** The recrawl gate's probe-set dir — the compactable sibling of
-    * the raw fetch log (see the [[startJsonl]] scaladoc's probe-set /
-    * log split). Derived, not configured: the two stores are one
+    * the raw fetch log (see [[RecrawlGate]]'s probe-set / log
+    * split). Derived, not configured: the two stores are one
     * feature and must never point at each other. */
   def recrawlGateDir(recrawlDir: String): String =
     s"${recrawlDir.stripSuffix("/")}.gate"
@@ -1623,12 +1603,7 @@ object CorpusWatcher {
       logDir: String,
       gateDir: String,
       excludeBatchId: Long): Unit = {
-    val root = new org.apache.hadoop.fs.Path(gateDir)
-    val fs = root.getFileSystem(session.sessionState.newHadoopConf())
-    val gateHasAny = fs.exists(root) &&
-      fs.listStatus(root).exists(st =>
-        st.isDirectory && st.getPath.getName.startsWith("batch_id="))
-    if (gateHasAny) return
+    if (batchPartitions(session, gateDir).nonEmpty) return
     accumulatedPartitions(session, logDir, excludeBatchId).foreach { h =>
       h.select("url_key", "content_hash").distinct()
         .write.mode("overwrite").parquet(s"$gateDir/batch_id=-1")
@@ -1636,8 +1611,9 @@ object CorpusWatcher {
   }
 
   /** Stamp/verify [[graft.ops.Crawl.CanonVersion]] on a URL-keyed
-    * history dir (`urlHistoryDir`, `frontierDir`, `recrawlDir` — the
-    * gate sibling shares its log's stamp): the keys these dirs hold
+    * history dir (a [[UrlIdentityGate]]'s, its [[Frontier]]'s, a
+    * [[RecrawlGate]]'s log — the gate sibling shares its log's stamp):
+    * the keys these dirs hold
     * are md5 of CANONICAL urls, so a canonicalization-rules upgrade
     * silently invalidates them (every URL whose key changed would be
     * re-admitted/re-queued once). The `_canon_version` marker —
@@ -1647,84 +1623,71 @@ object CorpusWatcher {
     * A pre-versioning dir (partitions, no marker) adopts the current
     * stamp — the one upgrade this cannot catch, documented in
     * [[graft.ops.Crawl.CanonVersion]]'s contract. */
-  private def ensureCanonVersion(session: SparkSession, dir: String): Unit = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(session.sessionState.newHadoopConf())
-    val marker = new org.apache.hadoop.fs.Path(root, "_canon_version")
-    if (fs.exists(marker)) {
-      val in = fs.open(marker)
-      val v = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-      if (v != graft.ops.Crawl.CanonVersion.toString)
+  private def ensureCanonVersion(session: SparkSession, dir: String): Unit =
+    ArtifactVersions.readFile(session, dir, "_canon_version") match {
+      case Some(v) if v != graft.ops.Crawl.CanonVersion.toString =>
         throw new IllegalStateException(
           s"history dir $dir was written under URL-canonicalization rules v$v; " +
             s"this engine is v${graft.ops.Crawl.CanonVersion}. Keys no longer " +
             "match — rebuild the dir from raw inputs (or serve it with the " +
             "engine version that wrote it); serving mismatched keys silently " +
             "re-admits and re-queues previously seen URLs.")
-    } else {
-      if (!fs.exists(root)) fs.mkdirs(root)
-      val tmp = new org.apache.hadoop.fs.Path(root, "._canon_version.tmp")
-      val out = fs.create(tmp, true)
-      out.write(graft.ops.Crawl.CanonVersion.toString.getBytes("UTF-8"))
-      out.close()
-      fs.rename(tmp, marker)
+      case Some(_) => ()
+      case None => ArtifactVersions.writeFile(
+        session, dir, "_canon_version", graft.ops.Crawl.CanonVersion.toString)
     }
+
+  /** The `batch_id=N` partition dirs under `dir`, as (N, path);
+    * empty when `dir` is absent. The probe goes through the Hadoop
+    * FileSystem API — the histories live wherever Spark can write
+    * (HDFS/object store on a cluster), so a local-disk check would
+    * silently report "no history" forever on any non-local path and
+    * turn every history filter into a no-op. */
+  private[streaming] def batchPartitions(
+      session: SparkSession, dir: String): Seq[(Long, Path)] = {
+    val root = new Path(dir)
+    val fs = fsOf(session, dir)
+    if (!fs.exists(root)) Nil
+    else fs.listStatus(root).toSeq
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch_id="))
+      .flatMap(st =>
+        st.getPath.getName.stripPrefix("batch_id=").toLongOption.map(_ -> st.getPath))
   }
 
   /** Any append-only `batch_id=N`-partitioned history table (bands,
-    * anchor sites), EXCLUDING a replayed batch's own first-attempt
-    * partition; None before any batch has published. */
-  private def accumulatedPartitions(
+    * anchor sites, URL keys, serving tables), EXCLUDING a replayed
+    * batch's own first-attempt partition; None before any batch has
+    * published (partition discovery cannot infer a schema from an
+    * empty root). */
+  private[streaming] def accumulatedPartitions(
       session: SparkSession,
       dir: String,
-      excludeBatchId: Long): Option[DataFrame] = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(session.sessionState.newHadoopConf())
-    val hasAny = fs.exists(root) &&
-      fs.listStatus(root).exists(st =>
-        st.isDirectory && st.getPath.getName.startsWith("batch_id="))
-    if (!hasAny) None
+      excludeBatchId: Long): Option[DataFrame] =
+    if (batchPartitions(session, dir).isEmpty) None
     else Some(session.read.parquet(dir).filter(col("batch_id") =!= excludeBatchId))
-  }
 
-  /** Write the merged index to a new snapshot dir, atomically swap the
-    * LATEST pointer to it, and GC superseded snapshots — the one
-    * publish discipline both watchers share (a future change to the
-    * swap — fsync, object-store-safe rename, retention — lands in one
-    * place). Returns the snapshot name. */
+  /** Write the merged index to a new snapshot dir, swap the `LATEST`
+    * pointer to it ([[ArtifactVersions.writeFile]]: write aside, rename
+    * over), and GC superseded snapshots — the one publish discipline
+    * both watchers share. Returns the snapshot name. */
   private def swapSnapshot(
       merged: DataFrame,
       indexDir: String,
       batchId: Long,
       retain: Int): String = {
+    val session = merged.sparkSession
     // Snapshot ids are max(batchId, newest existing + 1), NOT the raw
     // batch id: an existing indexDir paired with a fresh checkpointDir
     // restarts batch ids at 0, and a raw-id name would collide with —
     // and overwrite — the very snapshot `merged` is lazily reading
     // (currentIndex resolves LATEST before this write executes).
-    val snapId = math.max(batchId, snapshotIds(indexDir).maxOption.map(_ + 1L).getOrElse(0L))
+    val newest = ArtifactVersions.numbered(session, indexDir, Snapshot).lastOption
+    val snapId = math.max(batchId, newest.map(_._1 + 1L).getOrElse(0L))
     val snap = f"snap-$snapId%09d"
     merged.write.mode("overwrite").parquet(s"$indexDir/$snap")
-    // atomic pointer swap: write-temp + move
-    val tmp = Paths.get(indexDir, s".$Latest.tmp")
-    Files.write(tmp, snap.getBytes("UTF-8"))
-    Files.move(tmp, Paths.get(indexDir, Latest),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    gcSnapshots(indexDir, retain)
+    ArtifactVersions.writeFile(session, indexDir, Latest, snap)
+    gcSnapshots(session, indexDir, retain)
     snap
-  }
-
-  /** Numeric ids of the existing `snap-*` dirs under `indexDir`. */
-  private def snapshotIds(indexDir: String): Vector[Long] = {
-    val dir = Paths.get(indexDir)
-    if (!Files.isDirectory(dir)) return Vector.empty
-    val s = Files.list(dir)
-    try s.iterator().asScala
-      .filter(p => Files.isDirectory(p) && p.getFileName.toString.matches("snap-\\d+"))
-      .map(_.getFileName.toString.stripPrefix("snap-").toLong)
-      .toVector
-    finally s.close()
   }
 
   /** Delete all but the newest `retain` snapshot dirs, ordered by the
@@ -1737,35 +1700,14 @@ object CorpusWatcher {
     * batch ids restart at 0, making the just-published snapshot the
     * numerically oldest; dropping it would leave LATEST dangling).
     * `retain >= 2` additionally leaves the previous snapshot for
-    * in-flight readers. Deletion failures are non-fatal (a stale dir
-    * costs storage, not correctness) — the next batch retries.
+    * in-flight readers. This is [[ArtifactVersions.prune]]'s rule with
+    * `LATEST` as the pointer. Deletion failures are non-fatal (a stale
+    * dir costs storage, not correctness) — the next batch retries.
     */
-  private[graft] def gcSnapshots(indexDir: String, retain: Int): Unit = {
-    val dir = Paths.get(indexDir)
-    if (!Files.isDirectory(dir)) return
-    val published: Option[String] = {
-      val ptr = Paths.get(indexDir, Latest)
-      if (Files.exists(ptr)) Some(new String(Files.readAllBytes(ptr), "UTF-8").trim)
-      else None
+  private[graft] def gcSnapshots(session: SparkSession, indexDir: String, retain: Int): Unit =
+    try ArtifactVersions.pruneNumbered(session, indexDir, Latest, Snapshot, retain)
+    catch {
+      case e: java.io.IOException =>
+        System.err.println(s"[graft] CorpusWatcher: snapshot GC under $indexDir failed: $e")
     }
-    val snaps = {
-      val s = Files.list(dir)
-      try s.iterator().asScala
-        .filter(p => Files.isDirectory(p) && p.getFileName.toString.matches("snap-\\d+"))
-        .toVector.sortBy(p => p.getFileName.toString.stripPrefix("snap-").toLong)
-      finally s.close()
-    }
-    snaps.dropRight(retain)
-      .filterNot(p => published.contains(p.getFileName.toString))
-      .foreach { old =>
-      try {
-        val walk = Files.walk(old)
-        try walk.iterator().asScala.toVector.reverseIterator.foreach(Files.deleteIfExists(_))
-        finally walk.close()
-      } catch {
-        case e: java.io.IOException =>
-          System.err.println(s"[graft] CorpusWatcher: snapshot GC of $old failed: $e")
-      }
-    }
-  }
 }

@@ -109,8 +109,8 @@ object EmbeddingIndexer {
         val gated = dedupD2 match {
           case None => clean
           case Some(d2max) =>
-            (accumulated(session, assignmentsDir, batchId),
-              accumulated(session, codesDir, batchId)) match {
+            (CorpusWatcher.accumulatedPartitions(session, assignmentsDir, batchId),
+              CorpusWatcher.accumulatedPartitions(session, codesDir, batchId)) match {
               case (Some(accAssign), Some(accCodes)) =>
                 val search =
                   if (residual)
@@ -142,20 +142,15 @@ object EmbeddingIndexer {
   }
 
   /** The drift loop's LAST link: has the LATEST recorded refresh
-    * decision ([[CorpusWatcher.startJsonl]]'s `refreshDir`) flagged
-    * `artifact` due? `minBatchId` defaults past batch 0 — the
+    * decision (a [[CorpusWatcher.Refresh]] dir) flagged `artifact`
+    * due? `minBatchId` defaults past batch 0 — the
     * cold-start decision compares the first feed to an EMPTY history
     * and must not trigger a rebuild. Missing/empty dir = false (no
     * decision is not a decision). Returns the deciding batch id. */
   def latestDue(
       session: SparkSession, refreshDir: String,
       artifact: String = "index", minBatchId: Long = 1L): Option[Long] = {
-    val root = new org.apache.hadoop.fs.Path(refreshDir)
-    val fs = root.getFileSystem(session.sessionState.newHadoopConf())
-    val hasAny = fs.exists(root) &&
-      fs.listStatus(root).exists(st =>
-        st.isDirectory && st.getPath.getName.startsWith("batch_id="))
-    if (!hasAny) None
+    if (CorpusWatcher.batchPartitions(session, refreshDir).isEmpty) None
     else {
       val d = CorpusWatcher.refreshDecisions(session, refreshDir)
         .select(col("batch_id").cast("long").as("batch_id"),
@@ -262,19 +257,4 @@ object EmbeddingIndexer {
     * resolved dir to [[startJsonl]] / the search faces as today. */
   def servingDir(session: SparkSession, artifactsRoot: String): String =
     ArtifactVersions.currentDir(session, artifactsRoot).getOrElse(artifactsRoot)
-
-  /** The accumulated serving table under `dir`, EXCLUDING a replayed
-    * batch's own first-attempt partition; None before anything has
-    * published (the [[CorpusWatcher]] band-history discipline,
-    * Hadoop-FS probed so object-store paths work). */
-  private def accumulated(
-      session: SparkSession, dir: String, excludeBatchId: Long): Option[DataFrame] = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(session.sessionState.newHadoopConf())
-    val hasAny = fs.exists(root) &&
-      fs.listStatus(root).exists(st =>
-        st.isDirectory && st.getPath.getName.startsWith("batch_id="))
-    if (!hasAny) None
-    else Some(session.read.parquet(dir).filter(col("batch_id") =!= excludeBatchId))
-  }
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions.{col, lit}
 
 import graft.index.InvertedIndex
 import graft.streaming.CorpusWatcher
+import graft.streaming.CorpusWatcher.{Drift, Frontier, RecrawlGate, Refresh, UrlIdentityGate}
 import SparkSpec.spark.implicits._
 
 class CorpusWatcherSpec extends SparkSpec {
@@ -110,7 +111,7 @@ class CorpusWatcherSpec extends SparkSpec {
     }
     Seq("snap-000000000", "snap-000000005", "snap-000000006").foreach(mkSnap)
     Files.write(Paths.get(index, "LATEST"), "snap-000000000".getBytes("UTF-8"))
-    CorpusWatcher.gcSnapshots(index, retain = 2)
+    CorpusWatcher.gcSnapshots(spark, index, retain = 2)
     val left = {
       val s = Files.list(Paths.get(index))
       try {
@@ -123,7 +124,7 @@ class CorpusWatcherSpec extends SparkSpec {
     assert(left === Set("snap-000000000", "snap-000000005", "snap-000000006"))
     // and once LATEST moves on, plain retention applies again
     Files.write(Paths.get(index, "LATEST"), "snap-000000006".getBytes("UTF-8"))
-    CorpusWatcher.gcSnapshots(index, retain = 2)
+    CorpusWatcher.gcSnapshots(spark, index, retain = 2)
     val after = {
       val s = Files.list(Paths.get(index))
       try {
@@ -133,6 +134,63 @@ class CorpusWatcherSpec extends SparkSpec {
       } finally s.close()
     }
     assert(after === Set("snap-000000005", "snap-000000006"))
+  }
+
+  test("start, currentIndex and snapshot retention publish on a non-file: Hadoop scheme (viewfs)") {
+    // a viewfs mount of a local temp dir; the mount-table name is unique
+    // to this run, so the FileSystem cache entry it creates is this
+    // test's alone
+    val (watch, ckpt, local) = (tmp("watchvf"), tmp("ckptvf"), tmp("indexvf"))
+    val table = s"graftvf${System.nanoTime()}"
+    val link = s"fs.viewfs.mounttable.$table.link./index"
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set(link, new java.io.File(local).toURI.toString)
+    try {
+      val index = s"viewfs://$table/index"
+      val json = s"$index/final_results.json"
+      (1 to 3).foreach { i =>
+        writeDoc(watch, s"d$i.txt", s"word$i common")
+        CorpusWatcher.start(spark, watch, index, ckpt,
+          finalJsonPath = Some(json)).awaitTermination()
+      }
+      assert(indexEntries(index) === Set(("word1", "d1.txt", 1L), ("word2", "d2.txt", 1L),
+        ("word3", "d3.txt", 1L), ("common", "d1.txt", 1L), ("common", "d2.txt", 1L),
+        ("common", "d3.txt", 1L)))
+      // through the mount's local target: the parent-format layout, with
+      // retention applied
+      val snaps = new java.io.File(local).list().filter(_.matches("snap-\\d+")).sorted.toSeq
+      assert(snaps.size === 2, s"retention left $snaps")
+      val latest = new String(Files.readAllBytes(Paths.get(local, "LATEST")), "UTF-8").trim
+      assert(latest === snaps.last)
+      val exported = new String(Files.readAllBytes(Paths.get(local, "final_results.json")), "UTF-8")
+      assert(exported.contains("\"d3.txt\": 1"))
+      assert(!Files.exists(Paths.get(local, "final_results.json.tmp")))
+    } finally conf.unset(link)
+  }
+
+  test("startJsonl rejects out-of-range values, naming the field, before starting anything") {
+    val (watch, index, ckpt, quar) =
+      (tmp("watchrq"), tmp("indexrq"), tmp("ckptrq"), tmp("quarrq") + "/bad")
+    val (hist, fd) = (tmp("histrq") + "/urls", tmp("frontrq") + "/frontier")
+    val running = spark.streams.active.length
+    def rejects(field: String)(call: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](call)
+      assert(e.getMessage.contains(field), e.getMessage)
+    }
+    def withFrontier(f: Frontier) =
+      CorpusWatcher.startJsonl(spark, watch, index, ckpt, quar,
+        urlGate = Some(UrlIdentityGate(hist, Some(f))))
+    rejects("retainSnapshots")(
+      CorpusWatcher.startJsonl(spark, watch, index, ckpt, quar, retainSnapshots = 0))
+    rejects("compactEvery")(
+      CorpusWatcher.startJsonl(spark, watch, index, ckpt, quar, compactEvery = Some(0)))
+    rejects("perHostCap")(withFrontier(Frontier(fd, perHostCap = 0)))
+    rejects("defaultDelay")(withFrontier(Frontier(fd, defaultDelay = -1.0)))
+    rejects("classifierGate")(
+      CorpusWatcher.startJsonl(spark, watch, index, ckpt, quar,
+        drift = Some(Drift(tmp("driftrq"), Some(Refresh(tmp("refrq"), spark.emptyDataFrame,
+          classifierDrift = true))))))
+    assert(spark.streams.active.length === running)
   }
 
   test("JSONL quarantine replay is idempotent (per-batch overwrite, no duplicates)") {
@@ -338,7 +396,7 @@ class CorpusWatcherSpec extends SparkSpec {
       Seq(line(11L, Some("wiki")), line(12L, Some("wiki")), line(99L, None)))
     Files.write(Paths.get(watch, "feed-0.json"), (b0.mkString("\n") + "\n").getBytes("UTF-8"))
     CorpusWatcher.startJsonl(spark, watch, index, ckpt, quar,
-      adaptiveMixtureGate = gate).awaitTermination()
+      mixtureGate = gate).awaitTermination()
     val expect0 = (1L to 8L).filter(bucket(_) < 5000).toSet ++ Set(11L, 12L, 99L)
     def indexedDocs: Set[Long] = indexEntries(index).map(_._2.toLong)
     assert(indexedDocs === expect0)
@@ -348,7 +406,7 @@ class CorpusWatcherSpec extends SparkSpec {
     val b1 = (101L to 130L).map(i => line(i, Some("wiki")))
     Files.write(Paths.get(watch, "feed-1.json"), (b1.mkString("\n") + "\n").getBytes("UTF-8"))
     CorpusWatcher.startJsonl(spark, watch, index, ckpt, quar,
-      adaptiveMixtureGate = gate).awaitTermination()
+      mixtureGate = gate).awaitTermination()
     val expect1 = (101L to 130L).filter(bucket(_) < 5000).toSet
     assert(expect1.nonEmpty && expect1.size < 30, "fixture must be non-degenerate")
     assert(indexedDocs === expect0 ++ expect1)
@@ -380,7 +438,7 @@ class CorpusWatcherSpec extends SparkSpec {
     val b0 = (1L to 8L).map(line(_, "web")) ++ Seq(line(11L, "wiki"), line(12L, "wiki"))
     Files.write(Paths.get(watch, "feed-0.json"), (b0.mkString("\n") + "\n").getBytes("UTF-8"))
     CorpusWatcher.startJsonl(spark, watch, index, ckpt, quar,
-      adaptiveMixtureGate = gate).awaitTermination()
+      mixtureGate = gate).awaitTermination()
     def indexedDocs: Set[Long] = indexEntries(index).map(_._2.toLong)
     val expect0 = (1L to 8L).toSet ++ Set(11L, 12L)
     assert(indexedDocs === expect0)
@@ -390,7 +448,7 @@ class CorpusWatcherSpec extends SparkSpec {
     val b1 = (201L to 230L).map(line(_, "web"))
     Files.write(Paths.get(watch, "feed-1.json"), (b1.mkString("\n") + "\n").getBytes("UTF-8"))
     CorpusWatcher.startJsonl(spark, watch, index, ckpt, quar,
-      adaptiveMixtureGate = gate).awaitTermination()
+      mixtureGate = gate).awaitTermination()
     // threshold truncates to integer basis points (mixtureKeep parity)
     val expect1 = (201L to 230L).filter(bucket(_) < math.floor(0.263158 * 10000)).toSet
     assert(expect1.nonEmpty && expect1.size < 30, "fixture must be non-degenerate")
@@ -536,6 +594,25 @@ class CorpusWatcherSpec extends SparkSpec {
     assert(sums === all2)
   }
 
+  test("compactStats: a file at the fold's target name fails before any source is deleted") {
+    val dir = tmp("cstatsf") + "/stats"
+    (0 to 2).foreach { b =>
+      Seq(("src0", 1L, 10L)).toDF("source", "n_docs", "n_tokens")
+        .coalesce(1).write.parquet(s"$dir/batch_id=$b")
+    }
+    // batches 0 and 1 fold into batch_id=-1, where a regular file sits
+    Files.write(Paths.get(dir, "batch_id=-1"), "not a partition".getBytes("UTF-8"))
+    def sourcesKept(): Unit = Seq(0, 1).foreach { b =>
+      val files = Option(new java.io.File(dir, s"batch_id=$b").list()).toSeq.flatten
+      assert(files.exists(_.endsWith(".parquet")), s"batch_id=$b was deleted")
+    }
+    intercept[java.io.IOException](CorpusWatcher.compactStats(spark, dir))
+    sourcesKept()
+    // recovery does not take the file for a finished fold either
+    intercept[java.io.IOException](CorpusWatcher.recoverStats(spark, dir))
+    sourcesKept()
+  }
+
   test("dedupBandsDir: a replayed batch excludes its own first-attempt bands") {
     val (watch, index, quar, bands) =
       (tmp("watchrb"), tmp("indexrb"), tmp("quarrb") + "/bad", tmp("bandsrb") + "/bands")
@@ -590,8 +667,9 @@ class CorpusWatcherSpec extends SparkSpec {
     val weights = graft.ops.Curation.classifierWeights(pos, neg).cache()
     val evalSh = graft.ops.Dedup.evalShingles(
       Seq((100L, "the secret benchmark answer sequence")).toDF("doc_id", "text")).cache()
+    val gate = graft.ops.Curation.ClassifierGate(weights)
     def run(ckpt: String): Unit = CorpusWatcher.startJsonl(spark, watch, index, ckpt, quar,
-      classifierGate = Some(graft.ops.Curation.ClassifierGate(weights)),
+      classifierGate = Some(_ => gate),
       decontamShingles = Some(evalSh),
       metricsDir = Some(metrics)).awaitTermination()
     // batch 0: a clean doc establishes the index
@@ -639,7 +717,7 @@ class CorpusWatcherSpec extends SparkSpec {
     val t21 = "a very fine sentence about the weather and other topics today"
     val t30 = "completely different vocabulary regarding astronomy telescopes and galaxies"
     def run(): Unit = CorpusWatcher.startJsonl(spark, watch, index, ckpt, quar,
-      driftDir = Some(drift)).awaitTermination()
+      drift = Some(Drift(drift))).awaitTermination()
     Files.write(Paths.get(watch, "feed-0.json"),
       (s"""{"doc_id": 20, "text": "$t20"}""" + "\n" +
         s"""{"doc_id": 21, "text": "$t21"}""").getBytes("UTF-8"))
@@ -673,8 +751,7 @@ class CorpusWatcherSpec extends SparkSpec {
     val thr = Seq(("index", "js", 0.001), ("index", "kl_ab", 1000.0))
       .toDF("artifact", "metric", "threshold")
     def run(): Unit = CorpusWatcher.startJsonl(spark, watch, index, ckpt, quar,
-      driftDir = Some(drift), refreshDir = Some(refresh),
-      refreshThresholds = Some(thr)).awaitTermination()
+      drift = Some(Drift(drift, Some(Refresh(refresh, thr))))).awaitTermination()
     // batch 0 seeds the history (cold-start: decided vs the empty index)
     Files.write(Paths.get(watch, "feed-0.json"),
       """{"doc_id": 50, "text": "the quick brown fox jumps over the lazy dog again today"}"""
@@ -717,8 +794,8 @@ class CorpusWatcherSpec extends SparkSpec {
       ("tokenizer:srcA", "unk_rate", 0.5), ("tokenizer:srcB", "unk_rate", 0.5))
       .toDF("artifact", "metric", "threshold")
     def run(): Unit = CorpusWatcher.startJsonl(spark, watch, index, ckpt, quar,
-      driftDir = Some(drift), refreshDir = Some(refresh),
-      refreshThresholds = Some(thr), unkVocab = Some(vocab)).awaitTermination()
+      drift = Some(Drift(drift,
+        Some(Refresh(refresh, thr, unkVocab = Some(vocab)))))).awaitTermination()
     Files.write(Paths.get(watch, "uk-0.json"),
       """{"doc_id": 60, "text": "known words only fine here", "source": "srcA"}"""
         .getBytes("UTF-8"))
@@ -769,10 +846,13 @@ class CorpusWatcherSpec extends SparkSpec {
       .coalesce(1).write.parquet(s"$vroot/weights")
     val thr = Seq(("index", "js", 1000.0), ("classifier:srcA", "drop_rate", 0.5))
       .toDF("artifact", "metric", "threshold")
-    def run(): Unit = CorpusWatcher.startJsonl(spark, watch, index, ckpt, quar,
-      classifierGate = Some(ClassifierRefresher.servingGate(spark, vroot)),
-      driftDir = Some(drift), refreshDir = Some(refresh),
-      refreshThresholds = Some(thr), classifierDrift = true).awaitTermination()
+    def run(): Unit = {
+      val gate = ClassifierRefresher.servingGate(spark, vroot)
+      CorpusWatcher.startJsonl(spark, watch, index, ckpt, quar,
+        classifierGate = Some(_ => gate),
+        drift = Some(Drift(drift,
+          Some(Refresh(refresh, thr, classifierDrift = true))))).awaitTermination()
+    }
     // batch 0: srcA matches the serving model — drop rate 0, not due
     Files.write(Paths.get(watch, "cd-0.json"),
       """{"doc_id": 70, "text": "alpha beta gamma delta alpha", "source": "srcA"}"""
@@ -851,7 +931,7 @@ class CorpusWatcherSpec extends SparkSpec {
     // object a restartless deployment holds
     val provider = ClassifierRefresher.servingGateProvider(vroot)
     def run(): Unit = CorpusWatcher.startJsonl(spark, watch, index, ckpt, quar,
-      classifierGateProvider = Some(provider)).awaitTermination()
+      classifierGate = Some(provider)).awaitTermination()
     def indexed(): Set[String] = CorpusWatcher.currentIndex(spark, index)
       .select("doc_id").distinct().as[String].collect().toSet
     // batch 0 under the cold-start model: alpha kept, zig dropped
@@ -941,6 +1021,25 @@ class CorpusWatcherSpec extends SparkSpec {
     ArtifactVersions.repoint(spark, root, "v11")
     assert(ArtifactVersions.prune(spark, root, keep = 1) === Seq("v5", "v9"))
     assert(ArtifactVersions.versions(spark, root) === Seq("v11"))
+  }
+
+  test("pointer swap: a concurrent reader never sees a missing or torn pointer") {
+    import graft.streaming.ArtifactVersions
+    val root = tempDir("graft-avs-").toString + "/art"
+    ArtifactVersions.repoint(spark, root, "v0")
+    @volatile var done = false
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val reader = new Thread(() =>
+      while (!done) seen.add(
+        scala.util.Try(ArtifactVersions.current(spark, root).getOrElse("<missing>"))
+          .fold(e => s"<$e>", identity)))
+    reader.start()
+    try (1 to 500).foreach(i => ArtifactVersions.repoint(spark, root, s"v$i"))
+    finally { done = true; reader.join() }
+    import scala.jdk.CollectionConverters._
+    val bad = seen.asScala.filterNot(_.matches("v\\d+")).toSet
+    assert(!seen.isEmpty)
+    if (bad.nonEmpty) fail(s"reader saw ${bad.size} bad reads, e.g. ${bad.head}")
   }
 
   test("re-uploading a document replaces its postings (upsert semantics)") {
@@ -1041,7 +1140,7 @@ class CorpusWatcherSpec extends SparkSpec {
     val (watch, index, quar, hist) =
       (tmp("watchu"), tmp("indexu"), tmp("quaru") + "/bad", tmp("histu") + "/urls")
     def run(ckpt: String): Unit = CorpusWatcher.startJsonl(spark, watch, index, ckpt, quar,
-      urlHistoryDir = Some(hist)).awaitTermination()
+      urlGate = Some(UrlIdentityGate(hist))).awaitTermination()
     // batch 0: 60/61 share a canonical URL (case + tracking params +
     // fragment differ) -> min doc_id (string "60") wins; 62 has no url
     // field at all and must pass untouched
@@ -1191,7 +1290,7 @@ class CorpusWatcherSpec extends SparkSpec {
     val hist = tmp("histdr") + "/urls"
     val fd = tmp("histdr2") + "/frontier"
     CorpusWatcher.startJsonl(spark, watch, index, tmp("ckptdr"), quar,
-      urlHistoryDir = Some(hist), frontierDir = Some(fd),
+      urlGate = Some(UrlIdentityGate(hist, Some(Frontier(fd)))),
       honorDirectives = true).awaitTermination()
     Files.write(Paths.get(watch, "dr-0.json"),
       (s"""{"doc_id": 1, "text": "plainbody words <a href=\\"https://t1.example.org/x\\">l</a>", "url": "https://s.example.org/plain"}""" + "\n" +
@@ -1199,7 +1298,7 @@ class CorpusWatcherSpec extends SparkSpec {
         s"""{"doc_id": 3, "text": "nofollowbody words <meta name=\\"robots\\" content=\\"nofollow\\"> <a href=\\"https://t3.example.org/z\\">l</a>", "url": "https://s.example.org/nf"}""" + "\n")
         .getBytes("UTF-8"))
     CorpusWatcher.startJsonl(spark, watch, index, tmp("ckptdr"), quar,
-      urlHistoryDir = Some(hist), frontierDir = Some(fd),
+      urlGate = Some(UrlIdentityGate(hist, Some(Frontier(fd)))),
       honorDirectives = true).awaitTermination()
     val entries = indexEntries(index)
     assert(entries.exists(e => e._1 == "plainbody" && e._2 == "1"))
@@ -1219,8 +1318,8 @@ class CorpusWatcherSpec extends SparkSpec {
     val hist = tmp("histsm") + "/urls"
     val fd = tmp("frontsm") + "/frontier"
     def run(ckpt: String): Unit = CorpusWatcher.startJsonl(spark, watch, index, ckpt, quar,
-      urlHistoryDir = Some(hist), frontierDir = Some(fd),
-      sitemapDiscovery = true).awaitTermination()
+      urlGate = Some(UrlIdentityGate(hist,
+        Some(Frontier(fd, sitemapDiscovery = true))))).awaitTermination()
     val ckpt = tmp("ckptsm")
     // batch 0: a sitemapINDEX arrives (fetched from its robots.txt
     // pointer) — the child sitemap it names must queue as fetch work;
@@ -1271,7 +1370,7 @@ class CorpusWatcherSpec extends SparkSpec {
     val fdir = tmp("frontfr") + "/frontier"
     val metrics = tmp("metfr") + "/m"
     def run(ckpt: String): Unit = CorpusWatcher.startJsonl(spark, watch, index, ckpt, quar,
-      urlHistoryDir = Some(hist), frontierDir = Some(fdir),
+      urlGate = Some(UrlIdentityGate(hist, Some(Frontier(fdir)))),
       metricsDir = Some(metrics)).awaitTermination()
     // batch 0: both pages link the same unseen target (ref-counted);
     // a link to an ADMITTED page of this very batch is seen (the gate
@@ -1326,8 +1425,8 @@ class CorpusWatcherSpec extends SparkSpec {
       ("""{"doc_id": 85, "text": "<a href=\"https://t.example.org/blocked/x\">b</a><a href=\"https://t.example.org/open/y\">o</a> body", "url": "https://a.example.org/p"}""" + "\n")
         .getBytes("UTF-8"))
     CorpusWatcher.startJsonl(spark, watch, index, tmp("ckptfx"), quar,
-      urlHistoryDir = Some(hist), frontierDir = Some(fdir),
-      frontierRules = Some(rules)).awaitTermination()
+      urlGate = Some(UrlIdentityGate(hist,
+        Some(Frontier(fdir, rules = Some(rules)))))).awaitTermination()
     val queued = spark.read.parquet(fdir).select("link_url").as[String].collect().toSet
     assert(queued === Set("https://t.example.org/open/y"),
       "the robots-disallowed target must never be queued")
@@ -1346,9 +1445,8 @@ class CorpusWatcherSpec extends SparkSpec {
       ("""{"doc_id": 40, "text": "<a href=\"https://t.example.org/a\">1</a><a href=\"https://t.example.org/a\">1</a><a href=\"https://t.example.org/b\">2</a><a href=\"https://t.example.org/c\">3</a><a href=\"https://u.example.org/x\">4</a><a href=\"https://u.example.org/y\">5</a> body", "url": "https://s.example.org/p"}""" + "\n")
         .getBytes("UTF-8"))
     CorpusWatcher.startJsonl(spark, watch, index, tmp("ckptfs"), quar,
-      urlHistoryDir = Some(hist), frontierDir = Some(fdir),
-      frontierDelays = Some(delays), frontierBudgets = Some(budgets),
-      frontierPerHostCap = 10).awaitTermination()
+      urlGate = Some(UrlIdentityGate(hist, Some(Frontier(fdir,
+        delays = Some(delays), budgets = Some(budgets), perHostCap = 10))))).awaitTermination()
     val rows = spark.read.parquet(fdir)
       .select("link_url", "link_host", "n_refs", "pos", "crawl_delay", "fetch_offset")
       .as[(String, String, Long, Int, Option[Double], Double)].collect()
@@ -1372,7 +1470,7 @@ class CorpusWatcherSpec extends SparkSpec {
     val (watch, index, quar, rlog) =
       (tmp("watchrc"), tmp("indexrc"), tmp("quarrc") + "/bad", tmp("histrc") + "/fetches")
     def run(ckpt: String): Unit = CorpusWatcher.startJsonl(spark, watch, index, ckpt, quar,
-      recrawlDir = Some(rlog)).awaitTermination()
+      urlGate = Some(RecrawlGate(rlog))).awaitTermination()
     // batch 0: one page; a same-URL-same-content twin loses within the
     // batch; a no-url row passes untouched
     Files.write(Paths.get(watch, "feed-0.json"),
@@ -1461,7 +1559,7 @@ class CorpusWatcherSpec extends SparkSpec {
     val gd = CorpusWatcher.recrawlGateDir(rlog)
     def run(ckpt: String, compactEvery: Option[Int] = None): Unit =
       CorpusWatcher.startJsonl(spark, watch, index, ckpt, quar,
-        recrawlDir = Some(rlog), compactEvery = compactEvery).awaitTermination()
+        urlGate = Some(RecrawlGate(rlog)), compactEvery = compactEvery).awaitTermination()
     val ckpt = tmp("ckptrm")
     Files.write(Paths.get(watch, "feed-0.json"),
       """{"doc_id": 10, "text": "migrone words", "url": "https://m.example.org/a"}"""
@@ -1532,7 +1630,7 @@ class CorpusWatcherSpec extends SparkSpec {
         .getBytes("UTF-8"))
     val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       CorpusWatcher.startJsonl(spark, watch, index, tmp("ckptcv"), quar,
-        urlHistoryDir = Some(hist)).awaitTermination()
+        urlGate = Some(UrlIdentityGate(hist))).awaitTermination()
     }
     val messages = Iterator.iterate(ex: Throwable)(_.getCause)
       .takeWhile(_ != null).take(10)

@@ -6,19 +6,31 @@ import org.scalatest.funsuite.AnyFunSuite
 /** One shared local session for the whole test JVM (sbt forks a single
   * test JVM; Spark startup is ~5 s, so suites must not each build one).
   * Config is Bench/Verify's ([[GraftSession]]) at 4 cores, plus a
-  * temp warehouse dir.
+  * temp warehouse dir, deleted at JVM exit.
   *
   * `SparkSpec.spark` is a stable identifier, so suites can
   * `import SparkSpec.spark.implicits._` at the top of the file.
   */
 object SparkSpec {
   lazy val spark: SparkSession = {
+    val warehouse = java.nio.file.Files.createTempDirectory("graft-warehouse")
+    sys.addShutdownHook(deleteRecursively(warehouse))
     val s = GraftSession.builder(4)
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
+      .config("spark.sql.warehouse.dir", warehouse.toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
+  }
+
+  /** Delete `p` and everything under it; best effort. */
+  def deleteRecursively(p: java.nio.file.Path): Unit = {
+    import scala.jdk.CollectionConverters._
+    try {
+      val walk = java.nio.file.Files.walk(p)
+      try walk.iterator().asScala.toVector.reverseIterator
+        .foreach(java.nio.file.Files.deleteIfExists(_))
+      finally walk.close()
+    } catch { case _: java.io.IOException => () }
   }
 }
 
@@ -38,15 +50,7 @@ abstract class SparkSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAl
   }
 
   override protected def afterAll(): Unit = {
-    import scala.jdk.CollectionConverters._
-    tempDirs.synchronized(tempDirs.toVector).foreach { p =>
-      try {
-        val walk = java.nio.file.Files.walk(p)
-        try walk.iterator().asScala.toVector.reverseIterator
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-        finally walk.close()
-      } catch { case _: java.io.IOException => () }
-    }
+    tempDirs.synchronized(tempDirs.toVector).foreach(SparkSpec.deleteRecursively)
     super.afterAll()
   }
 }
