@@ -191,8 +191,9 @@ object IndexStore {
   }
 
   /** A flat stored artifact (`doc_lengths`, `stats`, a plain doc
-    * store) read with its footer's schema: no inference job. */
-  private def storedTable(spark: SparkSession, path: String): DataFrame = {
+    * store, a watcher's index snapshot) read with its footer's schema:
+    * no inference job. */
+  private[graft] def storedTable(spark: SparkSession, path: String): DataFrame = {
     val conf = spark.sessionState.newHadoopConf()
     val root = new Path(path)
     val fs = root.getFileSystem(conf)

@@ -1491,25 +1491,6 @@ object Dedup {
       .filter(col("doc_id") =!= col("cluster_id"))
       .select("doc_id")
 
-  /** Duplicate CLUSTERS from candidate pairs: connected components by
-    * iterative min-label propagation — every doc gets the smallest
-    * doc_id reachable through the pair graph as its `cluster_id` (so the
-    * canonical representative of each near-dup group is its minimum id,
-    * matching [[exact]]'s convention).
-    *
-    * Each round: one join (edge src → current label) + one min-agg per
-    * node + a convergence count; rounds = graph diameter. LSH dedup
-    * components are near-cliques (every member shares a band bucket
-    * with most others), so 2-3 rounds close them; a long-diameter graph
-    * would want the large-star/small-star variant (Kiveris et al.,
-    * "Connected Components in MapReduce"), which this loop structure
-    * accommodates. Labels are materialized per round (strategy
-    * pluggable) — the iterative lineage would otherwise grow
-    * unboundedly.
-    *
-    * Only docs that appear in `pairs` are emitted (singletons are their
-    * own cluster trivially).
-    */
   /** Content-defined anchor sites for substring-level dedup: positions
     * `p` where the k-char gram starting at `p` hashes to 0 mod `modP`
     * (Manber-style mod-p sampling — the anchor set depends only on
@@ -1726,6 +1707,45 @@ object Dedup {
         coalesce(col("n_spans"), lit(0L)).as("n_spans"))
   }
 
+  /** Duplicate CLUSTERS from candidate pairs: the connected components
+    * of the undirected graph `pairs(doc_a, doc_b)`. Every endpoint gets
+    * one `(doc_id, cluster_id)` row whose `cluster_id` is the smallest
+    * id of its component (so the canonical representative of each
+    * near-dup group is its minimum id, matching [[exact]]'s
+    * convention). Only docs that appear in `pairs` are emitted
+    * (singletons are their own cluster trivially).
+    *
+    * "Smallest" is Spark's ordering for the id type (string ids compare
+    * by UTF-8 bytes, not UTF-16 code units). A null endpoint yields one
+    * `(null, null)` row and merges nothing; self-loops and repeated
+    * edges change nothing. The output schema is the same on both paths
+    * below.
+    *
+    * The pair table is materialized under `mat` first, then one bounded
+    * collect (a single task reading at most B+1 rows) sizes it, with
+    * B = `spark.sql.autoBroadcastJoinThreshold` / (2 × the id type's
+    * default size) — the pair count Spark itself would broadcast.
+    *   - Local path (at most B pairs, integral or binary-collated string
+    *     ids, threshold > 0): union-find on the driver (sorted ids, an
+    *     int parent array with path halving, the minimum id as root),
+    *     the materialized pairs released, and the labels returned as a
+    *     local relation. Reading it runs no job, and its exact size
+    *     lets downstream joins against it broadcast at plan time. A
+    *     near-dup graph of a few dozen edges costs one job here instead
+    *     of two dozen for two propagation rounds.
+    *   - Distributed path (anything else): iterative hash-to-min label
+    *     propagation over the materialized table. Each round is one
+    *     join (edge src → current label), one min-agg per node, one
+    *     label-of-label pointer jump and a convergence check, so rounds
+    *     are O(log diameter); labels are materialized per round under
+    *     `mat` (the iterative lineage would otherwise grow unboundedly),
+    *     the superseded round released. `maxIterations` caps the rounds
+    *     and applies to this path only: when it is hit before the
+    *     labels converge, a warning goes to stderr and a component may
+    *     carry several labels (over-split). Under
+    *     [[graft.core.Materialize.Persist]] the caller owns release of
+    *     the returned labels.
+    */
   def clusters(
       pairs: DataFrame,
       maxIterations: Int = 20,
@@ -1739,10 +1759,24 @@ object Dedup {
     val p = graft.core.Materialize(pairs.select(col("doc_a"), col("doc_b")), mat)
     val edges = p.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .unionByName(p.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-    var labels = graft.core.Materialize(
-      edges.select(col("src").as("doc_id")).distinct()
-        .select(col("doc_id"), col("doc_id").as("cluster_id")),
-      mat)
+    val seed = edges.select(col("src").as("doc_id")).distinct()
+      .select(col("doc_id"), col("doc_id").as("cluster_id"))
+    val labels = localComponents(p, seed.schema) match {
+      case Some(rows) => p.sparkSession.createDataFrame(rows, seed.schema)
+      case None => hashToMin(edges, seed, maxIterations, mat)
+    }
+    // the pair table is only needed while labelling; distributed
+    // labels keep their own materialization (callers own that one)
+    graft.core.Materialize.release(p, mat)
+    labels
+  }
+
+  /** [[clusters]]' distributed path: hash-to-min rounds over `edges`
+    * (both directions of every pair) from the `seed` labels. */
+  private def hashToMin(
+      edges: DataFrame, seed: DataFrame, maxIterations: Int,
+      mat: graft.core.Materialize.Strategy): DataFrame = {
+    var labels = graft.core.Materialize(seed, mat)
     var converged = false
     var it = 0
     var prevRound: DataFrame = labels // superseded round's materialization
@@ -1786,9 +1820,6 @@ object Dedup {
       labels = next.select("doc_id", "cluster_id")
       it += 1
     }
-    // the pair table is only needed during propagation; the returned
-    // labels keep their own materialization (callers own that one)
-    graft.core.Materialize.release(p, mat)
     if (!converged)
       // a graph with diameter > maxIterations (not a dedup shape): the
       // min label hasn't reached every member yet, so one true
@@ -1797,6 +1828,67 @@ object Dedup {
         s"[graft] Dedup.clusters: not converged after $maxIterations rounds; " +
           "components may be over-split (raise maxIterations)")
     labels
+  }
+
+  /** [[clusters]]' local path: the component rows of the materialized
+    * pair table `p` computed on the driver, or None when `p` holds more
+    * pairs than Spark's broadcast bound (or the bound is off, or the id
+    * type is one whose Spark equality differs from its value equality).
+    * One job: a single task reads at most bound + 1 rows. */
+  private def localComponents(
+      p: DataFrame, schema: org.apache.spark.sql.types.StructType)
+      : Option[java.util.List[org.apache.spark.sql.Row]] = {
+    import org.apache.spark.sql.types._
+    val idType = schema("doc_id").dataType
+    val threshold = p.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val localType = idType match {
+      case ByteType | ShortType | IntegerType | LongType | StringType => true
+      case _ => false
+    }
+    if (threshold <= 0 || !localType) None
+    else {
+      val bound = math.min(threshold / (2L * idType.defaultSize), Int.MaxValue / 2L - 1).toInt
+      val rows = p.select(col("doc_a").cast(idType), col("doc_b").cast(idType))
+        .coalesce(1).limit(bound + 1).collect()
+      if (rows.length <= bound) Some(components(rows, idType)) else None
+    }
+  }
+
+  /** Union-find over collected `(a, b)` id rows of type `idType`: one
+    * `(id, component min)` row per distinct non-null id, plus
+    * `(null, null)` when any endpoint is null. */
+  private def components(
+      rows: Array[org.apache.spark.sql.Row], idType: org.apache.spark.sql.types.DataType)
+      : java.util.List[org.apache.spark.sql.Row] = {
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    import org.apache.spark.sql.catalyst.util.TypeUtils
+    // distinct non-null ids in Spark's order: index order is id order,
+    // so the minimum index of a component is its minimum id
+    val toKey = CatalystTypeConverters.createToCatalystConverter(idType)
+    val order = TypeUtils.getInterpretedOrdering(idType)
+    val ids: Array[Any] = rows.iterator.flatMap(r => Iterator(r.get(0), r.get(1)))
+      .filter(_ != null).distinct.map(v => (toKey(v), v)).toArray
+      .sortBy(_._1)(order).map(_._2)
+    val index = new java.util.HashMap[Any, Int](ids.length * 2)
+    ids.indices.foreach(i => index.put(ids(i), i))
+    val parent = Array.range(0, ids.length)
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    var sawNull = false
+    rows.foreach { r =>
+      if (r.isNullAt(0) || r.isNullAt(1)) sawNull = true
+      else {
+        val (a, b) = (find(index.get(r.get(0))), find(index.get(r.get(1))))
+        if (a < b) parent(b) = a else if (b < a) parent(a) = b
+      }
+    }
+    val out = new java.util.ArrayList[org.apache.spark.sql.Row](ids.length + 1)
+    ids.indices.foreach(i => out.add(org.apache.spark.sql.Row(ids(i), ids(find(i)))))
+    if (sawNull) out.add(org.apache.spark.sql.Row(null, null))
+    out
   }
 
   /** The banding scheme's S-curve — detection probability as a function

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.index.InvertedIndex
+import graft.index.{IndexStore, InvertedIndex}
 
 /** Streaming ingest: watch a directory for new text documents and keep
   * the inverted index up to date — the Spark-native replacement for the
@@ -53,11 +53,13 @@ object CorpusWatcher {
 
   /** Read the current index snapshot (empty index if none yet; the
     * empty frame's schema follows the watcher's index shape — flat or
-    * positional — so batch 0's upsert unions cleanly either way). */
+    * positional — so batch 0's upsert unions cleanly either way). The
+    * snapshot's schema comes from one parquet footer read on the
+    * driver, so building the frame runs no Spark job. */
   def currentIndex(
       spark: SparkSession, indexDir: String, positional: Boolean = false): DataFrame =
     ArtifactVersions.readFile(spark, indexDir, Latest) match {
-      case Some(snap) => spark.read.parquet(s"$indexDir/$snap")
+      case Some(snap) => IndexStore.storedTable(spark, s"$indexDir/$snap")
       case None =>
         import org.apache.spark.sql.types._
         val base = Seq(
@@ -129,7 +131,7 @@ object CorpusWatcher {
           // atomically — a polling reader never sees a truncated
           // artifact, and a mid-write crash keeps the previous one
           val tmpJson = s"$p.tmp"
-          InvertedIndex.exportSingleFileJson(session.read.parquet(s"$indexDir/$snap"), tmpJson)
+          InvertedIndex.exportSingleFileJson(IndexStore.storedTable(session, s"$indexDir/$snap"), tmpJson)
           ArtifactVersions.replace(session, tmpJson, p)
         }
         ()

@@ -37,6 +37,18 @@ class CorpusWatcherSpec extends SparkSpec {
       ("bird", "c.txt", 1L)))
   }
 
+  test("currentIndex builds the published snapshot with no Spark job, typed as spark.read.parquet reads it") {
+    val (watch, index, ckpt) = (tmp("watchr"), tmp("indexr"), tmp("ckptr"))
+    writeDoc(watch, "a.txt", "cat dog cat")
+    CorpusWatcher.start(spark, watch, index, ckpt).awaitTermination()
+    val (idx, jobs, _) = jobsAndTasks(CorpusWatcher.currentIndex(spark, index))
+    assert(jobs === 0, s"building the snapshot frame ran $jobs jobs")
+    val snap = new String(Files.readAllBytes(Paths.get(index, "LATEST")), "UTF-8").trim
+    assert(idx.schema === spark.read.parquet(s"$index/$snap").schema)
+    assert(idx.as[(String, String, Long)].collect().toSet ===
+      Set(("cat", "a.txt", 2L), ("dog", "a.txt", 1L)))
+  }
+
   test("finalJsonPath re-exports the reference artifact on every batch") {
     val (watch, index, ckpt) = (tmp("watchj"), tmp("indexj"), tmp("ckptj"))
     val json = s"${tmp("finalj")}/final_results.json"

@@ -273,12 +273,35 @@ class DedupSpec extends SparkSpec {
     // needs 40 rounds — over maxIterations' default cap — while the
     // hash-to-min jump halves label paths per round, so the component
     // min reaches every node well inside ~2·log2(40) ≈ 11 rounds.
-    // Labels at convergence are the component min, same as ever.
+    // Labels at convergence are the component min, same as ever. The
+    // 40 pairs fit the broadcast bound, so the bound is turned off to
+    // keep this a test of the round loop, not of the driver-side path.
     val chain = (1L until 41L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val got = Dedup.clusters(chain, maxIterations = 12).as[(Long, Long)]
-      .collect().toMap
+    val got = noBroadcast(Dedup.clusters(chain, maxIterations = 12).as[(Long, Long)]
+      .collect().toMap)
     assert(got.size === 41 && got.values.forall(_ === 1L),
       "every chain node must carry the component min within the log-round budget")
+  }
+
+  test("clusters of a small pair table: one job after the pair materialization, a job-free result, no cache entry left") {
+    import graft.core.Materialize
+    val pairs = Seq((2L, 5L), (5L, 9L), (20L, 21L)).toDF("doc_a", "doc_b")
+    val want = Map(2L -> 2L, 5L -> 2L, 9L -> 2L, 20L -> 20L, 21L -> 20L)
+    val (_, matJobs, matTasks) = jobsAndTasks(Materialize(pairs.select("doc_a", "doc_b")))
+    val (cl, jobs, tasks) = jobsAndTasks(Dedup.clusters(pairs))
+    assert(jobs === matJobs + 1 && tasks === matTasks + 1,
+      s"clusters ran $jobs jobs / $tasks tasks; materializing the pairs alone runs $matJobs / $matTasks")
+    val (rows, readJobs, _) = jobsAndTasks(cl.as[(Long, Long)].collect())
+    assert(readJobs === 0 && rows.toMap === want && rows.length === want.size)
+    assert(cl.schema === noBroadcast(Dedup.clusters(pairs)).schema)
+    // Persist: the lazily cached pairs are computed by the one bounded
+    // collect, then released; nothing of this call stays cached
+    val cache = spark.sharedState.cacheManager
+    cache.clearCache()
+    val (persisted, persistJobs, _) = jobsAndTasks(Dedup.clusters(pairs, mat = Materialize.Persist))
+    assert(persistJobs === 1)
+    assert(cache.isEmpty, "a clusters cache entry outlived the call")
+    assert(persisted.as[(Long, Long)].collect().toMap === want)
   }
 
   test("clusters of the exact-dup corpus match exact()'s canonical ids") {

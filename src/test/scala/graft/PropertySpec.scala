@@ -14,7 +14,9 @@ import SparkSpec.spark.implicits._
 class PropertySpec extends SparkSpec {
 
   test("clusters == plain union-find components on random pair graphs") {
-    for (seed <- 1 to 5) {
+    // both paths: driver-side union-find under the default broadcast
+    // bound, hash-to-min rounds with the bound off
+    def check(path: String): Unit = for (seed <- 1 to 5) {
       val rnd = new scala.util.Random(seed)
       val n = 10 + rnd.nextInt(30)
       val edges = (0 until n).map(_ =>
@@ -33,9 +35,36 @@ class PropertySpec extends SparkSpec {
         val want = parent.keys.map(x => x -> find(x)).toMap
         val got = Dedup.clusters(edges.toDF("doc_a", "doc_b"))
           .as[(Long, Long)].collect().toMap
-        assert(got === want, s"seed=$seed edges=$edges")
+        assert(got === want, s"$path seed=$seed edges=$edges")
       }
     }
+    check("local")
+    noBroadcast(check("distributed"))
+  }
+
+  test("clusters: local and distributed paths agree on string ids, nulls, self-loops, repeated edges, both strategies") {
+    import graft.core.Materialize
+    // U+FF61 is the smaller id in UTF-8 bytes (EF BD A1 < F0 9F 98 80),
+    // the larger in UTF-16 code units (FF61 > D83D): Spark's order, and
+    // so the component min, is the byte order
+    val (bmp, astral) = ("\uFF61", "\uD83D\uDE00")
+    val strings = Seq[(String, String)]((astral, bmp), ("b", "a"), ("c", "b"), ("c", "b"),
+      ("c", "c"), ("z", "z"), ("x", null), (null, "y"), (null, null)).toDF("doc_a", "doc_b")
+    val wantStrings = Map[Any, Any](astral -> bmp, bmp -> bmp, "a" -> "a", "b" -> "a",
+      "c" -> "a", "z" -> "z", "x" -> "x", "y" -> "y", (null, null))
+    val longs = Seq[(java.lang.Long, java.lang.Long)]((5L, 3L), (3L, 3L), (5L, 3L),
+      (7L, null), (null, 9L), (9L, 11L)).toDF("doc_a", "doc_b")
+    val wantLongs = Map[Any, Any](3L -> 3L, 5L -> 3L, 7L -> 7L, 9L -> 9L, 11L -> 9L, (null, null))
+    def labels(df: DataFrame): (Seq[(Any, Any)], org.apache.spark.sql.types.StructType) =
+      (df.collect().toSeq.map(r => r.get(0) -> r.get(1)), df.schema)
+    try for (mat <- Seq(Materialize.LocalCheckpoint, Materialize.Persist);
+             (pairs, want) <- Seq(strings -> wantStrings, longs -> wantLongs)) {
+      val (local, localSchema) = labels(Dedup.clusters(pairs, mat = mat))
+      val (dist, distSchema) = noBroadcast(labels(Dedup.clusters(pairs, mat = mat)))
+      assert(local.size === want.size && local.toMap === want, s"local, $mat")
+      assert(dist.size === want.size && dist.toMap === want, s"distributed, $mat")
+      assert(localSchema === distSchema, s"$mat")
+    } finally spark.sharedState.cacheManager.clearCache() // the distributed Persist labels
   }
 
   test("entropySignals == plain-Scala entropy under the same 6dp-term recipe") {

@@ -102,22 +102,6 @@ class SourcesAndStoreSpec extends SparkSpec {
       s"word filter not pushed in:\n$plan")
   }
 
-  /** (result, jobs, tasks) of `body`: the max-job-id delta, read after
-    * draining the listener bus so no finished job is missed. */
-  private def jobsAndTasks[T](body: => T): (T, Int, Int) = {
-    val sc = spark.sparkContext
-    def maxJobId: Int = {
-      org.apache.spark.ListenerBusDrain(sc)
-      sc.statusTracker.getJobIdsForGroup(null).foldLeft(-1)(math.max)
-    }
-    val before = maxJobId
-    val r = body
-    val after = maxJobId
-    val tasks = (before + 1 to after).flatMap(sc.statusTracker.getJobInfo(_))
-      .flatMap(_.stageIds).flatMap(sc.statusTracker.getStageInfo(_)).map(_.numTasks).sum
-    (r, after - before, tasks)
-  }
-
   test("lookup is one Spark job with one task, on a 256-dir HashPrefix store and a 36-dir FirstChar store") {
     def hashPfx(w: String): String = {
       val d = java.security.MessageDigest.getInstance("MD5").digest(w.getBytes("UTF-8"))
@@ -492,17 +476,6 @@ class SourcesAndStoreSpec extends SparkSpec {
     val files = new java.io.File(s"$base/a").listFiles()
       .filter(f => f.getName.endsWith(".parquet")).length
     assert(files === 8, s"expected 8 bucket files, found $files")
-  }
-
-  /** Run `f` with auto-broadcast off: the fixture facts are tiny, so
-    * Spark would broadcast them and neither side would ever show the
-    * shuffle this layout exists to remove — the production scenario is
-    * fact-to-fact, where broadcast is off the table by size. */
-  private def noBroadcast[T](f: => T): T = {
-    val spark = SparkSpec.spark
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try f finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
   test("co-located join on the bucket key plans ZERO shuffle exchanges; the plain join shuffles") {

@@ -49,6 +49,32 @@ abstract class SparkSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAl
     p
   }
 
+  /** (result, jobs, tasks) of `body`: the max-job-id delta, read after
+    * draining the listener bus so no finished job is missed. */
+  protected def jobsAndTasks[T](body: => T): (T, Int, Int) = {
+    val sc = spark.sparkContext
+    def maxJobId: Int = {
+      org.apache.spark.ListenerBusDrain(sc)
+      sc.statusTracker.getJobIdsForGroup(null).foldLeft(-1)(math.max)
+    }
+    val before = maxJobId
+    val r = body
+    val after = maxJobId
+    val tasks = (before + 1 to after).flatMap(sc.statusTracker.getJobInfo(_))
+      .flatMap(_.stageIds).flatMap(sc.statusTracker.getStageInfo(_)).map(_.numTasks).sum
+    (r, after - before, tasks)
+  }
+
+  /** Run `f` with auto-broadcast off, the setting restored after. The
+    * fixtures are tiny, so without this Spark broadcasts every join
+    * side, and size-gated code takes its small-input path: tests of
+    * the shuffle layouts and of the distributed paths need it off. */
+  protected def noBroadcast[T](f: => T): T = {
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try f finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+  }
+
   override protected def afterAll(): Unit = {
     tempDirs.synchronized(tempDirs.toVector).foreach(SparkSpec.deleteRecursively)
     super.afterAll()
