@@ -409,11 +409,9 @@ object Curation {
     * AQE broadcasts the anti-joins; mixture + split are shuffle-free
     * column algebra on the result. Doc text never shuffles anywhere —
     * bands, shingles and ids do. The near-dup pair table is usually
-    * tiny: when it fits Spark's broadcast bound, [[Dedup.clusters]]
-    * labels its components on the driver in one job instead of
-    * hash-to-min rounds, and returns a local relation whose exact size
-    * lets the loser anti-join broadcast at plan time (16 Spark jobs
-    * per call instead of 40 on the 600-doc `curate_batch` benchmark).
+    * small: up to [[Dedup.LocalPairs]] pairs, [[Dedup.clusters]] labels
+    * its components on the driver and returns a local relation whose
+    * exact size lets the loser anti-join broadcast at plan time.
     *
     * `classifier` opts in the MODEL-BASED quality stage (the
     * FineWeb/DCLM recipe): the quality+language survivors are scored

@@ -1722,17 +1722,15 @@ object Dedup {
     * below.
     *
     * The pair table is materialized under `mat` first, then one bounded
-    * collect (a single task reading at most B+1 rows) sizes it, with
-    * B = `spark.sql.autoBroadcastJoinThreshold` / (2 × the id type's
-    * default size) — the pair count Spark itself would broadcast.
-    *   - Local path (at most B pairs, integral or binary-collated string
-    *     ids, threshold > 0): union-find on the driver (sorted ids, an
-    *     int parent array with path halving, the minimum id as root),
-    *     the materialized pairs released, and the labels returned as a
-    *     local relation. Reading it runs no job, and its exact size
-    *     lets downstream joins against it broadcast at plan time. A
-    *     near-dup graph of a few dozen edges costs one job here instead
-    *     of two dozen for two propagation rounds.
+    * collect (a single task reading at most [[LocalPairs]] + 1 rows)
+    * sizes it.
+    *   - Local path (at most [[LocalPairs]] pairs, integral or
+    *     binary-collated string ids): union-find on the driver (sorted
+    *     ids, an int parent array with path halving, the minimum id as
+    *     root), the materialized pairs released, and the labels
+    *     returned as a local relation. Reading it runs no job, and its
+    *     exact size lets downstream joins against it broadcast at plan
+    *     time.
     *   - Distributed path (anything else): iterative hash-to-min label
     *     propagation over the materialized table. Each round is one
     *     join (edge src → current label), one min-agg per node, one
@@ -1749,7 +1747,23 @@ object Dedup {
   def clusters(
       pairs: DataFrame,
       maxIterations: Int = 20,
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint): DataFrame = {
+      mat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint): DataFrame =
+    components(pairs, maxIterations, mat, LocalPairs)
+
+  /** The most pairs [[clusters]] labels on the driver. A pair count of
+    * its own, independent of the broadcast setting: the collected
+    * pairs, the id index and the returned local relation (up to two
+    * rows per pair, re-planned by every query that reads it) all stay
+    * on the driver, whatever Spark would broadcast. */
+  private[graft] val LocalPairs = 100000
+
+  /** [[clusters]] with the local path taken for at most `localPairs`
+    * pairs; 0 sends every table down the distributed path. */
+  private[graft] def components(
+      pairs: DataFrame,
+      maxIterations: Int,
+      mat: graft.core.Materialize.Strategy,
+      localPairs: Int): DataFrame = {
     // Materialize the PAIR table first, then union: the union's two
     // branches each reference `pairs`, and materializing only after the
     // union would run the whole candidate-generation plan once per
@@ -1761,7 +1775,7 @@ object Dedup {
       .unionByName(p.select(col("doc_b").as("src"), col("doc_a").as("dst")))
     val seed = edges.select(col("src").as("doc_id")).distinct()
       .select(col("doc_id"), col("doc_id").as("cluster_id"))
-    val labels = localComponents(p, seed.schema) match {
+    val labels = localComponents(p, seed.schema, localPairs) match {
       case Some(rows) => p.sparkSession.createDataFrame(rows, seed.schema)
       case None => hashToMin(edges, seed, maxIterations, mat)
     }
@@ -1832,32 +1846,30 @@ object Dedup {
 
   /** [[clusters]]' local path: the component rows of the materialized
     * pair table `p` computed on the driver, or None when `p` holds more
-    * pairs than Spark's broadcast bound (or the bound is off, or the id
-    * type is one whose Spark equality differs from its value equality).
-    * One job: a single task reads at most bound + 1 rows. */
+    * than `localPairs` pairs (or the id type is one whose Spark equality
+    * differs from its value equality). One job: a single task reads at
+    * most `localPairs` + 1 rows. */
   private def localComponents(
-      p: DataFrame, schema: org.apache.spark.sql.types.StructType)
+      p: DataFrame, schema: org.apache.spark.sql.types.StructType, localPairs: Int)
       : Option[java.util.List[org.apache.spark.sql.Row]] = {
     import org.apache.spark.sql.types._
     val idType = schema("doc_id").dataType
-    val threshold = p.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
     val localType = idType match {
       case ByteType | ShortType | IntegerType | LongType | StringType => true
       case _ => false
     }
-    if (threshold <= 0 || !localType) None
+    if (localPairs <= 0 || !localType) None
     else {
-      val bound = math.min(threshold / (2L * idType.defaultSize), Int.MaxValue / 2L - 1).toInt
       val rows = p.select(col("doc_a").cast(idType), col("doc_b").cast(idType))
-        .coalesce(1).limit(bound + 1).collect()
-      if (rows.length <= bound) Some(components(rows, idType)) else None
+        .coalesce(1).limit(localPairs + 1).collect()
+      if (rows.length <= localPairs) Some(unionFind(rows, idType)) else None
     }
   }
 
   /** Union-find over collected `(a, b)` id rows of type `idType`: one
     * `(id, component min)` row per distinct non-null id, plus
     * `(null, null)` when any endpoint is null. */
-  private def components(
+  private def unionFind(
       rows: Array[org.apache.spark.sql.Row], idType: org.apache.spark.sql.types.DataType)
       : java.util.List[org.apache.spark.sql.Row] = {
     import org.apache.spark.sql.catalyst.CatalystTypeConverters

@@ -274,11 +274,11 @@ class DedupSpec extends SparkSpec {
     // hash-to-min jump halves label paths per round, so the component
     // min reaches every node well inside ~2·log2(40) ≈ 11 rounds.
     // Labels at convergence are the component min, same as ever. The
-    // 40 pairs fit the broadcast bound, so the bound is turned off to
-    // keep this a test of the round loop, not of the driver-side path.
+    // driver-side path is off (its cap at 0 pairs), so this tests the
+    // round loop, which a 40-pair table would otherwise never reach.
     val chain = (1L until 41L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val got = noBroadcast(Dedup.clusters(chain, maxIterations = 12).as[(Long, Long)]
-      .collect().toMap)
+    val got = Dedup.components(chain, maxIterations = 12, graft.core.Materialize.LocalCheckpoint,
+      localPairs = 0).as[(Long, Long)].collect().toMap
     assert(got.size === 41 && got.values.forall(_ === 1L),
       "every chain node must carry the component min within the log-round budget")
   }
@@ -293,7 +293,7 @@ class DedupSpec extends SparkSpec {
       s"clusters ran $jobs jobs / $tasks tasks; materializing the pairs alone runs $matJobs / $matTasks")
     val (rows, readJobs, _) = jobsAndTasks(cl.as[(Long, Long)].collect())
     assert(readJobs === 0 && rows.toMap === want && rows.length === want.size)
-    assert(cl.schema === noBroadcast(Dedup.clusters(pairs)).schema)
+    assert(cl.schema === Dedup.components(pairs, 20, Materialize.LocalCheckpoint, 0).schema)
     // Persist: the lazily cached pairs are computed by the one bounded
     // collect, then released; nothing of this call stays cached
     val cache = spark.sharedState.cacheManager
@@ -302,6 +302,37 @@ class DedupSpec extends SparkSpec {
     assert(persistJobs === 1)
     assert(cache.isEmpty, "a clusters cache entry outlived the call")
     assert(persisted.as[(Long, Long)].collect().toMap === want)
+  }
+
+  test("clusters picks its path by pair count against LocalPairs, whatever the broadcast setting") {
+    import graft.core.Materialize
+    def withThreshold[T](v: String)(f: => T): T = {
+      val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", v)
+      try f finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
+    // (2i, 2i+1) for i < n: n two-doc clusters labelled by the even id
+    def twins(n: Int): DataFrame = spark.range(n).select(
+      (col("id") * 2 + 1).as("doc_a"), (col("id") * 2).as("doc_b"))
+    val (_, matJobs, _) = jobsAndTasks(Materialize(twins(3)))
+    def jobsOf(cl: => DataFrame, n: Int): Int = {
+      val (labels, jobs, _) = jobsAndTasks(cl)
+      assert(labels.count() === 2L * n &&
+        labels.filter(col("cluster_id") =!= col("doc_id") - col("doc_id") % 2).isEmpty)
+      jobs
+    }
+    // broadcast off: small tables still take the driver-side path
+    assert(withThreshold("-1")(jobsOf(Dedup.clusters(twins(3)), 3)) === matJobs + 1)
+    // a 1 GB broadcast bound does not stretch the cap: LocalPairs pairs
+    // are one sizing job, one pair more runs the hash-to-min rounds
+    withThreshold((1L << 30).toString) {
+      val n = Dedup.LocalPairs
+      assert(jobsOf(Dedup.clusters(twins(n)), n) === matJobs + 1)
+      assert(jobsOf(Dedup.clusters(twins(n + 1)), n + 1) > matJobs + 1)
+    }
+    // the cap itself is the boundary
+    assert(jobsOf(Dedup.components(twins(3), 20, Materialize.LocalCheckpoint, 3), 3) === matJobs + 1)
+    assert(jobsOf(Dedup.components(twins(3), 20, Materialize.LocalCheckpoint, 2), 3) > matJobs + 1)
   }
 
   test("clusters of the exact-dup corpus match exact()'s canonical ids") {

@@ -14,9 +14,9 @@ import SparkSpec.spark.implicits._
 class PropertySpec extends SparkSpec {
 
   test("clusters == plain union-find components on random pair graphs") {
-    // both paths: driver-side union-find under the default broadcast
-    // bound, hash-to-min rounds with the bound off
-    def check(path: String): Unit = for (seed <- 1 to 5) {
+    // both paths: driver-side union-find (these graphs are far below
+    // the local cap), hash-to-min rounds with the local path off
+    def check(path: String, localPairs: Int): Unit = for (seed <- 1 to 5) {
       val rnd = new scala.util.Random(seed)
       val n = 10 + rnd.nextInt(30)
       val edges = (0 until n).map(_ =>
@@ -33,13 +33,13 @@ class PropertySpec extends SparkSpec {
           if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
         }
         val want = parent.keys.map(x => x -> find(x)).toMap
-        val got = Dedup.clusters(edges.toDF("doc_a", "doc_b"))
-          .as[(Long, Long)].collect().toMap
+        val got = Dedup.components(edges.toDF("doc_a", "doc_b"), 20,
+          graft.core.Materialize.LocalCheckpoint, localPairs).as[(Long, Long)].collect().toMap
         assert(got === want, s"$path seed=$seed edges=$edges")
       }
     }
-    check("local")
-    noBroadcast(check("distributed"))
+    check("local", Dedup.LocalPairs)
+    check("distributed", 0)
   }
 
   test("clusters: local and distributed paths agree on string ids, nulls, self-loops, repeated edges, both strategies") {
@@ -60,7 +60,7 @@ class PropertySpec extends SparkSpec {
     try for (mat <- Seq(Materialize.LocalCheckpoint, Materialize.Persist);
              (pairs, want) <- Seq(strings -> wantStrings, longs -> wantLongs)) {
       val (local, localSchema) = labels(Dedup.clusters(pairs, mat = mat))
-      val (dist, distSchema) = noBroadcast(labels(Dedup.clusters(pairs, mat = mat)))
+      val (dist, distSchema) = labels(Dedup.components(pairs, 20, mat, localPairs = 0))
       assert(local.size === want.size && local.toMap === want, s"local, $mat")
       assert(dist.size === want.size && dist.toMap === want, s"distributed, $mat")
       assert(localSchema === distSchema, s"$mat")

@@ -478,6 +478,17 @@ class SourcesAndStoreSpec extends SparkSpec {
     assert(files === 8, s"expected 8 bucket files, found $files")
   }
 
+  /** Run `f` with auto-broadcast off: the fixture facts are tiny, so
+    * Spark would broadcast them and neither side would ever show the
+    * shuffle this layout exists to remove — the production scenario is
+    * fact-to-fact, where broadcast is off the table by size. */
+  private def noBroadcast[T](f: => T): T = {
+    val spark = SparkSpec.spark
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try f finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+  }
+
   test("co-located join on the bucket key plans ZERO shuffle exchanges; the plain join shuffles") {
     noBroadcast {
       val spark = SparkSpec.spark

@@ -65,16 +65,6 @@ abstract class SparkSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAl
     (r, after - before, tasks)
   }
 
-  /** Run `f` with auto-broadcast off, the setting restored after. The
-    * fixtures are tiny, so without this Spark broadcasts every join
-    * side, and size-gated code takes its small-input path: tests of
-    * the shuffle layouts and of the distributed paths need it off. */
-  protected def noBroadcast[T](f: => T): T = {
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try f finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-  }
-
   override protected def afterAll(): Unit = {
     tempDirs.synchronized(tempDirs.toVector).foreach(SparkSpec.deleteRecursively)
     super.afterAll()
