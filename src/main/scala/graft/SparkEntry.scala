@@ -2534,8 +2534,7 @@ object SparkEntry {
       graft.index.IndexStore.saveSearchPageStore(docs(s, dir), s"$tmp/store",
         graft.index.IndexStore.HashPrefix)
       graft.index.IndexStore.bm25TopK(s, s"$tmp/store",
-        "fast hash join on a small table", k = 20,
-        layout = graft.index.IndexStore.HashPrefix)
+        "fast hash join on a small table", k = 20)
     },
     "q_bool_search_served" -> { (s, dir) =>
       // boolean AND intersection SERVED from the stored postings —
@@ -2544,8 +2543,7 @@ object SparkEntry {
       graft.index.IndexStore.saveSearchPageStore(docs(s, dir), s"$tmp/store",
         graft.index.IndexStore.HashPrefix)
       graft.index.IndexStore.booleanSearch(s, s"$tmp/store",
-        Seq("hash", "JOIN", "scan"),
-        layout = graft.index.IndexStore.HashPrefix)
+        Seq("hash", "JOIN", "scan"))
     },
     "q_index_merge_parity" -> { (s, dir) =>
       // reference semantics (master/main.py:106-121): re-indexed docs get ADDED
@@ -2595,8 +2593,7 @@ object SparkEntry {
         graft.index.IndexStore.saveSearchPageStore(d, s"$tmp/store",
           graft.index.IndexStore.HashPrefix))
       graft.index.IndexStore.searchPage(s, s"$tmp/store", s"$tmp/docs",
-        "fast hash join on a small table", k = 20, window = 8,
-        layout = graft.index.IndexStore.HashPrefix)
+        "fast hash join on a small table", k = 20, window = 8)
     },
     "q_hybrid_search" -> { (s, dir) =>
       // hybrid RAG-style retrieval: BM25 pool ⊕ exact-cosine pool for
@@ -2616,8 +2613,7 @@ object SparkEntry {
       val e = emb(s, dir)
       graft.index.IndexStore.hybridTopK(s, s"$tmp/store", e,
         "fast hash join on a small table",
-        e.filter(col("vec_id") === 0), k = 20, poolK = 50,
-        layout = graft.index.IndexStore.HashPrefix)
+        e.filter(col("vec_id") === 0), k = 20, poolK = 50)
     },
     "q_hybrid_served_ann" -> { (s, dir) =>
       // the FULLY-served hybrid page: lexical arm from the stored
@@ -2639,8 +2635,7 @@ object SparkEntry {
       val e = emb(s, dir)
       graft.index.IndexStore.hybridTopKAnn(s, s"$tmp/store", s"$tmp/ann",
         "fast hash join on a small table", e.filter(col("vec_id") === 0),
-        k = 20, poolK = 50, nprobe = 8,
-        layout = graft.index.IndexStore.HashPrefix)
+        k = 20, poolK = 50, nprobe = 8)
     },
     "q_index_export_roundtrip" -> { (s, dir) =>
       // nested-JSON export codec (the reference's final_results.json

@@ -67,17 +67,16 @@ object IndexStore {
     private[index] def markerName: String = "hash_prefix"
   }
 
-  /** The save-time layout marker: every [[save]]/[[savePositional]]
-    * write records its layout as a root-level `_GRAFT_LAYOUT` file
-    * (underscore-prefixed — invisible to Spark's file listing, like
-    * `_SUCCESS`), because a store carries no other trace of it: a
-    * layout-mismatched read's prefix partition filter simply matches
-    * NOTHING, silently returning an empty result page instead of
-    * failing (the r18 advisory). Read faces validate the caller's
-    * layout against the marker and FAIL LOUDLY on mismatch; the SQL
-    * TVFs, which cannot take a Layout argument, resolve it from the
-    * marker. Marker-less stores (pre-marker exports) validate nothing
-    * — back-compat. */
+  /** The layout marker: the layout is chosen when a store is created,
+    * and every [[save]]/[[savePositional]] write records it as a
+    * root-level `_GRAFT_LAYOUT` file (underscore-prefixed — invisible
+    * to Spark's file listing, like `_SUCCESS`), because a store carries
+    * no other trace of it: a read under another layout's prefix
+    * partition filter simply matches NOTHING. Every later read (the
+    * API faces and the SQL TVFs alike) and every incremental refresh
+    * uses the store's marker, so no caller states the layout twice. A
+    * store without a marker is never read under a guessed layout: it
+    * raises. */
   private val LayoutMarker = "_GRAFT_LAYOUT"
 
   private def writeLayoutMarker(
@@ -88,37 +87,23 @@ object IndexStore {
     try out.write(layout.markerName.getBytes("UTF-8")) finally out.close()
   }
 
-  /** The layout a partitioned store was saved with, from its marker;
-    * None for stores written before the marker existed. Junk marker
-    * bodies fail loudly — a corrupt marker must not silently demote
-    * validation. */
-  def storedLayout(spark: SparkSession, dsPath: String): Option[Layout] = {
+  /** The layout a partitioned store was saved with, from one read of
+    * its marker. A missing marker or a junk marker body raises, naming
+    * the store. */
+  private def storedLayout(spark: SparkSession, dsPath: String): Layout = {
     val p = new Path(s"$dsPath/$LayoutMarker")
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val body =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-      Seq(FirstChar, HashPrefix).find(_.markerName == body).orElse(
+    val in =
+      try fs.open(p)
+      catch { case _: java.io.FileNotFoundException =>
         throw new IllegalArgumentException(
-          s"$dsPath/$LayoutMarker holds unknown layout '$body'"))
-    }
-  }
-
-  /** Validate a read against the store's recorded layout: a mismatch
-    * raises instead of serving the silently-empty page a wrong prefix
-    * filter produces. Returns the layout to read with. */
-  private def checkLayout(
-      spark: SparkSession, dsPath: String, requested: Layout): Layout = {
-    storedLayout(spark, dsPath).foreach { stored =>
-      require(stored == requested,
-        s"$dsPath was saved with layout '${stored.markerName}' but is being " +
-          s"read with '${requested.markerName}' — the prefix partition filter " +
-          "would match nothing; pass the saved layout")
-    }
-    requested
+          s"$dsPath has no $LayoutMarker marker: not a store written by IndexStore") }
+    val body =
+      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
+      finally in.close()
+    Seq(FirstChar, HashPrefix).find(_.markerName == body).getOrElse(
+      throw new IllegalArgumentException(
+        s"$dsPath/$LayoutMarker holds unknown layout '$body'"))
   }
 
   /** One co-locating shuffle + writer-satisfying sort before a
@@ -156,10 +141,12 @@ object IndexStore {
     new Path(root, ExternalCatalogUtils.getPartitionPathString(partCol, value))
 
   /** The served faces' postings read: only the partition directories
-    * of `keys`' prefixes, never the store root ([[partitionScan]]). */
-  private def prefixScan(spark: SparkSession, path: String,
-      layout: Layout, keys: Seq[String]): DataFrame =
+    * of `keys`' prefixes under the store's own layout, never the store
+    * root ([[partitionScan]]). */
+  private def prefixScan(spark: SparkSession, path: String, keys: Seq[String]): DataFrame = {
+    val layout = storedLayout(spark, path)
     partitionScan(spark, path, PrefixCol, keys.map(layout.prefixOf))
+  }
 
   /** Read only the `partCol = values` directories of a partitioned
     * store. `spark.read.parquet(root)` costs two Spark jobs before the
@@ -221,8 +208,7 @@ object IndexStore {
 
   /** Served point lookup: postings sorted cnt desc / doc_id asc (the
     * reference UI's result table, `main/app.py:73-77`, with
-    * deterministic ties). `layout` must match the one the store was
-    * saved with.
+    * deterministic ties).
     *
     * Cost: one Spark job with one task. [[prefixScan]] reads only the
     * key's prefix directory with the footer's schema, so there is no
@@ -233,11 +219,9 @@ object IndexStore {
     * task (`coalesce(1)` + `sortWithinPartitions`) instead of a global
     * `orderBy`'s sampling job and shuffle. A key whose prefix directory
     * is absent returns an empty frame and runs no job. */
-  def lookup(spark: SparkSession, path: String, word: String,
-      layout: Layout = FirstChar): DataFrame = {
-    checkLayout(spark, path, layout)
+  def lookup(spark: SparkSession, path: String, word: String): DataFrame = {
     val key = TextNorm.normalizeKey(word)
-    prefixScan(spark, path, layout, Seq(key))
+    prefixScan(spark, path, Seq(key))
       .filter(col("word") === key)
       .select(col("doc_id"), col("cnt"))
       .coalesce(1)
@@ -262,14 +246,11 @@ object IndexStore {
     * into the row-group scan) before [[InvertedIndex.phraseSearch]]
     * runs its shifted-intersection on the pruned postings. At 100 TB
     * the cost is per-term-postings-sized, never index-sized — the
-    * [[lookup]] serving story at phrase granularity. `layout` must
-    * match the one the store was saved with. */
-  def phraseSearch(spark: SparkSession, path: String, phrase: String,
-      layout: Layout = FirstChar): DataFrame = {
-    checkLayout(spark, path, layout)
+    * [[lookup]] serving story at phrase granularity. */
+  def phraseSearch(spark: SparkSession, path: String, phrase: String): DataFrame = {
     val keys = TextNorm.queryTerms(phrase).distinct
     require(keys.nonEmpty, s"phrase '$phrase' has no indexable terms")
-    val pruned = prefixScan(spark, path, layout, keys)
+    val pruned = prefixScan(spark, path, keys)
       .filter(col("word").isin(keys: _*))
       .select("word", "doc_id", "positions", "cnt")
     graft.index.InvertedIndex.phraseSearch(pruned, phrase)
@@ -361,7 +342,10 @@ object IndexStore {
     * store does not exist yet. Not through this path: reclaiming a
     * prefix NOT listed in `changedWords` — the caller owns the
     * completeness of the touched-term set, exactly like the band
-    * history's contract. */
+    * history's contract.
+    *
+    * `layout` chooses the layout of a NEW store only: a refresh of an
+    * existing store writes under the layout its marker records. */
   def saveSearchPageStoreFromIndex(
       posIndex: DataFrame, nDocs: Long, path: String,
       layout: Layout = FirstChar,
@@ -372,12 +356,13 @@ object IndexStore {
     val fs = postingsPath.getFileSystem(spark.sessionState.newHadoopConf())
     changedWords match {
       case Some(words) if fs.exists(postingsPath) =>
+        val stored = storedLayout(spark, postingsPath.toString)
         val prefixes = words
-          .select(layout.prefixCol.as(PrefixCol))
+          .select(stored.prefixCol.as(PrefixCol))
           .distinct().collect().map(_.getString(0)).toSeq
         if (prefixes.nonEmpty) {
           val fresh = posIndex
-            .withColumn(PrefixCol, layout.prefixCol)
+            .withColumn(PrefixCol, stored.prefixCol)
             .filter(col(PrefixCol).isin(prefixes: _*))
           // dynamic overwrite replaces exactly the partitions present
           // in the data; a changed prefix with NO surviving postings
@@ -438,8 +423,7 @@ object IndexStore {
     * `docsPath` is the doc-store parquet (`doc_id`, `text`) — ideally
     * a [[saveDocStore]] layout, against which the text fetch prunes to
     * ≤ k partition directories (plain parquet still works, with only
-    * the row-group id pushdown); `layout` must match the postings
-    * store's save-time layout.
+    * the row-group id pushdown).
     *
     * The ranked id set has THREE consumers (the hits restriction, the
     * text fetch, the final join), so the ranking executes ONCE and is
@@ -461,18 +445,8 @@ object IndexStore {
       window: Int = 10,
       k1: Double = 1.2,
       b: Double = 0.75,
-      layout: Layout = FirstChar,
       maxHitsPerTerm: Int = 1000): DataFrame = {
-    checkLayout(spark, s"$path/postings", layout)
-    val terms = TextNorm.queryTerms(query).distinct
-    require(terms.nonEmpty, s"query '$query' has no indexable terms")
-    val pruned = prefixScan(spark, s"$path/postings", layout, terms)
-      .filter(col("word").isin(terms: _*))
-    val rankedF = graft.index.InvertedIndex.bm25TopKFromStore(
-      pruned.select("word", "doc_id", "cnt"),
-      storedTable(spark, s"$path/doc_lengths"),
-      storedTable(spark, s"$path/stats"),
-      query, k, k1, b)
+    val (pruned, rankedF) = servedRanking(spark, path, query, k, k1, b)
     val rankedRows = rankedF.collect()
     val ranked = spark.createDataFrame(
       java.util.Arrays.asList(rankedRows: _*), rankedF.schema)
@@ -503,6 +477,24 @@ object IndexStore {
         col("start_pos"), col("n_terms"), col("n_hits"), col("snippet"))
   }
 
+  /** The served BM25 arm of a [[saveSearchPageStore]] store: the
+    * query's terms pin the prefix partitions and push a word `isin`
+    * into the row-group scan, and the pruned postings rank against the
+    * stored `doc_lengths` and `stats`. Returns the pruned postings (all
+    * columns, for [[searchPage]]'s hits) and the top-k ranking. */
+  private def servedRanking(spark: SparkSession, path: String, query: String,
+      k: Int, k1: Double, b: Double): (DataFrame, DataFrame) = {
+    val terms = TextNorm.queryTerms(query).distinct
+    require(terms.nonEmpty, s"query '$query' has no indexable terms")
+    val pruned = prefixScan(spark, s"$path/postings", terms)
+      .filter(col("word").isin(terms: _*))
+    (pruned, graft.index.InvertedIndex.bm25TopKFromStore(
+      pruned.select("word", "doc_id", "cnt"),
+      storedTable(spark, s"$path/doc_lengths"),
+      storedTable(spark, s"$path/stats"),
+      query, k, k1, b))
+  }
+
   /** BM25 ranked retrieval SERVED from a [[saveSearchPageStore]] store
     * — [[searchPage]]'s ranking path standalone, for callers that want
     * ranks without snippets: term-pruned stored postings (prefix
@@ -516,19 +508,8 @@ object IndexStore {
       query: String,
       k: Int,
       k1: Double = 1.2,
-      b: Double = 0.75,
-      layout: Layout = FirstChar): DataFrame = {
-    checkLayout(spark, s"$path/postings", layout)
-    val terms = TextNorm.queryTerms(query).distinct
-    require(terms.nonEmpty, s"query '$query' has no indexable terms")
-    graft.index.InvertedIndex.bm25TopKFromStore(
-      prefixScan(spark, s"$path/postings", layout, terms)
-        .filter(col("word").isin(terms: _*))
-        .select("word", "doc_id", "cnt"),
-      storedTable(spark, s"$path/doc_lengths"),
-      storedTable(spark, s"$path/stats"),
-      query, k, k1, b)
-  }
+      b: Double = 0.75): DataFrame =
+    servedRanking(spark, path, query, k, k1, b)._2
 
   /** Boolean AND/OR retrieval SERVED from a [[saveSearchPageStore]]
     * store: the terms' prefixes prune partitions, then
@@ -541,13 +522,11 @@ object IndexStore {
       spark: SparkSession,
       path: String,
       terms: Seq[String],
-      requireAll: Boolean = true,
-      layout: Layout = FirstChar): DataFrame = {
-    checkLayout(spark, s"$path/postings", layout)
+      requireAll: Boolean = true): DataFrame = {
     require(terms.nonEmpty, "booleanSearch needs at least one term")
     val keys = terms.map(TextNorm.normalizeKey).distinct
     graft.index.InvertedIndex.booleanSearch(
-      prefixScan(spark, s"$path/postings", layout, keys)
+      prefixScan(spark, s"$path/postings", keys)
         .select("word", "doc_id", "cnt"),
       terms, requireAll)
   }
@@ -573,18 +552,8 @@ object IndexStore {
       queryVec: DataFrame,
       k: Int,
       poolK: Int = 50,
-      rrfK: Int = 60,
-      layout: Layout = FirstChar): DataFrame = {
-    checkLayout(spark, s"$path/postings", layout)
-    val terms = TextNorm.queryTerms(queryText).distinct
-    require(terms.nonEmpty, s"query '$queryText' has no indexable terms")
-    val pruned = prefixScan(spark, s"$path/postings", layout, terms)
-      .filter(col("word").isin(terms: _*))
-    val lex = graft.index.InvertedIndex.bm25TopKFromStore(
-        pruned.select("word", "doc_id", "cnt"),
-        storedTable(spark, s"$path/doc_lengths"),
-        storedTable(spark, s"$path/stats"),
-        queryText, poolK)
+      rrfK: Int = 60): DataFrame = {
+    val lex = bm25TopK(spark, path, queryText, poolK)
       .select(col("doc_id"), col("rank").as("bm25_rank"))
     val sem = graft.ops.Similarity.bruteForceTopK(queryVec, embeddings, poolK)
       .select(col("neighbor_id").as("doc_id"), col("rank").as("cos_rank"))
@@ -619,9 +588,8 @@ object IndexStore {
       poolK: Int = 50,
       rrfK: Int = 60,
       nprobe: Int = 4,
-      m: Int = 4,
-      layout: Layout = FirstChar): DataFrame = {
-    val lex = bm25TopK(spark, path, queryText, poolK, layout = layout)
+      m: Int = 4): DataFrame = {
+    val lex = bm25TopK(spark, path, queryText, poolK)
       .select(col("doc_id"), col("rank").as("bm25_rank"))
     val sem = graft.ops.Similarity
       .ivfpqTopKFromStore(spark, annPath, queryVec, poolK, nprobe, m)

@@ -1841,7 +1841,17 @@ object Dedup {
       System.err.println(
         s"[graft] Dedup.clusters: not converged after $maxIterations rounds; " +
           "components may be over-split (raise maxIterations)")
-    labels
+    mat match {
+      // `labels` projects the cached last round, so the caller's release
+      // would match no cache entry: cache the projection itself, fill it
+      // from the round's cache, then drop the round
+      case graft.core.Materialize.Persist if labels ne prevRound =>
+        val out = graft.core.Materialize(labels, mat)
+        graft.core.Materialize.force(out, mat)
+        graft.core.Materialize.release(prevRound, mat)
+        out
+      case _ => labels
+    }
   }
 
   /** [[clusters]]' local path: the component rows of the materialized

@@ -114,12 +114,6 @@ object GraftExtensions {
     def numOr(i: Int, default: Double): Double = if (i < size) num(i) else default
   }
 
-  /** The lexical layout of a path-literal served face's store: resolved
-    * from the store's `_GRAFT_LAYOUT` marker, HashPrefix when it has
-    * none. */
-  private def servedLayout(spark: SparkSession, store: String): IndexStore.Layout =
-    IndexStore.storedLayout(spark, s"$store/postings").getOrElse(IndexStore.HashPrefix)
-
   private val scalarFunctions: Seq[Fn[Expression]] = Seq(
     scalar("graft_dot(a, b)", classOf[DotProduct])(a => DotProduct(a.expr(0), a.expr(1))),
 
@@ -1199,14 +1193,12 @@ object GraftExtensions {
       * [[graft.index.IndexStore.saveSearchPageStore]] root and the
       * doc-store parquet), not table names — the point of the served
       * face is answering from artifacts no session has registered.
-      * Layout resolves from the store's `_GRAFT_LAYOUT` marker (a
-      * hardcoded layout silently served an EMPTY page against a
-      * differently-laid store — the r18 advisory); marker-less stores
-      * fall back to HashPrefix, the serving default at scale. */
+      * The store was laid out when it was created; the read uses the
+      * layout its `_GRAFT_LAYOUT` marker records, and a store without a
+      * marker raises. */
     tvf("graft_search_page_served(store_path, docs_path, query, k[, window])",
         IndexStore.getClass) { a =>
-      IndexStore.searchPage(a.spark, a.str(0), a.str(1), a.str(2), a.int(3), a.intOr(4, 10),
-        layout = servedLayout(a.spark, a.str(0)))
+      IndexStore.searchPage(a.spark, a.str(0), a.str(1), a.str(2), a.int(3), a.intOr(4, 10))
     },
 
     /** SQL surface for the STORED-lexical-arm hybrid query —
@@ -1217,15 +1209,13 @@ object GraftExtensions {
       * }}}
       *
       * First argument is the [[graft.index.IndexStore.saveSearchPageStore]]
-      * PATH — layout resolved from the store's marker, HashPrefix when
-      * marker-less; the embedding arm stays a registered table.
-      * [[graft.index.IndexStore.hybridTopK]]. */
+      * PATH, read under the layout its marker records; the embedding arm
+      * stays a registered table. [[graft.index.IndexStore.hybridTopK]]. */
     tvf("graft_hybrid_served(store_path, emb_table, query, query_vec_id[, k, pool_k])",
         IndexStore.getClass) { a =>
       val emb = a.table(1)
       IndexStore.hybridTopK(a.spark, a.str(0), emb, a.str(2),
-        emb.filter(col("vec_id") === a.int(3)), a.intOr(4, 20), a.intOr(5, 50),
-        layout = servedLayout(a.spark, a.str(0)))
+        emb.filter(col("vec_id") === a.int(3)), a.intOr(4, 20), a.intOr(5, 50))
     },
 
     /** SQL surface for the FULLY-served hybrid query — BOTH arms from
@@ -1239,13 +1229,14 @@ object GraftExtensions {
       * The first two arguments are the search-page-store and
       * [[graft.ops.Similarity.saveAnnStore]] PATHS; the embedding table
       * supplies only the query vector (by id) — the corpus side answers
-      * from the cell-partitioned store. Lexical layout resolves from the
-      * store marker. Optional tail: k, pool_k, nprobe, m. */
+      * from the cell-partitioned store, and the lexical arm reads under
+      * the layout the store's marker records. Optional tail: k, pool_k,
+      * nprobe, m. */
     tvf("graft_hybrid_served_ann(store_path, ann_path, emb_table, query, query_vec_id" +
         "[, k, pool_k, nprobe, m])", IndexStore.getClass) { a =>
       IndexStore.hybridTopKAnn(a.spark, a.str(0), a.str(1), a.str(3),
         a.table(2).filter(col("vec_id") === a.int(4)), a.intOr(5, 20), a.intOr(6, 50),
-        nprobe = a.intOr(7, 4), m = a.intOr(8, 4), layout = servedLayout(a.spark, a.str(0)))
+        nprobe = a.intOr(7, 4), m = a.intOr(8, 4))
     })
 
   /** Register the SQL functions + planner strategies on an

@@ -1757,8 +1757,7 @@ class CorpusWatcherSpec extends SparkSpec {
     graft.index.IndexStore.saveSearchPageStoreFromIndex(
       snap1, nDocs = 2L, s"$store/sp", graft.index.IndexStore.HashPrefix)
     val served = graft.index.IndexStore.searchPage(spark, s"$store/sp",
-        s"$store/docs", "cat dog", k = 2, window = 3,
-        layout = graft.index.IndexStore.HashPrefix)
+        s"$store/docs", "cat dog", k = 2, window = 3)
       .as[(Int, String, Double, Long, Long, Long, String)].collect().toSet
     val want = graft.index.InvertedIndex.searchPage(docsNow, "cat dog",
         k = 2, window = 3)

@@ -304,6 +304,21 @@ class DedupSpec extends SparkSpec {
     assert(persisted.as[(Long, Long)].collect().toMap === want)
   }
 
+  test("clusters' distributed path under Persist: the caller's release frees every cache entry of the call") {
+    import graft.core.Materialize
+    val pairs = Seq((2L, 5L), (5L, 9L), (20L, 21L)).toDF("doc_a", "doc_b")
+    val cache = spark.sharedState.cacheManager
+    cache.clearCache()
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val labels = Dedup.components(pairs, 20, Materialize.Persist, localPairs = 0)
+    assert(labels.as[(Long, Long)].collect().toMap ===
+      Map(2L -> 2L, 5L -> 2L, 9L -> 2L, 20L -> 20L, 21L -> 20L))
+    Materialize.release(labels, Materialize.Persist)
+    assert(cache.isEmpty, "a hash-to-min round outlived the release of the labels")
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- persistedBefore).isEmpty,
+      "a persistent RDD outlived the release of the labels")
+  }
+
   test("clusters picks its path by pair count against LocalPairs, whatever the broadcast setting") {
     import graft.core.Materialize
     def withThreshold[T](v: String)(f: => T): T = {

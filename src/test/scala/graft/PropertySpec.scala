@@ -57,14 +57,19 @@ class PropertySpec extends SparkSpec {
     val wantLongs = Map[Any, Any](3L -> 3L, 5L -> 3L, 7L -> 7L, 9L -> 9L, 11L -> 9L, (null, null))
     def labels(df: DataFrame): (Seq[(Any, Any)], org.apache.spark.sql.types.StructType) =
       (df.collect().toSeq.map(r => r.get(0) -> r.get(1)), df.schema)
-    try for (mat <- Seq(Materialize.LocalCheckpoint, Materialize.Persist);
-             (pairs, want) <- Seq(strings -> wantStrings, longs -> wantLongs)) {
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    for (mat <- Seq(Materialize.LocalCheckpoint, Materialize.Persist);
+         (pairs, want) <- Seq(strings -> wantStrings, longs -> wantLongs)) {
       val (local, localSchema) = labels(Dedup.clusters(pairs, mat = mat))
-      val (dist, distSchema) = labels(Dedup.components(pairs, 20, mat, localPairs = 0))
+      val distLabels = Dedup.components(pairs, 20, mat, localPairs = 0)
+      val (dist, distSchema) = labels(distLabels)
+      Materialize.release(distLabels, mat)
       assert(local.size === want.size && local.toMap === want, s"local, $mat")
       assert(dist.size === want.size && dist.toMap === want, s"distributed, $mat")
       assert(localSchema === distSchema, s"$mat")
-    } finally spark.sharedState.cacheManager.clearCache() // the distributed Persist labels
+    }
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- persistedBefore).isEmpty,
+      "released labels left a persistent RDD behind")
   }
 
   test("entropySignals == plain-Scala entropy under the same 6dp-term recipe") {

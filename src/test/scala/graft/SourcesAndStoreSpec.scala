@@ -126,14 +126,14 @@ class SourcesAndStoreSpec extends SparkSpec {
         Seq(words.head, words(words.size / 2), words.last).foreach { w =>
           val want = idx.filter($"word" === w).orderBy($"cnt".desc, $"doc_id")
             .select("doc_id", "cnt").as[(Long, Long)].collect().toSeq
-          val df = IndexStore.lookup(spark, path, w, layout)
+          val df = IndexStore.lookup(spark, path, w)
           val (got, jobs, tasks) = jobsAndTasks(df.as[(Long, Long)].collect().toSeq)
           assert(got === want && got.nonEmpty, s"$layout lookup '$w'")
           assert(jobs === 1, s"$layout lookup '$w' ran $jobs jobs")
           assert(tasks === 1, s"$layout lookup '$w' ran $tasks tasks")
         }
         // building the lookup itself runs nothing: no listing, no inference
-        assert(jobsAndTasks(IndexStore.lookup(spark, path, words.head, layout))._2 === 0)
+        assert(jobsAndTasks(IndexStore.lookup(spark, path, words.head))._2 === 0)
       }
   }
 
@@ -161,11 +161,11 @@ class SourcesAndStoreSpec extends SparkSpec {
     Seq(IndexStore.FirstChar, IndexStore.HashPrefix).foreach { layout =>
       val path = tmp(s"storestr-$layout") + "/index"
       IndexStore.save(idx, path, layout)
-      val df = IndexStore.lookup(spark, path, "Apple", layout)
+      val df = IndexStore.lookup(spark, path, "Apple")
       assert(df.schema === IndexStore.load(spark, path).select("doc_id", "cnt").schema)
       assert(df.schema("doc_id").dataType === org.apache.spark.sql.types.StringType)
       assert(df.as[(String, Long)].collect().toSeq === Seq(("b.txt", 2L), ("c.txt", 1L)))
-      assert(IndexStore.lookup(spark, path, "banana", layout).as[(String, Long)]
+      assert(IndexStore.lookup(spark, path, "banana").as[(String, Long)]
         .collect().toSeq === Seq(("a.txt", 1L), ("b.txt", 1L)))
     }
   }
@@ -179,12 +179,12 @@ class SourcesAndStoreSpec extends SparkSpec {
     assert(IndexStore.load(spark, path).as[(String, Long, Long)].collect().toSet ===
       idx.as[(String, Long, Long)].collect().toSet)
 
-    val q = IndexStore.lookup(spark, path, "Banana!", IndexStore.HashPrefix)
+    val q = IndexStore.lookup(spark, path, "Banana!")
     assert(q.as[(Long, Long)].collect().toSeq === Seq((1L, 1L), (2L, 1L)))
 
     // md5("banana") = 72b302bf... → the scan must pin word_pfx = 72 at
     // planning time and read exactly one partition directory
-    val qe = IndexStore.lookup(spark, path, "banana", IndexStore.HashPrefix).queryExecution
+    val qe = IndexStore.lookup(spark, path, "banana").queryExecution
     val plan = qe.executedPlan.toString
     val pfLine = plan.linesIterator.find(_.contains("PartitionFilters")).getOrElse("")
     assert(pfLine.contains("= 72)"), s"hash prefix not pinned in: $pfLine\n$plan")
@@ -216,12 +216,12 @@ class SourcesAndStoreSpec extends SparkSpec {
     IndexStore.savePositional(pos, path, IndexStore.HashPrefix)
     val want = InvertedIndex.phraseSearch(pos, "cat dog")
       .as[(Long, Long, Long)].collect().toSet
-    val served = IndexStore.phraseSearch(spark, path, "Cat, DOG!", IndexStore.HashPrefix)
+    val served = IndexStore.phraseSearch(spark, path, "Cat, DOG!")
     assert(served.as[(Long, Long, Long)].collect().toSet === want)
     // the scan must pin the two terms' md5 prefixes as partition
     // filters and push the word isin — per-term-postings cost, never
     // index-sized
-    val plan = IndexStore.phraseSearch(spark, path, "cat dog", IndexStore.HashPrefix)
+    val plan = IndexStore.phraseSearch(spark, path, "cat dog")
       .queryExecution.executedPlan.toString
     val pfLine = plan.linesIterator.find(_.contains("PartitionFilters")).getOrElse("")
     assert(pfLine.contains("word_pfx"), s"no partition filter in: $pfLine\n$plan")
@@ -242,7 +242,7 @@ class SourcesAndStoreSpec extends SparkSpec {
     val want = InvertedIndex.searchPage(c, "cat dog", k = 2, window = 4)
       .as[(Int, Long, Double, Long, Long, Long, String)].collect().toSet
     val served = IndexStore.searchPage(spark, s"$base/store", s"$base/docs",
-      "Cat, DOG!", k = 2, window = 4, layout = IndexStore.HashPrefix)
+      "Cat, DOG!", k = 2, window = 4)
     assert(served.as[(Int, Long, Double, Long, Long, Long, String)]
       .collect().toSet === want,
       "the served page must be row-identical to the in-plan face")
@@ -250,8 +250,7 @@ class SourcesAndStoreSpec extends SparkSpec {
     // md5 prefixes as PARTITION filters and pushes the word isin —
     // per-query cost is per-term-postings-sized, never index-sized
     val qe = IndexStore.searchPage(spark, s"$base/store", s"$base/docs",
-      "cat dog", k = 2, window = 4, layout = IndexStore.HashPrefix)
-      .queryExecution
+      "cat dog", k = 2, window = 4).queryExecution
     val plan = qe.executedPlan.toString
     val pfLines = plan.linesIterator.filter(_.contains("PartitionFilters")).toSeq
     val postingsPf = pfLines.filter(_.contains("word_pfx"))
@@ -310,8 +309,7 @@ class SourcesAndStoreSpec extends SparkSpec {
     val hybWant = InvertedIndex.hybridTopK(c, e, "cat dog",
       e.filter($"vec_id" === 1L), k = 3, poolK = 3).collect().toSet
     val hybServed = IndexStore.hybridTopK(spark, s"$base/store", e, "cat dog",
-      e.filter($"vec_id" === 1L), k = 3, poolK = 3,
-      layout = IndexStore.HashPrefix).collect().toSet
+      e.filter($"vec_id" === 1L), k = 3, poolK = 3).collect().toSet
     assert(hybServed === hybWant,
       "the served hybrid page must be row-identical to the in-plan face")
     e.createOrReplaceTempView("hys_emb")
@@ -334,7 +332,7 @@ class SourcesAndStoreSpec extends SparkSpec {
       k = 3).collect().toSet
     val annServed = IndexStore.hybridTopKAnn(spark, s"$base/store", s"$base/ann",
       "cat dog", e.filter($"vec_id" === 1L), k = 3, poolK = 3,
-      nprobe = 2, m = 2, layout = IndexStore.HashPrefix).collect().toSet
+      nprobe = 2, m = 2).collect().toSet
     assert(annServed === annWant,
       "the ANN-served hybrid page must equal the stored-table composition")
     assert(spark.sql(
@@ -344,46 +342,152 @@ class SourcesAndStoreSpec extends SparkSpec {
     // served plain BM25 and boolean retrieval: parity + pruned plans —
     // every retrieval face now has a served twin over the ONE store
     val idx = InvertedIndex.build(c)
-    assert(IndexStore.bm25TopK(spark, s"$base/store", "cat dog", k = 3,
-        layout = IndexStore.HashPrefix)
+    assert(IndexStore.bm25TopK(spark, s"$base/store", "cat dog", k = 3)
       .collect().toSet === InvertedIndex.bm25TopK(idx, "cat dog", 4, 3)
       .collect().toSet, "served BM25 must equal the in-plan ranking")
-    assert(IndexStore.booleanSearch(spark, s"$base/store", Seq("Cat.", "dog"),
-        layout = IndexStore.HashPrefix)
+    assert(IndexStore.booleanSearch(spark, s"$base/store", Seq("Cat.", "dog"))
       .collect().toSet === InvertedIndex.booleanSearch(idx, Seq("Cat.", "dog"))
       .collect().toSet, "served boolean must equal the in-plan intersection")
-    val bPlan = IndexStore.bm25TopK(spark, s"$base/store", "cat dog", k = 3,
-      layout = IndexStore.HashPrefix).queryExecution.executedPlan.toString
+    val bPlan = IndexStore.bm25TopK(spark, s"$base/store", "cat dog", k = 3)
+      .queryExecution.executedPlan.toString
     assert(bPlan.linesIterator.exists(l =>
       l.contains("PartitionFilters") && l.contains("word_pfx")),
       s"served BM25 must prune postings partitions:\n$bPlan")
   }
 
-  test("layout marker: a mismatched read fails loudly instead of serving an empty page; TVFs resolve the marker") {
-    val c = Seq((1L, "apple banana"), (2L, "banana cherry")).toDF("doc_id", "text")
+  test("layout marker: FirstChar and HashPrefix stores serve through all seven faces and the three path-literal TVFs with no layout argument") {
+    val c = Seq(
+      (1L, "cat and dog together here with cat again nearby today"),
+      (2L, "only a cat in this one and nothing else at all"),
+      (3L, "dog dog dog dog dog repeated for emphasis and more dog"),
+      (4L, "no terms whatsoever in this filler document right here"))
+      .toDF("doc_id", "text")
+    val e = Seq((1L, Array(1.0, 0.0)), (2L, Array(0.9, 0.1)),
+      (3L, Array(0.0, 1.0)), (4L, Array(0.5, 0.5))).toDF("vec_id", "embedding")
+    e.createOrReplaceTempView("mk_emb")
+    val qv = e.filter($"vec_id" === 1L)
     val idx = InvertedIndex.build(c)
-    val path = tmp("storemk") + "/index"
-    IndexStore.save(idx, path, IndexStore.HashPrefix)
-    assert(IndexStore.storedLayout(spark, path) === Some(IndexStore.HashPrefix))
-    // pre-marker behavior: the wrong layout's prefix filter matched
-    // nothing -> silently empty; now it raises, naming both layouts
-    val e = intercept[IllegalArgumentException](
-      IndexStore.lookup(spark, path, "banana", IndexStore.FirstChar))
-    assert(e.getMessage.contains("hash_prefix") && e.getMessage.contains("first_char"))
-    // the matching layout still serves
-    assert(IndexStore.lookup(spark, path, "banana", IndexStore.HashPrefix)
-      .count() === 2L)
-    // a FIRSTCHAR search-page store through the path-literal TVF: the
-    // TVF resolves the marker instead of assuming HashPrefix — the
-    // exact silent-empty-page scenario the r18 advisory flagged
-    val base = tmp("storemk2")
-    IndexStore.saveDocStore(c, s"$base/docs")
-    IndexStore.saveSearchPageStore(c, s"$base/store", IndexStore.FirstChar)
+    val pos = InvertedIndex.buildPositional(c)
+    val shared = tmp("storemkshared")
+    IndexStore.saveDocStore(c, s"$shared/docs")
+    val (coarse, assign) = graft.ops.Similarity.kmeansModel(e)
+    val (books, codes) = graft.ops.Similarity.pqModel(e, m = 2)
+    graft.ops.Similarity.saveAnnStore(coarse, assign, books, codes, s"$shared/ann")
+    // the in-plan faces each served face was pinned against when its
+    // caller passed the matching layout
+    val want = Seq(
+      idx.filter($"word" === "cat").orderBy($"cnt".desc, $"doc_id")
+        .select("doc_id", "cnt").collect().toSeq,
+      InvertedIndex.phraseSearch(pos, "cat again").collect().toSeq,
+      InvertedIndex.searchPage(c, "cat dog", k = 2, window = 4).collect().toSeq,
+      InvertedIndex.bm25TopK(idx, "cat dog", 4, 3).collect().toSeq,
+      InvertedIndex.booleanSearch(idx, Seq("cat", "dog")).collect().toSeq,
+      InvertedIndex.hybridTopK(c, e, "cat dog", qv, k = 3, poolK = 3).collect().toSeq,
+      InvertedIndex.hybridFromRankings(
+        InvertedIndex.bm25TopK(idx, "cat dog", 4L, 3).select($"doc_id", $"rank".as("bm25_rank")),
+        graft.ops.Similarity.ivfpqSearch(qv, coarse, assign, books, codes, 3, nprobe = 2, m = 2)
+          .select($"neighbor_id".as("doc_id"), $"rank".as("cos_rank")),
+        k = 3).collect().toSeq)
     graft.plans.GraftExtensions.install(spark)
-    assert(spark.sql(
-        s"SELECT * FROM graft_search_page_served('$base/store', '$base/docs', 'banana', 2)")
-      .count() === 2L,
-      "the TVF must serve a FirstChar store by resolving its marker")
+    Seq(IndexStore.FirstChar -> "word_pfx=c", IndexStore.HashPrefix -> "word_pfx=d0")
+      .foreach { case (layout, catDir) => // md5("cat") = d077f244...
+        val base = tmp(s"storemk-$layout")
+        IndexStore.save(idx, s"$base/flat", layout)
+        IndexStore.savePositional(pos, s"$base/pos", layout)
+        IndexStore.saveSearchPageStore(c, s"$base/store", layout)
+        Seq("flat", "pos", "store/postings").foreach { d =>
+          assert(new java.io.File(s"$base/$d/$catDir").isDirectory, s"$layout: $d/$catDir")
+        }
+        val store = s"$base/store"
+        val got = Seq(
+          IndexStore.lookup(spark, s"$base/flat", "Cat"),
+          IndexStore.phraseSearch(spark, s"$base/pos", "Cat, again"),
+          IndexStore.searchPage(spark, store, s"$shared/docs", "cat dog", k = 2, window = 4),
+          IndexStore.bm25TopK(spark, store, "cat dog", k = 3),
+          IndexStore.booleanSearch(spark, store, Seq("cat", "dog")),
+          IndexStore.hybridTopK(spark, store, e, "cat dog", qv, k = 3, poolK = 3),
+          IndexStore.hybridTopKAnn(spark, store, s"$shared/ann", "cat dog", qv,
+            k = 3, poolK = 3, nprobe = 2, m = 2)).map(_.collect().toSeq)
+        got.zip(want).zipWithIndex.foreach { case ((g, w), i) =>
+          assert(g.nonEmpty && g.toSet === w.toSet && g.size === w.size, s"$layout face $i")
+        }
+        assert(got(0) === want(0), s"$layout lookup order")
+        val tvfs = Seq(
+          s"graft_search_page_served('$store', '$shared/docs', 'cat dog', 2, 4)" -> want(2),
+          s"graft_hybrid_served('$store', 'mk_emb', 'cat dog', 1, 3, 3)" -> want(5),
+          s"graft_hybrid_served_ann('$store', '$shared/ann', 'mk_emb', 'cat dog', 1, 3, 3, 2, 2)" -> want(6))
+        tvfs.foreach { case (call, w) =>
+          assert(spark.sql(s"SELECT * FROM $call").collect().toSet === w.toSet, s"$layout $call")
+        }
+      }
+  }
+
+  test("layout marker: a store without one raises through the API and the TVF, naming the path") {
+    val c = Seq((1L, "apple banana"), (2L, "banana cherry")).toDF("doc_id", "text")
+    val base = tmp("storenomk")
+    IndexStore.save(InvertedIndex.build(c), s"$base/flat", IndexStore.HashPrefix)
+    IndexStore.saveDocStore(c, s"$base/docs")
+    IndexStore.saveSearchPageStore(c, s"$base/store", IndexStore.HashPrefix)
+    Seq(s"$base/flat", s"$base/store/postings").foreach { d =>
+      assert(new java.io.File(s"$d/_GRAFT_LAYOUT").delete(), s"fixture: marker of $d")
+    }
+    def messages(t: Throwable): Seq[String] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(x => String.valueOf(x.getMessage)).toSeq
+    val api = Seq(
+      s"$base/flat" -> intercept[IllegalArgumentException](
+        IndexStore.lookup(spark, s"$base/flat", "banana")),
+      s"$base/store/postings" -> intercept[IllegalArgumentException](
+        IndexStore.bm25TopK(spark, s"$base/store", "banana", k = 2)),
+      s"$base/store/postings" -> intercept[IllegalArgumentException](
+        IndexStore.searchPage(spark, s"$base/store", s"$base/docs", "banana", k = 2)))
+    api.foreach { case (path, err) =>
+      assert(err.getMessage.contains(path) && err.getMessage.contains("_GRAFT_LAYOUT"), err.getMessage)
+    }
+    graft.plans.GraftExtensions.install(spark)
+    val viaSql = intercept[Exception](spark.sql(
+      s"SELECT * FROM graft_search_page_served('$base/store', '$base/docs', 'banana', 2)").collect())
+    assert(messages(viaSql).exists(_.contains(s"$base/store/postings")), messages(viaSql).mkString("\n"))
+  }
+
+  test("IndexStore: only the four save entry points take a Layout") {
+    val takesLayout = IndexStore.getClass.getMethods.toSeq
+      .filterNot(_.getName.contains("$"))
+      .filter(_.getParameterTypes.exists(classOf[IndexStore.Layout].isAssignableFrom))
+      .map(_.getName).toSet
+    assert(takesLayout ===
+      Set("save", "savePositional", "saveSearchPageStore", "saveSearchPageStoreFromIndex"))
+  }
+
+  test("incremental refresh of a HashPrefix store passed FirstChar writes only the store's own directories") {
+    val c1 = Seq((1L, "apple banana apple"), (2L, "banana cherry unique"),
+      (3L, "delta echo")).toDF("doc_id", "text")
+    val store = tmp("storeincx") + "/sp"
+    IndexStore.saveSearchPageStoreFromIndex(
+      InvertedIndex.buildPositional(c1), 3L, store, IndexStore.HashPrefix)
+    val c2 = Seq((1L, "apple banana apple"), (2L, "banana cherry fresh"),
+      (3L, "delta echo"), (4L, "golf hotel")).toDF("doc_id", "text")
+    val pos2 = InvertedIndex.buildPositional(c2)
+    val changed = Seq("unique", "fresh", "banana", "cherry", "golf", "hotel").toDF("word")
+    // the layout argument names a new store's layout only, never an
+    // existing store's
+    IndexStore.saveSearchPageStoreFromIndex(pos2, 4L, store, IndexStore.FirstChar,
+      changedWords = Some(changed))
+    val dirs = new java.io.File(s"$store/postings").list().filter(_.startsWith("word_pfx=")).toSeq
+    assert(dirs.nonEmpty && dirs.forall(_.matches("word_pfx=[0-9a-f]{2}")),
+      s"the refresh wrote outside the store's md5 directories: ${dirs.sorted.mkString(", ")}")
+    val full = tmp("storeincxfull") + "/sp"
+    IndexStore.saveSearchPageStoreFromIndex(pos2, 4L, full, IndexStore.HashPrefix)
+    def table(s: String, t: String) = spark.read.parquet(s"$s/$t").collect().toSet
+    assert(table(store, "doc_lengths") === table(full, "doc_lengths"),
+      "doc_lengths must count every posting once")
+    assert(table(store, "stats") === table(full, "stats"))
+    Seq("banana fresh", "golf", "apple").foreach { q =>
+      assert(IndexStore.bm25TopK(spark, store, q, k = 4).collect().toSeq ===
+        IndexStore.bm25TopK(spark, full, q, k = 4).collect().toSeq, q)
+    }
+    assert(IndexStore.booleanSearch(spark, store, Seq("fresh"), requireAll = false)
+      .collect().toSet === IndexStore.booleanSearch(spark, full, Seq("fresh"), requireAll = false)
+      .collect().toSet)
   }
 
   test("incremental search-page-store refresh: only changed prefixes rewrite; untouched dirs byte-stable; vanished prefixes reclaimed; served parity") {
@@ -438,10 +542,8 @@ class SourcesAndStoreSpec extends SparkSpec {
       "refreshed postings must equal the from-scratch export")
     assert(spark.read.parquet(s"$store/stats").collect().toSeq ===
       spark.read.parquet(s"$full/stats").collect().toSeq)
-    assert(IndexStore.bm25TopK(spark, store, "banana fresh", k = 4,
-        layout = IndexStore.HashPrefix).collect().toSeq ===
-      IndexStore.bm25TopK(spark, full, "banana fresh", k = 4,
-        layout = IndexStore.HashPrefix).collect().toSeq,
+    assert(IndexStore.bm25TopK(spark, store, "banana fresh", k = 4).collect().toSeq ===
+      IndexStore.bm25TopK(spark, full, "banana fresh", k = 4).collect().toSeq,
       "served ranking parity after the incremental refresh")
   }
 
