@@ -3111,8 +3111,7 @@ object SparkEntry {
     "q_frontier_guard" -> ((s, dir) => {
       val pages = linkPages(s, dir)
       val fr = graft.core.Materialize(
-        graft.ops.Crawl.crawlFrontier(pages, stagedRank3(s, dir), perHostCap = 5),
-        graft.core.Materialize.Persist)
+        graft.ops.Crawl.crawlFrontier(pages, stagedRank3(s, dir), perHostCap = 5))
       val traps = graft.ops.Crawl.urlTemplates(fr, urlCol = "link_url")
         .where(col("n_urls") >= 3)
       graft.ops.Crawl.blockTemplates(fr, traps)
@@ -3925,8 +3924,7 @@ object SparkEntry {
       // re-scoring the survivors (r19, guide §2.4)
       val scored = graft.core.Materialize(
         cs.scored.join(dd.select(col("doc_id"), col("lang"),
-          (col("domain") =!= "web").as("actual")), Seq("doc_id")),
-        graft.core.Materialize.LocalCheckpoint)
+          (col("domain") =!= "web").as("actual")), Seq("doc_id")))
       val sweep = graft.ops.Curation.thresholdSweepBy(scored,
         thresholds = Seq(-2.0, -1.0, 0.0, 1.0, 2.0), groupCol = "lang")
       val biases = graft.ops.Curation.operatingPointsBy(sweep, "lang")
@@ -3953,8 +3951,7 @@ object SparkEntry {
       val sweep = graft.core.Materialize(graft.ops.Curation.thresholdSweep(
         scored.join(d.select(col("doc_id"), (col("domain") =!= "web").as("actual")),
           Seq("doc_id")),
-        thresholds = Seq(-2.0, -1.0, 0.0, 1.0, 2.0)),
-        graft.core.Materialize.LocalCheckpoint)
+        thresholds = Seq(-2.0, -1.0, 0.0, 1.0, 2.0)))
       graft.ops.Curation.operatingPoint(sweep)
         .unionByName(graft.ops.Curation.operatingPoint(sweep,
           graft.ops.Curation.OpObjective.PrecisionFloor(0.9)))
@@ -4010,8 +4007,7 @@ object SparkEntry {
       val sweep = graft.core.Materialize(graft.ops.Curation.thresholdSweepBy(
         scored.join(d.select(col("doc_id"), col("lang"),
           (col("domain") =!= "web").as("actual")), Seq("doc_id")),
-        thresholds = Seq(-2.0, -1.0, 0.0, 1.0, 2.0), groupCol = "lang"),
-        graft.core.Materialize.LocalCheckpoint)
+        thresholds = Seq(-2.0, -1.0, 0.0, 1.0, 2.0), groupCol = "lang"))
       graft.ops.Curation.operatingPointsBy(sweep, "lang")
         .unionByName(graft.ops.Curation.operatingPointsBy(sweep, "lang",
           graft.ops.Curation.OpObjective.PrecisionFloor(0.9)))
@@ -4134,8 +4130,7 @@ object SparkEntry {
       // sweep aggregates it and the chain gate thresholds the SAME
       // logits instead of re-running the scoring tokenize pass over
       // the survivors (r19, guide §2.4 — ClassifierGate.precomputedLogits)
-      val scored = graft.core.Materialize(cs.scored,
-        graft.core.Materialize.LocalCheckpoint)
+      val scored = graft.core.Materialize(cs.scored)
       val sweep = graft.ops.Curation.thresholdSweep(
         scored.join(dd.select(col("doc_id"), (col("domain") =!= "web").as("actual")),
             Seq("doc_id")),

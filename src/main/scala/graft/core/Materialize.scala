@@ -3,9 +3,9 @@ package graft.core
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
-/** Materialization strategies for a derived table that is about to be
-  * referenced more than once in one plan (e.g. both sides of a
-  * self-join, or two union branches).
+/** Materialization of a derived table that is about to be referenced
+  * more than once in one plan (e.g. both sides of a self-join, or two
+  * union branches).
   *
   * Why this exists: Catalyst's `DeduplicateRelations` gives each
   * reference of the same logical subtree fresh expression ids, so
@@ -13,96 +13,117 @@ import org.apache.spark.storage.StorageLevel
   * upstream pipeline executes once PER REFERENCE unless the table is
   * materialized first.
   *
-  * Two strategies, chosen per deployment:
+  * The strategy is a property of the surface that builds the plan, not
+  * of an operator: every operator calls [[apply]], [[force]] and
+  * [[release]] with no strategy, and they use the one in scope.
   *
-  *   - [[Materialize.LocalCheckpoint]] (default): eager
-  *     `localCheckpoint` — cheapest on a single node (no lineage
+  *   - [[LocalCheckpoint]] is the default — the DataFrame API, the
+  *     bench and oracle mains, and the streaming watchers. Eager
+  *     `localCheckpoint`: cheapest on a single node (no lineage
   *     re-evaluation, blocks stored on the executors that computed
-  *     them) but NOT fault-tolerant: losing an executor loses its
-  *     blocks with no lineage to recompute them.
-  *   - [[Materialize.Persist]]: `persist(MEMORY_AND_DISK)` — the cache
-  *     manager substitutes the cached relation into every reference
-  *     (cache lookup matches on the canonicalized analyzed plan, so it
-  *     fires on re-aliased self-join sides too), the pipeline computes
-  *     once, and lineage is retained so executor loss triggers
-  *     recompute instead of job failure. The right choice on a
-  *     long-lived multi-executor cluster.
+  *     them) but NOT fault-tolerant. Nothing enters the cache manager;
+  *     the ContextCleaner drops the blocks once the table is
+  *     unreachable, so a call leaves no state behind.
+  *   - [[Persist]] is the SQL surface's: every graft table-valued
+  *     function resolves its plan in this scope, so resolving (and
+  *     `EXPLAIN`) runs no job. `persist(MEMORY_AND_DISK)` is lazy; the
+  *     cache manager substitutes the cached relation into every
+  *     reference (it matches on the canonicalized analyzed plan, so it
+  *     fires on re-aliased self-join sides too) and lineage is
+  *     retained. The entries live until the session drops them —
+  *     re-issuing the same call reuses them, and
+  *     `spark.catalog.clearCache()` releases them.
+  *   - [[Lazy]] is the serving path's ([[graft.index.IndexStore]]'s
+  *     snippet stage): no materialization at all, for references that
+  *     are cheap to re-run (pruned store reads) and whose plan must
+  *     keep those scans visible.
+  *
+  * [[using]] opens a scope. It is a plain, non-inheritable thread-local
+  * restored on exit; [[Par]] carries the caller's strategy into its
+  * pool threads.
   */
 object Materialize {
 
   sealed trait Strategy
 
-  /** Eager localCheckpoint: single-node default, not fault-tolerant. */
+  /** Eager localCheckpoint: the default, not fault-tolerant. */
   case object LocalCheckpoint extends Strategy
 
-  /** persist(MEMORY_AND_DISK): fault-tolerant, lineage retained. */
+  /** persist(MEMORY_AND_DISK): lazy, lineage retained. */
   case object Persist extends Strategy
 
-  /** No materialization at all — the plan is referenced as-is and each
-    * reference re-executes it. For call sites whose repeated references
-    * are CHEAP to re-run (e.g. pruned store reads in a serving path)
-    * and whose final plan must keep those scans visible (partition/
-    * row-group pruning evidence); everywhere else prefer a real
-    * strategy — re-executing an expensive subtree per reference is the
-    * exact cost this module exists to remove. */
+  /** No materialization: each reference re-executes the plan. */
   case object Lazy extends Strategy
 
-  /** Materialize `df` under the chosen strategy so later multiple
-    * references execute its pipeline exactly once.
-    *
-    * Lifecycle note for [[Persist]]: the cache entry lives until the
-    * session drops it — a long-running job that calls a persisting
-    * operator per batch should `df.unpersist()` its outputs' inputs (or
-    * `spark.sharedState.cacheManager.clearCache()` between batches)
-    * once downstream results are materialized, or executor storage
-    * accumulates one signature/bucket table per call. LocalCheckpoint
-    * blocks are dropped with the RDD by the ContextCleaner once
-    * unreferenced.
-    */
-  def apply(df: DataFrame, strategy: Strategy = LocalCheckpoint): DataFrame =
-    strategy match {
-      case LocalCheckpoint =>
-        if (sys.env.contains("GRAFT_MAT_TRACE")) {
-          val t0 = System.nanoTime()
-          val out = df.localCheckpoint()
-          val caller = Thread.currentThread().getStackTrace
-            .drop(2).find(e => !e.getClassName.startsWith("graft.core"))
-            .map(e => s"${e.getClassName.stripPrefix("graft.")}:${e.getLineNumber}")
-            .getOrElse("?")
-          System.err.println(f"[mat] ${(System.nanoTime() - t0) / 1e9}%6.3fs $caller")
-          out
-        } else df.localCheckpoint()
-      case Persist         => df.persist(StorageLevel.MEMORY_AND_DISK)
-      case Lazy            => df
-    }
+  private val scope: ThreadLocal[Strategy] = ThreadLocal.withInitial(() => LocalCheckpoint)
+
+  /** The strategy in scope on this thread. */
+  private[graft] def current: Strategy = scope.get
+
+  /** Run `body` with `strategy` in scope, restoring the previous one. */
+  private[graft] def using[A](strategy: Strategy)(body: => A): A = {
+    val prev = scope.get
+    scope.set(strategy)
+    try body finally scope.set(prev)
+  }
+
+  /** Materialize `df` under the strategy in scope so later multiple
+    * references execute its pipeline exactly once. */
+  def apply(df: DataFrame): DataFrame = current match {
+    case LocalCheckpoint => df.localCheckpoint()
+    case Persist         => df.persist(StorageLevel.MEMORY_AND_DISK)
+    case Lazy            => df
+  }
 
   /** Force a table previously passed to [[apply]] so a superseded
     * input can be released safely (iterative loops call this on each
-    * round's output before releasing the previous round). Under
-    * [[LocalCheckpoint]] `apply` was already EAGER — the blocks exist,
-    * so this is a no-op: the `df.limit(1).count()` the loops used to
-    * run here was one redundant job (plus its scheduling gap) per
-    * iteration (r20). Under [[Persist]] materialization is lazy, so one
-    * full-scan action runs the pipeline and pins the cache before the
-    * caller releases what it read. (A full count, not `limit(1)` — a
-    * partial action materializes only the partitions it touches.) */
-  def force(df: DataFrame, strategy: Strategy): Unit =
-    strategy match {
-      case LocalCheckpoint => ()
-      case Persist         => df.count(); ()
-      case Lazy            => ()
-    }
+    * round's output before releasing the previous round). A no-op
+    * unless the strategy is the lazy [[Persist]]: then one full-scan
+    * action runs the pipeline and pins the cache. (A full count, not
+    * `limit(1)` — a partial action materializes only the partitions it
+    * touches.) */
+  def force(df: DataFrame): Unit = current match {
+    case Persist => df.count(); ()
+    case _       => ()
+  }
 
   /** Release a table previously materialized with [[apply]] once its
-    * consumers have materialized (iterative algorithms call this on the
-    * superseded round's table). Persist: drop the cache entry without
-    * blocking. LocalCheckpoint: no-op — the checkpoint RDD's blocks are
-    * reclaimed by the ContextCleaner when the DataFrame becomes
-    * unreachable. */
-  def release(df: DataFrame, strategy: Strategy): Unit =
-    strategy match {
-      case LocalCheckpoint => ()
-      case Persist         => df.unpersist(blocking = false); ()
-      case Lazy            => ()
-    }
+    * consumers have materialized. Persist: drop the cache entry without
+    * blocking. Otherwise a no-op — checkpoint blocks are reclaimed by
+    * the ContextCleaner when the DataFrame becomes unreachable. */
+  def release(df: DataFrame): Unit = current match {
+    case Persist => df.unpersist(blocking = false); ()
+    case _       => ()
+  }
+
+  /** A MODEL-SIZED table (centroids, codebooks: k rows whatever the
+    * corpus size). Under the eager [[LocalCheckpoint]] the rows are
+    * collected to the driver and rebuilt as a local relation — no
+    * executor block round trip per round, and a later `broadcast` of it
+    * launches no job. Otherwise as [[apply]], so a [[Persist]] scope
+    * still resolves without a job. */
+  private[graft] def small(df: DataFrame): DataFrame = current match {
+    case LocalCheckpoint =>
+      df.sparkSession.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+    case _ => apply(df)
+  }
+
+  /** `narrowed`, a projection of the materialized `df`, as a table the
+    * caller's [[release]] frees. Under [[Persist]] a projection of a
+    * cached table matches no cache entry, so the projection is cached
+    * itself, filled from `df`'s cache, and `df` is dropped; otherwise
+    * `narrowed` is returned as is. */
+  private[graft] def narrow(df: DataFrame, narrowed: DataFrame): DataFrame = current match {
+    case Persist if narrowed ne df =>
+      val out = apply(narrowed)
+      force(out)
+      release(df)
+      out
+    case _ => narrowed
+  }
+
+  /** True when [[apply]] cuts lineage (eager [[LocalCheckpoint]]): a
+    * materialized table can then never re-read what its plan
+    * referenced, e.g. a broadcast it probed. */
+  private[graft] def cutsLineage: Boolean = current == LocalCheckpoint
 }

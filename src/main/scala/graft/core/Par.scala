@@ -38,16 +38,24 @@ object Par {
         t
       }))
 
+  /** `body` on a pool thread, under the caller's [[Materialize]]
+    * strategy (a pool thread otherwise sees the default, or whatever a
+    * previous task left). */
+  private def fork[A](body: => A): Future[A] = {
+    val strategy = Materialize.current
+    Future(Materialize.using(strategy)(body))(pool)
+  }
+
   /** Run both thunks concurrently; return both results. */
   def both[A, B](fa: => A, fb: => B): (A, B) = {
-    val fut = Future(fa)(pool)
+    val fut = fork(fa)
     val b = fb
     (Await.result(fut, Duration.Inf), b)
   }
 
   /** Run all thunks concurrently; return results in order. */
   def all[A](fs: (() => A)*): Seq[A] = {
-    val futs = fs.map(f => Future(f())(pool))
+    val futs = fs.map(f => fork(f()))
     futs.map(Await.result(_, Duration.Inf))
   }
 }

@@ -469,9 +469,9 @@ object IndexStore {
     // per-term postings) — cheap to re-reference, and the final plan
     // must keep the pruned scans visible (the pruning evidence this
     // face serves by)
-    val snip = graft.index.InvertedIndex.snippets(
-      pageHits, pageDocs, query, window, maxHitsPerTerm,
-      mat = graft.core.Materialize.Lazy)
+    val snip = graft.core.Materialize.using(graft.core.Materialize.Lazy) {
+      graft.index.InvertedIndex.snippets(pageHits, pageDocs, query, window, maxHitsPerTerm)
+    }
     ranked.join(snip, Seq("doc_id"))
       .select(col("rank"), col("doc_id"), col("score"),
         col("start_pos"), col("n_terms"), col("n_hits"), col("snippet"))

@@ -157,8 +157,7 @@ object InvertedIndex {
       docs: DataFrame,
       query: String,
       window: Int = 10,
-      maxHitsPerTerm: Int = 1000,
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint): DataFrame = {
+      maxHitsPerTerm: Int = 1000): DataFrame = {
     require(window >= 1, s"window=$window must be >= 1")
     require(maxHitsPerTerm >= 1, s"maxHitsPerTerm=$maxHitsPerTerm must be >= 1")
     val terms = TextNorm.queryTerms(query).distinct
@@ -168,13 +167,11 @@ object InvertedIndex {
     // sides, so a lazy hits would execute the whole posIndex pipeline —
     // for the in-plan faces a full positional index build — once per
     // side. The table is query-term-occurrences-sized (bounded by
-    // maxHitsPerTerm per (doc, term)), never index-sized. TVF callers
-    // pass the lazy Persist strategy so EXPLAIN still runs no job.
+    // maxHitsPerTerm per (doc, term)), never index-sized.
     val hits = graft.core.Materialize(
       posIndex.filter(col("word").isin(terms: _*))
         .select(col("doc_id"), col("word"),
-          explode(slice(col("positions"), 1, maxHitsPerTerm)).as("pos")),
-      mat)
+          explode(slice(col("positions"), 1, maxHitsPerTerm)).as("pos")))
     val scored = hits.select(col("doc_id"), col("pos").as("start"))
       .join(hits, Seq("doc_id"))
       .where(col("pos") >= col("start") && col("pos") < col("start") + window)
@@ -212,19 +209,17 @@ object InvertedIndex {
       window: Int = 10,
       k1: Double = 1.2,
       b: Double = 0.75,
-      maxHitsPerTerm: Int = 1000,
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint): DataFrame = {
+      maxHitsPerTerm: Int = 1000): DataFrame = {
     // ranked is MATERIALIZED (r20): it is referenced twice (the
     // snippet-input semi-join and the final rank join), and
     // DeduplicateRelations re-aliases the references, so a lazy ranked
     // would run the whole BM25 subtree — a full-corpus index build —
-    // once per reference. The table is k rows. TVF callers pass the
-    // lazy Persist strategy so EXPLAIN runs no job.
+    // once per reference. The table is k rows.
     val ranked = graft.core.Materialize(
-      bm25TopKFromDocs(docs, query, k, k1, b), mat)
+      bm25TopKFromDocs(docs, query, k, k1, b))
     val pageDocs = docs.join(ranked.select("doc_id"), Seq("doc_id"), "left_semi")
     val snip = snippets(buildPositional(pageDocs), pageDocs, query, window,
-      maxHitsPerTerm, mat)
+      maxHitsPerTerm)
     ranked.join(snip, Seq("doc_id"))
       .select(col("rank"), col("doc_id"), col("score"),
         col("start_pos"), col("n_terms"), col("n_hits"), col("snippet"))

@@ -121,7 +121,6 @@ object Bpe {
       docs: DataFrame,
       numMerges: Int,
       minFrequency: Long = 2L,
-      mat: Materialize.Strategy = Materialize.LocalCheckpoint,
       maxLocalVocab: Long = 1000000L,
       byteLevel: Boolean = false,
       tok: Column => Column = TextNorm.tokens): Seq[Merge] = {
@@ -134,7 +133,7 @@ object Bpe {
     if (probe.length <= cap)
       trainMergesLocal(probe.map(r => (r.getString(0), r.getLong(1))), numMerges,
         minFrequency, byteLevel)
-    else trainMergesDistributed(docs, numMerges, minFrequency, mat, byteLevel, tok)
+    else trainMergesDistributed(docs, numMerges, minFrequency, byteLevel, tok)
   }
 
   /** Driver-local exact BPE refinement over the collected
@@ -235,11 +234,10 @@ object Bpe {
       docs: DataFrame,
       numMerges: Int,
       minFrequency: Long,
-      mat: Materialize.Strategy,
       byteLevel: Boolean = false,
       tok: Column => Column = TextNorm.tokens): Seq[Merge] = {
     var words = Materialize(
-      wordCounts(docs, tok).select(syms0(col("word"), byteLevel).as("syms"), col("cnt")), mat)
+      wordCounts(docs, tok).select(syms0(col("word"), byteLevel).as("syms"), col("cnt")))
     val out = scala.collection.mutable.ListBuffer.empty[Merge]
     var done = false
     while (out.size < numMerges && !done) {
@@ -260,12 +258,12 @@ object Bpe {
         val next = Materialize(
           words.select(
             replace(col("syms"), lit(s" $a  $b "), lit(s" $a$b ")).as("syms"),
-            col("cnt")), mat)
-        Materialize.release(words, mat)
+            col("cnt")))
+        Materialize.release(words)
         words = next
       }
     }
-    Materialize.release(words, mat)
+    Materialize.release(words)
     out.toList
   }
 
@@ -275,11 +273,10 @@ object Bpe {
       docs: DataFrame,
       numMerges: Int,
       minFrequency: Long = 2L,
-      mat: Materialize.Strategy = Materialize.LocalCheckpoint,
       byteLevel: Boolean = false,
       tok: Column => Column = TextNorm.tokens): DataFrame = {
     val spark = docs.sparkSession
-    spark.createDataFrame(trainMerges(docs, numMerges, minFrequency, mat,
+    spark.createDataFrame(trainMerges(docs, numMerges, minFrequency,
         byteLevel = byteLevel, tok = tok))
       .select("merge_idx", "lhs", "rhs", "merged", "pair_count")
   }

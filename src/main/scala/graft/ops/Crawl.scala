@@ -321,8 +321,7 @@ object Crawl {
     * host-template-table-sized. */
   def urlTemplates(
       pages: DataFrame,
-      urlCol: String = "url",
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.Persist): DataFrame = {
+      urlCol: String = "url"): DataFrame = {
     val tpl = graft.core.Materialize(
       urlCanon(pages, urlCol)
         .where(col("canon_url").isNotNull)
@@ -330,8 +329,7 @@ object Crawl {
           regexp_replace(
             regexp_replace(col("canon_url"), Robots.PathQueryPat, ""),
             DigitRunPat, "{n}").as("template"),
-          col("canon_url")),
-      mat)
+          col("canon_url")))
     val base = tpl.groupBy(col("host"), col("template"))
       .agg(count(lit(1)).as("n_pages"))
     val dist = tpl.select(col("host"), col("template"), col("canon_url")).distinct()
@@ -711,8 +709,7 @@ object Crawl {
     // ONE directive pass feeds both the map and the page keys (the
     // two-pass form re-ran the whole extraction per side)
     val d = graft.core.Materialize(
-      pageDirectives(pages, urlCol).select("doc_id", "url_key", "canonical_url"),
-      graft.core.Materialize.LocalCheckpoint)
+      pageDirectives(pages, urlCol).select("doc_id", "url_key", "canonical_url"))
     val m = d
       .where(col("canonical_url").isNotNull && col("url_key").isNotNull)
       .select(col("url_key"), md5(col("canonical_url")).as("target_key"))
@@ -864,18 +861,15 @@ object Crawl {
     * iterative graph ops ([[domainRank]], [[hits]]) share. The caller
     * releases `e`; `nodes` stays for the result lineage. */
   private def distinctGraph(
-      edges: DataFrame,
-      mat: graft.core.Materialize.Strategy): (DataFrame, DataFrame) = {
+      edges: DataFrame): (DataFrame, DataFrame) = {
     val e = graft.core.Materialize(
       edges.select(col("src"), col("dst"))
         .where(col("src").isNotNull && col("dst").isNotNull)
-        .distinct(),
-      mat)
+        .distinct())
     val nodes = graft.core.Materialize(
       e.select(col("src").as("node"))
         .unionByName(e.select(col("dst").as("node")))
-        .distinct(),
-      mat)
+        .distinct())
     (e, nodes)
   }
 
@@ -883,9 +877,8 @@ object Crawl {
       edges: DataFrame,
       iters: Int = 5,
       damping: Double = 0.85,
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint,
       tol: Double = 0.0): DataFrame =
-    domainRankConverged(edges, iters, damping, mat, tol)._1
+    domainRankConverged(edges, iters, damping, tol)._1
 
   /** [[domainRank]] plus the number of iterations actually run — the
     * convergence face. `tol > 0` adds a stopping rule: after each
@@ -902,9 +895,8 @@ object Crawl {
       edges: DataFrame,
       iters: Int = 5,
       damping: Double = 0.85,
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint,
       tol: Double = 0.0): (DataFrame, Int) =
-    domainRankIterate(edges, iters, damping, mat, tol, prior = None)
+    domainRankIterate(edges, iters, damping, tol, prior = None)
 
   /** Warm-start PageRank — the DELTA-REFRESH face: yesterday's stored
     * [[domainRank]] table seeds today's iteration over the grown edge
@@ -928,9 +920,8 @@ object Crawl {
       prior: DataFrame,
       iters: Int = 1,
       damping: Double = 0.85,
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint,
       tol: Double = 0.0): DataFrame =
-    domainRankIterate(edges, iters, damping, mat, tol, prior = Some(prior))._1
+    domainRankIterate(edges, iters, damping, tol, prior = Some(prior))._1
 
   /** TrustRank (Gyöngyi, Garcia-Molina & Pedersen, VLDB '04 —
     * "Combating Web Spam with TrustRank"): biased PageRank whose
@@ -961,11 +952,10 @@ object Crawl {
       edges: DataFrame,
       seeds: DataFrame,
       iters: Int = 3,
-      damping: Double = 0.85,
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint): DataFrame = {
+      damping: Double = 0.85): DataFrame = {
     require(iters >= 1, s"iters=$iters must be >= 1")
     require(damping > 0 && damping < 1, s"damping=$damping must be in (0, 1)")
-    val (e, nodes) = distinctGraph(edges, mat)
+    val (e, nodes) = distinctGraph(edges)
     val seedFlag = nodes
       .join(broadcast(seeds.select(col("node")).distinct()), Seq("node"))
       .select(col("node"), lit(1).as("is_seed"))
@@ -973,13 +963,13 @@ object Crawl {
     require(nSeeds >= 1, "trustRank needs at least one seed present in the graph")
     val nsD = lit(nSeeds.toDouble)
     val flagged = graft.core.Materialize(
-      nodes.join(broadcast(seedFlag), Seq("node"), "left"), mat)
+      nodes.join(broadcast(seedFlag), Seq("node"), "left"))
     val outdeg = e.groupBy(col("src")).agg(count(lit(1)).cast("double").as("outdeg"))
     val init = flagged.select(col("node"),
       when(col("is_seed").isNotNull,
         round(lit(RankUnits).cast("double") / nsD, 0).cast("long"))
         .otherwise(lit(0L)).as("rank_u"))
-    var ranks = graft.core.Materialize(init, mat)
+    var ranks = graft.core.Materialize(init)
     for (_ <- 1 to iters) {
       val contribs = ranks
         .join(outdeg, ranks("node") === outdeg("src"))
@@ -1006,15 +996,14 @@ object Crawl {
               .otherwise(
                 round(lit(damping) * coalesce(col("inb_u"), lit(0L)).cast("double"), 0)
                   .cast("long"))
-              .as("rank_u")),
-        mat)
+              .as("rank_u")))
       // no-op under eager LocalCheckpoint; forces the cache under Persist
-      graft.core.Materialize.force(next, mat)
-      graft.core.Materialize.release(ranks, mat)
+      graft.core.Materialize.force(next)
+      graft.core.Materialize.release(ranks)
       ranks = next
     }
-    graft.core.Materialize.release(e, mat)
-    graft.core.Materialize.release(flagged, mat)
+    graft.core.Materialize.release(e)
+    graft.core.Materialize.release(flagged)
     ranks.select(col("node"),
       (col("rank_u").cast("double") / lit(RankUnits).cast("double")).as("trust"))
   }
@@ -1025,14 +1014,13 @@ object Crawl {
       edges: DataFrame,
       iters: Int,
       damping: Double,
-      mat: graft.core.Materialize.Strategy,
       tol: Double,
       prior: Option[DataFrame]): (DataFrame, Int) = {
     require(iters >= 1, s"iters=$iters must be >= 1")
     require(damping > 0 && damping < 1, s"damping=$damping must be in (0, 1)")
     require(tol >= 0, s"tol=$tol must be >= 0")
     val tolUnits = math.round(tol * RankUnits)
-    val (e, nodes) = distinctGraph(edges, mat)
+    val (e, nodes) = distinctGraph(edges)
     // n_nodes is one already-materialized count, constant across the
     // loop — read it driver-side ONCE (r19) instead of re-broadcasting
     // a one-row aggregate subtree into init and into every round's
@@ -1056,7 +1044,7 @@ object Crawl {
               lit(RankUnits).cast("double") / nNodes), 0)
               .cast("long").as("rank_u"))
     }
-    var ranks = graft.core.Materialize(init, mat)
+    var ranks = graft.core.Materialize(init)
     var prev = ranks
     var itersRun = 0
     var converged = false
@@ -1090,10 +1078,9 @@ object Crawl {
                   (coalesce(col("inb_u"), lit(0L)).cast("double") +
                     col("dang_u").cast("double") / nNodes),
               0).cast("long").as("rank_u"),
-            col("rank_u").as("prev_u")),
-        mat)
+            col("rank_u").as("prev_u")))
       // no-op under eager LocalCheckpoint; forces the cache under Persist
-      graft.core.Materialize.force(next, mat)
+      graft.core.Materialize.force(next)
       itersRun += 1
       if (tolUnits > 0 && itersRun < iters) {
         // one aggregate over the materialized round; the driver reads
@@ -1103,11 +1090,11 @@ object Crawl {
           .head().getLong(0)
         converged = delta < tolUnits
       }
-      if (prev ne next) graft.core.Materialize.release(prev, mat)
+      if (prev ne next) graft.core.Materialize.release(prev)
       prev = next
       ranks = next
     }
-    graft.core.Materialize.release(e, mat)
+    graft.core.Materialize.release(e)
     (ranks.select(col("node"),
       (col("rank_u").cast("double") / lit(RankUnits).cast("double")).as("rank")),
       itersRun)
@@ -1140,10 +1127,9 @@ object Crawl {
     * removed. */
   def hits(
       edges: DataFrame,
-      iters: Int = 5,
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint): DataFrame = {
+      iters: Int = 5): DataFrame = {
     require(iters >= 1, s"iters=$iters must be >= 1")
-    val (e, nodes) = distinctGraph(edges, mat)
+    val (e, nodes) = distinctGraph(edges)
     val nRow = nodes.agg(count(lit(1)).cast("double").as("n_nodes"))
     def normalized(raw: DataFrame, scoreCol: String): DataFrame = {
       // raw: (node, raw_u) over receiving nodes only; others score 0
@@ -1159,26 +1145,25 @@ object Crawl {
       nodes.crossJoin(broadcast(nRow))
         .select(col("node"),
           round(lit(RankUnits).cast("double") / col("n_nodes"), 0)
-            .cast("long").as("hub_u")),
-      mat)
+            .cast("long").as("hub_u")))
     var auths: DataFrame = null
     var prevH = hubs
     var prevA: DataFrame = null
     for (_ <- 1 to iters) {
       val aRaw = e.join(hubs, e("src") === hubs("node"))
         .groupBy(col("dst").as("node")).agg(sum(col("hub_u")).as("raw_u"))
-      val a = graft.core.Materialize(normalized(aRaw, "auth_u"), mat)
-      graft.core.Materialize.force(a, mat) // no-op under eager LocalCheckpoint
+      val a = graft.core.Materialize(normalized(aRaw, "auth_u"))
+      graft.core.Materialize.force(a) // no-op under eager LocalCheckpoint
       val hRaw = e.join(a, e("dst") === a("node"))
         .groupBy(col("src").as("node")).agg(sum(col("auth_u")).as("raw_u"))
-      val h = graft.core.Materialize(normalized(hRaw, "hub_u"), mat)
-      graft.core.Materialize.force(h, mat) // no-op under eager LocalCheckpoint
-      if (prevA ne null) graft.core.Materialize.release(prevA, mat)
-      if (prevH ne h) graft.core.Materialize.release(prevH, mat)
+      val h = graft.core.Materialize(normalized(hRaw, "hub_u"))
+      graft.core.Materialize.force(h) // no-op under eager LocalCheckpoint
+      if (prevA ne null) graft.core.Materialize.release(prevA)
+      if (prevH ne h) graft.core.Materialize.release(prevH)
       prevA = a; prevH = h
       auths = a; hubs = h
     }
-    graft.core.Materialize.release(e, mat)
+    graft.core.Materialize.release(e)
     hubs.join(auths, Seq("node"))
       .select(col("node"),
         (col("hub_u").cast("double") / lit(RankUnits).cast("double")).as("hub"),
@@ -1219,8 +1204,7 @@ object Crawl {
       pages: DataFrame,
       urlCol: String = "url",
       iters: Int = 2,
-      damping: Double = 0.85,
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint): DataFrame = {
+      damping: Double = 0.85): DataFrame = {
     val canon = urlCanon(pages, urlCol)
       .where(col("canon_url").isNotNull)
       .select(col("doc_id"), col("canon_url"), col("host").as("page_h"))
@@ -1232,7 +1216,7 @@ object Crawl {
         col("link_url") =!= col("canon_url"))
       .select(col("link_host").as("host"), col("canon_url").as("src"),
         col("link_url").as("dst"))
-    urlRankEdges(edges, iters, damping, mat)
+    urlRankEdges(edges, iters, damping)
   }
 
   /** [[urlRank]] over a prepared `(host, src, dst)` intra-host edge
@@ -1240,21 +1224,18 @@ object Crawl {
   def urlRankEdges(
       edges: DataFrame,
       iters: Int = 2,
-      damping: Double = 0.85,
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint): DataFrame = {
+      damping: Double = 0.85): DataFrame = {
     require(iters >= 1, s"iters=$iters must be >= 1")
     require(damping > 0 && damping < 1, s"damping=$damping must be in (0, 1)")
     val e = graft.core.Materialize(
       edges.select(col("host"), col("src"), col("dst"))
         .where(col("host").isNotNull && col("src").isNotNull &&
           col("dst").isNotNull && col("src") =!= col("dst"))
-        .distinct(),
-      mat)
+        .distinct())
     val nodes = graft.core.Materialize(
       e.select(col("host"), col("src").as("node"))
         .unionByName(e.select(col("host"), col("dst").as("node")))
-        .distinct(),
-      mat)
+        .distinct())
     // aggregate keys carry UNIQUE names (hh/oh/ih/dh) so every join
     // below is an explicit cross-name condition — plain Seq-joins or
     // df("col") refs over this shared-lineage graph trip Spark's
@@ -1273,8 +1254,7 @@ object Crawl {
       nodes.join(nHost, col("host") === col("hh"))
         .select(col("host"), col("node"), col("n_nodes"),
           round(lit(RankUnits).cast("double") / col("n_nodes"), 0)
-            .cast("long").as("rank_u")),
-      mat)
+            .cast("long").as("rank_u")))
     var prev = ranks
     for (_ <- 1 to iters) {
       val contribs = ranks
@@ -1301,15 +1281,14 @@ object Crawl {
                 lit(damping) *
                   (coalesce(col("inb_u"), lit(0L)).cast("double") +
                     coalesce(col("dang_u"), lit(0L)).cast("double") / col("n_nodes")),
-              0).cast("long").as("rank_u")),
-        mat)
+              0).cast("long").as("rank_u")))
       // no-op under eager LocalCheckpoint; forces the cache under Persist
-      graft.core.Materialize.force(next, mat)
-      if (prev ne next) graft.core.Materialize.release(prev, mat)
+      graft.core.Materialize.force(next)
+      if (prev ne next) graft.core.Materialize.release(prev)
       prev = next
       ranks = next
     }
-    graft.core.Materialize.release(e, mat)
+    graft.core.Materialize.release(e)
     ranks.select(col("host"), col("node").as("url"),
       (col("rank_u").cast("double") / lit(RankUnits).cast("double")).as("rank"))
   }
@@ -1345,12 +1324,11 @@ object Crawl {
     * clusters do). Nodes with no edges never enter the graph. */
   def hostComponents(
       edges: DataFrame,
-      maxIterations: Int = 20,
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint): DataFrame =
+      maxIterations: Int = 20): DataFrame =
     Dedup.clusters(
       edges.select(col("src").as("doc_a"), col("dst").as("doc_b"))
         .where(col("doc_a").isNotNull && col("doc_b").isNotNull),
-      maxIterations, mat)
+      maxIterations)
       .select(col("doc_id").as("node"), col("cluster_id").as("component_id"))
 
   /** BFS hop distance from a SEED set over the host graph — crawl
@@ -1378,18 +1356,15 @@ object Crawl {
   def crawlDepth(
       edges: DataFrame,
       seeds: DataFrame,
-      maxDepth: Int = 5,
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint): DataFrame = {
+      maxDepth: Int = 5): DataFrame = {
     require(maxDepth >= 0, s"maxDepth=$maxDepth must be >= 0")
     val e = graft.core.Materialize(
       edges.select(col("src"), col("dst"))
         .where(col("src").isNotNull && col("dst").isNotNull)
-        .distinct(),
-      mat)
+        .distinct())
     val seed = graft.core.Materialize(
       seeds.select(col("node")).where(col("node").isNotNull).distinct()
-        .withColumn("depth", lit(0L)),
-      mat)
+        .withColumn("depth", lit(0L)))
     // the accumulated depth table stays a LAZY union over the
     // materialized waves (r20): waves are disjoint (each anti-joins
     // everything before it) and each is materialized, so the union is
@@ -1407,10 +1382,9 @@ object Crawl {
         e.join(frontier, e("src") === frontier("node"))
           .select(e("dst").as("node")).distinct()
           .join(depth, Seq("node"), "left_anti")
-          .withColumn("depth", lit(k.toLong)),
-        mat)
+          .withColumn("depth", lit(k.toLong)))
       if (next.limit(1).count() == 0L) {
-        graft.core.Materialize.release(next, mat)
+        graft.core.Materialize.release(next)
         exhausted = true
       } else {
         depth = depth.unionByName(next)
@@ -1418,7 +1392,7 @@ object Crawl {
         k += 1
       }
     }
-    graft.core.Materialize.release(e, mat)
+    graft.core.Materialize.release(e)
     depth
   }
 
@@ -1520,20 +1494,17 @@ object Crawl {
       ranks: DataFrame,
       urlCol: String = "url",
       perHostCap: Int = 10,
-      fpp: Double = 0.01,
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.Persist): DataFrame = {
+      fpp: Double = 0.01): DataFrame = {
     require(perHostCap >= 1, s"perHostCap=$perHostCap must be >= 1")
     require(fpp > 0 && fpp < 1, s"fpp=$fpp must be in (0, 1)")
     import org.apache.spark.sql.GraftSqlBridge
     import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
     import org.apache.spark.sql.types.BinaryType
     // seen feeds three actions (size count, filter build, exact
-    // confirm join) — materialize once; Persist keeps it lazy-shaped
-    // for the single-action confirm that follows
+    // confirm join) — materialize once
     val seen = graft.core.Materialize(
       pages.select(md5(canonicalizeUrl(col(urlCol))).as("url_key"))
-        .where(col("url_key").isNotNull).distinct(),
-      mat)
+        .where(col("url_key").isNotNull).distinct())
     val nSeen = math.max(seen.count(), 1L)
     val bloom = seen.select(xxhash64(col("url_key")).as("h"))
       .stat.bloomFilter("h", nSeen, fpp)
@@ -1616,20 +1587,17 @@ object Crawl {
       perHostCap: Int = 10,
       fpp: Double = 0.01,
       shards: Int = 4,
-      probePartitionsPerShard: Int = 1,
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.Persist): DataFrame =
+      probePartitionsPerShard: Int = 1): DataFrame =
     crawlFrontierBloomShardedCore(pages, ranks, urlCol, perHostCap, fpp,
-      shards, probePartitionsPerShard, mat)._1
+      shards, probePartitionsPerShard)._1
 
   /** The crawl-LOOP form of [[crawlFrontierBloomSharded]]: same plan,
-    * but the frontier is MATERIALIZED under `outMat` and every shard's
-    * broadcast is destroyed before returning — the caller gets a
-    * concrete work list with no live references to the wave's filter
-    * bytes, so per-wave broadcasts never accumulate on executors
-    * across a long-running driver (the lazy form frees them only when
-    * the ContextCleaner notices the plan is gone). Under
-    * `Materialize.Persist` the caller owns release of the RESULT, as
-    * everywhere; the broadcasts are gone either way. */
+    * but the frontier is MATERIALIZED and every shard's broadcast is
+    * released before returning — the caller gets a concrete work list
+    * with no live references to the wave's filter bytes, so per-wave
+    * broadcasts never accumulate on executors across a long-running
+    * driver (the lazy form frees them only when the ContextCleaner
+    * notices the plan is gone). */
   def crawlFrontierBloomShardedMaterialized(
       pages: DataFrame,
       ranks: DataFrame,
@@ -1637,29 +1605,24 @@ object Crawl {
       perHostCap: Int = 10,
       fpp: Double = 0.01,
       shards: Int = 4,
-      probePartitionsPerShard: Int = 1,
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.Persist,
-      outMat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint): DataFrame = {
+      probePartitionsPerShard: Int = 1): DataFrame = {
     val (frontier, handles) = crawlFrontierBloomShardedCore(pages, ranks, urlCol,
-      perHostCap, fpp, shards, probePartitionsPerShard, mat)
-    val out = graft.core.Materialize(frontier, outMat)
-    outMat match {
-      case graft.core.Materialize.Persist =>
-        // Persist is lazy — force the probe while the filters are
-        // alive — and it RETAINS LINEAGE as its fault-tolerance
-        // contract (Materialize scaladoc): an executor loss or an
-        // evicted/cleared cache re-executes the probe, so the shard
-        // broadcasts must stay recomputable. unpersist() frees the
-        // executor blocks with the wave but keeps the driver-side
-        // value, so a recompute re-broadcasts instead of failing on
-        // a destroyed handle.
-        out.count()
-        handles.foreach(_.unpersist(blocking = false))
-      case graft.core.Materialize.LocalCheckpoint =>
-        // eager concrete blocks, lineage CUT — nothing can ever
-        // re-reference the filters; destroy frees the driver copy too
-        handles.foreach(_.destroy())
-    }
+      perHostCap, fpp, shards, probePartitionsPerShard)
+    val out = graft.core.Materialize(frontier)
+    // force the probe while the filters are alive (a no-op when the
+    // materialization was eager)
+    graft.core.Materialize.force(out)
+    if (graft.core.Materialize.cutsLineage)
+      // concrete blocks, lineage CUT — nothing can ever re-reference
+      // the filters; destroy frees the driver copy too
+      handles.foreach(_.destroy())
+    else
+      // lineage RETAINED: an executor loss or a cleared cache
+      // re-executes the probe, so the broadcasts must stay
+      // recomputable. unpersist() frees the executor blocks with the
+      // wave but keeps the driver-side value, so a recompute
+      // re-broadcasts instead of failing on a destroyed handle.
+      handles.foreach(_.unpersist(blocking = false))
     out
   }
 
@@ -1670,8 +1633,7 @@ object Crawl {
       perHostCap: Int,
       fpp: Double,
       shards: Int,
-      probePartitionsPerShard: Int,
-      mat: graft.core.Materialize.Strategy)
+      probePartitionsPerShard: Int)
       : (DataFrame, Seq[org.apache.spark.broadcast.Broadcast[Array[Byte]]]) = {
     require(perHostCap >= 1, s"perHostCap=$perHostCap must be >= 1")
     require(fpp > 0 && fpp < 1, s"fpp=$fpp must be in (0, 1)")
@@ -1683,8 +1645,7 @@ object Crawl {
       pages.select(seal(urlParts(col(urlCol))).as("up"))
         .select(md5(col("up.canon_url")).as("url_key"),
           pmod(xxhash64(col("up.host")), lit(shards)).cast("int").as("shard"))
-        .where(col("url_key").isNotNull).distinct(),
-      mat)
+        .where(col("url_key").isNotNull).distinct())
     val counts = seen.groupBy(col("shard")).agg(count(lit(1)).as("n"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     // ALL shard filters in ONE job: keys repartition by shard, each
@@ -1911,8 +1872,7 @@ object Crawl {
     * body-sized entries ONCE, after the fixpoint. */
   def sitemapTree(
       sitemaps: DataFrame,
-      maxDepth: Int = 5,
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint)
+      maxDepth: Int = 5)
       : DataFrame = {
     require(maxDepth >= 0, s"maxDepth=$maxDepth must be >= 0")
     // ONE materialized canon pass feeds both doc-keyed faces: selfs
@@ -1921,11 +1881,10 @@ object Crawl {
     // both derive lazily from it, trading one eager job for two
     // cheap re-aggregations of a doc-sized checkpointed table
     val selfUrls = graft.core.Materialize(
-      sitemaps.select(col("doc_id"), canonicalizeUrl(col("url")).as("self_url")),
-      mat)
+      sitemaps.select(col("doc_id"), canonicalizeUrl(col("url")).as("self_url")))
     val selfs = selfUrls.where(col("self_url").isNotNull)
       .groupBy(col("self_url")).agg(min(col("doc_id")).as("doc_id"))
-    val entries = graft.core.Materialize(sitemapUrls(sitemaps), mat)
+    val entries = graft.core.Materialize(sitemapUrls(sitemaps))
     // index edges: src doc -> FETCHED child doc (unfetched locs stay
     // out of the walk; they surface as child_doc_id NULL rows)
     val edges = graft.core.Materialize(
@@ -1933,8 +1892,7 @@ object Crawl {
         .select(col("doc_id").as("src"), col("url"))
         .join(selfs.select(col("self_url").as("url"), col("doc_id").as("child")),
           Seq("url"))
-        .select(col("src"), col("child")).distinct(),
-      mat)
+        .select(col("src"), col("child")).distinct())
     val names = selfUrls.select(col("doc_id"),
       coalesce(col("self_url"), col("doc_id").cast("string")).as("name"))
     val roots = selfUrls.select(col("doc_id")).distinct()
@@ -1943,8 +1901,7 @@ object Crawl {
     val rootChains = graft.core.Materialize(
       roots.join(names, Seq("doc_id"))
         .select(col("doc_id"), lit(0).as("depth"),
-          array(col("doc_id")).as("path_ids"), col("name").as("path")),
-      mat)
+          array(col("doc_id")).as("path_ids"), col("name").as("path")))
     // chains accumulates as a LAZY union over the materialized waves
     // (r20, the crawlDepth discipline): waves are disjoint by depth and
     // each is materialized, so the union is a narrow block read — the
@@ -1965,11 +1922,10 @@ object Crawl {
             Seq("child"))
           .select(col("child").as("doc_id"), (col("depth") + 1).as("depth"),
             concat(col("path_ids"), array(col("child"))).as("path_ids"),
-            concat_ws(" > ", col("path"), col("child_name")).as("path")),
-        mat)
+            concat_ws(" > ", col("path"), col("child_name")).as("path")))
       if (next.limit(1).count() == 0L) {
         // an empty last wave is referenced by nothing — release it
-        graft.core.Materialize.release(next, mat)
+        graft.core.Materialize.release(next)
         exhausted = true
       } else {
         chains = chains.unionByName(next)
@@ -1987,7 +1943,7 @@ object Crawl {
         col("loc_idx"), col("loc"), col("url"), col("host"), col("is_index"),
         when(col("is_index"), col("child_doc_id")).as("child_doc_id"),
         col("lastmod"), col("changefreq"), col("priority"))
-    graft.core.Materialize.release(edges, mat)
+    graft.core.Materialize.release(edges)
     out
   }
 

@@ -294,7 +294,7 @@ object Curation {
     * honest gap between `sel_f1` and `f1` is the point.
     *
     * Plan: ONE corpus scan — [[thresholdSweepBy]] keyed by the split
-    * column over both splits at once, materialized under `mat`
+    * column over both splits at once, materialized
     * (policy-sized: |splits| × |thresholds| rows) so the winner pick
     * and the certification read the same tiny grid; the final join is
     * one row on threshold equality (both sides carry the caller's
@@ -306,10 +306,9 @@ object Curation {
       splitCol: String = "split",
       selectSplit: String = "val",
       certifySplit: String = "test",
-      actualCol: String = "actual",
-      mat: Materialize.Strategy = Materialize.LocalCheckpoint): DataFrame =
+      actualCol: String = "actual"): DataFrame =
     operatingPointsCertified(scored, thresholds, Seq(objective), splitCol,
-      selectSplit, certifySplit, actualCol, mat)
+      selectSplit, certifySplit, actualCol)
 
   /** [[operatingPointCertified]] for SEVERAL objectives from ONE sweep
     * (r19): a caller publishing both the balanced point and a
@@ -327,8 +326,7 @@ object Curation {
       splitCol: String = "split",
       selectSplit: String = "val",
       certifySplit: String = "test",
-      actualCol: String = "actual",
-      mat: Materialize.Strategy = Materialize.LocalCheckpoint): DataFrame = {
+      actualCol: String = "actual"): DataFrame = {
     require(objectives.nonEmpty, "operatingPointsCertified needs >= 1 objective")
     require(selectSplit != certifySplit,
       s"selectSplit and certifySplit must be disjoint, both are '$selectSplit' " +
@@ -336,8 +334,7 @@ object Curation {
     val sw = Materialize(
       thresholdSweepBy(
         scored.where(col(splitCol).isin(selectSplit, certifySplit)),
-        thresholds, splitCol, actualCol),
-      mat)
+        thresholds, splitCol, actualCol))
     objectives.map { objective =>
       val win = operatingPoint(sw.where(col(splitCol) === selectSplit).drop(splitCol),
           objective)
@@ -388,11 +385,6 @@ object Curation {
     * @param minTokens quality floor (tokens per doc)
     * @param rates     per-source mixture keep rates; `defaultRate` for
     *                  unlisted sources
-    * @param mat       materialization for the DERIVED dedup tables
-    *                  (band buckets, candidate pairs, cluster labels —
-    *                  the same knob as [[Dedup.minhashCandidatePairs]];
-    *                  under [[Materialize.Persist]] the caller owns
-    *                  release).
     *
     * Scale shape: the filtered survivor set is NOT materialized — it
     * is re-derived from the source scan by each consumer (the band
@@ -423,7 +415,7 @@ object Curation {
     * stages (fewer docs enter the band graph); its `bias` should come
     * from [[operatingPointBias]] so the chain thresholds on the
     * VALIDATED operating point. The kept-id table is materialized
-    * under `mat` (it feeds the survivor chain and, in
+    * (it feeds the survivor chain and, in
     * [[curateWithFunnel]], the funnel and samples joins).
     */
   def curate(
@@ -435,7 +427,6 @@ object Curation {
       defaultRate: Double = 1.0,
       trainPct: Int = 80,
       valPct: Int = 10,
-      mat: Materialize.Strategy = Materialize.LocalCheckpoint,
       sizeRatioFloor: Double = 0.0,
       split: SplitMode = SplitMode.Hash,
       evalShingles: Option[DataFrame] = None,
@@ -449,8 +440,8 @@ object Curation {
     val ts: Column => Column = _ => col("ts")
     val s1 = rowFlags(docs, minTokens, blocklist, keepTokens = true)
       .filter(col("q_keep") && col("pred_lang").isin(keepLangs: _*) && col("b_keep"))
-    val s1c = clsSurvivors(s1, classifier, mat)._1
-    val cl = chainClusters(s1c, mat, sizeRatioFloor, ts)
+    val s1c = clsSurvivors(s1, classifier)._1
+    val cl = chainClusters(s1c, sizeRatioFloor, ts)
     val losers = losersOf(cl)
     val s2 = s1c.join(losers, Seq("doc_id"), "left_anti")
     val contam = contamOf(s2, evalDocs, evalShingles, ts)
@@ -511,16 +502,15 @@ object Curation {
           .when(col("status") === "added", col("_sa")).as("stage"))
 
   /** The classifier stage: survivors gated by the stored model, plus
-    * the kept-id table the funnel/samples joins need (materialized
-    * under `mat` — id-sized, consumed by up to three downstream
+    * the kept-id table the funnel/samples joins need (materialized —
+    * id-sized, consumed by up to three downstream
     * joins). No gate → the identity, no extra table. */
   private def clsSurvivors(
-      s1: DataFrame, classifier: Option[ClassifierGate],
-      mat: Materialize.Strategy): (DataFrame, Option[DataFrame]) =
+      s1: DataFrame, classifier: Option[ClassifierGate]): (DataFrame, Option[DataFrame]) =
     classifier match {
       case None => (s1, None)
       case Some(g) =>
-        val kept = Materialize(g.keptIds(s1), mat)
+        val kept = Materialize(g.keptIds(s1))
         (s1.join(kept, Seq("doc_id"), "left_semi"), Some(kept))
     }
 
@@ -544,15 +534,13 @@ object Curation {
     * [[Dedup.nearDupLosers]] builds internally, computed here so the
     * manifest's [[SplitMode.LeakageSafe]] column, the loser drop set,
     * and the caller-facing [[CurationResult.clusters]] all share ONE
-    * graph build. Materialized under `mat` (caller owns release under
-    * [[Materialize.Persist]], as everywhere). */
+    * graph build. Materialized. */
   private def chainClusters(
-      s1: DataFrame, mat: Materialize.Strategy, sizeRatioFloor: Double,
+      s1: DataFrame, sizeRatioFloor: Double,
       tok: Column => Column = TextNorm.tokens): DataFrame =
     Dedup.clusters(
-      Dedup.minhashCandidatePairs(s1, mat = mat, sizeRatioFloor = sizeRatioFloor,
-        tok = tok),
-      mat = mat)
+      Dedup.minhashCandidatePairs(s1, sizeRatioFloor = sizeRatioFloor,
+        tok = tok))
 
   /** Non-canonical members of each cluster — [[Dedup.nearDupLosers]]'
     * filter, over an already-built cluster table. */
@@ -604,9 +592,7 @@ object Curation {
     * contamination input set, the funnel accounting join) replay a
     * cheap filter, not the band graph; the contaminated-id table is a
     * lazy shingle semi-join consumed twice, so it is materialized here
-    * under the same `mat` strategy (it is id-sized — rows, not text).
-    * Under [[Materialize.Persist]] the caller owns release, the same
-    * contract as [[Dedup.minhashCandidatePairs]].
+    * (it is id-sized — rows, not text).
     */
   def curateWithFunnel(
       docs: DataFrame,
@@ -617,7 +603,6 @@ object Curation {
       defaultRate: Double = 1.0,
       trainPct: Int = 80,
       valPct: Int = 10,
-      mat: Materialize.Strategy = Materialize.LocalCheckpoint,
       sizeRatioFloor: Double = 0.0,
       split: SplitMode = SplitMode.Hash,
       evalShingles: Option[DataFrame] = None,
@@ -628,7 +613,7 @@ object Curation {
     curateWithFunnelVariants(docs,
       Seq(CurateVariant(evalDocs, rates, defaultRate, trainPct, valPct,
         split, evalShingles)),
-      keepLangs, minTokens, mat, sizeRatioFloor, blocklist, samples,
+      keepLangs, minTokens, sizeRatioFloor, blocklist, samples,
       classifier, attribution).head
 
   /** One run's VARIANT-SPECIFIC knobs for
@@ -674,7 +659,6 @@ object Curation {
       variants: Seq[CurateVariant],
       keepLangs: Seq[String] = Seq("en"),
       minTokens: Int = 10,
-      mat: Materialize.Strategy = Materialize.LocalCheckpoint,
       sizeRatioFloor: Double = 0.0,
       blocklist: Seq[String] = Nil,
       samples: Int = 0,
@@ -687,7 +671,7 @@ object Curation {
     val ts: Column => Column = _ => col("ts") // see curate — one tokenize per scan
     val s1 = rowFlags(docs, minTokens, blocklist, keepTokens = true)
       .filter(col("q_keep") && langKeep && col("b_keep"))
-    val (s1c, clsKept) = clsSurvivors(s1, classifier, mat)
+    val (s1c, clsKept) = clsSurvivors(s1, classifier)
     // one contaminated-id table per DISTINCT (evalDocs, evalShingles)
     // pair, keyed by reference identity; the id-sized materializations
     // of independent suites are themselves independent jobs — overlap
@@ -709,10 +693,10 @@ object Curation {
     // OVERLAP the whole band-graph chain (guide §2.6) instead of
     // queueing behind its final round.
     val (cl, contams) = graft.core.Par.both(
-      chainClusters(s1c, mat, sizeRatioFloor, ts),
+      chainClusters(s1c, sizeRatioFloor, ts),
       graft.core.Par.all(
         suites.map { case (e, sh) =>
-          () => Materialize(contamOf(s1c, e, sh, ts), mat)
+          () => Materialize(contamOf(s1c, e, sh, ts))
         }: _*))
     val losers = losersOf(cl)
     def contamFor(v: CurateVariant): DataFrame =
@@ -747,8 +731,8 @@ object Curation {
     * manifest table with a `split` column; splits the manifest left
     * empty write nothing and contribute no rows.
     *
-    * Plan shape: the chain runs ONCE (its manifest is materialized
-    * under `mat` — it feeds three split filters); each split's text is
+    * Plan shape: the chain runs ONCE (its manifest is materialized —
+    * it feeds three split filters); each split's text is
     * recovered by one doc_id semi-join (manifest-sized, AQE-broadcast)
     * and handed to the writer. Doc text flows scan → one co-locating
     * shuffle → disk; it never enters the chain's own shuffles.
@@ -779,7 +763,6 @@ object Curation {
       defaultRate: Double = 1.0,
       trainPct: Int = 80,
       valPct: Int = 10,
-      mat: Materialize.Strategy = Materialize.LocalCheckpoint,
       sizeRatioFloor: Double = 0.0,
       split: SplitMode = SplitMode.Hash,
       evalShingles: Option[DataFrame] = None,
@@ -789,9 +772,8 @@ object Curation {
       classifier: Option[ClassifierGate] = None): DataFrame = {
     val manifest = Materialize(
       curate(docs, evalDocs, keepLangs, minTokens, rates, defaultRate,
-        trainPct, valPct, mat, sizeRatioFloor, split, evalShingles, blocklist,
-        classifier),
-      mat)
+        trainPct, valPct, sizeRatioFloor, split, evalShingles, blocklist,
+        classifier))
     val written = Seq("train", "val", "test").flatMap { sp =>
       val ids = manifest.filter(col("split") === sp).select("doc_id")
       if (ids.isEmpty) None
@@ -829,8 +811,7 @@ object Curation {
     * [[Sampling.splitLeakageAudit]] certifies the manifest against it,
     * and [[Sampling.leakageSafeSplit]] can stamp any other table from
     * it — neither re-runs minhash→bands→pairs→clusters. Backed by the
-    * chain's `mat` materialization (caller owns release under
-    * [[Materialize.Persist]]). `samples` (present when
+    * chain's materialization. `samples` (present when
     * `curateWithFunnel(samples = n)` was asked for) is the
     * [[funnelSamples]] table over the SAME drop sets — manifest,
     * funnel and samples from one computation of the chain. `drops`
@@ -869,7 +850,7 @@ object Curation {
     * decimal addition.
     *
     * Plan at 100 TB: the raw corpus's (doc_id, bucket) stream is
-    * materialized once (`mat` — the tokenizer pass is the dominant
+    * materialized once (the tokenizer pass is the dominant
     * cost) and feeds both the raw model and the scoring side. Both
     * models are groupBy(bucket) with map-side partial aggregation —
     * the shuffle carries at most `buckets` rows per task, and the
@@ -882,8 +863,7 @@ object Curation {
   def importanceWeights(
       docs: DataFrame,
       targetDocs: DataFrame,
-      buckets: Int = 1024,
-      mat: Materialize.Strategy = Materialize.LocalCheckpoint): DataFrame = {
+      buckets: Int = 1024): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     require(buckets >= 2, s"buckets=$buckets must be >= 2")
     // (…, bucket) stream: one row per bigram occurrence
@@ -897,7 +877,7 @@ object Curation {
               element_at(col("ts"), i + 1)))).as("bgm"): _*)
         .select(keep :+ (conv(substring(md5(col("bgm")), 1, 8), 16, 10)
           .cast("long") % buckets).as("b"): _*)
-    val rawStream = Materialize(bucketStream(docs, Seq(col("doc_id"))), mat)
+    val rawStream = Materialize(bucketStream(docs, Seq(col("doc_id"))))
     val tgtStream = bucketStream(targetDocs, Seq.empty)
     val cr = rawStream.groupBy("b").agg(count(lit(1)).as("cr"))
     val ct = tgtStream.groupBy("b").agg(count(lit(1)).as("ct"))
@@ -941,10 +921,9 @@ object Curation {
       docs: DataFrame,
       targetDocs: DataFrame,
       k: Int,
-      buckets: Int = 1024,
-      mat: Materialize.Strategy = Materialize.LocalCheckpoint): DataFrame = {
+      buckets: Int = 1024): DataFrame = {
     require(k >= 1, s"k=$k must be >= 1")
-    importanceWeights(docs, targetDocs, buckets, mat)
+    importanceWeights(docs, targetDocs, buckets)
       .where(col("log_weight").isNotNull)
       .agg(graft.functions.TopKByScore.topK(
         col("log_weight"), col("doc_id"), k).as("top"))
@@ -1144,7 +1123,7 @@ object Curation {
     * the honest answer).
     *
     * Plan: ONE corpus scan — the shared sweep aggregate keyed by
-    * (group, split, threshold), materialized under `mat` as a
+    * (group, split, threshold), materialized as a
     * policy-sized grid — feeds both the per-group winner pick and the
     * certification join on (group, threshold). */
   def operatingPointsCertifiedBy(
@@ -1155,10 +1134,9 @@ object Curation {
       splitCol: String = "split",
       selectSplit: String = "val",
       certifySplit: String = "test",
-      actualCol: String = "actual",
-      mat: Materialize.Strategy = Materialize.LocalCheckpoint): DataFrame =
+      actualCol: String = "actual"): DataFrame =
     operatingPointsCertifiedByAll(scored, thresholds, groupCol, Seq(objective),
-      splitCol, selectSplit, certifySplit, actualCol, mat)
+      splitCol, selectSplit, certifySplit, actualCol)
 
   /** [[operatingPointsCertifiedBy]] for SEVERAL objectives from ONE
     * materialized grid — the [[operatingPointsCertified]] rationale at
@@ -1172,16 +1150,14 @@ object Curation {
       splitCol: String = "split",
       selectSplit: String = "val",
       certifySplit: String = "test",
-      actualCol: String = "actual",
-      mat: Materialize.Strategy = Materialize.LocalCheckpoint): DataFrame = {
+      actualCol: String = "actual"): DataFrame = {
     require(objectives.nonEmpty, "operatingPointsCertifiedByAll needs >= 1 objective")
     require(selectSplit != certifySplit,
       s"selectSplit and certifySplit must be disjoint, both are '$selectSplit' " +
         "— certifying on the selection data is the hole this face closes")
     val grid = Materialize(
       sweepGrid(scored.where(col(splitCol).isin(selectSplit, certifySplit)),
-        thresholds, Seq(groupCol, splitCol), actualCol),
-      mat)
+        thresholds, Seq(groupCol, splitCol), actualCol))
     objectives.map { objective =>
       val win = operatingPointsBy(
           grid.where(col(splitCol) === selectSplit).drop(splitCol), groupCol, objective)
@@ -1311,7 +1287,6 @@ object Curation {
       minTokens: Int = 10,
       rates: Map[String, Double] = Map.empty,
       defaultRate: Double = 1.0,
-      mat: Materialize.Strategy = Materialize.LocalCheckpoint,
       sizeRatioFloor: Double = 0.0,
       blocklist: Seq[String] = Nil,
       classifier: Option[ClassifierGate] = None): DataFrame = {
@@ -1320,8 +1295,8 @@ object Curation {
     val ts: Column => Column = _ => col("ts") // see curate — one tokenize per scan
     val s1 = rowFlags(docs, minTokens, blocklist, keepTokens = true)
       .filter(col("q_keep") && langKeep && col("b_keep"))
-    val (s1c, clsKept) = clsSurvivors(s1, classifier, mat)
-    val losers = Dedup.nearDupLosers(s1c, mat = mat, sizeRatioFloor = sizeRatioFloor,
+    val (s1c, clsKept) = clsSurvivors(s1, classifier)
+    val losers = Dedup.nearDupLosers(s1c, sizeRatioFloor = sizeRatioFloor,
       tok = ts)
     val s2 = s1c.join(losers, Seq("doc_id"), "left_anti")
     val contam = contamOf(s2, evalDocs, None, ts)
@@ -1348,7 +1323,6 @@ object Curation {
       minTokens: Int = 10,
       rates: Map[String, Double] = Map.empty,
       defaultRate: Double = 1.0,
-      mat: Materialize.Strategy = Materialize.LocalCheckpoint,
       sizeRatioFloor: Double = 0.0,
       blocklist: Seq[String] = Nil,
       classifier: Option[ClassifierGate] = None): DataFrame = {
@@ -1357,8 +1331,8 @@ object Curation {
     val ts: Column => Column = _ => col("ts") // see curate — one tokenize per scan
     val s1 = rowFlags(docs, minTokens, blocklist, keepTokens = true)
       .filter(col("q_keep") && langKeep && col("b_keep"))
-    val (s1c, clsKept) = clsSurvivors(s1, classifier, mat)
-    val losers = Dedup.nearDupLosers(s1c, mat = mat, sizeRatioFloor = sizeRatioFloor,
+    val (s1c, clsKept) = clsSurvivors(s1, classifier)
+    val losers = Dedup.nearDupLosers(s1c, sizeRatioFloor = sizeRatioFloor,
       tok = ts)
     val s2 = s1c.join(losers, Seq("doc_id"), "left_anti")
     val contam = contamOf(s2, evalDocs, None, ts)
@@ -1432,7 +1406,6 @@ object Curation {
       minTokens: Int = 10,
       rates: Map[String, Double] = Map.empty,
       defaultRate: Double = 1.0,
-      mat: Materialize.Strategy = Materialize.LocalCheckpoint,
       sizeRatioFloor: Double = 0.0,
       blocklist: Seq[String] = Nil,
       classifier: Option[ClassifierGate] = None): DataFrame = {
@@ -1442,15 +1415,15 @@ object Curation {
     val ts: Column => Column = _ => col("ts") // see curate — one tokenize per scan
     val s1 = rowFlags(docs, minTokens, blocklist, keepTokens = true)
       .filter(col("q_keep") && langKeep && col("b_keep"))
-    val (s1c, clsKept) = clsSurvivors(s1, classifier, mat)
-    val cl = chainClusters(s1c, mat, sizeRatioFloor, ts)
+    val (s1c, clsKept) = clsSurvivors(s1, classifier)
+    val cl = chainClusters(s1c, sizeRatioFloor, ts)
     val losers = losersOf(cl)
     val s2 = s1c.join(losers, Seq("doc_id"), "left_anti")
     // contam MATERIALIZED (id-sized): lazy it would re-execute the s2
     // shingle semi-join — a full tokenize scan — inside the final
     // attribution query (r12 shipped it lazy here; curateWithFunnel
     // already materialized it, and the parity spec pins the two paths)
-    val contam = Materialize(contamOf(s2, evalDocs, None, ts), mat)
+    val contam = Materialize(contamOf(s2, evalDocs, None, ts))
     samplesFrom(docs, langKeep, losers, contam, n, minTokens, rates,
       defaultRate, blocklist, clsKept)
   }
@@ -1471,7 +1444,6 @@ object Curation {
       minTokens: Int = 10,
       rates: Map[String, Double] = Map.empty,
       defaultRate: Double = 1.0,
-      mat: Materialize.Strategy = Materialize.LocalCheckpoint,
       sizeRatioFloor: Double = 0.0,
       blocklist: Seq[String] = Nil,
       classifier: Option[ClassifierGate] = None): DataFrame = {
@@ -1480,11 +1452,11 @@ object Curation {
     val ts: Column => Column = _ => col("ts") // see curate — one tokenize per scan
     val s1 = rowFlags(docs, minTokens, blocklist, keepTokens = true)
       .filter(col("q_keep") && langKeep && col("b_keep"))
-    val (s1c, clsKept) = clsSurvivors(s1, classifier, mat)
-    val cl = chainClusters(s1c, mat, sizeRatioFloor, ts)
+    val (s1c, clsKept) = clsSurvivors(s1, classifier)
+    val cl = chainClusters(s1c, sizeRatioFloor, ts)
     val losers = losersOf(cl)
     val s2 = s1c.join(losers, Seq("doc_id"), "left_anti")
-    val contam = Materialize(contamOf(s2, evalDocs, None, ts), mat)
+    val contam = Materialize(contamOf(s2, evalDocs, None, ts))
     droppedWithStage(docs, langKeep, losers, contam, minTokens, rates,
       defaultRate, blocklist, clsKept)
   }
@@ -1767,7 +1739,7 @@ object Curation {
     * md5 feature pass — the family's dominant cost — was paid THREE
     * times per query (positive-class scan, negative-class scan, scoring
     * scan) for one identical `(doc_id, label, bucket)` stream. Here the
-    * stream materializes once (`mat` — narrow, no new exchange: the
+    * stream materializes once (narrow, no new exchange: the
     * rows checkpoint straight out of the scan) and both the bucket-
     * keyed training aggregate and the doc-keyed scoring sum read it.
     *
@@ -1792,22 +1764,19 @@ object Curation {
     * occurrence row; the histogram collapses repeated features before
     * anything is stored). Occurrence totals are exact: counts ride as
     * integers and every downstream sum weights by them, so the outputs
-    * are bit-identical to the occurrence-grain forms. Under
-    * [[Materialize.Persist]] the caller owns release. */
+    * are bit-identical to the occurrence-grain forms. */
   def classifierScored(
       docs: DataFrame,
       isPos: Column,
       buckets: Int = 1024,
-      bias: Double = 0.0,
-      mat: Materialize.Strategy = Materialize.LocalCheckpoint): TrainedScorer = {
+      bias: Double = 0.0): TrainedScorer = {
     import org.apache.spark.sql.types.DecimalType
     require(buckets >= 2, s"buckets=$buckets must be >= 2")
     val fs = Materialize(
       featureStream(docs.select(col("doc_id"), isPos.as("_pos"), col("text")),
         Seq(col("doc_id"), col("_pos")), buckets)
         .groupBy(col("doc_id"), col("_pos"), col("b"))
-        .agg(count(lit(1)).as("n")),
-      mat)
+        .agg(count(lit(1)).as("n")))
     // per-class occurrence counts: the histogram's n weights each
     // (doc, bucket) row back to its occurrence multiplicity — sums are
     // identical to the per-occurrence conditional counts

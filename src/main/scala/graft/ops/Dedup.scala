@@ -145,13 +145,12 @@ object Dedup {
       k: Int = 3,
       minShared: Int = 2,
       maxDf: Int = 64,
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint,
       tok: Column => Column = TextNorm.tokens): DataFrame = {
     require(minShared >= 1, s"minShared=$minShared must be >= 1")
     require(maxDf >= 2, s"maxDf=$maxDf must be >= 2 (df-1 docs pair per fingerprint)")
     require(k >= 2, s"k=$k must be >= 2: unigram fingerprints collapse to the " +
       "globally-smallest-hash tokens and pair on vocabulary, not content")
-    val fp = graft.core.Materialize(TextAnalysis.fingerprints(docs, w, k, tok), mat)
+    val fp = graft.core.Materialize(TextAnalysis.fingerprints(docs, w, k, tok))
     val kept = fp.join(
       fp.groupBy("fp").agg(count(lit(1)).as("df"))
         .filter(col("df") <= maxDf).select("fp"),
@@ -277,17 +276,16 @@ object Dedup {
       k: Int = 8,
       bands: Int = 2,
       bucketCap: Int = 64,
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint,
       sizeRatioFloor: Double = 0.0,
       tok: Column => Column = TextNorm.tokens): DataFrame =
     if (sizeRatioFloor <= 0.0)
-      pairsFromBands(minhashBands(docs, w, k, bands, tok), bucketCap, mat)
+      pairsFromBands(minhashBands(docs, w, k, bands, tok), bucketCap)
     else {
       require(sizeRatioFloor <= 1.0,
         s"sizeRatioFloor=$sizeRatioFloor must be in (0, 1] (it is a min/max set-size ratio)")
       pairsFromBandsWithSize(
         bandsFromWideWithSize(wideWithSize(docs, w, k, tok), k, bands),
-        bucketCap, mat, sizeRatioFloor)
+        bucketCap, sizeRatioFloor)
     }
 
   /** [[minhashSignaturesWide]] plus each doc's DISTINCT shingle-set
@@ -334,15 +332,13 @@ object Dedup {
   private def pairsFromBandsWithSize(
       bandTable: DataFrame,
       bucketCap: Int,
-      mat: graft.core.Materialize.Strategy,
       floor: Double): DataFrame = {
     val buckets = graft.core.Materialize(
       bandTable
         .groupBy("band", "band_key")
         .agg(collect_list(struct(col("doc_id"), col("n_sh"))).as("ds"))
         .filter(size(col("ds")) >= 2)
-        .select(col("band"), col("band_key"), array_sort(col("ds")).as("ds")),
-      mat)
+        .select(col("band"), col("band_key"), array_sort(col("ds")).as("ds")))
     val keepPair =
       least(col("n_a"), col("n_b")).cast("double") >=
         lit(floor) * greatest(col("n_a"), col("n_b")).cast("double")
@@ -372,15 +368,13 @@ object Dedup {
     * see [[minhashCandidatePairs]] for the plan rationale. */
   private def pairsFromBands(
       bandTable: DataFrame,
-      bucketCap: Int,
-      mat: graft.core.Materialize.Strategy): DataFrame = {
+      bucketCap: Int): DataFrame = {
     val buckets = graft.core.Materialize(
       bandTable
         .groupBy("band", "band_key")
         .agg(collect_list(col("doc_id")).as("ds"))
         .filter(size(col("ds")) >= 2)
-        .select(col("band"), col("band_key"), array_sort(col("ds")).as("ds")),
-      mat)
+        .select(col("band"), col("band_key"), array_sort(col("ds")).as("ds")))
     val smallPairs = buckets
       .filter(size(col("ds")) <= bucketCap)
       .select(explode(pairCombinations(col("ds"))).as("p"))
@@ -552,10 +546,9 @@ object Dedup {
       docs: DataFrame,
       bits: Int = 16,
       maxHamming: Int = 3,
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint,
       tok: Column => Column = TextNorm.tokens): DataFrame =
     hammingPairs(simhash(docs, bits, tok).withColumnRenamed("simhash", "sig"),
-      bits, maxHamming, mat)
+      bits, maxHamming)
 
   /** Hamming-near pairs over ANY `(doc_id, sig)` bigint-signature table
     * — the segment-blocking engine behind [[simhashPairs]], exposed so
@@ -572,8 +565,7 @@ object Dedup {
   def hammingPairs(
       sigs: DataFrame,
       bits: Int,
-      maxHamming: Int = 3,
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint): DataFrame = {
+      maxHamming: Int = 3): DataFrame = {
     val segs = maxHamming + 1
     require(bits % segs == 0,
       s"bits=$bits must be divisible by maxHamming+1=$segs segments")
@@ -586,7 +578,7 @@ object Dedup {
     // compute. Strategy is pluggable ([[graft.core.Materialize]]):
     // localCheckpoint on a single node, Persist on a fault-tolerant
     // cluster.
-    val s = graft.core.Materialize(sigs.select(col("doc_id"), col("sig")), mat)
+    val s = graft.core.Materialize(sigs.select(col("doc_id"), col("sig")))
     val blocked = s.select(
       col("doc_id"), col("sig"),
       explode(array((0 until segs).map { j =>
@@ -817,38 +809,21 @@ object Dedup {
     * Plan shape (the [[boilerplateChunks]] discipline, not
     * chunkDedup's text-through-window): paragraph TEXT never
     * shuffles. Pass 1 reduces occurrences to
-    * `(doc_id, para_idx, h)`, picks each hash's winner with one
-    * combinable groupBy(h), and folds the dropped indexes into one
+    * `(doc_id, para_idx, h)`, picks each hash's winner over one
+    * window partitioned by h, and folds the dropped indexes into one
     * small int-array row per affected doc. Pass 2 re-derives the
     * paragraph array from the corpus scan and drops the removed
-    * indexes row-parallel; the only joins are hash-keyed (winner
-    * re-attach) and doc_id-keyed (AQE-broadcast when duplication is
-    * sparse).
+    * indexes row-parallel; the only join is doc_id-keyed
+    * (AQE-broadcast when duplication is sparse).
     */
   def paragraphDedup(docs: DataFrame, boundary: String = "\\n[ \\t]*\\n",
-      unicode: Boolean = false,
-      mat: graft.core.Materialize.Strategy =
-        graft.core.Materialize.Persist): DataFrame = {
-    // mat default is Persist, not the repo-wide LocalCheckpoint: the
-    // occ table here is a mid-plan signature scan consumed twice in
-    // the SAME action, where the lazy cache wins measurably
-    // (measured at sf0.1: 0.29 s warm / 0.58 s cold vs 0.36 / 2.2 for
-    // localCheckpoint — the eager block write is pure overhead when
-    // no later action reuses the table). This was the r13 bench
-    // regression on q_para_dedup (0.22 → 0.52 s).
+      unicode: Boolean = false): DataFrame = {
     // boundary is a Java-regex split pattern; the default is the
     // blank-line paragraph convention. Corpora without blank-line
     // structure (single-newline-delimited pages, like this test
     // corpus) pass "\\n+" — the unit becomes the line group, i.e.
     // C4's line-level rule under the same winner machinery.
-    val occ = graft.core.Materialize(paraOcc(docs, boundary, unicode), mat)
-    val winners = occ.groupBy("h")
-      .agg(min(struct(col("doc_id"), col("para_idx"))).as("winner"))
-    val dropped = occ.join(winners, "h")
-      .where(!(col("winner.doc_id") === col("doc_id") &&
-        col("winner.para_idx") === col("para_idx")))
-      .groupBy("doc_id")
-      .agg(collect_list(col("para_idx")).as("rm"))
+    val dropped = losingOccurrences(paraOcc(docs, boundary, unicode), "para_idx")
     paraWithDrops(docs, dropped, boundary)
       .select(
         col("doc_id"),
@@ -930,7 +905,7 @@ object Dedup {
     * the history append needs the SURVIVORS' hashes — and a stripped
     * document's paragraphs are exactly the occurrence rows the history
     * semi-join did NOT match, so both outputs derive from ONE
-    * [[paraOcc]] scan (materialized under `mat` — (doc_id, idx, hash)
+    * [[paraOcc]] scan (materialized — (doc_id, idx, hash)
     * triples, never text): `newHashes` = the occ rows anti-joined
     * against the history, distinct. Re-deriving the hashes from the
     * stripped text (what the r12 stream did) paid the per-paragraph
@@ -938,15 +913,13 @@ object Dedup {
     *
     * Returns (stripped docs in [[stripParagraphsAgainst]]'s exact
     * shape, the survivors' distinct `h` table ≡
-    * `paragraphHashes(stripped)` — the parity spec pins both). Under
-    * [[graft.core.Materialize.Persist]] the caller owns release. */
+    * `paragraphHashes(stripped)` — the parity spec pins both). */
   def stripParagraphsWithHashes(
       docs: DataFrame, history: DataFrame,
       boundary: String = "\\n[ \\t]*\\n",
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint,
       unicode: Boolean = false)
       : (DataFrame, DataFrame) = {
-    val occ = graft.core.Materialize(paraOcc(docs, boundary, unicode), mat)
+    val occ = graft.core.Materialize(paraOcc(docs, boundary, unicode))
     val dropped = occ
       .join(history.select("h"), Seq("h"), "left_semi")
       .groupBy("doc_id")
@@ -995,7 +968,7 @@ object Dedup {
     * never shuffles. Span keys derive ROW-LOCALLY from the native
     * per-doc hash array (one ParaHashes scan — no per-sentence rows, no
     * self-join over positions); occurrences reduce to `(doc_id,
-    * span_idx, h)`; one combinable groupBy(h) picks winners; dropped
+    * span_idx, h)`; one window partitioned by h picks winners; dropped
     * span indexes fold into one small int-array row per affected doc;
     * pass 2 re-derives the sentence array from the corpus scan and
     * drops covered sentences row-parallel. At 100 TB the shuffle
@@ -1003,24 +976,24 @@ object Dedup {
     * count, never to text.
     */
   def sentenceSpanDedup(docs: DataFrame, span: Int = 3,
-      boundary: String = "[.!?]+", unicode: Boolean = false,
-      mat: graft.core.Materialize.Strategy =
-        graft.core.Materialize.Persist): DataFrame = {
+      boundary: String = "[.!?]+", unicode: Boolean = false): DataFrame = {
     require(span >= 1, s"span=$span must be >= 1")
-    // occ feeds BOTH the winners aggregate and the dropped join — an
-    // un-materialized subtree would run the corpus ParaHashes scan
-    // once per reference. Persist default (not LocalCheckpoint) for
-    // the same single-action-reuse reason as [[paragraphDedup]].
-    val occ = graft.core.Materialize(
-      sentenceSpanOcc(docs, span, boundary, unicode), mat)
-    val winners = occ.groupBy("h")
-      .agg(min(struct(col("doc_id"), col("span_idx"))).as("winner"))
-    val dropped = occ.join(winners, "h")
-      .where(!(col("winner.doc_id") === col("doc_id") &&
-        col("winner.span_idx") === col("span_idx")))
+    sentencesWithSpanDrops(docs,
+      losingOccurrences(sentenceSpanOcc(docs, span, boundary, unicode), "span_idx"),
+      span, boundary)
+  }
+
+  /** The non-canonical occurrences of `occ` (doc_id, `idx`, h), folded
+    * per doc as (doc_id, rm array<int>): each hash's winner is its
+    * minimum (doc_id, idx), picked over a window partitioned by `h`, so
+    * the occurrence scan is read once and needs no materialization. */
+  private def losingOccurrences(occ: DataFrame, idx: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val key = struct(col("doc_id"), col(idx))
+    occ.withColumn("winner", min(key).over(Window.partitionBy("h")))
+      .where(col("winner") =!= key)
       .groupBy("doc_id")
-      .agg(collect_list(col("span_idx")).as("rm"))
-    sentencesWithSpanDrops(docs, dropped, span, boundary)
+      .agg(collect_list(col(idx)).as("rm"))
   }
 
   /** The distinct span-key table [[sentenceSpanDedupAgainst]] filters
@@ -1074,22 +1047,20 @@ object Dedup {
     * (stripped docs in [[stripSentenceSpansAgainst]]'s exact shape,
     * the survivors' distinct `h` table ≡ `sentenceSpanHashes(stripped)`
     * — the parity spec pins both). The stripped frame is materialized
-    * INTERNALLY (the rescan branch reads it) — do not stage it again.
-    * Under [[graft.core.Materialize.Persist]] the caller owns release. */
+    * INTERNALLY (the rescan branch reads it) — do not stage it again. */
   def stripSentenceSpansWithHashes(
       docs: DataFrame, history: DataFrame,
       span: Int = 3, boundary: String = "[.!?]+",
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint,
       unicode: Boolean = false): (DataFrame, DataFrame) = {
     require(span >= 1, s"span=$span must be >= 1")
     val occ = graft.core.Materialize(
-      sentenceSpanOcc(docs, span, boundary, unicode), mat)
+      sentenceSpanOcc(docs, span, boundary, unicode))
     val dropped = occ
       .join(history.select("h"), Seq("h"), "left_semi")
       .groupBy("doc_id")
       .agg(collect_list(col("span_idx")).as("rm"))
     val stripped = graft.core.Materialize(
-      sentencesStripWithSpanDrops(docs, dropped, span, boundary), mat)
+      sentencesStripWithSpanDrops(docs, dropped, span, boundary))
     val changed = stripped.filter(col("n_dropped") > 0)
     val newKeys = occ
       .join(changed.select("doc_id"), Seq("doc_id"), "left_anti")
@@ -1338,10 +1309,9 @@ object Dedup {
       k: Int = 8,
       bands: Int = 2,
       bucketCap: Int = 64,
-      minEst: Double = 0.0,
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint): DataFrame = {
-    val sigs = graft.core.Materialize(minhashSignaturesWide(docs, w, k), mat)
-    val pairs = pairsFromBands(bandsFromWide(sigs, k, bands), bucketCap, mat)
+      minEst: Double = 0.0): DataFrame = {
+    val sigs = graft.core.Materialize(minhashSignaturesWide(docs, w, k))
+    val pairs = pairsFromBands(bandsFromWide(sigs, k, bands), bucketCap)
     val aSide = sigs.select(col("doc_id").as("doc_a") +:
       (0 until k).map(s => col(s"sig$s").as(s"a$s")): _*)
     val bSide = sigs.select(col("doc_id").as("doc_b") +:
@@ -1371,10 +1341,9 @@ object Dedup {
       k: Int = 8,
       bands: Int = 2,
       bucketCap: Int = 64,
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint,
       sizeRatioFloor: Double = 0.0,
       tok: Column => Column = TextNorm.tokens): DataFrame =
-    docs.join(nearDupLosers(docs, w, k, bands, bucketCap, mat, sizeRatioFloor, tok),
+    docs.join(nearDupLosers(docs, w, k, bands, bucketCap, sizeRatioFloor, tok),
       Seq("doc_id"), "left_anti")
 
   /** Incremental cross-corpus face of [[fingerprintPairs]] — the
@@ -1435,18 +1404,16 @@ object Dedup {
       k: Int = 8,
       bands: Int = 2,
       bucketCap: Int = 64,
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint,
       sizeRatioFloor: Double = 0.0): DataFrame = {
     val cl = clusters(
-      minhashCandidatePairs(docs, w, k, bands, bucketCap, mat, sizeRatioFloor), mat = mat)
+      minhashCandidatePairs(docs, w, k, bands, bucketCap, sizeRatioFloor))
     // score only the clustered members — docs join cl is keyed and
     // cluster-table-sized (AQE broadcasts the cluster side); the table
     // is referenced three times below (best, winner filter, losers),
     // so it materializes once — id+score rows, never text
     val members = graft.core.Materialize(
       docs.join(cl, Seq("doc_id"))
-        .select(col("doc_id"), col("cluster_id"), score.as("_s")),
-      mat)
+        .select(col("doc_id"), col("cluster_id"), score.as("_s")))
     // (max score, then min doc_id) via two cluster-sized aggregates —
     // type-generic (no numeric negation trick), trivially twinnable
     val best = members.groupBy("cluster_id").agg(max("_s").as("_smax"))
@@ -1471,10 +1438,9 @@ object Dedup {
       k: Int = 8,
       bands: Int = 2,
       bucketCap: Int = 64,
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint,
       sizeRatioFloor: Double = 0.0,
       tok: Column => Column = TextNorm.tokens): DataFrame =
-    clusters(minhashCandidatePairs(docs, w, k, bands, bucketCap, mat, sizeRatioFloor, tok), mat = mat)
+    clusters(minhashCandidatePairs(docs, w, k, bands, bucketCap, sizeRatioFloor, tok))
       .filter(col("doc_id") =!= col("cluster_id"))
       .select("doc_id")
 
@@ -1485,9 +1451,8 @@ object Dedup {
     * doc's bands depend only on its own text. */
   def nearDupLosersFromBands(
       bandTable: DataFrame,
-      bucketCap: Int = 64,
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint): DataFrame =
-    clusters(pairsFromBands(bandTable, bucketCap, mat), mat = mat)
+      bucketCap: Int = 64): DataFrame =
+    clusters(pairsFromBands(bandTable, bucketCap))
       .filter(col("doc_id") =!= col("cluster_id"))
       .select("doc_id")
 
@@ -1553,15 +1518,14 @@ object Dedup {
     * shuffles.
     */
   def duplicateSpans(
-      docs: DataFrame, k: Int = 24, modP: Int = 8, gap: Int = 64,
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint): DataFrame = {
+      docs: DataFrame, k: Int = 24, modP: Int = 8, gap: Int = 64): DataFrame = {
     require(gap >= k, s"gap ($gap) must be >= k ($k) so merged spans cannot overlap")
     import org.apache.spark.sql.expressions.Window
     // the anchor scan is the expensive stage (one md5 per char); sites
     // feed both the gram aggregate and the probe side of the join, and
     // DeduplicateRelations would otherwise run that scan once per
     // reference (see Materialize's scaladoc)
-    val sites = graft.core.Materialize(anchorSites(docs, k, modP), mat)
+    val sites = graft.core.Materialize(anchorSites(docs, k, modP))
     val grams = sites.groupBy("h")
       .agg(count(lit(1)).as("n_sites"),
         min(struct(col("doc_id"), col("pos"))).as("canon"))
@@ -1626,9 +1590,8 @@ object Dedup {
     * plus one `groupBy(doc_id)` over span rows — never over text.
     */
   def stripDuplicateSpans(
-      docs: DataFrame, k: Int = 24, modP: Int = 8, gap: Int = 64,
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint): DataFrame =
-    spliceOut(docs, duplicateSpans(docs, k, modP, gap, mat))
+      docs: DataFrame, k: Int = 24, modP: Int = 8, gap: Int = 64): DataFrame =
+    spliceOut(docs, duplicateSpans(docs, k, modP, gap))
 
   /** [[stripDuplicateSpans]] in the incremental frame: cut every
     * [[duplicateSpansAgainst]] range — regions the accumulated anchor
@@ -1650,7 +1613,7 @@ object Dedup {
     * (`n_spans = 0` — the dominant case on a real crawl, where most
     * arrivals repeat nothing) contribute their ALREADY-COMPUTED site
     * rows verbatim, and only the rewritten docs are re-scanned. One
-    * full anchor scan (materialized under `mat` — (doc_id, pos, h)
+    * full anchor scan (materialized — (doc_id, pos, h)
     * triples, never text) plus a rescan proportional to the REWRITTEN
     * text volume, versus two full per-char-md5 scans in the unfused
     * r12 stream.
@@ -1658,21 +1621,19 @@ object Dedup {
     * Returns (stripped docs in [[stripDuplicateSpansAgainst]]'s exact
     * shape, the stripped docs' anchor table ≡
     * `anchorSites(stripped, k, modP)` — the parity spec pins both).
-    * The stripped frame is materialized under `mat` (it feeds both the
-    * caller and the rescan side); under
-    * [[graft.core.Materialize.Persist]] the caller owns release. */
+    * The stripped frame is materialized (it feeds both the caller and
+    * the rescan side). */
   def stripDuplicateSpansWithAnchors(
       docs: DataFrame, history: DataFrame,
-      k: Int = 24, modP: Int = 8, gap: Int = 64,
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint)
+      k: Int = 24, modP: Int = 8, gap: Int = 64)
       : (DataFrame, DataFrame) = {
     require(gap >= k, s"gap ($gap) must be >= k ($k) so merged spans cannot overlap")
-    val sites = graft.core.Materialize(anchorSites(docs, k, modP), mat)
+    val sites = graft.core.Materialize(anchorSites(docs, k, modP))
     val droppable = sites
       .join(history.select("h"), Seq("h"), "left_semi")
       .select(col("doc_id"), col("pos"))
     val stripped = graft.core.Materialize(
-      spliceOut(docs, spansFromDroppable(droppable, k, gap)), mat)
+      spliceOut(docs, spansFromDroppable(droppable, k, gap)))
     val changed = stripped.filter(col("n_spans") > 0)
     val newAnchors = sites
       .join(changed.select("doc_id"), Seq("doc_id"), "left_anti")
@@ -1721,7 +1682,7 @@ object Dedup {
     * edges change nothing. The output schema is the same on both paths
     * below.
     *
-    * The pair table is materialized under `mat` first, then one bounded
+    * The pair table is materialized first, then one bounded
     * collect (a single task reading at most [[LocalPairs]] + 1 rows)
     * sizes it.
     *   - Local path (at most [[LocalPairs]] pairs, integral or
@@ -1735,20 +1696,17 @@ object Dedup {
     *     propagation over the materialized table. Each round is one
     *     join (edge src → current label), one min-agg per node, one
     *     label-of-label pointer jump and a convergence check, so rounds
-    *     are O(log diameter); labels are materialized per round under
-    *     `mat` (the iterative lineage would otherwise grow unboundedly),
-    *     the superseded round released. `maxIterations` caps the rounds
+    *     are O(log diameter); labels are materialized per round (the
+    *     iterative lineage would otherwise grow unboundedly), the
+    *     superseded round released. `maxIterations` caps the rounds
     *     and applies to this path only: when it is hit before the
     *     labels converge, a warning goes to stderr and a component may
-    *     carry several labels (over-split). Under
-    *     [[graft.core.Materialize.Persist]] the caller owns release of
-    *     the returned labels.
+    *     carry several labels (over-split).
     */
   def clusters(
       pairs: DataFrame,
-      maxIterations: Int = 20,
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint): DataFrame =
-    components(pairs, maxIterations, mat, LocalPairs)
+      maxIterations: Int = 20): DataFrame =
+    components(pairs, maxIterations, LocalPairs)
 
   /** The most pairs [[clusters]] labels on the driver. A pair count of
     * its own, independent of the broadcast setting: the collected
@@ -1762,7 +1720,6 @@ object Dedup {
   private[graft] def components(
       pairs: DataFrame,
       maxIterations: Int,
-      mat: graft.core.Materialize.Strategy,
       localPairs: Int): DataFrame = {
     // Materialize the PAIR table first, then union: the union's two
     // branches each reference `pairs`, and materializing only after the
@@ -1770,27 +1727,26 @@ object Dedup {
     // branch (round-3 VERDICT — it doubled the dominant stage of the
     // two slowest bench queries). The union over the materialized table
     // is two cheap block reads.
-    val p = graft.core.Materialize(pairs.select(col("doc_a"), col("doc_b")), mat)
+    val p = graft.core.Materialize(pairs.select(col("doc_a"), col("doc_b")))
     val edges = p.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .unionByName(p.select(col("doc_b").as("src"), col("doc_a").as("dst")))
     val seed = edges.select(col("src").as("doc_id")).distinct()
       .select(col("doc_id"), col("doc_id").as("cluster_id"))
     val labels = localComponents(p, seed.schema, localPairs) match {
       case Some(rows) => p.sparkSession.createDataFrame(rows, seed.schema)
-      case None => hashToMin(edges, seed, maxIterations, mat)
+      case None => hashToMin(edges, seed, maxIterations)
     }
     // the pair table is only needed while labelling; distributed
     // labels keep their own materialization (callers own that one)
-    graft.core.Materialize.release(p, mat)
+    graft.core.Materialize.release(p)
     labels
   }
 
   /** [[clusters]]' distributed path: hash-to-min rounds over `edges`
     * (both directions of every pair) from the `seed` labels. */
   private def hashToMin(
-      edges: DataFrame, seed: DataFrame, maxIterations: Int,
-      mat: graft.core.Materialize.Strategy): DataFrame = {
-    var labels = graft.core.Materialize(seed, mat)
+      edges: DataFrame, seed: DataFrame, maxIterations: Int): DataFrame = {
+    var labels = graft.core.Materialize(seed)
     var converged = false
     var it = 0
     var prevRound: DataFrame = labels // superseded round's materialization
@@ -1823,13 +1779,12 @@ object Dedup {
             col("half") === col("j_doc"), "left")
           .select(col("doc_id"),
             least(col("half"), coalesce(col("jmin"), col("half"))).as("cluster_id"),
-            (least(col("half"), coalesce(col("jmin"), col("half"))) < col("prev")).as("changed")),
-        mat)
+            (least(col("half"), coalesce(col("jmin"), col("half"))) < col("prev")).as("changed")))
       converged = next.filter(col("changed")).limit(1).count() == 0 // forces `next`
       // the superseded round's cache is dead once `next` is materialized
       // (not the final one — callers consume it); under Persist this
       // keeps executor storage at O(1) tables instead of O(rounds)
-      if (prevRound ne next) graft.core.Materialize.release(prevRound, mat)
+      if (prevRound ne next) graft.core.Materialize.release(prevRound)
       prevRound = next
       labels = next.select("doc_id", "cluster_id")
       it += 1
@@ -1841,17 +1796,9 @@ object Dedup {
       System.err.println(
         s"[graft] Dedup.clusters: not converged after $maxIterations rounds; " +
           "components may be over-split (raise maxIterations)")
-    mat match {
-      // `labels` projects the cached last round, so the caller's release
-      // would match no cache entry: cache the projection itself, fill it
-      // from the round's cache, then drop the round
-      case graft.core.Materialize.Persist if labels ne prevRound =>
-        val out = graft.core.Materialize(labels, mat)
-        graft.core.Materialize.force(out, mat)
-        graft.core.Materialize.release(prevRound, mat)
-        out
-      case _ => labels
-    }
+    // `labels` projects the last round: hand back a table the caller's
+    // release frees
+    graft.core.Materialize.narrow(prevRound, labels)
   }
 
   /** [[clusters]]' local path: the component rows of the materialized
@@ -2053,21 +2000,20 @@ object Dedup {
       k: Int = 24,
       modP: Int = 8,
       gap: Int = 64,
-      sampleMod: Int = 4,
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint): DataFrame = {
+      sampleMod: Int = 4): DataFrame = {
     require(sampleMod >= 1, s"sampleMod=$sampleMod must be >= 1")
     require(gap >= k, s"gap ($gap) must be >= k ($k) so merged spans cannot overlap")
     val bucket = conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
       .cast("long") % sampleMod
     // the sample feeds both span runs and the doc count
-    val sample = graft.core.Materialize(docs.filter(bucket === 0), mat)
+    val sample = graft.core.Materialize(docs.filter(bucket === 0))
     // ONE modP=1 anchor scan serves BOTH runs: gram selection is
     // per-GRAM (h depends only on content), so the detection run's
     // site table is exactly the `h % modP == 0` subset of the truth
     // run's — re-scanning would pay the dominant per-char md5 cost
     // twice (the round-12 review catch; the DuckDB twin shares its
     // sites CTE the same way)
-    val sites = graft.core.Materialize(anchorSites(sample, k, 1), mat)
+    val sites = graft.core.Materialize(anchorSites(sample, k, 1))
     def droppableOf(s: DataFrame): DataFrame = {
       val grams = s.groupBy("h")
         .agg(count(lit(1)).as("n_sites"),
@@ -2137,8 +2083,7 @@ object Dedup {
       docs: DataFrame,
       k: Int = 24,
       sampleMod: Int = 4,
-      candidates: Seq[Int] = Seq(2, 4, 8, 16, 32, 64),
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint): DataFrame = {
+      candidates: Seq[Int] = Seq(2, 4, 8, 16, 32, 64)): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     require(sampleMod >= 1, s"sampleMod=$sampleMod must be >= 1")
     require(candidates.nonEmpty && candidates.forall(_ >= 2),
@@ -2147,9 +2092,8 @@ object Dedup {
       .cast("long") % sampleMod
     val sample = docs.filter(bucket === 0)
     val truth = graft.core.Materialize(
-      duplicateSpans(sample, k, 1, k, mat)
-        .select((col("span_end") - col("span_start")).as("len")),
-      mat)
+      duplicateSpans(sample, k, 1, k)
+        .select((col("span_end") - col("span_start")).as("len")))
     val cand = docs.sparkSession
       .createDataFrame(candidates.map(Tuple1.apply)).toDF("mod_p")
     val terms = truth.crossJoin(broadcast(cand))
@@ -2200,9 +2144,8 @@ object Dedup {
       targetRecall: Double,
       k: Int = 24,
       sampleMod: Int = 4,
-      candidates: Seq[Int] = Seq(2, 4, 8, 16, 32, 64),
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint): Int =
-    recommendModPFrom(spanPlan(docs, k, sampleMod, candidates, mat), targetRecall)
+      candidates: Seq[Int] = Seq(2, 4, 8, 16, 32, 64)): Int =
+    recommendModPFrom(spanPlan(docs, k, sampleMod, candidates), targetRecall)
 
   /** Per-SOURCE MinHash signature — the minwise hash of the UNION of a
     * source's shingle sets (min over a union is the min of mins, so
@@ -2261,10 +2204,8 @@ object Dedup {
     */
   def sourceOverlap(
       docs: DataFrame, w: Int = 3, k: Int = 16,
-      mat: graft.core.Materialize.Strategy =
-        graft.core.Materialize.LocalCheckpoint,
       tok: Column => Column = TextNorm.tokens): DataFrame = {
-    val sigs = graft.core.Materialize(sourceSignatures(docs, w, k, tok), mat)
+    val sigs = graft.core.Materialize(sourceSignatures(docs, w, k, tok))
     val matches = (0 until k).map { s =>
       when(col(s"a.sig$s") === col(s"b.sig$s"), 1).otherwise(0)
     }.reduce(_ + _)

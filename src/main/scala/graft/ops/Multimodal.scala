@@ -253,12 +253,11 @@ object Multimodal {
     */
   def imageDupPairs(
       phashes: DataFrame,
-      maxHamming: Int = 3,
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint): DataFrame =
+      maxHamming: Int = 3): DataFrame =
     Dedup.hammingPairs(
       phashes.filter(col("status") === "decoded")
         .select(col("doc_id"), col("dhash").as("sig")),
-      bits = 64, maxHamming = maxHamming, mat = mat)
+      bits = 64, maxHamming = maxHamming)
 
   /** Column-layer content features over the envelope: md5 of the raw
     * bytes (dedup key for media), byte length. Pure codegen'd exprs. */

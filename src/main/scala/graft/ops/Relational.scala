@@ -383,8 +383,7 @@ object Relational {
     */
   def funnel(
       ev: DataFrame,
-      steps: Seq[String],
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint): DataFrame = {
+      steps: Seq[String]): DataFrame = {
     require(steps.nonEmpty, "funnel needs at least one step")
     var reached: DataFrame = null
     val stages = steps.zipWithIndex.map { case (step, i) =>
@@ -394,7 +393,7 @@ object Relational {
         else evs.join(reached.withColumnRenamed("t", "prev_t"), Seq("user_id"))
           .filter(col("ts_ns") >= col("prev_t"))
           .groupBy("user_id").agg(min("ts_ns").as("t"))
-      reached = graft.core.Materialize(r, mat)
+      reached = graft.core.Materialize(r)
       reached.agg(count(lit(1)).as("n_users"))
         .select(lit(i + 1).as("stage_idx"), lit(step).as("stage"), col("n_users"))
     }

@@ -863,8 +863,7 @@ object Sampling {
   def budgetedMixtureCounts(
       counts: DataFrame,
       weights: Map[String, Double],
-      tokenBudget: Long,
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint): DataFrame = {
+      tokenBudget: Long): DataFrame = {
     require(tokenBudget > 0, s"tokenBudget=$tokenBudget must be positive")
     weights.values.foreach(w => require(w >= 0, s"negative weight $w"))
     val wSum = weights.values.sum
@@ -887,8 +886,7 @@ object Sampling {
         .filter(col("n_tokens") > 0)
         .withColumn("desired", desired)
         .filter(col("desired") > 0)
-        .withColumn("bucket", conv(substring(col("h"), 1, 2), 16, 10).cast("int")),
-      mat)
+        .withColumn("bucket", conv(substring(col("h"), 1, 2), 16, 10).cast("int")))
     // (source, bucket) token sums + prefix over the tiny per-source table
     val bw = Window.partitionBy("source").orderBy("bucket")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -918,13 +916,12 @@ object Sampling {
       docs: DataFrame,
       sourceCol: String,
       weights: Map[String, Double],
-      tokenBudget: Long,
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint): DataFrame =
+      tokenBudget: Long): DataFrame =
     budgetedMixtureCounts(
       graft.core.Parallelism.ensure(docs)
         .select(col("doc_id"), col(sourceCol).as("source"),
           size(graft.core.TextNorm.tokens(col("text"))).cast("long").as("n_tokens")),
-      weights, tokenBudget, mat)
+      weights, tokenBudget)
 
   /** GPT-style context packing plan — concatenate the token stream and
     * split it at fixed `ctxLen` boundaries, documents crossing a

@@ -94,10 +94,9 @@ object Similarity {
       corpus: DataFrame,
       threshold: Double = 0.95,
       targetCellSize: Int = 1024,
-      iterations: Int = 2,
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint): DataFrame =
+      iterations: Int = 2): DataFrame =
     semanticDupPairs(corpus, threshold, iterations,
-      cellSeedFor(corpus.count(), targetCellSize), mat)
+      cellSeedFor(corpus.count(), targetCellSize))
 
   /** Sequential-fold dot product of two double arrays — the native
     * codegen'd [[graft.functions.DotProduct]] expression (the HOF
@@ -408,14 +407,13 @@ object Similarity {
   def kmeans(
       emb: DataFrame,
       iterations: Int = 2,
-      seed: CentroidSeed = DefaultSeed,
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint): DataFrame = {
-    val (corp, cent) = kmeansLoop(emb, iterations, seed, mat)
+      seed: CentroidSeed = DefaultSeed): DataFrame = {
+    val (corp, cent) = kmeansLoop(emb, iterations, seed)
     // the returned centroid table is materialized independently, so the
     // corpus projection is dead here (under Persist it would otherwise
     // leak one cached table per call); kmeansAssignments keeps it —
     // its returned plan still reads it
-    graft.core.Materialize.release(corp, mat)
+    graft.core.Materialize.release(corp)
     cent
   }
 
@@ -475,45 +473,21 @@ object Similarity {
       .select(gc :+ transform(col("ps"), p => p.getField("cv_i")).as("cv"): _*)
   }
 
-  /** Materialize a MODEL-SIZED table (centroids / PQ codebooks: k rows,
-    * corpus-independent by the FixedK seeding contract). Under the
-    * eager LocalCheckpoint strategy the rows are collected to the
-    * driver and rebuilt as a LocalRelation — exactly what every k-means
-    * implementation does with its model, and at 100 TB the table is
-    * still k rows. Two wins over checkpointing it: no executor
-    * block-store write/read round trip per round, and the next E-step's
-    * `broadcast(cent)` becomes driver-local (LocalTableScan collects
-    * without launching a broadcast-subplan job) — fewer, cheaper driver
-    * actions per iteration (round-9 verdict: the many-small-jobs loop
-    * shape amplified host stalls 5-6×). Under the lazy Persist strategy
-    * behavior is unchanged — the TVF surface relies on EXPLAIN running
-    * no job. */
-  private def materializeModel(
-      df: DataFrame,
-      mat: graft.core.Materialize.Strategy): DataFrame = mat match {
-    case graft.core.Materialize.LocalCheckpoint =>
-      df.sparkSession.createDataFrame(
-        java.util.Arrays.asList(df.collect(): _*), df.schema)
-    case _ => graft.core.Materialize(df, mat)
-  }
-
   private def kmeansLoop(
       emb: DataFrame,
       iterations: Int,
-      seed: CentroidSeed,
-      mat: graft.core.Materialize.Strategy): (DataFrame, DataFrame) = {
+      seed: CentroidSeed): (DataFrame, DataFrame) = {
     require(iterations >= 1, s"iterations=$iterations must be >= 1")
-    val corp = graft.core.Materialize(corpusVN(emb), mat)
+    val corp = graft.core.Materialize(corpusVN(emb))
     // the seed is NOT materialized on its own: iteration 1 inlines it as
     // a broadcast subplan, so seeding costs no separate driver action
     var cent = seedCells(corp, seed)
     var it = 0
     while (it < iterations) {
-      val next = materializeModel(
+      val next = graft.core.Materialize.small(
         meanStep(assignToCells(corp, cent), Seq("cell_id"), "v")
-          .select(col("cell_id"), col("cv"), norm(col("cv")).as("cn")),
-        mat)
-      graft.core.Materialize.release(cent, mat)
+          .select(col("cell_id"), col("cv"), norm(col("cv")).as("cn")))
+      graft.core.Materialize.release(cent)
       cent = next
       it += 1
     }
@@ -534,18 +508,16 @@ object Similarity {
   def kmeansCentroids(
       emb: DataFrame,
       iterations: Int = 2,
-      seed: CentroidSeed = DefaultSeed,
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint): DataFrame =
-    flatCentroids(kmeans(emb, iterations, seed, mat))
+      seed: CentroidSeed = DefaultSeed): DataFrame =
+    flatCentroids(kmeans(emb, iterations, seed))
 
   /** Final cluster assignment against the learned centroids —
     * (vec_id, cell_id, cos), one E-step past the last M-step. */
   def kmeansAssignments(
       emb: DataFrame,
       iterations: Int = 2,
-      seed: CentroidSeed = DefaultSeed,
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint): DataFrame = {
-    val (corp, cent) = kmeansLoop(emb, iterations, seed, mat)
+      seed: CentroidSeed = DefaultSeed): DataFrame = {
+    val (corp, cent) = kmeansLoop(emb, iterations, seed)
     assignToCells(corp, cent).select(col("vec_id"), col("cell_id"), col("cos"))
   }
 
@@ -558,10 +530,9 @@ object Similarity {
   def kmeansModel(
       emb: DataFrame,
       iterations: Int = 2,
-      seed: CentroidSeed = DefaultSeed,
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint)
+      seed: CentroidSeed = DefaultSeed)
       : (DataFrame, DataFrame) = {
-    val (corp, cent) = kmeansLoop(emb, iterations, seed, mat)
+    val (corp, cent) = kmeansLoop(emb, iterations, seed)
     (flatCentroids(cent),
       assignToCells(corp, cent).select(col("vec_id"), col("cell_id"), col("cos")))
   }
@@ -631,21 +602,19 @@ object Similarity {
       emb: DataFrame,
       m: Int,
       iterations: Int,
-      seed: CentroidSeed,
-      mat: graft.core.Materialize.Strategy): (DataFrame, DataFrame) = {
+      seed: CentroidSeed): (DataFrame, DataFrame) = {
     require(m >= 1 && iterations >= 1, s"m=$m and iterations=$iterations must be >= 1")
-    val sub = graft.core.Materialize(subVectors(emb, "vec_id", "vec_id", m), mat)
+    val sub = graft.core.Materialize(subVectors(emb, "vec_id", "vec_id", m))
     // seed inlined into iteration 1's broadcast; per-round codebooks are
     // model-sized (m·k rows) → driver LocalRelation under the eager
     // strategy (see [[materializeModel]])
     var cent = pqSeedCells(sub, seed)
     var it = 0
     while (it < iterations) {
-      val next = materializeModel(
+      val next = graft.core.Materialize.small(
         meanStep(pqAssign(sub, cent), Seq("s", "cell_id"), "sv")
-          .select(col("s"), col("cell_id"), col("cv"), dot(col("cv"), col("cv")).as("cc")),
-        mat)
-      graft.core.Materialize.release(cent, mat)
+          .select(col("s"), col("cell_id"), col("cv"), dot(col("cv"), col("cv")).as("cc")))
+      graft.core.Materialize.release(cent)
       cent = next
       it += 1
     }
@@ -676,9 +645,8 @@ object Similarity {
       emb: DataFrame,
       m: Int = 4,
       iterations: Int = 1,
-      seed: CentroidSeed = DefaultSeed,
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint): DataFrame = {
-    val (sub, cent) = pqLoop(emb, m, iterations, seed, mat)
+      seed: CentroidSeed = DefaultSeed): DataFrame = {
+    val (sub, cent) = pqLoop(emb, m, iterations, seed)
     pqAssign(sub, cent)
       .select(col("vec_id"), col("s").as("subspace"), col("cell_id").as("code"), col("d2"))
   }
@@ -698,13 +666,12 @@ object Similarity {
       emb: DataFrame,
       m: Int = 4,
       iterations: Int = 1,
-      seed: CentroidSeed = DefaultSeed,
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint): DataFrame = {
-    val (sub, cent) = pqLoop(emb, m, iterations, seed, mat)
+      seed: CentroidSeed = DefaultSeed): DataFrame = {
+    val (sub, cent) = pqLoop(emb, m, iterations, seed)
     // the codebooks are materialized independently — the sub-vector
     // table is dead here (Persist would otherwise cache-leak per call);
     // pqCodes/pqTopK keep it, their returned plans still read it
-    graft.core.Materialize.release(sub, mat)
+    graft.core.Materialize.release(sub)
     flatPqCodebooks(cent)
   }
 
@@ -715,10 +682,9 @@ object Similarity {
       emb: DataFrame,
       m: Int = 4,
       iterations: Int = 1,
-      seed: CentroidSeed = DefaultSeed,
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint)
+      seed: CentroidSeed = DefaultSeed)
       : (DataFrame, DataFrame) = {
-    val (sub, cent) = pqLoop(emb, m, iterations, seed, mat)
+    val (sub, cent) = pqLoop(emb, m, iterations, seed)
     (flatPqCodebooks(cent),
       pqAssign(sub, cent)
         .select(col("vec_id"), col("s").as("subspace"), col("cell_id").as("code"), col("d2")))
@@ -744,9 +710,8 @@ object Similarity {
       k: Int,
       m: Int = 4,
       iterations: Int = 1,
-      seed: CentroidSeed = DefaultSeed,
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint): DataFrame = {
-    val (sub, cent) = pqLoop(corpus, m, iterations, seed, mat)
+      seed: CentroidSeed = DefaultSeed): DataFrame = {
+    val (sub, cent) = pqLoop(corpus, m, iterations, seed)
     val codes = pqAssign(sub, cent)
       .select(col("vec_id").as("neighbor_id"), col("s"), col("cell_id"))
     adcRank(queries, cent, codes, k, m)
@@ -818,15 +783,14 @@ object Similarity {
       m: Int = 4,
       pqIterations: Int = 1,
       coarseSeed: CentroidSeed = DefaultSeed,
-      pqSeed: CentroidSeed = DefaultSeed,
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint)
+      pqSeed: CentroidSeed = DefaultSeed)
       : DataFrame = {
     // the coarse quantizer and the PQ codebooks both train on the raw
     // corpus and share no state — overlap their training loops'
     // eager materializations (guide §2.6 back-fill)
     val ((corp, coarse), (sub, cent)) = graft.core.Par.both(
-      kmeansLoop(corpus, coarseIterations, coarseSeed, mat),
-      pqLoop(corpus, m, pqIterations, pqSeed, mat))
+      kmeansLoop(corpus, coarseIterations, coarseSeed),
+      pqLoop(corpus, m, pqIterations, pqSeed))
     // inverted lists: each corpus vector's single nearest coarse cell
     val lists = assignToCells(corp, coarse)
       .select(col("cell_id").as("coarse_cell"), col("vec_id").as("neighbor_id"))
@@ -1023,13 +987,12 @@ object Similarity {
       queries: DataFrame,
       k: Int,
       nprobe: Int = 4,
-      m: Int = 4,
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint)
+      m: Int = 4)
       : DataFrame = {
     val (coarse, _, cells) = probeStore(spark, path, queries, nprobe)
     val cent = reassemblePqCodebooks(spark.read.parquet(s"$path/codebooks"))
     ivfpqResidualRank(queries, coarse, storeLists(cells), cent,
-      storeCodes(cells), k, nprobe, m, mat)
+      storeCodes(cells), k, nprobe, m)
   }
 
   /** The shared store-probe: run the coarse probe over the broadcast
@@ -1132,10 +1095,9 @@ object Similarity {
       m: Int = 4,
       pqIterations: Int = 1,
       coarseSeed: CentroidSeed = DefaultSeed,
-      pqSeed: CentroidSeed = DefaultSeed,
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint)
+      pqSeed: CentroidSeed = DefaultSeed)
       : DataFrame = {
-    val (corp, coarse) = kmeansLoop(corpus, coarseIterations, coarseSeed, mat)
+    val (corp, coarse) = kmeansLoop(corpus, coarseIterations, coarseSeed)
     val assigned = assignToCells(corp, coarse)
     val lists = assigned
       .select(col("cell_id").as("coarse_cell"), col("vec_id").as("neighbor_id"))
@@ -1145,10 +1107,10 @@ object Similarity {
       .join(broadcast(coarse.select(col("cell_id"), col("cv"))), Seq("cell_id"))
       .select(col("vec_id"),
         zip_with(col("v"), col("cv"), (a, b) => a - b).as("embedding"))
-    val (sub, cent) = pqLoop(resid, m, pqIterations, pqSeed, mat)
+    val (sub, cent) = pqLoop(resid, m, pqIterations, pqSeed)
     val codes = pqAssign(sub, cent)
       .select(col("vec_id").as("neighbor_id"), col("s"), col("cell_id"))
-    ivfpqResidualRank(queries, coarse, lists, cent, codes, k, nprobe, m, mat)
+    ivfpqResidualRank(queries, coarse, lists, cent, codes, k, nprobe, m)
   }
 
   /** ALL FOUR residual-IVF+PQ artifacts from one training run — the
@@ -1164,16 +1126,15 @@ object Similarity {
       m: Int = 4,
       pqIterations: Int = 1,
       coarseSeed: CentroidSeed = DefaultSeed,
-      pqSeed: CentroidSeed = DefaultSeed,
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint)
+      pqSeed: CentroidSeed = DefaultSeed)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val (corp, coarse) = kmeansLoop(corpus, coarseIterations, coarseSeed, mat)
+    val (corp, coarse) = kmeansLoop(corpus, coarseIterations, coarseSeed)
     val assigned = assignToCells(corp, coarse)
     val resid = assigned
       .join(broadcast(coarse.select(col("cell_id"), col("cv"))), Seq("cell_id"))
       .select(col("vec_id"),
         zip_with(col("v"), col("cv"), (a, b) => a - b).as("embedding"))
-    val (sub, cent) = pqLoop(resid, m, pqIterations, pqSeed, mat)
+    val (sub, cent) = pqLoop(resid, m, pqIterations, pqSeed)
     val codes = pqAssign(sub, cent)
       .select(col("vec_id"), col("s").as("subspace"), col("cell_id").as("code"), col("d2"))
     (flatCentroids(coarse),
@@ -1204,13 +1165,12 @@ object Similarity {
       codes: DataFrame,
       k: Int,
       nprobe: Int = 4,
-      m: Int = 4,
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint)
+      m: Int = 4)
       : DataFrame = {
     val lists = assignments
       .select(col("cell_id").as("coarse_cell"), col("vec_id").as("neighbor_id"))
     ivfpqResidualRank(queries, reassembleCoarse(coarseCentroids), lists,
-      reassemblePqCodebooks(codebooks), storedCodes(codes), k, nprobe, m, mat)
+      reassemblePqCodebooks(codebooks), storedCodes(codes), k, nprobe, m)
   }
 
   /** Residual twin of [[encodeWithModel]] — the streaming indexer's
@@ -1252,8 +1212,7 @@ object Similarity {
       codes: DataFrame,
       k: Int,
       nprobe: Int,
-      m: Int,
-      mat: graft.core.Materialize.Strategy): DataFrame = {
+      m: Int): DataFrame = {
     val q = corpusVN(queries)
       .select(col("vec_id").as("query_id"), col("v").as("qfull"), col("n").as("qn"))
     val probes = graft.core.Materialize(
@@ -1262,8 +1221,7 @@ object Similarity {
           safeCos(dot(col("qfull"), col("cv")), col("qn") * col("cn")).as("pcos"))
         .groupBy("query_id")
         .agg(graft.functions.TopKByScore.topK(col("pcos"), col("cell_id"), nprobe).as("tk"))
-        .select(col("query_id"), explode(col("tk.id")).as("coarse_cell")),
-      mat)
+        .select(col("query_id"), explode(col("tk.id")).as("coarse_cell")))
     val qres = probes
       .join(q.select(col("query_id"), col("qfull")), Seq("query_id"))
       .join(broadcast(coarse.select(col("cell_id").as("coarse_cell"), col("cv"))),
@@ -1387,13 +1345,11 @@ object Similarity {
   def cosineDupPairs(
       corpus: DataFrame,
       threshold: Double = 0.95,
-      bits: Int = 8,
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint): DataFrame = {
+      bits: Int = 8): DataFrame = {
     val c = graft.core.Materialize(
       corpus.select(col("vec_id"), asDouble(col("embedding")).as("v"),
         lshBucket(col("embedding"), bits).as("bucket"))
-        .select(col("vec_id"), col("v"), col("bucket"), norm(col("v")).as("n")),
-      mat)
+        .select(col("vec_id"), col("v"), col("bucket"), norm(col("v")).as("n")))
     val l = c.select(col("bucket"), col("vec_id").as("doc_a"), col("v").as("va"), col("n").as("na"))
     val r = c.select(col("bucket"), col("vec_id").as("doc_b"), col("v").as("vb"), col("n").as("nb"))
     l.join(r, Seq("bucket"))
@@ -1429,15 +1385,13 @@ object Similarity {
       corpus: DataFrame,
       threshold: Double = 0.95,
       iterations: Int = 2,
-      seed: CentroidSeed = DefaultSeed,
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint): DataFrame = {
-    val assign = kmeansAssignments(corpus, iterations, seed, mat)
+      seed: CentroidSeed = DefaultSeed): DataFrame = {
+    val assign = kmeansAssignments(corpus, iterations, seed)
       .select(col("vec_id"), col("cell_id"))
     val c = graft.core.Materialize(
       corpus.select(col("vec_id"), asDouble(col("embedding")).as("v"))
         .join(assign, Seq("vec_id"))
-        .select(col("vec_id"), col("v"), col("cell_id"), norm(col("v")).as("n")),
-      mat)
+        .select(col("vec_id"), col("v"), col("cell_id"), norm(col("v")).as("n")))
     val l = c.select(col("cell_id"), col("vec_id").as("doc_a"), col("v").as("va"), col("n").as("na"))
     val r = c.select(col("cell_id"), col("vec_id").as("doc_b"), col("v").as("vb"), col("n").as("nb"))
     l.join(r, Seq("cell_id"))
@@ -1463,12 +1417,10 @@ object Similarity {
       corpus: DataFrame,
       threshold: Double = 0.95,
       iterations: Int = 2,
-      seed: CentroidSeed = DefaultSeed,
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint): DataFrame = {
+      seed: CentroidSeed = DefaultSeed): DataFrame = {
     val losers = graft.ops.Dedup.clusters(
-      semanticDupPairs(corpus, threshold, iterations, seed, mat)
-        .select(col("doc_a"), col("doc_b")),
-      mat = mat)
+      semanticDupPairs(corpus, threshold, iterations, seed)
+        .select(col("doc_a"), col("doc_b")))
       .filter(col("doc_id") =!= col("cluster_id"))
       .select(col("doc_id"))
     corpus.join(losers, corpus("vec_id") === losers("doc_id"), "left_anti")
@@ -1504,9 +1456,8 @@ object Similarity {
       evalCorpus: DataFrame,
       threshold: Double = 0.95,
       iterations: Int = 2,
-      seed: CentroidSeed = DefaultSeed,
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint): DataFrame = {
-    val (cent, trainAssign) = kmeansModel(corpus, iterations, seed, mat)
+      seed: CentroidSeed = DefaultSeed): DataFrame = {
+    val (cent, trainAssign) = kmeansModel(corpus, iterations, seed)
     val t = corpusVN(corpus)
       .join(trainAssign.select(col("vec_id"), col("cell_id")), Seq("vec_id"))
     val e = corpusVN(evalCorpus)
@@ -1641,9 +1592,7 @@ object Similarity {
     * @return (vec_id, label, cos_dist, med, mad, is_outlier)
     */
   def embeddingOutliers(
-      emb: DataFrame, kMad: Double = 3.0,
-      mat: graft.core.Materialize.Strategy =
-        graft.core.Materialize.LocalCheckpoint): DataFrame = {
+      emb: DataFrame, kMad: Double = 3.0): DataFrame = {
     require(kMad > 0.0, s"kMad=$kMad must be positive")
     val centroids = labelCentroids(emb)
       .groupBy("label")
@@ -1661,7 +1610,7 @@ object Similarity {
       .join(broadcast(centroids), Seq("label"))
       .select(col("vec_id"), col("label"),
         coalesce(round(lit(1) - cosine(col("v"), col("cv")), 6), lit(2.0))
-          .as("cos_dist")), mat)
+          .as("cos_dist")))
     val meds = dists.groupBy("label")
       .agg(expr("percentile(cos_dist, 0.5)").as("med"))
     val mads = dists.join(broadcast(meds), Seq("label"))
@@ -1682,10 +1631,9 @@ object Similarity {
       evalCorpus: DataFrame,
       threshold: Double = 0.95,
       iterations: Int = 2,
-      seed: CentroidSeed = DefaultSeed,
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint): DataFrame =
+      seed: CentroidSeed = DefaultSeed): DataFrame =
     corpus.join(
-      semanticContaminatedIds(corpus, evalCorpus, threshold, iterations, seed, mat)
+      semanticContaminatedIds(corpus, evalCorpus, threshold, iterations, seed)
         .select("vec_id"),
       Seq("vec_id"), "left_anti")
 }

@@ -283,14 +283,12 @@ object TextAnalysis {
     */
   def vocabCoverage(
       docs: DataFrame,
-      k: Int = 100,
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint): DataFrame = {
+      k: Int = 100): DataFrame = {
     val counts = graft.core.Materialize(
       graft.core.Parallelism.ensure(docs)
         .select(explode(TextNorm.tokens(col("text"))).as("token"))
         .groupBy("token")
-        .agg(count(lit(1)).as("cnt")),
-      mat)
+        .agg(count(lit(1)).as("cnt")))
     val rankOrder = Window.orderBy(col("cnt").desc, col("token").asc)
     val running = rankOrder.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     counts.orderBy(col("cnt").desc, col("token").asc).limit(k)
@@ -395,8 +393,7 @@ object TextAnalysis {
     * the model's partial agg (absorbed map-side), not on a window sort.
     */
   def lmBigramScore(
-      docs: DataFrame,
-      mat: graft.core.Materialize.Strategy = graft.core.Materialize.LocalCheckpoint): DataFrame = {
+      docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val toks = graft.core.Parallelism.ensure(docs)
       .select(col("doc_id"), TextNorm.tokens(col("text")).as("ts"))
@@ -406,8 +403,7 @@ object TextAnalysis {
           transform(sequence(lit(1), size(col("ts")) - 1),
             i => struct(element_at(col("ts"), i).as("w1"),
               element_at(col("ts"), i + 1).as("w2")))).as("p"))
-        .select(col("doc_id"), col("p.w1").as("w1"), col("p.w2").as("w2")),
-      mat)
+        .select(col("doc_id"), col("p.w1").as("w1"), col("p.w2").as("w2")))
     val cb = bg.groupBy("w1", "w2").agg(count(lit(1)).as("cb"))
     val ch = cb.groupBy("w1").agg(sum("cb").as("c1"))
     val vocab = toks.select(explode(col("ts")).as("w"))
@@ -427,9 +423,7 @@ object TextAnalysis {
         (round((col("slp").cast(DecimalType(18, 6)) * 1000000).cast("long").cast("double")
           / col("n_bigrams")) / lit(1000000.0)).as("avg_logprob"))
     // bg stays live — the returned plan reads it on both the model and
-    // the scoring side; under Persist the CALLER releases (unpersist /
-    // clearCache) once the result is materialized, per Materialize's
-    // lifecycle note. LocalCheckpoint blocks free with the RDD.
+    // the scoring side.
     out
   }
 

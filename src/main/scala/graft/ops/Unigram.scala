@@ -96,7 +96,6 @@ object Unigram {
       seedSize: Int = 0,
       maxPieceLen: Int = 4,
       maxWordLen: Int = 12,
-      mat: Materialize.Strategy = Materialize.LocalCheckpoint,
       tok: Column => Column = TextNorm.tokens): DataFrame = {
     require(vocabSize >= 1, s"vocabSize=$vocabSize must be >= 1")
     require(emRounds >= 1, s"emRounds=$emRounds must be >= 1")
@@ -105,7 +104,7 @@ object Unigram {
       s"maxWordLen=$maxWordLen must be >= maxPieceLen=$maxPieceLen")
     val seedN = if (seedSize >= 1) seedSize else 4 * vocabSize
     val words = Materialize(
-      Bpe.wordCounts(docs, tok).where(length(col("word")) <= maxWordLen), mat)
+      Bpe.wordCounts(docs, tok).where(length(col("word")) <= maxWordLen))
     // seed: every substring up to maxPieceLen, corpus-weighted — the
     // candidate table is (vocab × maxPieceLen × avg-len)-sized
     val subCounts = words
@@ -120,7 +119,7 @@ object Unigram {
       .unionByName(
         subCounts.where(length(col("piece")) > 1)
           .orderBy(col("cnt").desc, col("piece").asc).limit(seedN))
-    var model = Materialize(withLp(seed), mat)
+    var model = Materialize(withLp(seed))
     for (_ <- 1 to emRounds) {
       // E: Viterbi counts under the current model (native DP, exact
       // micro-Long scores); M: re-score. Multi-char pieces that win
@@ -137,8 +136,8 @@ object Unigram {
             greatest(coalesce(col("vcnt"), lit(0L)), lit(1L)))
             .otherwise(coalesce(col("vcnt"), lit(0L))).as("cnt"))
         .where(col("cnt") > 0)
-      val nm = Materialize(withLp(next), mat)
-      Materialize.release(model, mat)
+      val nm = Materialize(withLp(next))
+      Materialize.release(model)
       model = nm
     }
     // prune: singles always kept; top (vocabSize - #singles) multis
@@ -148,10 +147,10 @@ object Unigram {
     val multis = model.where(length(col("piece")) > 1).select("piece", "cnt")
       .orderBy(col("cnt").desc, col("piece").asc).limit(keepMulti)
     val out = withLp(singles.unionByName(multis))
-    val result = Materialize(out, mat)
-    Materialize.force(result, mat) // no-op under eager LocalCheckpoint
-    Materialize.release(model, mat)
-    Materialize.release(words, mat)
+    val result = Materialize(out)
+    Materialize.force(result) // no-op under eager LocalCheckpoint
+    Materialize.release(model)
+    Materialize.release(words)
     result
   }
 

@@ -97,7 +97,6 @@ object WordPiece {
       docs: DataFrame,
       numMerges: Int,
       minFrequency: Long = 2L,
-      mat: Materialize.Strategy = Materialize.LocalCheckpoint,
       maxLocalVocab: Long = 1000000L,
       tok: Column => Column = TextNorm.tokens): Seq[Merge] = {
     require(numMerges >= 1, s"numMerges=$numMerges must be >= 1")
@@ -107,7 +106,7 @@ object WordPiece {
     if (probe.length <= cap)
       trainMergesLocal(probe.map(r => (r.getString(0), r.getLong(1))), numMerges,
         minFrequency)
-    else trainMergesDistributed(docs, numMerges, minFrequency, mat, tok)
+    else trainMergesDistributed(docs, numMerges, minFrequency, tok)
   }
 
   /** Driver-local exact WordPiece refinement with incremental pair AND
@@ -213,10 +212,9 @@ object WordPiece {
       docs: DataFrame,
       numMerges: Int,
       minFrequency: Long,
-      mat: Materialize.Strategy,
       tok: Column => Column = TextNorm.tokens): Seq[Merge] = {
     var words = Materialize(
-      Bpe.wordCounts(docs, tok).select(wpSyms(col("word")).as("syms"), col("cnt")), mat)
+      Bpe.wordCounts(docs, tok).select(wpSyms(col("word")).as("syms"), col("cnt")))
     val out = scala.collection.mutable.ListBuffer.empty[Merge]
     var done = false
     while (out.size < numMerges && !done) {
@@ -249,12 +247,12 @@ object WordPiece {
         val next = Materialize(
           words.select(
             replace(col("syms"), lit(s" $a  $b "), lit(s" $m ")).as("syms"),
-            col("cnt")), mat)
-        Materialize.release(words, mat)
+            col("cnt")))
+        Materialize.release(words)
         words = next
       }
     }
-    Materialize.release(words, mat)
+    Materialize.release(words)
     out.toList
   }
 
@@ -264,10 +262,9 @@ object WordPiece {
       docs: DataFrame,
       numMerges: Int,
       minFrequency: Long = 2L,
-      mat: Materialize.Strategy = Materialize.LocalCheckpoint,
       tok: Column => Column = TextNorm.tokens): DataFrame = {
     val spark = docs.sparkSession
-    spark.createDataFrame(trainMerges(docs, numMerges, minFrequency, mat, tok = tok))
+    spark.createDataFrame(trainMerges(docs, numMerges, minFrequency, tok = tok))
       .select("merge_idx", "lhs", "rhs", "merged", "pair_count", "score")
   }
 

@@ -62,8 +62,12 @@ object GraftExtensions {
   private def scalar(sig: String, owner: Class[_])(body: Args => Expression): Fn[Expression] =
     new Fn(sig, owner, body)
 
+  /** A table-valued function. Its body resolves under the lazy Persist
+    * strategy ([[Materialize]]), so resolving (and `EXPLAIN`) runs no
+    * job; the cached tables live until `spark.catalog.clearCache()`. */
   private def tvf(sig: String, owner: Class[_])(body: Args => DataFrame): Fn[LogicalPlan] =
-    new Fn(sig, owner, body.andThen(GraftSqlBridge.analyzedPlan))
+    new Fn(sig, owner, a =>
+      Materialize.using(Materialize.Persist)(GraftSqlBridge.analyzedPlan(body(a))))
 
   private val CountWords =
     Vector("zero", "one", "two", "three", "four", "five", "six", "seven", "eight", "nine")
@@ -198,7 +202,7 @@ object GraftExtensions {
       *
       * The named table/view must carry (doc_id, text); emits (doc_a,
       * doc_b). Resolution builds [[graft.ops.Dedup.minhashCandidatePairs]]'
-      * plan with the LAZY [[graft.core.Materialize.Persist]] strategy:
+      * plan under the TVFs' LAZY Persist strategy ([[tvf]]):
       * analysis (including `EXPLAIN`) runs no job; the first execution
       * materializes the band-bucket table into the session cache, where
       * the cache manager dedups by canonicalized plan — re-issuing the
@@ -207,8 +211,7 @@ object GraftExtensions {
       * `spark.catalog.clearCache()` (the release path for a long
       * session). */
     tvf("graft_minhash_pairs(table[, w, k, bands])", Dedup.getClass) { a =>
-      Dedup.minhashCandidatePairs(a.table(0), a.intOr(1, 3), a.intOr(2, 8), a.intOr(3, 2),
-        mat = Materialize.Persist)
+      Dedup.minhashCandidatePairs(a.table(0), a.intOr(1, 3), a.intOr(2, 8), a.intOr(3, 2))
     },
 
     /** SQL surface for benchmark decontamination:
@@ -264,7 +267,7 @@ object GraftExtensions {
       * twice): EXPLAIN runs no job; the first execution populates the
       * session cache. */
     tvf("graft_hamming_pairs(sigs_table[, bits, max_hamming])", Dedup.getClass) { a =>
-      Dedup.hammingPairs(a.table(0), a.intOr(1, 64), a.intOr(2, 3), mat = Materialize.Persist)
+      Dedup.hammingPairs(a.table(0), a.intOr(1, 64), a.intOr(2, 3))
     },
 
     /** SQL surface for Unicode writing-system detection
@@ -337,9 +340,7 @@ object GraftExtensions {
       * `SELECT * FROM graft_fingerprint_pairs('docs')` — default
       * (w=4, k=3, minShared=2, maxDf=64). Fully lazy. */
     tvf("graft_fingerprint_pairs(docs_table)", Dedup.getClass)(a =>
-      // Persist, not localCheckpoint: a TVF body must stay lazy (the
-      // graft_minhash_pairs convention — EXPLAIN runs no job)
-      Dedup.fingerprintPairs(a.table(0), mat = Materialize.Persist)),
+      Dedup.fingerprintPairs(a.table(0))),
 
     /** SQL face of the duplicate-group-size histogram:
       * `SELECT * FROM graft_dup_spectrum('docs')`. Fully lazy. */
@@ -390,7 +391,7 @@ object GraftExtensions {
       * est_jaccard). Persist strategy so the TVF stays lazy (EXPLAIN
       * runs no job) while the signature table still computes once. */
     tvf("graft_source_overlap(docs_table[, w, k])", Dedup.getClass) { a =>
-      Dedup.sourceOverlap(a.table(0), a.intOr(1, 3), a.intOr(2, 16), mat = Materialize.Persist)
+      Dedup.sourceOverlap(a.table(0), a.intOr(1, 3), a.intOr(2, 16))
     },
 
     /** SQL surface for the generic column profiler
@@ -429,7 +430,7 @@ object GraftExtensions {
       * cos_dist, med, mad, is_outlier). Persist strategy so the TVF
       * stays lazy while the distance table still computes once. */
     tvf("graft_emb_outliers(emb_table[, k_mad])", Similarity.getClass)(a =>
-      Similarity.embeddingOutliers(a.table(0), a.numOr(1, 3.0), mat = Materialize.Persist)),
+      Similarity.embeddingOutliers(a.table(0), a.numOr(1, 3.0))),
 
     /** SQL surface for asymmetric shingle containment
       * ([[graft.ops.Dedup.containmentPairs]]):
@@ -509,7 +510,7 @@ object GraftExtensions {
       * EXPLAIN run no job; the session cache dedups repeated calls by
       * canonicalized plan. */
     tvf("graft_semantic_dups(table[, threshold])", Similarity.getClass)(a =>
-      Similarity.semanticDupPairs(a.table(0), a.numOr(1, 0.95), mat = Materialize.Persist)),
+      Similarity.semanticDupPairs(a.table(0), a.numOr(1, 0.95))),
 
     /** SQL surface for sub-document boilerplate removal
       * ([[graft.ops.Dedup.boilerplateChunks]]):
@@ -543,8 +544,7 @@ object GraftExtensions {
       * session cache dedups repeated calls). */
     tvf("graft_semantic_decontaminate(train_table, eval_table[, threshold])",
         Similarity.getClass) { a =>
-      Similarity.semanticContaminatedIds(a.table(0), a.table(1), a.numOr(2, 0.95),
-        mat = Materialize.Persist)
+      Similarity.semanticContaminatedIds(a.table(0), a.table(1), a.numOr(2, 0.95))
     },
 
     /** SQL surface for the corpus drift monitor
@@ -612,7 +612,6 @@ object GraftExtensions {
       val stored = evalT.columns.contains("shingle") && !evalT.columns.contains("text")
       Curation.curate(a.table(0), evalT,
         keepLangs = if (a.size == 4) a.csv(3) else Seq("en"), minTokens = a.intOr(2, 10),
-        mat = Materialize.Persist,
         evalShingles = if (stored) Some(evalT) else None)
     },
 
@@ -632,11 +631,9 @@ object GraftExtensions {
       * Persist materialization for the hashed-bigram model tables. */
     tvf("graft_dsir(raw_table, target_table[, buckets[, k]])", Curation.getClass) { a =>
       if (a.size == 4)
-        Curation.importanceTopK(a.table(0), a.table(1), a.int(3), a.int(2),
-          mat = Materialize.Persist)
+        Curation.importanceTopK(a.table(0), a.table(1), a.int(3), a.int(2))
       else
-        Curation.importanceWeights(a.table(0), a.table(1), a.intOr(2, 1024),
-          mat = Materialize.Persist)
+        Curation.importanceWeights(a.table(0), a.table(1), a.intOr(2, 1024))
     },
 
     /** SQL surface for BM25 ranked retrieval
@@ -721,8 +718,7 @@ object GraftExtensions {
       * `graft_semantic_dups` contract: EXPLAIN runs no job, the session
       * cache dedups repeated calls). */
     tvf("graft_dup_spans(docs_table[, k, mod_p, gap])", Dedup.getClass) { a =>
-      Dedup.duplicateSpans(a.table(0), a.intOr(1, 24), a.intOr(2, 8), a.intOr(3, 64),
-        mat = Materialize.Persist)
+      Dedup.duplicateSpans(a.table(0), a.intOr(1, 24), a.intOr(2, 8), a.intOr(3, 64))
     },
 
     /** SQL surface for substring-level strip
@@ -738,8 +734,7 @@ object GraftExtensions {
       * canonical copy survives corpus-wide) — the rewrite face of
       * `graft_dup_spans`, same lazy Persist materialization. */
     tvf("graft_dup_strip(docs_table[, k, mod_p, gap])", Dedup.getClass) { a =>
-      Dedup.stripDuplicateSpans(a.table(0), a.intOr(1, 24), a.intOr(2, 8), a.intOr(3, 64),
-        mat = Materialize.Persist)
+      Dedup.stripDuplicateSpans(a.table(0), a.intOr(1, 24), a.intOr(2, 8), a.intOr(3, 64))
     },
 
     /** SQL surface for natural-boundary sub-document dedup
@@ -753,7 +748,7 @@ object GraftExtensions {
       * Emits (doc_id, n_paras, n_kept, kept_hash) — first occurrence of
       * each normalized paragraph wins corpus-wide. */
     tvf("graft_para_dedup(docs_table[, boundary_regex])", Dedup.getClass)(a =>
-      Dedup.paragraphDedup(a.table(0), a.strOr(1, "\\n[ \\t]*\\n"), mat = Materialize.Persist)),
+      Dedup.paragraphDedup(a.table(0), a.strOr(1, "\\n[ \\t]*\\n"))),
 
     /** SQL surface for C4's three-sentence-span rule
       * ([[graft.ops.Dedup.sentenceSpanDedup]]):
@@ -765,7 +760,7 @@ object GraftExtensions {
       *
       * Emits (doc_id, n_sentences, n_kept, kept_hash). Fully lazy. */
     tvf("graft_sentence_spans(docs_table[, span])", Dedup.getClass)(a =>
-      Dedup.sentenceSpanDedup(a.table(0), a.intOr(1, 3), mat = Materialize.Persist)),
+      Dedup.sentenceSpanDedup(a.table(0), a.intOr(1, 3))),
 
     /** SQL surface for C4's line-level cleaning rules
       * ([[graft.ops.TextAnalysis.c4LineStats]] /
@@ -819,8 +814,7 @@ object GraftExtensions {
       * anchor-gram chain vs exact repeated-substring ground truth on an
       * md5-bucket document sample. */
     tvf("graft_span_eval(docs_table[, k, mod_p, gap, sample_mod])", Dedup.getClass) { a =>
-      Dedup.spanEval(a.table(0), a.intOr(1, 24), a.intOr(2, 8), a.intOr(3, 64), a.intOr(4, 4),
-        mat = Materialize.Persist)
+      Dedup.spanEval(a.table(0), a.intOr(1, 24), a.intOr(2, 8), a.intOr(3, 64), a.intOr(4, 4))
     },
 
     /** SQL surface for the span-dedup sampling-rate dial
@@ -835,7 +829,7 @@ object GraftExtensions {
       * span-length distribution (upper bound on graft_span_eval's
       * measurement at the same parameters). */
     tvf("graft_span_plan(docs_table[, k, sample_mod])", Dedup.getClass)(a =>
-      Dedup.spanPlan(a.table(0), a.intOr(1, 24), a.intOr(2, 4), mat = Materialize.Persist)),
+      Dedup.spanPlan(a.table(0), a.intOr(1, 24), a.intOr(2, 4))),
 
     /** SQL surface for the crawl-graph family ([[graft.ops.Crawl]]):
       *
@@ -910,7 +904,7 @@ object GraftExtensions {
       * for the trap list. Persist (lazy) materialization — the TVF
       * stance. */
     tvf("graft_url_templates(pages_table)", Crawl.getClass)(a =>
-      Crawl.urlTemplates(a.table(0), mat = Materialize.Persist)),
+      Crawl.urlTemplates(a.table(0))),
 
     /** SQL surface for rank-proportional fetch budgets
       * ([[graft.ops.Crawl.crawlBudget]]):
@@ -1076,10 +1070,8 @@ object GraftExtensions {
       * and use the Column API to serve from an artifact instead). */
     tvf("graft_snippets(docs_table, query[, window])", InvertedIndex.getClass) { a =>
       val docs = a.table(0)
-      // lazy Persist (the graft_minhash_pairs convention): EXPLAIN
-      // runs no job; first execution populates the session cache
       InvertedIndex.snippets(InvertedIndex.buildPositional(docs), docs, a.str(1),
-        a.intOr(2, 10), mat = Materialize.Persist)
+        a.intOr(2, 10))
     },
 
     /** SQL surface for the one-call result page —
@@ -1090,10 +1082,7 @@ object GraftExtensions {
       * }}}
       */
     tvf("graft_search_page(docs_table, query, k[, window])", InvertedIndex.getClass)(a =>
-      // lazy Persist (the graft_minhash_pairs convention): EXPLAIN
-      // runs no job; first execution populates the session cache
-      InvertedIndex.searchPage(a.table(0), a.str(1), a.int(2), a.intOr(3, 10),
-        mat = Materialize.Persist)),
+      InvertedIndex.searchPage(a.table(0), a.str(1), a.int(2), a.intOr(3, 10))),
 
     /** SQL surface for manifest diffing —
       *

@@ -106,8 +106,7 @@ object ClassifierRefresher {
         val keep = col("doc_id") +: col("actual") +: groupCol.map(col).toSeq
         val scored = graft.core.Materialize(
           Curation.classifierScore(lb, session.read.parquet(s"$out/weights"), buckets)
-            .join(lb.select(keep: _*), Seq("doc_id")),
-          graft.core.Materialize.LocalCheckpoint)
+            .join(lb.select(keep: _*), Seq("doc_id")))
         Curation.operatingPoint(Curation.thresholdSweep(scored, thresholds), objective)
           .coalesce(1).write.mode("overwrite").parquet(s"$out/operating_point")
         groupCol.foreach { g =>

@@ -121,8 +121,7 @@ object EmbeddingIndexer {
                       clean, coarse, accAssign, codebooks, accCodes, 1, 1, m)
                 val hits = graft.core.Materialize(
                   search.filter(col("adc") <= d2max)
-                    .select(col("query_id").as("vec_id"), col("neighbor_id"), col("adc")),
-                  graft.core.Materialize.LocalCheckpoint)
+                    .select(col("query_id").as("vec_id"), col("neighbor_id"), col("adc")))
                 dropsDir.foreach(dd =>
                   hits.write.mode("overwrite").parquet(s"$dd/batch_id=$batchId"))
                 clean.join(hits.select("vec_id"), Seq("vec_id"), "left_anti")

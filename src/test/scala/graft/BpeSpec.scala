@@ -114,11 +114,10 @@ class BpeSpec extends SparkSpec {
   }
 
   test("trainMerges: local and distributed refinement produce identical merges") {
-    import graft.core.Materialize
     // sennrich golden corpus
     val local = Bpe.trainMergesLocal(
       Bpe.wordCounts(sennrich).as[(String, Long)].collect(), 4, 2L)
-    val dist = Bpe.trainMergesDistributed(sennrich, 4, 2L, Materialize.LocalCheckpoint)
+    val dist = Bpe.trainMergesDistributed(sennrich, 4, 2L)
     assert(local === dist)
     // a messier random corpus, deeper, singleton merges admitted
     val rnd = new scala.util.Random(7)
@@ -127,7 +126,7 @@ class BpeSpec extends SparkSpec {
         .map(_ => ('a' + rnd.nextInt(6)).toChar).mkString).mkString(" ")): _*)
     val ml = Bpe.trainMergesLocal(
       Bpe.wordCounts(messy).as[(String, Long)].collect(), 25, 1L)
-    val md = Bpe.trainMergesDistributed(messy, 25, 1L, Materialize.LocalCheckpoint)
+    val md = Bpe.trainMergesDistributed(messy, 25, 1L)
     assert(ml === md)
     // and the public entry (local path at this vocab size) agrees
     assert(Bpe.trainMerges(messy, 25, 1L) === md)
@@ -215,7 +214,7 @@ class BpeSpec extends SparkSpec {
     // byte-level training (unicode tokenizer): local ≡ forced-distributed
     val local = Bpe.trainMerges(d, numMerges = 6, byteLevel = true, tok = tokU)
     val dist = Bpe.trainMergesDistributed(d, numMerges = 6, minFrequency = 2L,
-      graft.core.Materialize.LocalCheckpoint, byteLevel = true, tok = tokU)
+      byteLevel = true, tok = tokU)
     assert(local === dist)
     assert(local.nonEmpty)
     // every learned symbol is hex-pair-composed (the fixed 256 alphabet)

@@ -961,13 +961,44 @@ class CrawlSpec extends SparkSpec {
     // the wave's shard broadcasts are unpersisted (executor blocks
     // freed), NOT destroyed — a recompute after cache loss must
     // re-broadcast and succeed, never die on a destroyed handle
-    val persisted = Crawl.crawlFrontierBloomShardedMaterialized(
-      pages, ranks, perHostCap = 5, shards = 3,
-      outMat = graft.core.Materialize.Persist)
+    import graft.core.Materialize
+    val persisted = Materialize.using(Materialize.Persist) {
+      Crawl.crawlFrontierBloomShardedMaterialized(pages, ranks, perHostCap = 5, shards = 3)
+    }
     assert(persisted.as[(String, String, Long, Double, Int)].collect().toSet === exact)
     persisted.unpersist(blocking = true) // simulate eviction / clearCache
     assert(persisted.as[(String, String, Long, Double, Int)].collect().toSet === exact,
       "recompute after cache loss must re-execute the probe against live broadcasts")
+  }
+
+  test("the former Persist-default ops and q_frontier_guard leave no cache entry behind") {
+    val pages = Seq(
+      (1L, "https://a.example.org/p/1",
+        "<a href=\"https://b.example.org/x\">1</a><a href=\"https://a.example.org/p/2\">2</a>"),
+      (2L, "https://a.example.org/p/2",
+        "<a href=\"https://b.example.org/x\">1</a><a href=\"https://c.example.org/y\">3</a>"),
+      (3L, "https://b.example.org/x", "no links"))
+      .toDF("doc_id", "url", "text")
+    val ranks = Seq(("b.example.org", 0.7)).toDF("node", "rank")
+    val shared = "one sentence here. two sentence there. three sentence everywhere"
+    val docs = Seq((1L, s"$shared.\n\nfirst tail"), (2L, s"$shared.\n\nsecond tail"))
+      .toDF("doc_id", "text")
+    leavesNoCache("urlTemplates")(Crawl.urlTemplates(pages).collect())
+    leavesNoCache("crawlFrontierBloom")(Crawl.crawlFrontierBloom(pages, ranks).collect())
+    leavesNoCache("crawlFrontierBloomSharded")(
+      Crawl.crawlFrontierBloomSharded(pages, ranks, shards = 2).collect())
+    leavesNoCache("crawlFrontierBloomShardedMaterialized")(
+      Crawl.crawlFrontierBloomShardedMaterialized(pages, ranks, shards = 2).collect())
+    leavesNoCache("paragraphDedup")(graft.ops.Dedup.paragraphDedup(docs).collect())
+    leavesNoCache("sentenceSpanDedup")(graft.ops.Dedup.sentenceSpanDedup(docs).collect())
+    // q_frontier_guard's builder derives its pages from the doc ids
+    val dir = tempDir("graft-guard-").toString
+    spark.range(1, 61).select(col("id").as("doc_id")).write.parquet(s"$dir/documents.parquet")
+    val guard = SparkEntry.queries("q_frontier_guard")
+    // the first call stages the frontier family's shared rank table, a
+    // declared session entry; the check runs on the second
+    guard(spark, dir).collect()
+    leavesNoCache("q_frontier_guard")(guard(spark, dir).collect())
   }
 
   test("trust-composed frontier: spam-island hosts carry zero trust into ordering; island URLs score exactly 0") {

@@ -189,6 +189,26 @@ class CurationSpec extends SparkSpec {
     assert(r.samples.isEmpty)
   }
 
+  test("Par carries the caller's strategy: under Persist, curateWithFunnel's contamination tables are cached, not checkpointed") {
+    import graft.core.Materialize
+    spark.sharedState.cacheManager.clearCache()
+    try {
+      // the contamination tables (and the cluster chain) are built on
+      // Par's pool threads; a pool thread that lost the caller's scope
+      // would checkpoint them eagerly (an ExistingRDD scan)
+      val r = Materialize.using(Materialize.Persist) {
+        Curation.curateWithFunnel(docs, evalDocs, rates = rates)
+      }
+      val plan = r.funnel.queryExecution.executedPlan.toString
+      assert(plan.contains("InMemoryTableScan"), plan)
+      assert(!plan.contains("ExistingRDD"), plan)
+      assert(r.funnel.as[(Int, String, Long, Long)].collect().sortBy(_._1).map(_._3).toSeq ===
+        Seq(7L, 6L, 5L, 4L, 3L, 2L))
+    } finally {
+      spark.sharedState.cacheManager.clearCache()
+    }
+  }
+
   test("curateWithFunnel(samples = n): third output ≡ standalone funnelSamples, same drop sets") {
     val r = Curation.curateWithFunnel(docs, evalDocs, rates = rates, samples = 5)
     val fusedS = r.samples.get.as[(Int, String, Long, Int)].collect().sortBy(t => (t._1, t._4)).toSeq
@@ -1047,6 +1067,16 @@ class CurationSpec extends SparkSpec {
     val noTest = scored.filter(!(col("grp") === "g2" && col("split") === "test"))
     assert(Curation.operatingPointsCertifiedBy(noTest, grid, "grp")
       .select("grp").as[String].collect().toSet === Set("g1"))
+  }
+
+  test("SQL surface: EXPLAIN of graft_operating_point_certified runs no job") {
+    graft.plans.GraftExtensions.install(spark)
+    Seq((1L, 2.0, true, "val"), (2L, -1.0, false, "val"), (3L, 0.5, true, "test"),
+      (4L, 1.5, false, "test")).toDF("doc_id", "logit", "actual", "split")
+      .createOrReplaceTempView("opc_scored")
+    val (_, jobs, _) = jobsAndTasks(spark.sql(
+      "EXPLAIN SELECT * FROM graft_operating_point_certified('opc_scored', '-2,0,1,3')").collect())
+    assert(jobs === 0, "EXPLAIN of the TVF must not run a Spark job")
   }
 
   test("SQL surface: the selection-loop TVFs match the Column API (average precision, certified point, explained diff, drift signals)") {

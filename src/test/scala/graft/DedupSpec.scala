@@ -277,8 +277,7 @@ class DedupSpec extends SparkSpec {
     // driver-side path is off (its cap at 0 pairs), so this tests the
     // round loop, which a 40-pair table would otherwise never reach.
     val chain = (1L until 41L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val got = Dedup.components(chain, maxIterations = 12, graft.core.Materialize.LocalCheckpoint,
-      localPairs = 0).as[(Long, Long)].collect().toMap
+    val got = Dedup.components(chain, maxIterations = 12, localPairs = 0).as[(Long, Long)].collect().toMap
     assert(got.size === 41 && got.values.forall(_ === 1L),
       "every chain node must carry the component min within the log-round budget")
   }
@@ -293,12 +292,13 @@ class DedupSpec extends SparkSpec {
       s"clusters ran $jobs jobs / $tasks tasks; materializing the pairs alone runs $matJobs / $matTasks")
     val (rows, readJobs, _) = jobsAndTasks(cl.as[(Long, Long)].collect())
     assert(readJobs === 0 && rows.toMap === want && rows.length === want.size)
-    assert(cl.schema === Dedup.components(pairs, 20, Materialize.LocalCheckpoint, 0).schema)
+    assert(cl.schema === Dedup.components(pairs, 20, 0).schema)
     // Persist: the lazily cached pairs are computed by the one bounded
     // collect, then released; nothing of this call stays cached
     val cache = spark.sharedState.cacheManager
     cache.clearCache()
-    val (persisted, persistJobs, _) = jobsAndTasks(Dedup.clusters(pairs, mat = Materialize.Persist))
+    val (persisted, persistJobs, _) =
+      jobsAndTasks(Materialize.using(Materialize.Persist)(Dedup.clusters(pairs)))
     assert(persistJobs === 1)
     assert(cache.isEmpty, "a clusters cache entry outlived the call")
     assert(persisted.as[(Long, Long)].collect().toMap === want)
@@ -310,10 +310,12 @@ class DedupSpec extends SparkSpec {
     val cache = spark.sharedState.cacheManager
     cache.clearCache()
     val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
-    val labels = Dedup.components(pairs, 20, Materialize.Persist, localPairs = 0)
-    assert(labels.as[(Long, Long)].collect().toMap ===
-      Map(2L -> 2L, 5L -> 2L, 9L -> 2L, 20L -> 20L, 21L -> 20L))
-    Materialize.release(labels, Materialize.Persist)
+    Materialize.using(Materialize.Persist) {
+      val labels = Dedup.components(pairs, 20, localPairs = 0)
+      assert(labels.as[(Long, Long)].collect().toMap ===
+        Map(2L -> 2L, 5L -> 2L, 9L -> 2L, 20L -> 20L, 21L -> 20L))
+      Materialize.release(labels)
+    }
     assert(cache.isEmpty, "a hash-to-min round outlived the release of the labels")
     assert((spark.sparkContext.getPersistentRDDs.keySet -- persistedBefore).isEmpty,
       "a persistent RDD outlived the release of the labels")
@@ -346,8 +348,8 @@ class DedupSpec extends SparkSpec {
       assert(jobsOf(Dedup.clusters(twins(n + 1)), n + 1) > matJobs + 1)
     }
     // the cap itself is the boundary
-    assert(jobsOf(Dedup.components(twins(3), 20, Materialize.LocalCheckpoint, 3), 3) === matJobs + 1)
-    assert(jobsOf(Dedup.components(twins(3), 20, Materialize.LocalCheckpoint, 2), 3) > matJobs + 1)
+    assert(jobsOf(Dedup.components(twins(3), 20, 3), 3) === matJobs + 1)
+    assert(jobsOf(Dedup.components(twins(3), 20, 2), 3) > matJobs + 1)
   }
 
   test("clusters of the exact-dup corpus match exact()'s canonical ids") {
@@ -495,8 +497,8 @@ class DedupSpec extends SparkSpec {
     import graft.core.Materialize
     val d = docs((1L to 10L).map(i =>
       i -> s"shared core words alpha beta gamma delta plus unique$i extra${i % 3}"): _*)
-    val viaCheckpoint = Dedup.simhashPairs(d, mat = Materialize.LocalCheckpoint)
-    val viaPersist = Dedup.simhashPairs(d, mat = Materialize.Persist)
+    val viaCheckpoint = Dedup.simhashPairs(d)
+    val viaPersist = Materialize.using(Materialize.Persist)(Dedup.simhashPairs(d))
     try {
       // localCheckpoint: both self-join sides scan the checkpointed RDD;
       // the md5/bit-weight aggregation pipeline is gone from the plan

@@ -33,8 +33,8 @@ class PropertySpec extends SparkSpec {
           if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
         }
         val want = parent.keys.map(x => x -> find(x)).toMap
-        val got = Dedup.components(edges.toDF("doc_a", "doc_b"), 20,
-          graft.core.Materialize.LocalCheckpoint, localPairs).as[(Long, Long)].collect().toMap
+        val got = Dedup.components(edges.toDF("doc_a", "doc_b"), 20, localPairs)
+          .as[(Long, Long)].collect().toMap
         assert(got === want, s"$path seed=$seed edges=$edges")
       }
     }
@@ -59,11 +59,11 @@ class PropertySpec extends SparkSpec {
       (df.collect().toSeq.map(r => r.get(0) -> r.get(1)), df.schema)
     val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
     for (mat <- Seq(Materialize.LocalCheckpoint, Materialize.Persist);
-         (pairs, want) <- Seq(strings -> wantStrings, longs -> wantLongs)) {
-      val (local, localSchema) = labels(Dedup.clusters(pairs, mat = mat))
-      val distLabels = Dedup.components(pairs, 20, mat, localPairs = 0)
+         (pairs, want) <- Seq(strings -> wantStrings, longs -> wantLongs)) Materialize.using(mat) {
+      val (local, localSchema) = labels(Dedup.clusters(pairs))
+      val distLabels = Dedup.components(pairs, 20, localPairs = 0)
       val (dist, distSchema) = labels(distLabels)
-      Materialize.release(distLabels, mat)
+      Materialize.release(distLabels)
       assert(local.size === want.size && local.toMap === want, s"local, $mat")
       assert(dist.size === want.size && dist.toMap === want, s"distributed, $mat")
       assert(localSchema === distSchema, s"$mat")

@@ -502,10 +502,10 @@ class SimilaritySpec extends SparkSpec {
     val rnd = new scala.util.Random(31)
     val corpus = vecs((1L to 50L).map(i =>
       i -> Seq.fill(8)(rnd.nextFloat() * 2 - 1)): _*)
-    val viaCheckpoint = Similarity.cosineDupPairs(corpus, threshold = 0.5,
-      mat = Materialize.LocalCheckpoint)
-    val viaPersist = Similarity.cosineDupPairs(corpus, threshold = 0.5,
-      mat = Materialize.Persist)
+    val viaCheckpoint = Similarity.cosineDupPairs(corpus, threshold = 0.5)
+    val viaPersist = Materialize.using(Materialize.Persist) {
+      Similarity.cosineDupPairs(corpus, threshold = 0.5)
+    }
     try {
       // localCheckpoint: both self-join sides scan the checkpointed RDD;
       // the per-row norm (sqrt) / bucket pipeline is gone from the plan —

@@ -65,6 +65,26 @@ abstract class SparkSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAl
     (r, after - before, tasks)
   }
 
+  /** `body`'s result, asserting that it left nothing cached: the cache
+    * manager is cleared first and must be empty afterwards, and no
+    * persistent RDD may outlive the call once its frames are
+    * unreachable. (An eager local checkpoint registers its blocks as a
+    * persistent RDD that Spark holds weakly and drops when the frame is
+    * collected, so the check collects garbage before it judges; a cache
+    * entry is held strongly and survives that.) */
+  protected def leavesNoCache[T](what: String)(body: => T): T = {
+    val cache = spark.sharedState.cacheManager
+    cache.clearCache()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val r = body
+    assert(cache.isEmpty, s"$what left a cache-manager entry")
+    def left = spark.sparkContext.getPersistentRDDs.keySet -- before
+    var tries = 0
+    while (left.nonEmpty && tries < 20) { System.gc(); Thread.sleep(100); tries += 1 }
+    assert(left.isEmpty, s"$what left a persistent RDD")
+    r
+  }
+
   override protected def afterAll(): Unit = {
     tempDirs.synchronized(tempDirs.toVector).foreach(SparkSpec.deleteRecursively)
     super.afterAll()

@@ -100,8 +100,7 @@ class WordPieceSpec extends SparkSpec {
 
   test("local and distributed trainers produce identical merges") {
     val local = WordPiece.trainMerges(docsDf, 6, minFrequency = 2L)
-    val dist = WordPiece.trainMergesDistributed(docsDf, 6, 2L,
-      graft.core.Materialize.LocalCheckpoint)
+    val dist = WordPiece.trainMergesDistributed(docsDf, 6, 2L)
     assert(local == dist)
   }
 
